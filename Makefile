@@ -1,6 +1,6 @@
 # Developer entrypoints (parity with the reference Makefile:1-99:
 # test / run / bench / docker targets, adapted to a Python+PySpark repo).
-.PHONY: all test check check-perturbed bench serve scaling docker-build clean
+.PHONY: all test check check-perturbed bench perfbench serve scaling docker-build clean
 
 APP_NAME = iceberg-rest-catalog-spark
 PY ?= python
@@ -21,6 +21,11 @@ check:
 bench:
 	@echo "Running benchmark..."
 	$(PY) bench.py
+
+# Per-change benchmark self-test: a short run of every workload in
+# BENCHMARK.json (perfbench/README.md has the full runs)
+perfbench:
+	$(PY) perfbench/selftest.py
 
 # sf0.001/0.01/0.1 scaling sweep
 scaling:

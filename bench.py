@@ -440,8 +440,8 @@ def main() -> None:
             os.path.join(os.path.dirname(os.path.abspath(__file__)), "bench_runs", "last_run.json"), "w"
         ) as f:
             json.dump(full, f)
-    except OSError:
-        pass  # read-only checkout: stdout contract still holds
+    except OSError as exc:  # read-only checkout: stdout contract still holds
+        print(f"bench: last_run.json not written: {exc}", file=sys.stderr)
     # COMPACT separators and an explicit flush: BENCH_r15's one-line JSON
     # lost its opening brace to the driver's fixed-size stdout tail window
     # (BENCH_r15.json "tail" starts mid-value; rc=0, line complete at the

@@ -411,12 +411,13 @@ class Table:
         file just written). Restricted to types whose ordering is
         unambiguous and JSON-stable (ints, floats, strings); other columns
         simply have no stats and are never skipped on."""
-        try:
-            import pyarrow.parquet as pq
+        import pyarrow.lib
+        import pyarrow.parquet as pq
 
+        try:
             md = pq.ParquetFile(path).metadata
-        except Exception:
-            return {}
+        except (OSError, pyarrow.lib.ArrowInvalid):
+            return {}  # unreadable footer: no stats, the file is never skipped
         out: dict = {}
         for rg in range(md.num_row_groups):
             row = md.row_group(rg)
@@ -438,12 +439,13 @@ class Table:
     @staticmethod
     def _parquet_records(path: str) -> int | None:
         """Row count from the parquet footer (writer-side, no data read)."""
-        try:
-            import pyarrow.parquet as pq
+        import pyarrow.lib
+        import pyarrow.parquet as pq
 
+        try:
             return pq.ParquetFile(path).metadata.num_rows
-        except Exception:
-            return None
+        except (OSError, pyarrow.lib.ArrowInvalid):
+            return None  # unreadable footer: count unknown
 
     def row_count(self, snapshot_id: int | None = None) -> int | None:
         """``count(*)`` from METADATA alone — per-file record counts in the
@@ -1822,13 +1824,6 @@ class Catalog:
             os.path.join(self._table_dir(ident), "metadata", "version-hint.text")
         )
 
-    def _current_version(self, ident: Ident) -> int:
-        return int(
-            self.fio.read_text(
-                os.path.join(self._table_dir(ident), "metadata", "version-hint.text")
-            ).strip()
-        )
-
     # -- table CRUD (reference tables.go) -----------------------------------
     def list_tables(self, ns: Ident) -> list[Ident]:
         ns = tuple(ns)
@@ -1893,34 +1888,40 @@ class Catalog:
         # later version: two clients racing create_table must not both
         # report success with one schema silently clobbered — the loser
         # gets the same AlreadyExists the _is_table precheck gives.
+        mloc = os.path.join(mdir, "v1.metadata.json")
         if not self.fio.create_exclusive(
-            os.path.join(mdir, "v1.metadata.json"),
-            json.dumps(metadata, indent=1, sort_keys=True),
+            mloc, json.dumps(metadata, indent=1, sort_keys=True)
         ):
             raise E.TableAlreadyExistsException(".".join(ident))
         self.fio.write_text_atomic(os.path.join(mdir, "version-hint.text"), "1")
-        return Table(self, ident, 1, metadata)
+        return Table(self, ident, 1, metadata, mloc)
 
     def load_table(self, ident: Ident) -> Table:
         """Load current metadata. The version hint is ADVISORY: a stalled
         writer can swap it after a later commit (regression). The true
         current version is the newest COMPLETE metadata file at or above the
-        hint; a partially-written claim file falls back one version."""
+        hint; a partially-written claim file falls back one version.
+
+        Versions are contiguous, so probing upward from the hint until a
+        version is missing finds every candidate without listing the
+        directory: a writer claims v{N+1} only after loading a complete
+        v{N}, the claim is exclusive (O_EXCL / conditional put), and
+        :meth:`_gc_stale_claim` removes only an unparseable top claim.
+        """
         ident = tuple(ident)
         self._require_ns(ident[:-1])
-        if not self._is_table(ident):
-            raise E.NoSuchTableException(".".join(ident))
         mdir = os.path.join(self._table_dir(ident), "metadata")
-        hint = self._current_version(ident)
-        on_disk = [
-            int(f[1 : -len(".metadata.json")])
-            for f in self.fio.listdir(mdir)
-            if f.startswith("v") and f.endswith(".metadata.json")
-        ]
-        for v in sorted({hint, *[x for x in on_disk if x > hint]}, reverse=True):
+        try:
+            hint = int(self.fio.read_text(os.path.join(mdir, "version-hint.text")))
+        except (FileNotFoundError, NotADirectoryError):
+            raise E.NoSuchTableException(".".join(ident)) from None
+        top = hint
+        while self.fio.isfile(os.path.join(mdir, f"v{top + 1}.metadata.json")):
+            top += 1
+        for v in range(top, hint - 1, -1):
+            path = os.path.join(mdir, f"v{v}.metadata.json")
             try:
-                doc = self._read_json(os.path.join(mdir, f"v{v}.metadata.json"))
-                return Table(self, ident, v, doc)
+                return Table(self, ident, v, self._read_json(path), path)
             except (json.JSONDecodeError, FileNotFoundError):
                 continue  # claimed-but-unflushed writer; try the next older
         raise E.InternalServerError(f"no readable metadata for {'.'.join(ident)}")
@@ -1972,11 +1973,11 @@ class Catalog:
         updates, claim v{N+1} with O_CREAT|O_EXCL (CAS), swap the hint."""
         ident = tuple(ident)
         current = self.load_table(ident)
+        mdir = os.path.dirname(current.metadata_location)  # resolved by the load
         self._check_requirements(current, requirements)
         new_meta = self._apply_updates(current, updates)
         new_meta["last-updated-ms"] = int(time.time() * 1000)
 
-        mdir = os.path.join(self._table_dir(ident), "metadata")
         new_v = current.version + 1
         new_path = os.path.join(mdir, f"v{new_v}.metadata.json")
         self._gc_stale_claim(new_path)
@@ -1989,7 +1990,7 @@ class Catalog:
         self.fio.write_text_atomic(
             os.path.join(mdir, "version-hint.text"), str(new_v)
         )
-        return Table(self, ident, new_v, new_meta)
+        return Table(self, ident, new_v, new_meta, new_path)
 
     def _gc_stale_claim(self, path: str) -> None:
         """Commit liveness after a writer crash.

@@ -9,6 +9,16 @@ params are accepted and ignored, like the reference (models.go:19-28,52-55).
 Stdlib-only (http.server); the engine itself is a library — this facade
 exists so a client of the reference can point at the same paths and get the
 same behavior.
+
+Connections are persistent HTTP/1.1: :class:`~.rest_client.RestCatalog`
+keeps one connection per client thread, so a request costs no TCP
+handshake and no server thread start. The server keeps each connection in
+step between requests: a request body no handler reads (a 404/405 route, a
+GET or DELETE with a body, an error raised before the body was parsed) is
+drained after the reply, and a body it cannot frame (``Transfer-Encoding:
+chunked``, a bad ``Content-Length``) is refused with a 400 and the
+connection closed. The client re-sends an idempotent GET/HEAD once when a
+kept-alive connection turns out dead; it never re-sends a POST or DELETE.
 """
 
 from __future__ import annotations
@@ -16,6 +26,7 @@ from __future__ import annotations
 import json
 import logging
 import re
+import socket
 import threading
 import time
 import uuid
@@ -41,6 +52,11 @@ def _split_ns(raw: str) -> tuple[str, ...]:
 
 class _Handler(BaseHTTPRequestHandler):
     catalog: Catalog  # injected by serve()
+
+    # Keep-alive. Nagle off: a reply is two writes (headers, then body), and
+    # Nagle would hold the second until the client's delayed ACK (~40 ms).
+    protocol_version = "HTTP/1.1"
+    disable_nagle_algorithm = True
 
     # route patterns -> (method -> handler name)
     ROUTES = [
@@ -76,7 +92,9 @@ class _Handler(BaseHTTPRequestHandler):
         pass
 
     def _body(self) -> dict:
-        n = int(self.headers.get("Content-Length") or 0)
+        if self._unread is None:
+            raise E.BadRequestException("request body needs a Content-Length")
+        n, self._unread = self._unread, 0
         if not n:
             return {}
         try:
@@ -84,18 +102,22 @@ class _Handler(BaseHTTPRequestHandler):
         except json.JSONDecodeError as exc:
             raise E.BadRequestException(str(exc)) from exc
 
-    def _send(self, code: int, doc: dict | None = None, head_only: bool = False):
+    def _send(self, code: int, doc: dict | None = None):
         payload = b"" if doc is None else json.dumps(doc).encode()
         self.send_response(code)
         self.send_header("Content-Type", "application/json")
         self.send_header("Content-Length", str(len(payload)))
         self.send_header("X-Request-ID", getattr(self, "request_id", "-"))
+        if self.close_connection:
+            self.send_header("Connection", "close")
         # CORS middleware (reference main.go:113 `cors.Default()` — allow
         # every origin): echo the permissive header on any browser request.
         if self.headers.get("Origin"):
             self.send_header("Access-Control-Allow-Origin", "*")
         self.end_headers()
-        if payload and not head_only:
+        # A HEAD reply declares the body's length but never carries it (a
+        # stray body would desynchronize the kept-alive connection).
+        if payload and self.command != "HEAD":
             self.wfile.write(payload)
         self._status, self._size = code, len(payload)
 
@@ -106,8 +128,23 @@ class _Handler(BaseHTTPRequestHandler):
         self.request_id = str(uuid.uuid4())
         self._status, self._size = 0, 0
         start = time.perf_counter()
+        # Body framing: _unread is the Content-Length not yet consumed, or
+        # None for a body this server cannot frame (chunked, bad length);
+        # such a request gets its reply and then the connection is closed.
         try:
-            self._route(method)
+            n = int(self.headers.get("Content-Length") or 0)
+        except ValueError:
+            n = -1
+        self._unread = None if n < 0 or self.headers.get("Transfer-Encoding") else n
+        if self._unread is None:
+            self.close_connection = True
+        try:
+            if method == "OPTIONS":
+                self._preflight()
+            else:
+                self._route(method)
+            if self._unread:
+                self.rfile.read(self._unread)  # unread body: keep the stream in step
         finally:
             LOG.info(
                 "request",
@@ -136,7 +173,7 @@ class _Handler(BaseHTTPRequestHandler):
                 try:
                     getattr(self, name)(**m.groupdict())
                 except E.CatalogError as err:
-                    self._send(err.code, err.to_dict(), head_only=method == "HEAD")
+                    self._send(err.code, err.to_dict())
                 return
         self._send(404, {"error": {"message": "no route", "type": "BadRequestException",
                                    "code": 404}})
@@ -154,6 +191,9 @@ class _Handler(BaseHTTPRequestHandler):
         self._dispatch("HEAD")
 
     def do_OPTIONS(self):
+        self._dispatch("OPTIONS")
+
+    def _preflight(self):
         # CORS preflight (reference main.go:113 `cors.Default()`): allow all
         # origins, the standard method set, and the simple request headers.
         self.send_response(204)
@@ -168,6 +208,7 @@ class _Handler(BaseHTTPRequestHandler):
         self.send_header("Access-Control-Max-Age", "43200")
         self.send_header("Content-Length", "0")
         self.end_headers()
+        self._status = 204
 
     # -- handlers (reference api/handlers/{tables,namespaces}.go) -----------
     def get_config(self):
@@ -306,11 +347,47 @@ class _Handler(BaseHTTPRequestHandler):
         }
 
 
+class _Server(ThreadingHTTPServer):
+    """Thread-per-connection server whose ``server_close()`` also ends the
+    kept-alive connections: a handler waiting for a client's next request
+    reads EOF and returns, a handler mid-request still sends its reply, and
+    the call returns once every connection is closed (or after
+    ``CLOSE_WAIT_S``, for a client that stopped reading)."""
+
+    CLOSE_WAIT_S = 10.0
+
+    def __init__(self, *args, **kwargs):
+        super().__init__(*args, **kwargs)
+        self._conns: set[socket.socket] = set()
+        self._conns_cv = threading.Condition()
+
+    def process_request(self, request, client_address):
+        with self._conns_cv:
+            self._conns.add(request)
+        super().process_request(request, client_address)
+
+    def shutdown_request(self, request):
+        super().shutdown_request(request)
+        with self._conns_cv:
+            self._conns.discard(request)
+            self._conns_cv.notify_all()
+
+    def server_close(self):
+        super().server_close()
+        with self._conns_cv:
+            for sock in self._conns:
+                try:
+                    sock.shutdown(socket.SHUT_RD)
+                except OSError:
+                    pass  # the client already went away
+            self._conns_cv.wait_for(lambda: not self._conns, self.CLOSE_WAIT_S)
+
+
 def serve(catalog: Catalog, host: str = "127.0.0.1", port: int = 0):
     """Start the facade on a background thread; returns (server, base_url).
     port=0 picks a free port (as the reference's httptest server does)."""
     handler = type("BoundHandler", (_Handler,), {"catalog": catalog})
-    srv = ThreadingHTTPServer((host, port), handler)
+    srv = _Server((host, port), handler)
     thread = threading.Thread(target=srv.serve_forever, daemon=True)
     thread.start()
     return srv, f"http://{srv.server_address[0]}:{srv.server_address[1]}"
@@ -358,8 +435,8 @@ def main(argv: list[str] | None = None) -> int:
     signal.signal(signal.SIGINT, _on_signal)
     signal.signal(signal.SIGTERM, _on_signal)
     stop.wait()
-    # shutdown() stops the accept loop; ThreadingHTTPServer then joins its
-    # per-request threads (block_on_close), draining in-flight requests.
+    # shutdown() stops the accept loop; server_close() then ends the
+    # kept-alive connections once their in-flight replies are sent.
     srv.shutdown()
     srv.server_close()
     LOG.info("shutdown complete")

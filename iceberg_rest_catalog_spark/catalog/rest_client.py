@@ -23,16 +23,25 @@ the canonical (type, message) pair — so e.g. the two 409
 ``AlreadyExistsException`` bodies (namespace vs table, errors.go:24-31)
 round-trip to their distinct Python classes and the behavioral test suite
 passes unchanged over the wire.
+
+Transport: one persistent HTTP/1.1 connection per client thread (a
+``RestCatalog`` is shared across threads by tests and the Spark bridge).
+An idle connection the server has closed is replaced before the next
+request. If a kept-alive connection fails mid-request, a GET or HEAD is
+re-sent once on a fresh connection; a POST or DELETE is never re-sent — a
+commit whose reply was lost raises, because the server may have applied
+it, and a blind retry would then be reported as a CAS loss.
 """
 
 from __future__ import annotations
 
+import http.client
 import json
 import os
 import re
-import urllib.error
+import select
+import threading
 import urllib.parse
-import urllib.request
 
 from . import errors as E
 from .catalog import Catalog, Ident, Table
@@ -59,6 +68,12 @@ def _raise_wire_error(doc: dict, status: int):
     raise cls()
 
 
+def _readable(sock) -> bool:
+    poller = select.poll()  # poll, not select: no FD_SETSIZE limit
+    poller.register(sock, select.POLLIN)
+    return bool(poller.poll(0))
+
+
 class RestCatalog(Catalog):
     """Catalog whose metadata plane lives behind the REST facade.
 
@@ -73,8 +88,39 @@ class RestCatalog(Catalog):
     def __init__(self, uri: str, warehouse: str, fileio=None):
         super().__init__(warehouse, fileio=fileio)
         self.uri = uri.rstrip("/")
+        parts = urllib.parse.urlsplit(self.uri)
+        self._conn_cls = (
+            http.client.HTTPSConnection
+            if parts.scheme == "https"
+            else http.client.HTTPConnection
+        )
+        self._netloc, self._base_path = parts.netloc, parts.path
+        self._local = threading.local()  # .conn: this thread's connection
 
     # -- wire plumbing ------------------------------------------------------
+    def _exchange(
+        self, method: str, url: str, data: bytes | None
+    ) -> tuple[int, bytes]:
+        """One request/reply on this thread's persistent connection."""
+        conn = getattr(self._local, "conn", None)
+        if conn is None:
+            conn = self._local.conn = self._conn_cls(self._netloc)
+        if conn.sock is not None and _readable(conn.sock):
+            conn.close()  # idle but readable: the server closed it
+        headers = {} if data is None else {"Content-Type": "application/json"}
+        while True:
+            reused = conn.sock is not None
+            try:
+                conn.request(method, url, body=data, headers=headers)
+                resp = conn.getresponse()
+                return resp.status, resp.read()
+            except (http.client.HTTPException, OSError):
+                conn.close()
+                # A dead kept-alive connection: re-send only what is safe to
+                # repeat, once (the retry runs on a fresh connection).
+                if not (reused and method in ("GET", "HEAD")):
+                    raise
+
     def _request(
         self,
         method: str,
@@ -82,26 +128,20 @@ class RestCatalog(Catalog):
         body: dict | None = None,
         query: dict | None = None,
     ) -> tuple[int, dict]:
-        url = self.uri + path
+        url = self._base_path + path
         if query:
             url += "?" + urllib.parse.urlencode(query)
         data = None if body is None else json.dumps(body).encode()
-        req = urllib.request.Request(url, data=data, method=method)
-        if data is not None:
-            req.add_header("Content-Type", "application/json")
+        status, raw = self._exchange(method, url, data)
+        if 200 <= status < 300:
+            return status, json.loads(raw) if raw else {}
         try:
-            with urllib.request.urlopen(req) as resp:
-                raw = resp.read()
-                return resp.status, json.loads(raw) if raw else {}
-        except urllib.error.HTTPError as exc:
-            raw = exc.read()
-            try:
-                doc = json.loads(raw) if raw else {}
-            except json.JSONDecodeError:
-                doc = {}
-            if exc.code == 404 and not doc:
-                return 404, {}  # HEAD-style existence probe: no body by design
-            _raise_wire_error(doc, exc.code)
+            doc = json.loads(raw) if raw else {}
+        except json.JSONDecodeError:
+            doc = {}
+        if status == 404 and not doc:
+            return 404, {}  # HEAD-style existence probe: no body by design
+        _raise_wire_error(doc, status)
 
     @staticmethod
     def _ns_path(ns: Ident) -> str:

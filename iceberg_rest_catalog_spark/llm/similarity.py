@@ -1076,6 +1076,10 @@ def _kmeans_assigned(spark, sf_dir, k: int = K_CLUSTERS):
             F.col("vec_id").alias("cell"), F.col("emb").alias("c")
         )
         assigned = None
+        # Exactly 3 iterations and no checkpoint: each recenter reads its
+        # input once, so the plan nests 3 deep and re-runs nothing. More
+        # iterations would need a checkpoint between them, or the plan
+        # (and its analysis time) grows with every round.
         for it in range(3):
             best = _argmin_cell(F.col("emb"), F.col("cents"))
             assigned = e.crossJoin(F.broadcast(_cents_row(cent))).select(
@@ -1125,11 +1129,14 @@ def q_cluster_kmeans(spark, sf_dir):
     unrolls the identical 3 iterations in SQL, so assignments are
     value-checked cross-engine, not rows-only.
 
-    Scale shape per iteration: centroids are K x 64 doubles -> broadcast
-    join (corpus never shuffles for assignment; the argmin window is keyed
-    by vec_id over K candidate rows); recentering is one posexplode +
-    (cell, dim) aggregate — K*64 output rows. localCheckpoint truncates
-    the iteration lineage (same pattern as q_dedup_cluster)."""
+    Scale shape per iteration: the K x 64 centroids are packed into ONE
+    sorted array<struct<cell, c>> row, broadcast and cross-joined onto
+    the corpus; each vector's cell is ``array_min`` over its
+    struct<d2, cell> distances (d2 ASC, then cell ASC on exact ties) — a
+    projection, so the corpus is never multiplied by K, shuffled or
+    sorted for assignment. Recentering is one posexplode + (cell, dim)
+    aggregate — K*64 output rows. The 3-iteration chain stays lazy, with
+    no checkpoint between iterations (see ``_kmeans_assigned``)."""
     return _kmeans_assigned(spark, sf_dir).select(
         "vec_id", "label", F.col("cell").cast("long").alias("cluster")
     )

@@ -2,6 +2,7 @@
 
 from __future__ import annotations
 
+import logging
 import os
 import tempfile
 
@@ -11,6 +12,7 @@ from pyspark.sql import functions as F
 from ..io import load_table
 
 SCRATCH_ROOT = os.path.join(tempfile.gettempdir(), "icsb_scratch")
+LOG = logging.getLogger(__name__)
 
 
 def t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -147,8 +149,8 @@ def release_persistent_state(spark: SparkSession) -> int:
         for tbl in spark.catalog.listTables():
             if tbl.name.startswith("icsb_stream_"):
                 spark.catalog.dropTempView(tbl.name)
-    except Exception:
-        pass  # catalog listing unavailable (exotic session) — skip hygiene
+    except Exception as exc:  # listing unavailable (exotic session): say so
+        LOG.warning("memory-sink view sweep skipped: %r", exc)
     jmap = spark.sparkContext._jsc.getPersistentRDDs()
     n = 0
     for jrdd in list(jmap.values()):

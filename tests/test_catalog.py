@@ -282,6 +282,48 @@ class TestCommitProtocol:
         assert t.version == 2
         assert t.properties() == {"a": "1"}
 
+    def test_regressed_hint_skips_unflushed_top_claim(self, catalog: Catalog):
+        import os
+
+        if catalog.backend != "fs":
+            pytest.skip("claim files and hints are fs-backend concepts")
+        ident = ("ns", "t")
+        catalog.create_namespace(("ns",))
+        catalog.create_table(ident, SCHEMA)
+        for i in range(2):
+            catalog.update_table(
+                ident, [], [{"action": "set-properties", "updates": {"a": str(i)}}]
+            )
+        mdir = os.path.join(catalog._table_dir(ident), "metadata")
+        catalog.fio.write_text_atomic(os.path.join(mdir, "version-hint.text"), "1")
+        assert catalog.fio.create_exclusive(os.path.join(mdir, "v4.metadata.json"), "")
+        t = catalog.load_table(ident)
+        assert (t.version, t.properties()) == (3, {"a": "1"})
+        assert t.metadata_location == os.path.join(mdir, "v3.metadata.json")
+
+    def test_load_with_current_hint_lists_nothing(self, tmp_path):
+        """load_table probes upward from the hint (versions are contiguous)
+        instead of listing the metadata dir, whose size grows with history."""
+        from iceberg_rest_catalog_spark.catalog.fileio import LocalFileIO
+
+        calls: list[str] = []
+
+        class Counting(LocalFileIO):
+            def listdir(self, path):
+                calls.append(path)
+                return super().listdir(path)
+
+        cat = Catalog(str(tmp_path / "wh"), fileio=Counting())
+        cat.create_namespace(("ns",))
+        cat.create_table(("ns", "t"), SCHEMA)
+        for i in range(3):
+            cat.update_table(
+                ("ns", "t"), [], [{"action": "set-properties", "updates": {"k": str(i)}}]
+            )
+        calls.clear()
+        assert cat.load_table(("ns", "t")).version == 4
+        assert calls == []
+
     def test_versions_are_linear(self, catalog: Catalog):
         catalog.create_namespace(("ns",))
         catalog.create_table(("ns", "t"), SCHEMA)

@@ -196,8 +196,25 @@ def test_phash_hash_stage_matches_explode_window_reference(spark):
         map(tuple, m.select("doc_id", pa.alias("pa"), pb.alias("pb")).collect())
     )
     assert new == ref and len(new) > 0
-    # and the declared query still returns rows on the fixture
-    assert q_multimodal_phash_dedup(spark, SF_DIR).count() >= 0
+    # and the declared query's rows equal its registered DuckDB oracle's
+    import duckdb
+
+    from iceberg_rest_catalog_spark.registry import oracles
+
+    con = duckdb.connect()
+    con.execute(
+        "CREATE VIEW documents AS SELECT * FROM "
+        f"read_parquet('{SF_DIR}/documents.parquet')"
+    )
+    want = con.execute(oracles()["q_multimodal_phash_dedup"]).fetchdf()
+    got = q_multimodal_phash_dedup(spark, SF_DIR).toPandas()
+    cols = sorted(got.columns)
+    assert cols == sorted(want.columns)
+
+    def rows(df):
+        return sorted(tuple(map(int, r)) for r in df[cols].itertuples(index=False))
+
+    assert rows(got) == rows(want) and len(want) > 0
 
 
 def test_phash_threshold_is_strictly_greater_than_mean(spark):

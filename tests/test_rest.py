@@ -410,3 +410,82 @@ def test_update_properties_dual_key_422_over_http(server):
     # the offending update must NOT have been applied
     s, out = call("GET", f"{server}/v1/namespaces/dual")
     assert s == 200 and "k" not in out["properties"]
+
+
+# -- persistent HTTP/1.1 connections ------------------------------------------
+
+
+@pytest.fixture()
+def fs_server(tmp_path):
+    from iceberg_rest_catalog_spark.catalog import Catalog
+    from iceberg_rest_catalog_spark.catalog.rest import serve
+
+    srv, base = serve(Catalog(str(tmp_path / "wh")))
+    yield srv
+    srv.shutdown()
+    srv.server_close()
+
+
+def _conn(srv):
+    import http.client
+
+    return http.client.HTTPConnection(*srv.server_address[:2], timeout=10)
+
+
+def test_two_requests_share_one_connection(fs_server):
+    conn = _conn(fs_server)
+    replies, socks = [], []
+    for _ in range(2):
+        conn.request("GET", "/health")
+        resp = conn.getresponse()
+        replies.append((resp.status, json.loads(resp.read())))
+        socks.append(conn.sock)
+    assert replies == [(200, {"status": "ok"})] * 2
+    assert socks[0] is not None and socks[1] is socks[0]  # kept alive
+    conn.close()
+
+
+def test_unread_request_bodies_are_drained(fs_server):
+    """Bodies no handler reads (404 route, 405 method, GET/DELETE with a
+    body, an error raised before the body is parsed) must not be read as
+    the next request on the kept-alive connection."""
+    conn = _conn(fs_server)
+    conn.connect()
+    sock = conn.sock
+    body = json.dumps({"namespace": ["x"], "pad": "y" * 5000})
+    hdrs = {"Content-Type": "application/json"}
+    for method, path, status in [
+        ("POST", "/v1/no-such-route", 404),
+        ("POST", "/health", 405),
+        ("GET", "/v1/config", 200),
+        ("DELETE", "/v1/namespaces/ghost", 404),
+        ("POST", "/v1/namespaces/ghost/properties", 404),
+        ("HEAD", "/v1/namespaces/ghost", 404),
+    ]:
+        conn.request(method, path, body=body, headers=hdrs)
+        resp = conn.getresponse()
+        resp.read()
+        assert resp.status == status, (method, path)
+        conn.request("GET", "/health")
+        resp = conn.getresponse()
+        assert (resp.status, json.loads(resp.read())) == (200, {"status": "ok"})
+        assert conn.sock is sock  # one connection throughout
+    conn.close()
+
+
+def test_chunked_request_is_answered_then_closed(fs_server):
+    import socket
+
+    with socket.create_connection(fs_server.server_address[:2], timeout=10) as s:
+        body = b'{"namespace": ["c"]}'
+        s.sendall(
+            b"POST /v1/namespaces HTTP/1.1\r\nHost: x\r\n"
+            b"Transfer-Encoding: chunked\r\nContent-Type: application/json\r\n\r\n"
+            + f"{len(body):x}\r\n".encode() + body + b"\r\n0\r\n\r\n"
+        )
+        raw = b""
+        while chunk := s.recv(65536):  # the server must close: EOF ends this
+            raw += chunk
+    head, _, payload = raw.partition(b"\r\n\r\n")
+    assert head.startswith(b"HTTP/1.1 400") and b"Connection: close" in head
+    assert json.loads(payload)["error"]["type"] == "BadRequestException"

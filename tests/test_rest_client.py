@@ -93,3 +93,97 @@ def test_backend_registry_opens_rest(tmp_path):
         srv.shutdown()
     with pytest.raises(E.NotImplementedException):
         open_catalog({"type": "glue"})
+
+
+# -- persistent connections: reconnect and re-send rules -----------------------
+
+
+def test_get_recovers_after_server_restart(tmp_path):
+    """A server restart kills the client's kept-alive connection; the next
+    request (read or commit) runs on a fresh one."""
+    backing = Catalog(str(tmp_path / "wh"))
+    srv, base = serve(backing)
+    port = srv.server_address[1]
+    cat = RestCatalog(base, str(tmp_path / "wh"))
+    cat.create_namespace(("db",))
+    cat.create_table(("db", "t"), SCHEMA)
+    old_sock = cat._local.conn.sock
+    srv.shutdown()
+    srv.server_close()
+    srv, _ = serve(backing, port=port)
+    try:
+        # a POST is never re-sent, so this one succeeding shows the dead
+        # idle connection was replaced before sending
+        t = cat.update_table(
+            ("db", "t"), [], [{"action": "set-properties", "updates": {"k": "v"}}]
+        )
+        assert t.version == 2 and cat._local.conn.sock is not old_sock
+        srv.shutdown()
+        srv.server_close()
+        srv, _ = serve(backing, port=port)
+        assert cat.load_table(("db", "t")).version == 2
+    finally:
+        srv.shutdown()
+        srv.server_close()
+
+
+@pytest.fixture
+def lossy(tmp_path, monkeypatch):
+    """A server whose load_table and update_table handlers take the request
+    and then drop the connection without a reply, ``drops[route]`` times;
+    ``seen[route]`` counts the requests that arrived."""
+    from iceberg_rest_catalog_spark.catalog import rest
+
+    seen = {"load_table": 0, "update_table": 0}
+    drops = {"load_table": 0, "update_table": 0}
+
+    def wrap(route):
+        real = getattr(rest._Handler, route)
+
+        def handler(self, *args, **kwargs):
+            seen[route] += 1
+            if drops[route]:
+                drops[route] -= 1
+                self.close_connection = True  # reply lost
+                return
+            real(self, *args, **kwargs)
+
+        monkeypatch.setattr(rest._Handler, route, handler)
+
+    wrap("load_table")
+    wrap("update_table")
+    srv, base = serve(Catalog(str(tmp_path / "wh")))
+    cat = RestCatalog(base, str(tmp_path / "wh"))
+    cat.create_namespace(("db",))
+    cat.create_table(("db", "t"), SCHEMA)  # connection now kept alive
+    yield cat, seen, drops
+    srv.shutdown()
+    srv.server_close()
+
+
+def test_get_is_resent_once_on_a_dead_connection(lossy):
+    cat, seen, drops = lossy
+    drops["load_table"] = 1
+    assert cat.load_table(("db", "t")).version == 1
+    assert seen["load_table"] == 2
+    drops["load_table"] = 2  # the one re-send also dies: surface the error
+    with pytest.raises(OSError):
+        cat.load_table(("db", "t"))
+    assert seen["load_table"] == 4
+
+
+def test_post_is_never_resent(lossy):
+    """A commit whose reply was lost raises; it is not re-sent (the server
+    may have applied it, and a re-send would then lose the CAS)."""
+    cat, seen, drops = lossy
+    drops["update_table"] = 1
+    with pytest.raises(OSError):
+        cat.update_table(
+            ("db", "t"), [], [{"action": "set-properties", "updates": {"k": "v"}}]
+        )
+    assert seen["update_table"] == 1
+    # the client reconnects for the next request
+    t = cat.update_table(
+        ("db", "t"), [], [{"action": "set-properties", "updates": {"k": "v"}}]
+    )
+    assert t.version == 2 and seen["update_table"] == 2
