@@ -1820,9 +1820,10 @@ class Catalog:
         return rel
 
     def _is_table(self, ident: Ident) -> bool:
-        return self.fio.isfile(
-            os.path.join(self._table_dir(ident), "metadata", "version-hint.text")
-        )
+        return self._has_hint(self._table_dir(ident))
+
+    def _has_hint(self, tdir: str) -> bool:
+        return self.fio.isfile(os.path.join(tdir, "metadata", "version-hint.text"))
 
     # -- table CRUD (reference tables.go) -----------------------------------
     def list_tables(self, ns: Ident) -> list[Ident]:
@@ -1910,7 +1911,12 @@ class Catalog:
         """
         ident = tuple(ident)
         self._require_ns(ident[:-1])
-        mdir = os.path.join(self._table_dir(ident), "metadata")
+        return self._load_from(ident, self._table_dir(ident))
+
+    def _load_from(self, ident: Ident, tdir: str) -> Table:
+        """:meth:`load_table` for a table dir already resolved and checked
+        by :meth:`_table_dir`."""
+        mdir = os.path.join(tdir, "metadata")
         try:
             hint = int(self.fio.read_text(os.path.join(mdir, "version-hint.text")))
         except (FileNotFoundError, NotADirectoryError):
@@ -1949,21 +1955,18 @@ class Catalog:
         src, dst = tuple(src), tuple(dst)
         self._require_ns(src[:-1])
         self._require_ns(dst[:-1])
-        if not self._is_table(src):
+        src_dir = self._table_dir(src)
+        if not self._has_hint(src_dir):
             raise E.NoSuchTableException(".".join(src))
-        if self._is_table(dst):
+        dst_dir = self._table_dir(dst)
+        if self._has_hint(dst_dir):
             raise E.TableAlreadyExistsException(".".join(dst))
-        self.fio.rename(self._table_dir(src), self._table_dir(dst))
-        t = self.load_table(dst)
-        if t.metadata["location"] == self._table_dir(src):
-            t.metadata["location"] = self._table_dir(dst)
-            self._write_json(
-                os.path.join(
-                    self._table_dir(dst), "metadata", f"v{t.version}.metadata.json"
-                ),
-                t.metadata,
-            )
-        return self.load_table(dst)
+        self.fio.rename(src_dir, dst_dir)
+        t = self._load_from(dst, dst_dir)
+        if t.metadata["location"] == src_dir:  # data moved with the dir
+            t.metadata["location"] = dst_dir
+            self._write_json(t.metadata_location, t.metadata)
+        return t
 
     # -- optimistic commit (reference tables.go:150-227) --------------------
     def update_table(

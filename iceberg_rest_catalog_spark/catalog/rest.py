@@ -423,17 +423,18 @@ def main(argv: list[str] | None = None) -> int:
     cfg = load_config(args.config)
     logging.basicConfig(level=(args.log_level or "INFO").upper())
     configure_logging(cfg.logger, level=args.log_level)
-    srv, url = serve(Catalog(args.warehouse), host=args.host, port=args.port)
-    LOG.info("serving %s (warehouse=%s)", url, args.warehouse)
-
     stop = threading.Event()
 
     def _on_signal(signum, frame):
         LOG.info("received signal %d, shutting down", signum)
         stop.set()
 
+    # Handlers go in before the URL is announced: a client may signal as
+    # soon as it has seen the URL.
     signal.signal(signal.SIGINT, _on_signal)
     signal.signal(signal.SIGTERM, _on_signal)
+    srv, url = serve(Catalog(args.warehouse), host=args.host, port=args.port)
+    LOG.info("serving %s (warehouse=%s)", url, args.warehouse)
     stop.wait()
     # shutdown() stops the accept loop; server_close() then ends the
     # kept-alive connections once their in-flight replies are sent.

@@ -417,6 +417,48 @@ def _phash_oracle() -> str:
     """
 
 
+def _phash_words(d):
+    """(doc_id, pa, pb): the 64-bit average hash of each row's payload as
+    two 32-bit words.  ``d`` carries ``doc_id``, the payload as hex ``hx``
+    and its byte length ``n`` (>= 64).  Bit i is set when sampled byte i
+    is strictly greater than the mean of the 64 samples."""
+    # Three stacked projections — map-only, no explode, no window, no
+    # shuffle.  Nested higher-order lambdas would re-inline the byte
+    # sampler; the staging avoids that without extra rows: `bytes` and
+    # `mean` are ALIASES referenced many times by the next projection, and
+    # CollapseProject refuses to merge projections when it would duplicate
+    # a non-cheap alias — so each value is computed once per row inside
+    # one WholeStageCodegen span.  The word packing is 64 unrolled CASE
+    # terms (plain expressions, not a lambda).  mean = fold-sum / 64.0 is
+    # the oracle's sum(byte)/64.0 exactly (integer sum, power-of-two
+    # division).
+    b = d.select(
+        "doc_id",
+        F.expr(
+            "transform(sequence(0, 63), i -> "
+            "CAST(conv(substring(hx, 1 + 2 * i * CAST(n / 64 AS INT), 2), "
+            "16, 10) AS BIGINT))"
+        ).alias("bytes"),
+    )
+    m = b.select(
+        "doc_id",
+        "bytes",
+        (
+            F.expr("aggregate(bytes, 0L, (acc, x) -> acc + x)") / F.lit(64.0)
+        ).alias("mean"),
+    )
+    bit = lambda i: F.when(  # noqa: E731
+        F.col("bytes")[i] > F.col("mean"), F.lit(1 << (i % 32)).cast("long")
+    ).otherwise(F.lit(0).cast("long"))
+    pa = bit(0)
+    for i in range(1, 32):
+        pa = pa + bit(i)
+    pb = bit(32)
+    for i in range(33, 64):
+        pb = pb + bit(i)
+    return m.select("doc_id", pa.alias("pa"), pb.alias("pb"))
+
+
 @query("q_multimodal_phash_dedup", oracle=_phash_oracle())
 def q_multimodal_phash_dedup(spark, sf_dir):
     """Perceptual-hash near-dup pairs over BINARY payloads: a 64-bit
@@ -444,43 +486,7 @@ def q_multimodal_phash_dedup(spark, sf_dir):
         .withColumn("n", (F.length("hx") / 2).cast("int"))
         .filter(F.col("n") >= 64)
     )
-    # Per-doc hash as THREE STACKED PROJECTIONS — map-only, no explode, no
-    # window, no shuffle (guide §2.1; the previous explode+window shape
-    # paid an Exchange+Sort of 64x|docs| rows purely to avoid nested-HOF
-    # lambda re-inlining).  The staging sidesteps that re-inlining without
-    # rows: `bytes` and `mean` are materialized as ALIASES referenced many
-    # times by the next projection, and CollapseProject refuses to merge
-    # projections when it would duplicate a non-cheap alias — so nothing
-    # gets re-inlined into a lambda and each value is computed once per
-    # row inside one WholeStageCodegen span.  The word packing is 64
-    # unrolled CASE terms (plain expressions, not a lambda).  mean =
-    # fold-sum / 64.0 is the oracle's sum(byte)/64.0 exactly (integer sum,
-    # power-of-two division).
-    b = d.select(
-        "doc_id",
-        F.expr(
-            "transform(sequence(0, 63), i -> "
-            "CAST(conv(substring(hx, 1 + 2 * i * CAST(n / 64 AS INT), 2), "
-            "16, 10) AS BIGINT))"
-        ).alias("bytes"),
-    )
-    m = b.select(
-        "doc_id",
-        "bytes",
-        (
-            F.expr("aggregate(bytes, 0L, (acc, x) -> acc + x)") / F.lit(64.0)
-        ).alias("mean"),
-    )
-    bit = lambda i: F.when(  # noqa: E731
-        F.col("bytes")[i] > F.col("mean"), F.lit(1 << (i % 32)).cast("long")
-    ).otherwise(F.lit(0).cast("long"))
-    pa = bit(0)
-    for i in range(1, 32):
-        pa = pa + bit(i)
-    pb = bit(32)
-    for i in range(33, 64):
-        pb = pb + bit(i)
-    ph = m.select("doc_id", pa.alias("pa"), pb.alias("pb"))
+    ph = _phash_words(d)
     # The four 16-bit chunk memberships as ONE posexplode (4 rows per doc)
     # instead of a 4-arm unionAll that re-derived the hash per arm, behind
     # ONE tiny Exchange keyed by (chunk, ch): chunks is referenced three

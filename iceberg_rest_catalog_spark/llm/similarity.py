@@ -600,7 +600,8 @@ def ivf_cells_for(n_vectors: int) -> int:
     the index geometry. NOTE: unlike
     the probe-stride knob this one moves the recall operating point
     (fixed N_PROBE over smaller cells sees a smaller corpus fraction);
-    tools/ivf_cells_knob.py measures both the cost and that trade."""
+    SCALE.md "Round-8 IVF cell-count knob" records both the cost and
+    that trade."""
     return max(N_CELLS, min(65_536, n_vectors // IVF_TARGET_CELL))
 
 
@@ -845,8 +846,9 @@ def _knn_batch(
     flat-assignment term, SCALE.md round 9/10).  The oracle computes both
     formulas from count(*) (SCALED_CELLS_SQL + the ivf_ranked_ctes branch
     guard) so the value-hash twin holds at any corpus size.
-    ``n_cells``/``two_level`` explicit values serve the measurement tools
-    (tools/ivf_cells_knob.py) and tests; an explicit n_cells with
+    ``n_cells``/``two_level`` explicit values serve tests (the fixed vs
+    scaled cell counts are in SCALE.md "Round-8 IVF cell-count knob");
+    an explicit n_cells with
     two_level=None pins the historical FLAT shape."""
     from pyspark.sql import Window
 
@@ -1609,8 +1611,8 @@ def _recall_eval(spark, sf_dir, qstep: int | None = None):
     self-computes recall_qstep_for(count) — the probe batch (and with it
     the |batch| x corpus exact baseline) stays FIXED-SIZE as the corpus
     grows, and the oracle computes the identical stride from count(*)
-    (SCALED_QSTEP_SQL).  Explicit strides serve the measurement tools
-    (tools/recall_qstep_knob.py) and tests."""
+    (SCALED_QSTEP_SQL).  Explicit strides serve tests; the fixed vs
+    scaled stride is in SCALE.md "Round-8 probe-stride knob"."""
     from pyspark.sql import Window
 
     if qstep is None:

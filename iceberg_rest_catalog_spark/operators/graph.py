@@ -771,10 +771,10 @@ def _knn_edges(
     assignment_two_level(count) — flat centroid ranking below
     ASSIGN_FLAT_MAX vectors, hierarchical two-level above (the flat
     n*cells ~ n^2/512 assignment term is the family's one super-linear
-    cost, SCALE.md round 9).  Explicit values serve the measurement
-    tools (tools/ivf_cells_knob.py).  The edge frame is
-    localCheckpoint'ed — it is consumed iteratively (BFS) or from
-    multiple arms (wedge join + degree + anti join).
+    cost, SCALE.md round 9).  Explicit values serve tests (fixed vs
+    scaled cells: SCALE.md "Round-8 IVF cell-count knob").  The edge
+    frame is localCheckpoint'ed — it is consumed iteratively (BFS) or
+    from multiple arms (wedge join + degree + anti join).
 
     MATERIALIZED ONCE per corpus (VERDICT r12 item 6): with default
     knobs the symmetrized edge list is written to a fixture-signature-

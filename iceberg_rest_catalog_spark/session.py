@@ -49,12 +49,17 @@ def default_parallelism() -> int:
 
 
 def get_spark(app_name: str = "iceberg_rest_catalog_spark", cpus: int | None = None) -> SparkSession:
-    """Build (or reuse) a SparkSession with engine defaults applied."""
+    """Build (or reuse) a SparkSession with engine defaults applied.
+
+    Shuffle partitions are ``min(32, n)``: one per core, capped at the
+    32-core reference host the bench numbers are compared at.  This is
+    the only place the partition policy is set; bench.py and the tools
+    read it back from the session."""
     n = cpus or default_parallelism()
     b = (
         SparkSession.builder.master(f"local[{n}]")
         .appName(app_name)
-        .config("spark.sql.shuffle.partitions", str(n))
+        .config("spark.sql.shuffle.partitions", str(min(32, n)))
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
     )
     for k, v in {**ENGINE_DEFAULTS, **ENGINE_OVERRIDES}.items():

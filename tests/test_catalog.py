@@ -483,29 +483,32 @@ class TestSqlBackend:
         assert (tmp_path / "c.db").is_file()
 
 
+def _recording_fileio(log: list):
+    """A LocalFileIO that appends (method, args) to ``log`` per call."""
+    from iceberg_rest_catalog_spark.catalog.fileio import LocalFileIO
+
+    class Recording(LocalFileIO):
+        def __getattribute__(self, name):
+            attr = super().__getattribute__(name)
+            if callable(attr) and not name.startswith("__"):
+                def wrapped(*a, **k):
+                    log.append((name, a))
+                    return attr(*a, **k)
+
+                return wrapped
+            return attr
+
+    return Recording()
+
+
 class TestFileIOSeam:
     """The metadata plane must route every storage touch through the FileIO
     seam (catalog/fileio.py) — an object-store implementation drops in by
     implementing the same surface."""
 
     def test_catalog_runs_on_instrumented_fileio(self, tmp_path):
-        from iceberg_rest_catalog_spark.catalog import Catalog
-        from iceberg_rest_catalog_spark.catalog.fileio import LocalFileIO
-
-        calls: dict[str, int] = {}
-
-        class Recording(LocalFileIO):
-            def __getattribute__(self, name):
-                attr = super().__getattribute__(name)
-                if callable(attr) and not name.startswith("__"):
-                    def wrapped(*a, **k):
-                        calls[name] = calls.get(name, 0) + 1
-                        return attr(*a, **k)
-
-                    return wrapped
-                return attr
-
-        cat = Catalog(str(tmp_path / "wh"), fileio=Recording())
+        log: list[tuple] = []
+        cat = Catalog(str(tmp_path / "wh"), fileio=_recording_fileio(log))
         cat.create_namespace(("db",), {"k": "v"})
         cat.create_table(("db", "t"), SCHEMA)
         cat.update_table(
@@ -517,9 +520,41 @@ class TestFileIOSeam:
         cat.drop_table(("db", "t2"))
         cat.drop_namespace(("db",))
         # every storage primitive the flow needs went through the seam
+        calls = {name for name, _ in log}
         for op in ("write_text_atomic", "read_text", "create_exclusive",
                    "isfile", "listdir", "mkdirs", "rename", "rmtree"):
-            assert calls.get(op, 0) > 0, f"{op} bypassed the FileIO seam"
+            assert op in calls, f"{op} bypassed the FileIO seam"
+
+    def test_rename_resolves_each_identifier_once_and_loads_once(
+        self, tmp_path, monkeypatch
+    ):
+        import os
+
+        log: list[tuple] = []
+        cat = Catalog(str(tmp_path / "wh"), fileio=_recording_fileio(log))
+        cat.create_namespace(("db",))
+        cat.create_namespace(("db2",))
+        cat.create_table(("db", "t"), SCHEMA)
+        cat.update_table(
+            ("db", "t"), [], [{"action": "set-properties", "updates": {"a": "1"}}]
+        )
+        realpath, resolved = os.path.realpath, []
+        monkeypatch.setattr(
+            os.path, "realpath", lambda p: resolved.append(p) or realpath(p)
+        )
+        log.clear()
+        t = cat.rename_table(("db", "t"), ("db2", "t2"))
+        monkeypatch.undo()
+        # one containment check per identifier: warehouse + table path each
+        assert len(resolved) == 4
+        reads = [a for name, a in log
+                 if name == "read_text" and a[0].endswith(".metadata.json")]
+        assert len(reads) == 1
+        fresh = cat.load_table(("db2", "t2"))
+        assert t.location == fresh.location == os.path.join(cat.warehouse, "db2", "t2")
+        assert (t.version, t.metadata_location, t.metadata) == (
+            fresh.version, fresh.metadata_location, fresh.metadata
+        )
 
 
 class TestLogRotation:

@@ -159,42 +159,12 @@ def test_phash_hash_stage_matches_explode_window_reference(spark):
         )
     )
     from iceberg_rest_catalog_spark.llm.multimodal import (
+        _phash_words,
         q_multimodal_phash_dedup,
     )
 
-    # the rewritten hash feeds the registered query; recover (doc_id,pa,pb)
-    # from its internal ph frame by rebuilding the same projections
-    b = d.select(
-        "doc_id",
-        F.expr(
-            "transform(sequence(0, 63), i -> "
-            "CAST(conv(substring(hx, 1 + 2 * i * CAST(n / 64 AS INT), 2), "
-            "16, 10) AS BIGINT))"
-        ).alias("bytes"),
-    )
-    m = b.select(
-        "doc_id",
-        "bytes",
-        (
-            F.expr("aggregate(bytes, 0L, (acc, x) -> acc + x)") / F.lit(64.0)
-        ).alias("mean"),
-    )
-
-    def bit(i):
-        return F.when(
-            F.col("bytes")[i] > F.col("mean"),
-            F.lit(1 << (i % 32)).cast("long"),
-        ).otherwise(F.lit(0).cast("long"))
-
-    pa = bit(0)
-    for i in range(1, 32):
-        pa = pa + bit(i)
-    pb = bit(32)
-    for i in range(33, 64):
-        pb = pb + bit(i)
-    new = sorted(
-        map(tuple, m.select("doc_id", pa.alias("pa"), pb.alias("pb")).collect())
-    )
+    # the production hash stage (it feeds the registered query)
+    new = sorted(map(tuple, _phash_words(d).collect()))
     assert new == ref and len(new) > 0
     # and the declared query's rows equal its registered DuckDB oracle's
     import duckdb
@@ -218,39 +188,15 @@ def test_phash_hash_stage_matches_explode_window_reference(spark):
 
 
 def test_phash_threshold_is_strictly_greater_than_mean(spark):
-    # all 64 bytes equal => byte == mean everywhere => pa = pb = 0
-    payload = "a" * 64
-    df = spark.createDataFrame([(1, payload)], "doc_id long, text string")
-    b = df.select(
-        "doc_id",
-        F.hex(F.encode("text", "utf-8")).alias("hx"),
+    from iceberg_rest_catalog_spark.llm.multimodal import _phash_words
+
+    # all 64 bytes equal => byte == mean everywhere => no bit set; one byte
+    # above the others => exactly its bit (byte 63 = bit 31 of pb)
+    df = spark.createDataFrame(
+        [(1, "a" * 64), (2, "a" * 63 + "b")], "doc_id long, text string"
+    )
+    d = df.select(
+        "doc_id", F.hex(F.encode("text", "utf-8")).alias("hx")
     ).withColumn("n", (F.length("hx") / 2).cast("int"))
-    bytes_col = F.expr(
-        "transform(sequence(0, 63), i -> "
-        "CAST(conv(substring(hx, 1 + 2 * i * CAST(n / 64 AS INT), 2), "
-        "16, 10) AS BIGINT))"
-    )
-    m = b.select(
-        bytes_col.alias("bytes"),
-        (
-            F.expr(
-                "aggregate(transform(sequence(0, 63), i -> "
-                "CAST(conv(substring(hx, 1 + 2 * i * CAST(n / 64 AS INT), 2), "
-                "16, 10) AS BIGINT)), 0L, (acc, x) -> acc + x)"
-            )
-            / F.lit(64.0)
-        ).alias("mean"),
-    )
-    row = m.select(
-        F.aggregate(
-            F.transform(
-                F.col("bytes"),
-                lambda x: F.when(x > F.col("mean"), F.lit(1)).otherwise(
-                    F.lit(0)
-                ),
-            ),
-            F.lit(0),
-            lambda acc, x: acc + x,
-        ).alias("nset")
-    ).collect()[0]
-    assert row["nset"] == 0
+    rows = sorted(map(tuple, _phash_words(d).collect()))
+    assert rows == [(1, 0, 0), (2, 0, 1 << 31)]

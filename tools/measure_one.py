@@ -1,10 +1,11 @@
-"""Standalone per-query measurement harness for the r16 optimization round.
+"""Standalone per-query timings through bench.py's own loop.
 
-Times one or more registered queries exactly like bench.py does (noop sink,
-one warm pass + N timed passes, per-query median, release_persistent_state
-between runs) and optionally writes the formatted physical plan to a file —
-the guide §1 "measure first / capture explain" loop, without paying for the
-whole 102-query suite per iteration.
+Each named query runs alone through ``bench.measure`` (one warm run, then
+``--passes`` timed noop-sink runs, a deep release after every run) on the
+session ``get_spark`` builds, so standalone and in-suite numbers share
+confs and hygiene.  ``--plans`` also writes each query's formatted
+physical plan — a measure-and-explain loop without paying for the whole
+suite per iteration.
 
 Usage:
     python tools/measure_one.py q_graph_triangles q_stream_topk
@@ -17,18 +18,15 @@ import argparse
 import json
 import os
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+import bench  # noqa: E402
 from iceberg_rest_catalog_spark import registry  # noqa: E402
 from iceberg_rest_catalog_spark.operators.common import (  # noqa: E402
     release_persistent_state,
-    release_persistent_state_deep,
 )
 from iceberg_rest_catalog_spark.session import get_spark  # noqa: E402
-
-SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
 
 def formatted_plan(df) -> str:
@@ -46,27 +44,18 @@ def main() -> None:
     args = ap.parse_args()
 
     spark = get_spark("measure_one")
-    spark.conf.set("spark.sql.shuffle.partitions", "32")
     qs = registry.queries()
     results: dict[str, dict] = {}
     for name in args.names:
-        fn = qs[name]
         spark.sparkContext.setJobDescription(f"measure:{name}")
         if args.plans:
             os.makedirs(args.plans, exist_ok=True)
-            df = fn(spark, SF_DIR)
+            df = qs[name](spark, bench.SF_DIR)
             with open(os.path.join(args.plans, f"{name}_{args.suffix}.txt"), "w") as f:
                 f.write(formatted_plan(df))
             release_persistent_state(spark)
-        samples = []
-        # warm (release discipline mirrors bench.py run_one: deep per run)
-        fn(spark, SF_DIR).write.format("noop").mode("overwrite").save()
-        release_persistent_state_deep(spark)
-        for _ in range(args.passes):
-            t0 = time.perf_counter()
-            fn(spark, SF_DIR).write.format("noop").mode("overwrite").save()
-            samples.append(round(time.perf_counter() - t0, 3))
-            release_persistent_state_deep(spark)
+        timed = bench.measure(spark, [name], bench.SF_DIR, args.passes)[name]
+        samples = [round(x, 3) for x in timed]
         med = sorted(samples)[len(samples) // 2]
         results[name] = {"median": med, "samples": samples}
         print(f"MEASURE {name} median={med} samples={samples}", flush=True)
