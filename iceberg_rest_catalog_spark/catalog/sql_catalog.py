@@ -197,8 +197,10 @@ class SqlCatalog(Catalog):
         base = os.path.basename(metadata_location)
         return int(base.split("-", 1)[0][1:])
 
-    def _new_metadata_file(self, ident: Ident, version: int, metadata: dict) -> str:
-        mdir = os.path.join(self._table_dir(ident), "metadata")
+    def _new_metadata_file(self, tdir: str, version: int, metadata: dict) -> str:
+        """Write ``metadata`` as a new uniquely-named file under the table
+        dir ``tdir`` (already resolved and checked by :meth:`_table_dir`)."""
+        mdir = os.path.join(tdir, "metadata")
         self.fio.mkdirs(mdir)
         path = os.path.join(mdir, f"v{version}-{uuid.uuid4().hex[:8]}.metadata.json")
         self._write_json(path, metadata)
@@ -257,7 +259,7 @@ class SqlCatalog(Catalog):
             "snapshots": [],
             "current-snapshot-id": None,
         }
-        mloc = self._new_metadata_file(ident, 1, metadata)
+        mloc = self._new_metadata_file(tdir, 1, metadata)
         try:
             with self._db() as con:
                 con.execute(
@@ -277,6 +279,10 @@ class SqlCatalog(Catalog):
         if mloc is None:
             self._table_dir(ident)  # name validation for a clean 400 vs 404
             raise E.NoSuchTableException(".".join(ident))
+        return self._load_from(ident, mloc)
+
+    def _load_from(self, ident: Ident, mloc: str) -> Table:
+        """:meth:`load_table` for a pointer already read."""
         try:
             metadata = self._read_json(mloc)
         except (OSError, json.JSONDecodeError) as exc:
@@ -315,29 +321,31 @@ class SqlCatalog(Catalog):
         for ns in (src[:-1], dst[:-1]):
             if not self._ns_exists(ns):
                 raise E.NoSuchNamespaceException(".".join(ns))
-        if not self._is_table(src):
+        src_dir = self._table_dir(src)
+        src_loc = self._pointer(src)
+        if src_loc is None:
             raise E.NoSuchTableException(".".join(src))
-        if self._is_table(dst):
+        dst_dir = self._table_dir(dst)
+        if self._pointer(dst) is not None:
             raise E.TableAlreadyExistsException(".".join(dst))
-        t = self.load_table(src)
+        t = self._load_from(src, src_loc)
         new_meta = dict(t.metadata)
-        if new_meta["location"] == self._table_dir(src):
-            new_meta["location"] = self._table_dir(dst)
+        if new_meta["location"] == src_dir:  # data moves with the dir
+            new_meta["location"] = dst_dir
         # Unlike the fs backend, namespaces have no on-disk presence here —
         # materialize the destination's parent dirs before moving.
-        dst_dir = self._table_dir(dst)
         self.fio.mkdirs(os.path.dirname(dst_dir))
-        self.fio.rename(self._table_dir(src), dst_dir)
-        mloc = self._new_metadata_file(dst, t.version, new_meta)
+        self.fio.rename(src_dir, dst_dir)
+        mloc = self._new_metadata_file(dst_dir, t.version, new_meta)
         with self._db() as con:
             con.execute(
                 "UPDATE iceberg_tables SET namespace = ?, name = ?,"
                 " metadata_location = ?, previous_metadata_location = ?"
                 " WHERE namespace = ? AND name = ?",
-                (_key(dst[:-1]), dst[-1], mloc, t.metadata_location,
+                (_key(dst[:-1]), dst[-1], mloc, src_loc,
                  _key(src[:-1]), src[-1]),
             )
-        return self.load_table(dst)
+        return Table(self, dst, t.version, new_meta, metadata_location=mloc)
 
     # -- optimistic commit ----------------------------------------------------
     def update_table(
@@ -352,7 +360,9 @@ class SqlCatalog(Catalog):
         new_meta = self._apply_updates(current, updates)
         new_meta["last-updated-ms"] = int(time.time() * 1000)
 
-        new_loc = self._new_metadata_file(ident, current.version + 1, new_meta)
+        new_loc = self._new_metadata_file(
+            self._table_dir(ident), current.version + 1, new_meta
+        )
         with self._db() as con:
             cur = con.execute(
                 "UPDATE iceberg_tables SET metadata_location = ?,"

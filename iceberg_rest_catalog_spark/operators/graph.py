@@ -9,16 +9,19 @@ next-action modeling and Markov-chain attribution.
 
 Scale shape: the expensive part is building the edge list — one window
 (lead) over the partitioning key plus one aggregate, both sharing the
-user_id/edge-key shuffle. The power iteration itself joins the rank vector
-against the edge list k times; here the graph is |event_types| nodes, but
-the SAME loop runs with a billion-node edge table: ranks and edges both
-shuffle on the join key, the per-iteration aggregate is map-side combined,
-and localCheckpoint truncates the growing lineage each round (the
-q_dedup_cluster pattern). The node set is DISTINCT event_type from the
-events themselves (not edges.src), so a sink node — one with inbound
-transitions but none outbound — still holds rank; its outflow leaks, the
-classic dangling-mass approximation, identically on both engines because
-the oracle computes the same unrolled recurrence over the same node set.
+user_id/edge-key shuffle. Each of the k power-iteration rounds is one join
+and one aggregate: the rank vector joins the edge list (a broadcast of the
+smaller side here, a shuffle join on src at scale), each node's inflow is
+the map-side-combined sum keyed on dst, and a (node, 0.0) row per node
+rides the same aggregate so a sink or unreached node keeps its teleport
+share. There is no join back to the node set and no node-count cross join,
+so a round here is one shuffle. localCheckpoint truncates the growing
+lineage every few rounds (the q_dedup_cluster pattern). The node set is
+DISTINCT event_type from the events themselves (not edges.src), so a sink
+node — one with inbound transitions but none outbound — still holds rank;
+its outflow leaks, the classic dangling-mass approximation, identically on
+both engines because the oracle computes the same unrolled recurrence over
+the same node set.
 
 Unlike q_dedup_cluster (rows-only by design), the fixed iteration count
 makes this one fully oracle-checkable: the DuckDB oracle UNROLLS the ten
@@ -97,33 +100,25 @@ def _pagerank(ev):
     # ever a dst, no out-transitions) must still hold rank, matching the
     # oracle's `SELECT DISTINCT event_type FROM events`.
     nodes = ev.select(F.col("event_type").alias("node")).distinct().localCheckpoint()
-    ncnt = nodes.agg(F.count("*").alias("c"))
-    ranks = nodes.join(F.broadcast(ncnt)).select(
-        "node", (F.lit(1.0) / F.col("c")).alias("rank")
-    )
+    # |nodes| as a Python constant: 1.0 / n and 0.15 / n are the same IEEE
+    # divisions the oracle's `1.0 / (SELECT c FROM n)` performs.
+    n = nodes.count()
+    ranks = nodes.select("node", F.lit(1.0 / n).alias("rank"))
+    # One (node, 0.0) row per node enters every round's aggregate: adding
+    # 0.0 to a sum is exact, and a node no edge reaches still gets a group.
+    zero = nodes.select("node", F.lit(0.0).alias("inflow"))
     for it in range(ITERS):
-        contrib = (
-            ranks.join(edges, ranks.node == edges.src)
-            .groupBy(F.col("dst").alias("cnode"))
-            .agg(F.sum(F.col("rank") * F.col("p")).alias("inflow"))
+        inflow = ranks.join(edges, ranks.node == edges.src).select(
+            F.col("dst").alias("node"), (F.col("rank") * F.col("p")).alias("inflow")
         )
         ranks = (
-            nodes.join(contrib, nodes.node == F.col("cnode"), "left")
-            .join(F.broadcast(ncnt))
-            .select(
-                "node",
-                (
-                    F.lit(0.15) / F.col("c")
-                    + F.lit(0.85) * F.coalesce("inflow", F.lit(0.0))
-                ).alias("rank"),
-            )
+            inflow.unionByName(zero)
+            .groupBy("node")
+            .agg((F.lit(0.15 / n) + F.lit(DAMPING) * F.sum("inflow")).alias("rank"))
         )
-        # Truncate lineage every 5th round (and on the last; r16-OPT, was
-        # every 2nd): each localCheckpoint is a blocking job, and on the
-        # |types|-node rank vector the loop is pure job-floor — a 5-deep
-        # join+agg chain still re-plans in milliseconds.  At billion-node
-        # scale the cadence knob trades recovery lineage against
-        # materialized rank-vector passes; the loop shape is unchanged.
+        # Truncate lineage every 5th round and on the last: each
+        # localCheckpoint is a blocking job, and a 5-deep join+aggregate
+        # chain still plans in milliseconds.
         if it % 5 == 4 or it == ITERS - 1:
             ranks = ranks.localCheckpoint()
     return ranks.select("node", F.round("rank", 6).alias("rank"))

@@ -41,6 +41,14 @@ ENGINE_DEFAULTS: dict[str, str] = {
     "spark.sql.autoBroadcastJoinThreshold": "64m",
     "spark.ui.enabled": "false",
     "spark.sql.sources.partitionOverwriteMode": "dynamic",
+    # Generated-code cache sized to the working set. One warm pass of the
+    # 102-query bench.py suite at sf0.1 compiles 2358-2431 distinct classes
+    # (the count of CodegenMetrics.METRIC_COMPILATION_TIME with an unbounded
+    # cache, on local[4]); the perfbench llm ops and the drift controls
+    # alone compile about 140. Spark's 100-entry default evicts classes the
+    # next pass reuses, so every pass recompiled them with Janino (~5 ms
+    # each). A static conf: it takes effect only at session build.
+    "spark.sql.codegen.cache.maxEntries": "2500",
 }
 
 

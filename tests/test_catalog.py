@@ -450,7 +450,8 @@ class TestSqlBackend:
         immediately — no claim-file GC needed on this backend."""
         sqlcat.create_namespace(("db",))
         sqlcat.create_table(("db", "t"), SCHEMA)
-        sqlcat._new_metadata_file(("db", "t"), 2, {"orphaned": True})
+        tdir = sqlcat._table_dir(("db", "t"))
+        sqlcat._new_metadata_file(tdir, 2, {"orphaned": True})
         t2 = sqlcat.update_table(
             ("db", "t"), [], [{"action": "set-properties", "updates": {"k": "v"}}]
         )
@@ -525,13 +526,10 @@ class TestFileIOSeam:
                    "isfile", "listdir", "mkdirs", "rename", "rmtree"):
             assert op in calls, f"{op} bypassed the FileIO seam"
 
-    def test_rename_resolves_each_identifier_once_and_loads_once(
-        self, tmp_path, monkeypatch
-    ):
+    @staticmethod
+    def _assert_rename_resolves_once_and_loads_once(cat, log, monkeypatch):
         import os
 
-        log: list[tuple] = []
-        cat = Catalog(str(tmp_path / "wh"), fileio=_recording_fileio(log))
         cat.create_namespace(("db",))
         cat.create_namespace(("db2",))
         cat.create_table(("db", "t"), SCHEMA)
@@ -555,6 +553,25 @@ class TestFileIOSeam:
         assert (t.version, t.metadata_location, t.metadata) == (
             fresh.version, fresh.metadata_location, fresh.metadata
         )
+
+    def test_rename_resolves_each_identifier_once_and_loads_once(
+        self, tmp_path, monkeypatch
+    ):
+        log: list[tuple] = []
+        cat = Catalog(str(tmp_path / "wh"), fileio=_recording_fileio(log))
+        self._assert_rename_resolves_once_and_loads_once(cat, log, monkeypatch)
+
+    def test_sql_rename_resolves_each_identifier_once_and_loads_once(
+        self, tmp_path, monkeypatch
+    ):
+        from iceberg_rest_catalog_spark.catalog import SqlCatalog
+
+        log: list[tuple] = []
+        cat = SqlCatalog(
+            str(tmp_path / "wh"), str(tmp_path / "cat.db"),
+            fileio=_recording_fileio(log),
+        )
+        self._assert_rename_resolves_once_and_loads_once(cat, log, monkeypatch)
 
 
 class TestLogRotation:
