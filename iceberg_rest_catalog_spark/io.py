@@ -15,19 +15,6 @@ from pyspark.sql import functions as F
 
 from .session import ensure_session_confs
 
-TABLES = (
-    "region",
-    "nation",
-    "customer",
-    "supplier",
-    "part",
-    "orders",
-    "lineitem",
-    "events",
-    "documents",
-    "embeddings",
-)
-
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
 
@@ -48,8 +35,3 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         )
     return df
 
-
-def register_views(spark: SparkSession, sf_dir: str, tables=TABLES) -> None:
-    """Register every fixture table as a temp view (for SQL-form queries)."""
-    for t in tables:
-        load_table(spark, sf_dir, t).createOrReplaceTempView(t)

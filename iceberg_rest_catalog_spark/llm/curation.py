@@ -475,6 +475,7 @@ def _bpe_train(
 
     rows = []
     step = 0
+    # not common.fixpoint: staging happens once per driver-side merge batch
     while step < n_merges:
         want = min(batch_m, n_merges - step)
         # one counting shuffle per BATCH; over-fetch 4x so the
@@ -565,7 +566,7 @@ def q_text_bpe_train(spark, sf_dir):
     + a map-combined pair count, argmax as a TakeOrdered pull (the
     Lloyd's-iteration driver scalar), then the merge applied with literal
     lhs/rhs — window functions only, no Python in the loop,
-    localCheckpoint per round (the PageRank/CC lineage discipline).
+    localCheckpoint per merge batch.
     Merge application is RELATIONAL, not a sequential scan: for
     lhs <> rhs adjacent occurrences can never overlap, so all merge; for
     lhs = rhs the greedy left-to-right rule is exactly `offset within the

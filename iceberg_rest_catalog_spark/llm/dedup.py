@@ -27,7 +27,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from ..operators.common import r4, scratch_dir, t
+from ..operators.common import fixpoint, r4, scratch_dir, t
 from ..registry import query
 
 N_HASHES = 16
@@ -951,56 +951,6 @@ def _cluster_oracle() -> str:
     """
 
 
-def _propagate_min_labels(labels, edges, max_rounds: int = 50):
-    """Min-label propagation to the EXACT fixpoint: each round every node
-    takes the minimum label among itself and its neighbours; stop when no
-    label changed. The recursive-CTE oracles compute the full transitive
-    closure, so a fixed round count would silently diverge on any
-    component whose diameter exceeds it (chain-shaped near-dup runs) —
-    iterating to convergence removes that failure mode entirely.
-
-    Convergence test: labels are monotone non-increasing, so the label sum
-    is unchanged between rounds iff every individual label is unchanged —
-    one cheap aggregate per round instead of a self-join diff. Summed as
-    decimal(38,0) so billions of 64-bit ids cannot overflow the check.
-    Each round is one join + one aggregate (shuffle on node id) and a
-    localCheckpoint to truncate lineage; `max_rounds` only guards against
-    a logic bug, and hitting it raises rather than returning unmerged
-    clusters."""
-    label_sum = lambda df: df.agg(  # noqa: E731
-        F.sum(F.col("label").cast("decimal(38,0)"))
-    ).first()[0]
-    prev = label_sum(labels)
-    if prev is None:
-        # empty candidate graph (fully deduplicated corpus / tiny sf):
-        # there is nothing to propagate — the empty frame IS the fixpoint.
-        # Without this, sum() stays None every round, None == None is never
-        # compared against a real value, and the loop would burn max_rounds
-        # and raise.
-        return labels
-    for _ in range(max_rounds):
-        neighbor_min = (
-            edges.join(labels, edges.doc_b == labels.node)
-            .groupBy(F.col("doc_a").alias("node2"))
-            .agg(F.min("label").alias("nmin"))
-        )
-        labels = (
-            labels.join(neighbor_min, labels.node == F.col("node2"), "left")
-            .select(
-                "node",
-                F.least(F.col("label"), F.coalesce("nmin", "label")).alias("label"),
-            )
-            .localCheckpoint()  # truncate lineage each fixed-point round
-        )
-        cur = label_sum(labels)
-        if cur == prev:
-            return labels
-        prev = cur
-    raise RuntimeError(
-        f"min-label propagation did not converge within {max_rounds} rounds"
-    )
-
-
 def _cc_star(edges, max_rounds: int = 30):
     """Connected components via alternating LARGE-STAR / SMALL-STAR — the
     O(log n)-round algorithm (Kiveris et al., "Connected Components in
@@ -1023,8 +973,7 @@ def _cc_star(edges, max_rounds: int = 30):
     that must also pass before the loop stops — a signature collision
     (structured role-swaps defeat linear-form signatures; a 64-bit hash
     sum makes them ~2^-64 but not impossible) therefore costs one extra
-    join, never a wrong cluster. Each round localCheckpoints to truncate
-    lineage, like the min-label loop."""
+    join, never a wrong cluster. The loop is common.fixpoint's."""
     E = (
         edges.select(F.col("doc_a").alias("u"), F.col("doc_b").alias("v"))
         .filter(F.col("u") != F.col("v"))
@@ -1039,11 +988,12 @@ def _cc_star(edges, max_rounds: int = 30):
         ).first()
         return (row["n"], row["s"])
 
-    def _same_edges(a, b):
+    def _same_edges(prev, cur):
         # exact equality given equal cardinality (the signature gate
         # already matched counts): both frames are DISTINCT edge sets, so
-        # a ⊆ b together with |a| == |b| implies a == b — one anti-join
-        return a.join(b, ["u", "v"], "left_anti").limit(1).count() == 0
+        # cur ⊆ prev together with |cur| == |prev| implies cur == prev —
+        # one anti-join
+        return cur.join(prev, ["u", "v"], "left_anti").limit(1).count() == 0
 
     def _large(e):
         und = e.union(e.select(F.col("v").alias("u"), F.col("u").alias("v")))
@@ -1070,18 +1020,10 @@ def _cc_star(edges, max_rounds: int = 30):
             .distinct()
         )
 
-    prev_sig = _sig(E)
-    if prev_sig[0] == 0:
-        return E.select(F.col("u").alias("node"), F.col("v").alias("label"))
-    for _ in range(max_rounds):
-        nxt = _small(_large(E)).localCheckpoint()
-        cur = _sig(nxt)
-        if cur == prev_sig and _same_edges(nxt, E):
-            E = nxt
-            break
-        E, prev_sig = nxt, cur
-    else:
-        raise RuntimeError(f"star CC did not converge within {max_rounds} rounds")
+    E = fixpoint(
+        lambda e: _small(_large(e)), E, max_rounds,
+        signature=_sig, confirm=_same_edges,
+    )
     # stars: (leaf, center) edges + centers labeling themselves
     centers = E.select(F.col("v").alias("node"), F.col("v").alias("label")).distinct()
     leaves = E.select(F.col("u").alias("node"), F.col("v").alias("label"))
@@ -1096,11 +1038,11 @@ def q_dedup_cluster(spark, sf_dir):
 
     Spark has no native CC operator; since round 5 this runs the
     large-star/small-star alternation (:func:`_cc_star`) whose round count
-    is LOGARITHMIC in component size — the 100 TB-safe choice, where the
-    previous min-label loop (:func:`_propagate_min_labels`, kept for the
-    tiny-diameter case and property-tested against _cc_star) pays one
-    round per unit of graph diameter. Both compute the exact components,
-    so the recursive-CTE transitive-closure oracle is unchanged.
+    is LOGARITHMIC in component size — the 100 TB-safe choice, where
+    min-label propagation (the reference tests/test_llm_quality.py checks
+    _cc_star against) pays one round per unit of graph diameter. Both
+    compute the exact components, so the recursive-CTE transitive-closure
+    oracle is unchanged.
     """
     # _cc_star checkpoints its canonical edge set up front, so the LSH
     # pipeline is materialized once and never re-runs per CC round
@@ -1568,28 +1510,29 @@ def _semantic_oracle() -> str:
     """
 
 
-def semantic_k_for(n_vectors: int) -> int:
-    """The SemDeDup centroid-count knob: K grows with the corpus so the
-    expected cluster size (and with it the within-cluster pair term
-    E[|cluster|^2] * K ~ n * E[|cluster|]) stays FLAT per input row.
-    Target ~512 vectors per cluster, floored at the oracle's K_CLUSTERS
-    and capped so the broadcast centroid table (K x 64 doubles) stays a
-    few MB. Measured on the x10 corpus in SCALE.md round 7: with K fixed
-    the decade step is quadratic-ish; with this formula it returns to the
-    linear band."""
-    from .similarity import K_CLUSTERS
+@query("q_dedup_semantic", oracle=_semantic_oracle())
+def q_dedup_semantic(spark, sf_dir):
+    """SemDeDup-shape semantic dedup: cluster the corpus with the
+    deterministic 3-iteration k-means (the q_cluster_kmeans assignment,
+    shared code AND shared oracle CTEs), then inside each cluster drop any
+    vector whose cosine to an earlier (lower vec_id) cluster member is
+    >= 0.4. Returns the surviving (vec_id, label, cluster).
 
-    return max(K_CLUSTERS, min(65_536, n_vectors // 512))
-
-
-def _semantic_survivors(spark, sf_dir, k: int):
-    """Core of q_dedup_semantic with the centroid count as a parameter —
-    the registered query pins k=K_CLUSTERS (what the unrolled oracle
-    computes); the scale path passes semantic_k_for(n)."""
+    This is q_dedup_embedding with LEARNED blocks instead of given label
+    blocks — the production semantic-dedup recipe for unlabeled corpora
+    (cluster first, pair only within a cluster, so the quadratic term is
+    bounded by cluster size, not corpus size). At 100 TB the only knob
+    that moves is K: ~512 vectors per cluster keeps E[|cluster|^2] flat
+    (the x10 measurement is in SCALE.md round 7). THIS registered query
+    pins k=K_CLUSTERS because that is the recurrence the DuckDB oracle
+    unrolls. The pair scan carries each vector's norm computed once, and
+    the drop set returns via a half-join (id_a < id_b) + distinct +
+    anti-join — the q_dedup_embedding plan keyed by cell instead of
+    label."""
     from .similarity import _dot, _kmeans_assigned, _norm
 
     assigned = (
-        _kmeans_assigned(spark, sf_dir, k)
+        _kmeans_assigned(spark, sf_dir)
         # one materialization feeds both self-join arms AND the anti-join
         .localCheckpoint()
         .withColumn("nrm", _norm(F.col("emb")))
@@ -1618,34 +1561,6 @@ def _semantic_survivors(spark, sf_dir, k: int):
     return assigned.join(dups, "vec_id", "left_anti").select(
         "vec_id", "label", F.col("cell").cast("long").alias("cluster")
     )
-
-
-@query("q_dedup_semantic", oracle=_semantic_oracle())
-def q_dedup_semantic(spark, sf_dir):
-    """SemDeDup-shape semantic dedup: cluster the corpus with the
-    deterministic 3-iteration k-means (the q_cluster_kmeans assignment,
-    shared code AND shared oracle CTEs), then inside each cluster drop any
-    vector whose cosine to an earlier (lower vec_id) cluster member is
-    >= 0.4. Returns the surviving (vec_id, label, cluster).
-
-    This is q_dedup_embedding with LEARNED blocks instead of given label
-    blocks — the production semantic-dedup recipe for unlabeled corpora
-    (cluster first, pair only within a cluster, so the quadratic term is
-    bounded by cluster size, not corpus size). At 100 TB the only knob
-    that moves is K — and since round 7 the knob is real code, not prose:
-    :func:`_semantic_survivors` takes the centroid count and
-    :func:`semantic_k_for` scales it (~512 vectors/cluster, SemDeDup-style
-    tens of thousands of centroids at corpus scale) so E[|cluster|^2]
-    stays flat; the x10 measurement is in SCALE.md round 7. THIS registered
-    query pins k=K_CLUSTERS because that is the recurrence the DuckDB
-    oracle unrolls; the assignment stays a broadcast join + per-vector
-    argmin whatever K is. The pair scan carries each vector's norm
-    computed once, and the drop set returns via a half-join (id_a < id_b)
-    + distinct + anti-join — the q_dedup_embedding plan keyed by cell
-    instead of label."""
-    from .similarity import K_CLUSTERS
-
-    return _semantic_survivors(spark, sf_dir, K_CLUSTERS)
 
 
 @query(

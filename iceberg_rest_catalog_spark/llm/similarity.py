@@ -529,58 +529,6 @@ SELECT q_vec_id, nn_vec_id, CAST(rank AS BIGINT) AS rank, cos FROM (
 """
 
 
-def _knn_batch_oracle(cells_sql: str, qstep_sql) -> str:
-    """The FLAT-assignment IVF kNN-join oracle with the cell count and
-    probe stride as SQL expressions — kept for the measurement tools'
-    pinned shapes; the REGISTERED queries use _knn_batch_oracle_scaled
-    (assignment branch included) since round 10."""
-    return f"""
-WITH e AS (
-  SELECT vec_id, embedding::DOUBLE[] AS emb
-  FROM embeddings WHERE embedding IS NOT NULL
-),
-cent AS (SELECT vec_id AS cell, emb AS c FROM e WHERE vec_id < {cells_sql}),
-ascore AS (
-  SELECT e.vec_id, e.emb, cent.cell,
-         round(list_cosine_similarity(e.emb, cent.c), 4) AS cc
-  FROM e CROSS JOIN cent),
-assigned AS (
-  SELECT vec_id, emb, cell FROM (
-    SELECT vec_id, emb, cell,
-           row_number() OVER (
-             PARTITION BY vec_id ORDER BY cc DESC, cell) AS rn
-    FROM ascore
-  ) WHERE rn = 1
-),
-q AS (SELECT vec_id AS q_vec_id, emb AS qe FROM e
-      WHERE vec_id % {qstep_sql} = 0),
-qscore AS (
-  SELECT q.q_vec_id, q.qe, cent.cell,
-         round(list_cosine_similarity(q.qe, cent.c), 4) AS cc
-  FROM q CROSS JOIN cent),
-probed AS (
-  SELECT q_vec_id, qe, cell FROM (
-    SELECT q_vec_id, qe, cell,
-           row_number() OVER (
-             PARTITION BY q_vec_id ORDER BY cc DESC, cell) AS rn
-    FROM qscore
-  ) WHERE rn <= {N_PROBE}
-),
-pscore AS (
-  SELECT p.q_vec_id, a.vec_id AS nn_vec_id,
-         round(list_cosine_similarity(a.emb, p.qe), 4) AS cos
-  FROM probed p JOIN assigned a USING (cell)
-  WHERE a.vec_id <> p.q_vec_id)
-SELECT q_vec_id, nn_vec_id, CAST(rank AS BIGINT) AS rank, cos FROM (
-  SELECT q_vec_id, nn_vec_id, cos,
-         row_number() OVER (
-           PARTITION BY q_vec_id
-           ORDER BY cos DESC, nn_vec_id) AS rank
-  FROM pscore
-) WHERE rank <= {KNN_K}
-"""
-
-
 _KNN_BATCH_ORACLE = _knn_batch_oracle_scaled(KNN_QSTEP)
 
 
@@ -596,9 +544,8 @@ def ivf_cells_for(n_vectors: int) -> int:
     table, past Spark's 10 MB auto-broadcast default but still an explicit
     F.broadcast() comfortably inside executor memory (the cap bounds the
     table; raise spark.sql.autoBroadcastJoinThreshold accordingly or accept
-    the hint-forced build side) — the semantic_k_for discipline applied to
-    the index geometry. NOTE: unlike
-    the probe-stride knob this one moves the recall operating point
+    the hint-forced build side). NOTE: unlike the probe-stride knob this
+    one moves the recall operating point
     (fixed N_PROBE over smaller cells sees a smaller corpus fraction);
     SCALE.md "Round-8 IVF cell-count knob" records both the cost and
     that trade."""
@@ -614,8 +561,7 @@ def recall_qstep_for(n_vectors: int) -> int:
     with the corpus and the exact brute-force baseline |batch| x corpus =
     QUADRATICALLY (measured: 8.25x for the x10 step, SCALE.md round 8);
     scaling the stride pins the batch at ~RECALL_TARGET_PROBES and
-    returns the audit to one linear corpus scan — the q_dedup_semantic
-    ``semantic_k_for`` discipline applied to the probe side."""
+    returns the audit to one linear corpus scan."""
     return max(KNN_QSTEP, -(-n_vectors // RECALL_TARGET_PROBES))
 
 
@@ -998,15 +944,6 @@ SELECT vec_id, label, CAST(cell AS BIGINT) AS cluster FROM a3
 """
 
 
-# Above this many centroids the packed-array arm (ONE broadcast row holding
-# all k centroids, argmin per vector over the array) gives way to the
-# broadcast-join + window form: the scale path (semantic_k_for, tens of
-# thousands of centroids) wants centroids as rows, not a single k x 64
-# array cell.  64 covers every registered query (K_CLUSTERS=8,
-# ELBOW_KS<=16).
-KMEANS_PACKED_MAX_K = 64
-
-
 def _cents_row(cent):
     """(cell, c) centroid rows -> ONE row [cents: array<struct<cell,c>>]
     sorted by cell, for a broadcast cross-join onto the corpus.  The
@@ -1051,75 +988,36 @@ def _recenter(assigned):
     )
 
 
-def _kmeans_assigned(spark, sf_dir, k: int = K_CLUSTERS):
+def _kmeans_assigned(spark, sf_dir):
     """The 3-iteration Lloyd assignment (vec_id, label, emb, cell) — the
     body of q_cluster_kmeans, extracted so q_dedup_semantic can derive its
     dedup blocks from the SAME deterministic clustering the oracle unrolls.
 
-    ``k`` is the SemDeDup scale knob (VERDICT r6 item 4): the registered
-    queries pin k=K_CLUSTERS so the unrolled oracle stays exact, while the
-    scale path (llm/dedup.py semantic_k_for) grows k with the corpus so
-    E[|cluster|^2] stays flat.
-
-    Since round 17 small k (every registered query) packs the k x 64
-    centroids into ONE broadcast row and assigns via an array_min
-    projection — the corpus row count is never multiplied by k, exchanged
-    or sorted for assignment (guide §2.1: the per-iteration window was an
-    Exchange+Sort of the k x -exploded corpus), and the whole 3-iteration
-    chain stays lazy (no per-iteration checkpoint action: each recenter
-    references its input once, so the plan nests linearly).  Large k keeps
-    the broadcast-join + window form: the scale path wants centroids as
-    rows, not one giant array cell."""
+    Since round 17 the K_CLUSTERS x 64 centroids pack into ONE broadcast
+    row and assignment is an array_min projection — the corpus row count
+    is never multiplied by k, exchanged or sorted for assignment (guide
+    §2.1: the per-iteration window was an Exchange+Sort of the k x
+    -exploded corpus), and the whole 3-iteration chain stays lazy (no
+    per-iteration checkpoint action: each recenter references its input
+    once, so the plan nests linearly)."""
     e = _emb(spark, sf_dir).select(
         "vec_id", "label", _dbl("embedding").alias("emb")
     )
-    if k <= KMEANS_PACKED_MAX_K:
-        cent = e.filter(F.col("vec_id") < k).select(
-            F.col("vec_id").alias("cell"), F.col("emb").alias("c")
-        )
-        assigned = None
-        # Exactly 3 iterations and no checkpoint: each recenter reads its
-        # input once, so the plan nests 3 deep and re-runs nothing. More
-        # iterations would need a checkpoint between them, or the plan
-        # (and its analysis time) grows with every round.
-        for it in range(3):
-            best = _argmin_cell(F.col("emb"), F.col("cents"))
-            assigned = e.crossJoin(F.broadcast(_cents_row(cent))).select(
-                "vec_id", "label", "emb", best["cell"].alias("cell")
-            )
-            if it < 2:
-                cent = _recenter(assigned)
-        return assigned
-
-    from pyspark.sql import Window
-
-    cent = e.filter(F.col("vec_id") < k).select(
+    cent = e.filter(F.col("vec_id") < K_CLUSTERS).select(
         F.col("vec_id").alias("cell"), F.col("emb").alias("c")
     )
-    w = Window.partitionBy("vec_id").orderBy(F.asc("d2"), F.asc("cell"))
     assigned = None
+    # Exactly 3 iterations and no checkpoint: each recenter reads its
+    # input once, so the plan nests 3 deep and re-runs nothing. More
+    # iterations would need a checkpoint between them, or the plan
+    # (and its analysis time) grows with every round.
     for it in range(3):
-        assigned = (
-            e.join(F.broadcast(cent))
-            .withColumn("d2", _l2sq(F.col("emb"), F.col("c")))
-            .withColumn("rn", F.row_number().over(w))
-            .filter(F.col("rn") == 1)
-            .select("vec_id", "label", "emb", "cell")
+        best = _argmin_cell(F.col("emb"), F.col("cents"))
+        assigned = e.crossJoin(F.broadcast(_cents_row(cent))).select(
+            "vec_id", "label", "emb", best["cell"].alias("cell")
         )
         if it < 2:
-            cent = (
-                assigned.select("cell", F.posexplode("emb").alias("d", "val"))
-                .groupBy("cell", "d")
-                .agg(F.avg("val").alias("v"))
-                .groupBy("cell")
-                .agg(
-                    F.transform(
-                        F.array_sort(F.collect_list(F.struct("d", "v"))),
-                        lambda s: s.v,
-                    ).alias("c")
-                )
-                .localCheckpoint()
-            )
+            cent = _recenter(assigned)
     return assigned
 
 
@@ -1745,8 +1643,8 @@ def q_embed_kmeans_elbow(spark, sf_dir):
     per k the total inertia (sum of squared distance to the final
     centroid) and its per-vector mean — the curve that picks K before
     anyone commits to a clustering, and the fixture-scale companion of
-    the `semantic_k_for` / `ivf_cells_for` knobs (those scale K with the
-    corpus; this measures what a given K buys on THIS corpus).
+    the `ivf_cells_for` knob (that scales the cell count with the corpus;
+    this measures what a given K buys on THIS corpus).
 
     Scale shape: identical per-vector math to q_cluster_kmeans per k —
     since round 17 the assignment is a packed-centroid broadcast-row

@@ -94,6 +94,38 @@ def widen(df: DataFrame, key: str) -> DataFrame:
     return df
 
 
+def fixpoint(step, state, rounds, *, stage_every=1, signature=None, confirm=None):
+    """Iterate ``state = step(state)``, truncating lineage with
+    ``localCheckpoint()`` — the one loop every iterative operator runs on.
+
+    Without ``signature``: exactly ``rounds`` rounds, staged after every
+    ``stage_every``-th round and after the last.  Each staging is one
+    blocking job, so a short un-staged chain is cheaper — but a step that
+    reads its input twice doubles the un-staged plan every round: between
+    stagings the subtree is replicated 2^stage_every times, so keep
+    ``stage_every`` small for such steps.
+
+    With ``signature``: staged every round; stops at the first round whose
+    ``signature`` equals the previous round's and, if given,
+    ``confirm(prev_state, cur_state)`` holds (an exact check behind a
+    cheap signature gate).  Not converging within ``rounds`` raises — a
+    truncated fixpoint would be a silently wrong result."""
+    prev = None if signature is None else signature(state)
+    for r in range(1, rounds + 1):
+        last, state = state, step(state)
+        if signature is not None or r % stage_every == 0 or r == rounds:
+            state = state.localCheckpoint()
+        if signature is None:
+            continue
+        cur = signature(state)
+        if cur == prev and (confirm is None or confirm(last, state)):
+            return state
+        prev = cur
+    if signature is not None:
+        raise RuntimeError(f"no fixpoint within {rounds} rounds")
+    return state
+
+
 def release_persistent_state(spark: SparkSession) -> int:
     """Unpersist every cached plan and persistent RDD in the session;
     returns how many RDDs were released.

@@ -15,13 +15,12 @@ smaller side here, a shuffle join on src at scale), each node's inflow is
 the map-side-combined sum keyed on dst, and a (node, 0.0) row per node
 rides the same aggregate so a sink or unreached node keeps its teleport
 share. There is no join back to the node set and no node-count cross join,
-so a round here is one shuffle. localCheckpoint truncates the growing
-lineage every few rounds (the q_dedup_cluster pattern). The node set is
-DISTINCT event_type from the events themselves (not edges.src), so a sink
-node — one with inbound transitions but none outbound — still holds rank;
-its outflow leaks, the classic dangling-mass approximation, identically on
-both engines because the oracle computes the same unrolled recurrence over
-the same node set.
+so a round here is one shuffle, and common.fixpoint stages the rank vector.
+The node set is DISTINCT event_type from the events themselves (not
+edges.src), so a sink node — one with inbound transitions but none
+outbound — still holds rank; its outflow leaks, the classic dangling-mass
+approximation, identically on both engines because the oracle computes the
+same unrolled recurrence over the same node set.
 
 Unlike q_dedup_cluster (rows-only by design), the fixed iteration count
 makes this one fully oracle-checkable: the DuckDB oracle UNROLLS the ten
@@ -37,7 +36,7 @@ from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from ..registry import query
-from .common import t
+from .common import fixpoint, t
 
 ITERS = 10
 DAMPING = 0.85
@@ -107,20 +106,18 @@ def _pagerank(ev):
     # One (node, 0.0) row per node enters every round's aggregate: adding
     # 0.0 to a sum is exact, and a node no edge reaches still gets a group.
     zero = nodes.select("node", F.lit(0.0).alias("inflow"))
-    for it in range(ITERS):
+
+    def _round(ranks):
         inflow = ranks.join(edges, ranks.node == edges.src).select(
             F.col("dst").alias("node"), (F.col("rank") * F.col("p")).alias("inflow")
         )
-        ranks = (
+        return (
             inflow.unionByName(zero)
             .groupBy("node")
             .agg((F.lit(0.15 / n) + F.lit(DAMPING) * F.sum("inflow")).alias("rank"))
         )
-        # Truncate lineage every 5th round and on the last: each
-        # localCheckpoint is a blocking job, and a 5-deep join+aggregate
-        # chain still plans in milliseconds.
-        if it % 5 == 4 or it == ITERS - 1:
-            ranks = ranks.localCheckpoint()
+
+    ranks = fixpoint(_round, ranks, ITERS, stage_every=5)
     return ranks.select("node", F.round("rank", 6).alias("rank"))
 
 
@@ -535,40 +532,6 @@ def _event_graph(spark, sf_dir):
     return nodes, de
 
 
-def _cc_min_label(nodes, de, iters: int = CC_ITERS):
-    """Fixed-round min-label propagation — the value-checkable oracle twin
-    of the star-CC production path (the DuckDB oracle unrolls THIS exact
-    recurrence as chained CTEs). Kept callable so the equality property
-    test pins star-CC == min-label on the event graph every round."""
-    edges = (
-        de.unionAll(de.select(F.col("v").alias("u"), F.col("u").alias("v")))
-        .distinct()
-        .localCheckpoint()  # edge build runs ONCE, not once per round
-    )
-    lbl = nodes.select("node", F.col("node").alias("lbl")).localCheckpoint()
-    for it in range(iters):
-        nbr_min = (
-            edges.join(lbl, edges.v == lbl.node)
-            .groupBy("u")
-            .agg(F.min("lbl").alias("nlbl"))
-        )
-        lbl = (
-            lbl.join(nbr_min, lbl.node == nbr_min.u, "left")
-            .select(
-                "node",
-                F.least(F.col("lbl"), F.coalesce("nlbl", F.col("lbl"))).alias("lbl"),
-            )
-        )
-        # r16-OPT: was every 2nd.  CADENCE CAVEAT (r16 ADVICE): `lbl` is
-        # referenced twice per round (the vote join + the left join), so
-        # the un-truncated subtree replicates 2^k between checkpoints —
-        # 16x at cadence 4.  Fine at the fixture's CC_ITERS/frame width;
-        # derive from a constant and re-measure before raising either.
-        if it % 4 == 3 or it == iters - 1:
-            lbl = lbl.localCheckpoint()
-    return lbl.select("node", F.col("lbl").alias("component"))
-
-
 @query("q_graph_cc", oracle=_cc_oracle(CC_ITERS))
 def q_graph_cc(spark, sf_dir):
     """Connected components of the undirected event-transition graph —
@@ -580,14 +543,15 @@ def q_graph_cc(spark, sf_dir):
     component = minimum node id in the component.
 
     The DuckDB oracle stays the UNROLLED fixed-round min-label recurrence
-    (:func:`_cc_min_label`, {CC_ITERS} rounds): both compute exact
-    components whenever every component's diameter fits the round budget —
-    trivially true on the near-complete event-type graph — and
-    tests/test_llm_quality.py pins star == min-label on the event fixture
-    AND on random graphs, so the oracle twin's equivalence is
-    property-tested, not assumed (VERDICT r6 item 5). At billion-edge
-    scale the star path's round count is logarithmic in component size
-    where plain propagation pays one round per unit of diameter.
+    ({CC_ITERS} rounds): both compute exact components whenever every
+    component's diameter fits the round budget — trivially true on the
+    near-complete event-type graph — and tests/test_llm_quality.py pins
+    that min-label converges within {CC_ITERS} rounds on the event fixture
+    and that star == min-label there AND on random graphs, so the oracle
+    twin's equivalence is property-tested, not assumed (VERDICT r6 item
+    5). At billion-edge scale the star path's round count is logarithmic
+    in component size where plain propagation pays one round per unit of
+    diameter.
 
     Reference scope: the reference (Go REST facade) has no graph ops;
     this extends the engine's analytics family alongside q_graph_pagerank.
@@ -903,28 +867,29 @@ def _knn_edges(
     return e, edges.localCheckpoint()  # one build per EXPLICIT-knob caller
 
 
-def _knn_bfs(spark, sf_dir, n_cells: int | None = None):
+def _knn_bfs(spark, sf_dir):
     """Core of q_graph_knn_bfs: _knn_edges + the fixed-round min-plus
     relaxation loop."""
-    e, edges = _knn_edges(spark, sf_dir, n_cells)
+    e, edges = _knn_edges(spark, sf_dir)
     dist = e.select(
         F.col("vec_id").alias("node"),
         F.when(F.col("vec_id") == BFS_SRC, 0)
         .otherwise(_UNREACHED)
         .alias("dist"),
     ).localCheckpoint()
-    for it in range(BFS_ITERS):
+
+    def _relax(dist):
         nbr = (
             edges.join(dist, edges.u == dist.node)
             .groupBy("v")
             .agg(F.min(F.col("dist") + 1).alias("nd"))
         )
-        dist = dist.join(nbr, dist.node == nbr.v, "left").select(
+        return dist.join(nbr, dist.node == nbr.v, "left").select(
             "node",
             F.least(F.col("dist"), F.coalesce("nd", F.col("dist"))).alias("dist"),
         )
-        if it % 3 == 2 or it == BFS_ITERS - 1:  # r16-OPT: was every 2nd
-            dist = dist.localCheckpoint()
+
+    dist = fixpoint(_relax, dist, BFS_ITERS, stage_every=3)
     return (
         dist.filter(F.col("dist") < _UNREACHED)
         .select(F.col("node").alias("vec_id"), F.col("dist").cast("int").alias("dist"))
@@ -951,11 +916,11 @@ def q_graph_knn_bfs(spark, sf_dir):
     per-vector top-{BFS_K} is a window over that bounded candidate set.
     The BFS loop is |edges|-linear per round with a fixed round budget:
     join dist onto edges, min-reduce per head node, least() back into the
-    running distance — the same eager localCheckpoint-every-2-rounds
-    lineage discipline as PageRank/CC (a fixed-round loop whose per-round
-    cost is one shuffle keyed on node id at any graph size).  Ranking
-    everywhere uses the 4dp-ROUNDED cosine with id tiebreaks, so the edge
-    set — and therefore every distance — is bit-stable across engines."""
+    running distance, staged by common.fixpoint (a fixed-round loop whose
+    per-round cost is one shuffle keyed on node id at any graph size).
+    Ranking everywhere uses the 4dp-ROUNDED cosine with id tiebreaks, so
+    the edge set — and therefore every distance — is bit-stable across
+    engines."""
     return _knn_bfs(spark, sf_dir)
 
 
@@ -1109,6 +1074,7 @@ def _lpa_rounds(spark, sf_dir):
     ).localCheckpoint()
     rounds = [labels]
     rw = W.partitionBy("u").orderBy(F.desc("c"), "lbl")
+    # not common.fixpoint: q_graph_edge_audit reads every round's frame
     for _ in range(LPA_ROUNDS):
         vote = (
             edges.join(labels, edges.v == labels.node)
@@ -1157,10 +1123,9 @@ def q_graph_label_propagation(spark, sf_dir):
     Scale shape: edge build is the IVF-join kNN graph (scaled cells +
     flat/two-level assignment knobs — see _knn_edges); each round is one
     node-keyed shuffle (edges join labels -> map-combined vote counts ->
-    rn=1 window) over |edges| rows, localCheckpoint per round (the
-    PageRank/CC lineage discipline).  Round count is a fixed knob —
-    cost is rounds x one-shuffle, independent of corpus beyond the
-    linear edge volume.
+    rn=1 window) over |edges| rows, localCheckpoint per round.  Round
+    count is a fixed knob — cost is rounds x one-shuffle, independent of
+    corpus beyond the linear edge volume.
 
     Reference scope: no graph surface in the reference facade
     (api/router/router.go:9-55); community sibling of q_graph_cc
@@ -1254,10 +1219,9 @@ def q_graph_kcore(spark, sf_dir):
     Scale shape: the edge build is the banded-LSH candidate join
     (never all-pairs — the q_dedup_fuzzy scale story); each peel round
     is one endpoint-filter join pair + a map-combined degree aggregate
-    over |edges| rows, localCheckpoint per round (the LPA/CC lineage
-    discipline); the active frame strictly shrinks, so later rounds are
-    cheaper.  Peel depth on near-dup graphs is tiny (pendants fall in
-    round 1).
+    over |edges| rows, staged by common.fixpoint; the active frame
+    strictly shrinks, so later rounds are cheaper.  Peel depth on
+    near-dup graphs is tiny (pendants fall in round 1).
 
     Reference scope: no graph surface in the reference facade
     (api/router/router.go:9-55); density sibling of q_graph_triangles
@@ -1275,28 +1239,18 @@ def q_graph_kcore(spark, sf_dir):
         .localCheckpoint()  # LSH pipeline runs ONCE, not once per round
     )
     active = edges.select(F.col("u").alias("node")).distinct().localCheckpoint()
-    for it in range(KCORE_ROUNDS):
+
+    def _peel(active):
         deg = (
             edges.join(active.withColumnRenamed("node", "u"), "u")
             .join(active.withColumnRenamed("node", "v"), "v")
             .groupBy("u")
             .agg(F.count("*").alias("deg"))
         )
-        active = deg.filter(F.col("deg") >= KCORE_K).select(
-            F.col("u").alias("node")
-        )
-        # Truncate lineage every 2nd round (and on the last) — the
-        # pagerank cadence: a 2-deep join chain re-plans fine and each
-        # skipped localCheckpoint saves one full materialization job
-        # (r16-OPT; the peel frames here are |active|-row and the rounds
-        # are scheduling-bound at bench scale).  CADENCE CAVEAT (r16
-        # ADVICE): `active` is referenced TWICE per round (both endpoint
-        # filters), so the un-truncated plan doubles per round — subtree
-        # replication is 2^k at cadence k.  2 rounds = 4x is fine;
-        # revisit this constant before raising KCORE_ROUNDS or widening
-        # the frame.
-        if it % 2 == 1 or it == KCORE_ROUNDS - 1:
-            active = active.localCheckpoint()
+        return deg.filter(F.col("deg") >= KCORE_K).select(F.col("u").alias("node"))
+
+    # `active` is read twice per round: see fixpoint on stage_every
+    active = fixpoint(_peel, active, KCORE_ROUNDS, stage_every=2)
     return (
         edges.join(active.withColumnRenamed("node", "u"), "u")
         .join(active.withColumnRenamed("node", "v"), "v")
@@ -2194,7 +2148,8 @@ def q_sim_graph_search(spark, sf_dir):
     )
     beam = probes.select("qid", F.lit(BFS_SRC).cast("long").alias("node"))
     w = Window.partitionBy("qid").orderBy(F.desc("cos"), "node")
-    for _ in range(GS_ROUNDS):
+
+    def _expand(beam):
         nbr = beam.join(edges, beam["node"] == edges["u"]).select(
             "qid", F.col("v").alias("node")
         )
@@ -2204,12 +2159,13 @@ def q_sim_graph_search(spark, sf_dir):
             .join(F.broadcast(probes), "qid")
             .select("qid", "node", r4(_cos(F.col("emb"), F.col("qe"))).alias("cos"))
         )
-        beam = (
+        return (
             scored.withColumn("rk", F.row_number().over(w))
             .filter(F.col("rk") <= GS_BEAM)
             .select("qid", "node", "cos")
-            .localCheckpoint()
         )
+
+    beam = fixpoint(_expand, beam, GS_ROUNDS)
     approx = (
         beam.filter(F.col("node") != F.col("qid"))
         .withColumn("rk", F.row_number().over(w))
@@ -2373,8 +2329,7 @@ def q_graph_eccentricity(spark, sf_dir):
 
     Scale shape: per round one edges-keyed join + map-combined min —
     frontier volume bounded by |probes| x |reachable|, probes pinned by
-    the stride knob; localCheckpoint every third round (the BFS lineage
-    discipline).
+    the stride knob; staged by common.fixpoint.
 
     Reference scope: no graph surface in the reference facade
     (api/router/router.go:9-55); connectivity sibling of q_graph_knn_bfs
@@ -2393,18 +2348,18 @@ def q_graph_eccentricity(spark, sf_dir):
         )
         .localCheckpoint()
     )
-    for it in range(ECC_ROUNDS):
-        nxt = (
-            front.join(edges, front.node == edges.u)
-            .select("qid", F.col("v").alias("node"), (F.col("dist") + 1).alias("dist"))
+
+    def _expand(front):
+        nxt = front.join(edges, front.node == edges.u).select(
+            "qid", F.col("v").alias("node"), (F.col("dist") + 1).alias("dist")
         )
-        front = (
+        return (
             front.unionByName(nxt)
             .groupBy("qid", "node")
             .agg(F.min("dist").alias("dist"))
         )
-        if it % 3 == 2 or it == ECC_ROUNDS - 1:  # r16-OPT: was every 2nd
-            front = front.localCheckpoint()
+
+    front = fixpoint(_expand, front, ECC_ROUNDS, stage_every=3)
     return (
         front.groupBy("qid")
         .agg(

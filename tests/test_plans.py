@@ -378,20 +378,81 @@ def test_release_persistent_state_clears_checkpoint_leak(spark):
     assert spark.sparkContext._jsc.getPersistentRDDs().size() == 0
 
 
-def test_pagerank_build_job_floor(spark):
-    """Each PageRank round is one join and one aggregate (inflow rows plus
-    one zero row per node), so building q_graph_pagerank runs 24 Spark
-    jobs on the tier-1 fixture.  The earlier round, which also joined back
-    to the node set and cross-joined a broadcast 1-row node count, ran 39."""
+# Spark jobs run while BUILDING each fixpoint-loop query on the tier-1
+# fixture (the eager localCheckpoint and signature actions), counted after
+# a first build has warmed the kNN edge cache.
+LOOP_BUILD_JOBS = {
+    "q_graph_pagerank": 24,
+    "q_graph_knn_bfs": 24,
+    "q_graph_kcore": 21,
+    "q_sim_graph_search": 28,
+    "q_graph_eccentricity": 25,
+    "q_graph_cc": 27,
+    "q_dedup_cluster": 31,
+    "q_cluster_dbscan": 53,
+}
+
+
+@pytest.mark.parametrize("name", sorted(LOOP_BUILD_JOBS))
+def test_loop_build_job_floor(spark, name):
+    """Staging cadence and convergence checks are what a loop's job count
+    is made of, so moving a loop onto common.fixpoint must not change it.
+    PageRank's count also pins its one-shuffle round: the earlier round,
+    which also joined back to the node set and cross-joined a broadcast
+    1-row node count, ran 39 build jobs.
+
+    The floor is the fewest jobs over three builds: depending on task
+    timing, AQE now and then runs one more query-stage job (q_graph_kcore
+    builds in 21 or 22 jobs, with or without common.fixpoint)."""
     sc = spark.sparkContext
-    group = "test_pagerank_build_job_floor"
-    sc.setJobGroup(group, group)
-    try:
-        registry.queries()["q_graph_pagerank"](spark, SF_DIR)
-    finally:
-        sc._jsc.clearJobGroup()
-    sc._jsc.sc().listenerBus().waitUntilEmpty()
-    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 24
+    fn = registry.queries()[name]
+    fn(spark, SF_DIR)  # warm the kNN edge cache
+    counts = []
+    for i in range(3):
+        group = f"test_loop_build_job_floor_{name}_{i}"
+        sc.setJobGroup(group, group)
+        try:
+            fn(spark, SF_DIR)
+        finally:
+            sc._jsc.clearJobGroup()
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        counts.append(len(sc.statusTracker().getJobIdsForGroup(group)))
+    assert min(counts) == LOOP_BUILD_JOBS[name], counts
+
+
+def test_only_fixpoint_stages_inside_loops():
+    """common.fixpoint is the one place that stages lineage inside a loop.
+    Two loops keep their own: _lpa_rounds (q_graph_edge_audit reads every
+    round's staged frame) and _bpe_train (it stages once per driver-side
+    merge batch).  A new hand-written staging loop fails here."""
+    import ast
+    from pathlib import Path
+
+    import iceberg_rest_catalog_spark
+
+    allowed = {"fixpoint", "_lpa_rounds", "_bpe_train"}
+    loops = (ast.For, ast.AsyncFor, ast.While)
+    sites = []
+
+    def visit(node, path, fn, in_loop):
+        for child in ast.iter_child_nodes(node):
+            if isinstance(child, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                visit(child, path, child.name, False)
+                continue
+            if (
+                in_loop
+                and fn not in allowed
+                and isinstance(child, ast.Call)
+                and isinstance(child.func, ast.Attribute)
+                and child.func.attr == "localCheckpoint"
+            ):
+                sites.append(f"{path}:{child.lineno} in {fn}")
+            visit(child, path, fn, in_loop or isinstance(child, loops))
+
+    root = Path(iceberg_rest_catalog_spark.__file__).parent
+    for path in sorted(root.rglob("*.py")):
+        visit(ast.parse(path.read_text()), path.relative_to(root), "<module>", False)
+    assert not sites, sites
 
 
 def test_warm_pass_compiles_nothing(spark):
