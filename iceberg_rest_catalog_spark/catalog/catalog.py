@@ -79,29 +79,20 @@ class Table:
                 return Schema.from_json(s)
         raise E.InternalServerError(f"current schema {cur} missing")
 
-    def _schema_by_id(self, schema_id: int) -> Schema:
+    def _field_sources(
+        self, schema_id: int
+    ) -> list[tuple[NestedField, NestedField | None]]:
+        """The field-ID mapping from files written under ``schema_id`` to
+        the CURRENT schema (the Iceberg evolution contract): each current
+        field with the write-time field of the same id, or None. Renamed
+        fields follow their id, dropped fields are never asked for,
+        later-added fields (None) read as typed nulls, promoted types
+        (int->long, float->double) cast to the current type."""
         for s in self.metadata["schemas"]:
             if s["schema-id"] == schema_id:
-                return Schema.from_json(s)
+                old = {f.id: f for f in Schema.from_json(s).fields}
+                return [(f, old.get(f.id)) for f in self.schema().fields]
         raise E.InternalServerError(f"schema {schema_id} missing from metadata")
-
-    def _project_to_current(self, df: DataFrame, write_schema: Schema) -> DataFrame:
-        """Project a DataFrame read under ``write_schema`` to the CURRENT
-        schema, resolving columns by field ID (the Iceberg evolution
-        contract): renamed fields follow their id, dropped fields are
-        omitted, later-added fields read as typed nulls, promoted types
-        (int->long, float->double) cast."""
-        from pyspark.sql import functions as F
-
-        old_by_id = {f.id: f for f in write_schema.fields}
-        cols = []
-        for f, sf in zip(self.schema().fields, self.schema().to_spark().fields):
-            old = old_by_id.get(f.id)
-            if old is None:
-                cols.append(F.lit(None).cast(sf.dataType).alias(f.name))
-            else:
-                cols.append(F.col(old.name).cast(sf.dataType).alias(f.name))
-        return df.select(*cols)
 
     def properties(self) -> dict:
         return dict(self.metadata.get("properties", {}))
@@ -113,43 +104,32 @@ class Table:
                 return s
         return None
 
-    def _manifest_entries(self, s: dict) -> list[dict]:
-        """A snapshot's added-file entries. New snapshots reference a
-        per-snapshot manifest FILE (``manifest-path``, relative to the
-        table's metadata dir) so the metadata JSON stays O(snapshots) —
-        at 100 TB / millions of files an inline list would make every
-        commit rewrite the whole file inventory. Inline ``added-files``
-        is still read for metadata written before the spill-out."""
-        mp = s.get("manifest-path")
-        if mp is not None:
-            if not os.path.isabs(mp):
-                mp = os.path.join(
-                    self.catalog._table_dir(self.identifier), "metadata", mp
-                )
-            return self.catalog._read_json(mp)["entries"]
-        return [
-            e if isinstance(e, dict) else {"path": e, "partition": {}}
-            for e in s.get("added-files", [])
-        ]
-
     def _manifest_doc(self, s: dict) -> dict:
-        """The snapshot's manifest document ({} when inline-only)."""
+        """A snapshot's manifest document: ``entries`` (the files it adds,
+        {path, partition, stats, records, schema-id}), plus ``removed``
+        (paths a copy-on-write overwrite logically deletes) and
+        ``position-deletes`` (merge-on-read delete files it adds). New
+        snapshots reference a per-snapshot manifest FILE (``manifest-path``,
+        relative to the table's metadata dir) so the metadata JSON stays
+        O(snapshots) — at 100 TB / millions of files an inline list would
+        make every commit rewrite the whole file inventory. Inline
+        ``added-files`` is still read for metadata written before the
+        spill-out."""
         mp = s.get("manifest-path")
         if mp is None:
-            return {}
+            return {"entries": [
+                e if isinstance(e, dict) else {"path": e, "partition": {}}
+                for e in s.get("added-files", [])
+            ]}
         if not os.path.isabs(mp):
             mp = os.path.join(
                 self.catalog._table_dir(self.identifier), "metadata", mp
             )
         return self.catalog._read_json(mp)
 
-    def _manifest_removed(self, s: dict) -> list[str]:
-        """Paths a snapshot logically deletes (overwrite operation)."""
-        return self._manifest_doc(s).get("removed", [])
-
-    def _manifest_position_deletes(self, s: dict) -> list[str]:
-        """Position-delete files (merge-on-read) this snapshot adds."""
-        return self._manifest_doc(s).get("position-deletes", [])
+    def _manifest_entries(self, s: dict) -> list[dict]:
+        """A snapshot's added-file entries."""
+        return self._manifest_doc(s)["entries"]
 
     def _ancestors(self, snapshot_id: int) -> list[dict]:
         """The parent chain ending at ``snapshot_id``, oldest first. Reads
@@ -165,8 +145,15 @@ class Table:
             cur = by_id.get(parent) if parent is not None else None
         return list(reversed(chain))
 
-    def _entries_at(self, snapshot_id: int | None) -> list[dict]:
-        """Manifest entries ({path, partition}) visible at a snapshot."""
+    def _visible_at(self, snapshot_id: int | None) -> tuple[list[dict], list[str]]:
+        """Manifest entries ({path, partition, ...}) and position-delete
+        files (merge-on-read) visible at a snapshot (default: current), from
+        ONE walk of its lineage that reads each manifest once. A
+        ``replace`` (compaction) snapshot supersedes earlier files and folds
+        the deletes into its rewritten data, so it clears both lists; a
+        copy-on-write ``overwrite`` drops the files it rewrote and leaves
+        stale delete rows pointing at them — inert, since the anti-join
+        matches nothing for them."""
         sid = (
             snapshot_id
             if snapshot_id is not None
@@ -178,51 +165,31 @@ class Table:
             raise E.BadRequestException(
                 f"snapshot {snapshot_id} not found (expired or never existed)"
             )
-        if sid is None:
-            return []
         entries: list[dict] = []
-        for s in self._ancestors(sid):
-            op = s.get("operation", "append")
-            if op == "replace":
-                entries = []  # replace snapshots supersede earlier file lists
-            elif op == "overwrite":
-                # copy-on-write DML: this snapshot logically deletes some
-                # earlier files and adds their rewritten versions
-                gone = {os.path.normpath(p) for p in self._manifest_removed(s)}
-                if gone:
-                    entries = [
-                        e for e in entries
-                        if os.path.normpath(e["path"]) not in gone
-                    ]
-            entries.extend(self._manifest_entries(s))
-        return entries
+        dels: list[str] = []
+        for s in self._ancestors(sid) if sid is not None else []:
+            doc = self._manifest_doc(s)
+            if s.get("operation", "append") == "replace":
+                entries, dels = [], []
+            gone = {os.path.normpath(p) for p in doc.get("removed", [])}
+            if gone:
+                entries = [
+                    e for e in entries if os.path.normpath(e["path"]) not in gone
+                ]
+            entries.extend(doc["entries"])
+            dels.extend(doc.get("position-deletes", []))
+        return entries, dels
+
+    def _entries_at(self, snapshot_id: int | None) -> list[dict]:
+        """Manifest entries visible at a snapshot (see :meth:`_visible_at`)."""
+        return self._visible_at(snapshot_id)[0]
 
     def _files_at(self, snapshot_id: int | None) -> list[str]:
         return [e["path"] for e in self._entries_at(snapshot_id)]
 
-    def _deletes_at(self, snapshot_id: int | None) -> list[str]:
-        """Position-delete files visible at a snapshot (merge-on-read).
-        A ``replace`` (compaction) snapshot folds deletes into its rewritten
-        data, so it clears the list; a copy-on-write ``overwrite`` leaves
-        stale delete rows pointing at now-removed files — inert, since the
-        anti-join matches nothing for them."""
-        sid = (
-            snapshot_id
-            if snapshot_id is not None
-            else self.metadata.get("current-snapshot-id")
-        )
-        if sid is None:
-            return []
-        dels: list[str] = []
-        for s in self._ancestors(sid):
-            if s.get("operation", "append") == "replace":
-                dels = []
-            dels.extend(self._manifest_position_deletes(s))
-        return dels
-
     def _removed_records_at(self, snapshot_id: int) -> int | None:
         """Accumulated merge-on-read delete-tuple count visible at a
-        snapshot, mirroring :meth:`_deletes_at` (a ``replace`` folds deletes
+        snapshot, mirroring :meth:`_visible_at` (a ``replace`` folds deletes
         into rewritten data, clearing the sum). None when any contributing
         snapshot lacks its ``removed-records`` stamp — the caller must then
         leave the fold unstamped so ``row_count`` reports inexact rather
@@ -231,7 +198,7 @@ class Table:
         for s in self._ancestors(snapshot_id):
             if s.get("operation", "append") == "replace":
                 total, exact = 0, True
-            if self._manifest_position_deletes(s):
+            if self._manifest_doc(s).get("position-deletes"):
                 rr = s.get("removed-records")
                 if rr is None:
                     exact = False
@@ -239,36 +206,78 @@ class Table:
                     total += rr
         return total if exact else None
 
-    def _rel_file_path_col(self):
-        """``_metadata.file_path`` rewritten relative to the table location
-        — the key position-delete files store, so deletes stay valid across
-        table renames (the data dir moves with the table)."""
+    def _read_entries(
+        self,
+        spark: SparkSession,
+        entries: list[dict],
+        deletes: list[str] | None = None,
+        keys: bool = False,
+    ) -> DataFrame | None:
+        """The one Spark read path for table rows — scans, DML candidates
+        and the streaming/changelog source all read through it:
+
+        1. group ``entries`` by WRITE-TIME schema id (entries from before
+           schema-id stamping read name-matched under the current schema);
+        2. read each group under its own schema;
+        3. anti-join the position ``deletes`` — (file_path, pos) tuples, the
+           Iceberg v2 merge-on-read path. The delete set is broadcast: it is
+           O(deleted rows × 16 bytes) and compaction folds it away before it
+           could grow shuffle-sized;
+        4. project to the current schema by field ID (:meth:`_field_sources`);
+        5. union the groups.
+
+        ``keys=True`` carries each row's location-relative file path and
+        row position (``__icb_file``, ``__icb_pos``: the key position-delete
+        files store, stable across table renames) through the projection,
+        which hides ``_metadata``. None when ``entries`` is empty."""
         from pyspark.sql import functions as F
 
-        prefix = "file:" + os.path.abspath(self.location) + os.sep
-        return F.expr(f"substring(_metadata.file_path, {len(prefix) + 1})")
-
-    def _apply_position_deletes(
-        self, spark: SparkSession, df: DataFrame, dels: list[str]
-    ) -> DataFrame:
-        """Anti-join data rows against (file_path, pos) delete tuples —
-        the Iceberg v2 merge-on-read read path. The delete set is broadcast:
-        it is O(deleted rows × 16 bytes) and compaction folds it away before
-        it could grow shuffle-sized."""
-        from pyspark.sql import functions as F
-
-        ddf = spark.read.parquet(*[os.path.join(self.location, p) for p in dels])
-        return (
-            df.withColumn("__icb_file", self._rel_file_path_col())
-            .withColumn("__icb_pos", F.col("_metadata.row_index"))
-            .join(
-                F.broadcast(ddf),
-                on=(F.col("__icb_file") == ddf["file_path"])
-                & (F.col("__icb_pos") == ddf["pos"]),
-                how="left_anti",
+        if not entries:
+            return None
+        cur = self.schema()
+        groups: dict[int, list[str]] = {}
+        for e in entries:
+            groups.setdefault(e.get("schema-id", cur.schema_id), []).append(
+                os.path.join(self.location, e["path"])
             )
-            .drop("__icb_file", "__icb_pos")
+        ddf = (
+            spark.read.parquet(*[os.path.join(self.location, p) for p in deletes])
+            if deletes
+            else None
         )
+        key_cols = ["__icb_file", "__icb_pos"]
+        prefix = "file:" + os.path.abspath(self.location) + os.sep
+        out = None
+        for sid in sorted(groups, key=lambda g: (g != cur.schema_id, g)):
+            pairs = self._field_sources(sid)
+            df = spark.read.schema(
+                Schema(sid, [w for _, w in pairs if w]).to_spark()
+            ).parquet(*groups[sid])
+            if ddf is not None or keys:
+                rel = F.expr(f"substring(_metadata.file_path, {len(prefix) + 1})")
+                df = df.withColumn("__icb_file", rel).withColumn(
+                    "__icb_pos", F.col("_metadata.row_index")
+                )
+            if ddf is not None:
+                df = df.join(
+                    F.broadcast(ddf),
+                    on=(F.col("__icb_file") == ddf["file_path"])
+                    & (F.col("__icb_pos") == ddf["pos"]),
+                    how="left_anti",
+                )
+            if sid != cur.schema_id:
+                df = df.select(
+                    *[
+                        (F.col(w.name) if w else F.lit(None))
+                        .cast(sf.dataType).alias(f.name)
+                        for (f, w), sf in zip(pairs, cur.to_spark().fields)
+                    ],
+                    *(key_cols if keys else []),
+                )
+            elif ddf is not None and not keys:
+                df = df.drop(*key_cols)
+            out = df if out is None else out.union(df)
+        return out
 
     # -- data plane ---------------------------------------------------------
     def df(self, spark: SparkSession, snapshot_id: int | None = None) -> DataFrame:
@@ -305,8 +314,11 @@ class Table:
         snapshot_id: int | None = None,
         partition_filters: dict | None = None,
         column_predicates: list[tuple] | None = None,
-    ) -> list[dict]:
-        entries = self._entries_at(snapshot_id)
+    ) -> tuple[list[dict], list[str]]:
+        """A read plan from metadata alone: the entries visible at the
+        snapshot that the partition filters and column stats keep, and
+        the position-delete files visible there."""
+        entries, dels = self._visible_at(snapshot_id)
         if partition_filters:
             entries = [
                 e
@@ -325,7 +337,7 @@ class Table:
                     for (c, op, v) in column_predicates
                 )
             ]
-        return entries
+        return entries, dels
 
     def plan_files(
         self,
@@ -343,7 +355,7 @@ class Table:
             os.path.join(self.location, e["path"])
             for e in self._plan_entries(
                 snapshot_id, partition_filters, column_predicates
-            )
+            )[0]
         ]
 
     def scan(
@@ -361,39 +373,11 @@ class Table:
         manifest min/max prove no row can match are skipped, and the SAME
         predicate is re-applied as a Spark filter for exact row semantics
         (stats only prune, never decide)."""
-        spark_schema = self.schema().to_spark()
-        entries = self._plan_entries(snapshot_id, partition_filters, column_predicates)
-        if not entries:
-            df = spark.createDataFrame([], spark_schema)
-        else:
-            dels = self._deletes_at(snapshot_id)
-            cur_sid = self.metadata["current-schema-id"]
-            # Group files by WRITE-TIME schema: each group reads with the
-            # schema its files were written under, then projects to the
-            # current schema by FIELD ID (rename follows the id, drop omits,
-            # add reads null, int->long/float->double promote via cast).
-            # Entries from before schema-id stamping read name-matched
-            # under the current schema — the pre-evolution behavior.
-            groups: dict[int | None, list[str]] = {}
-            for e in entries:
-                gid = e.get("schema-id")
-                groups.setdefault(None if gid == cur_sid else gid, []).append(
-                    os.path.join(self.location, e["path"])
-                )
-            parts = []
-            for gid in sorted(groups, key=lambda g: -1 if g is None else g):
-                ws = self._schema_by_id(gid) if gid is not None else None
-                part = spark.read.schema(
-                    ws.to_spark() if ws else spark_schema
-                ).parquet(*groups[gid])
-                if dels:
-                    part = self._apply_position_deletes(spark, part, dels)
-                if ws is not None:
-                    part = self._project_to_current(part, ws)
-                parts.append(part)
-            df = parts[0]
-            for p in parts[1:]:
-                df = df.union(p)
+        df = self._read_entries(
+            spark, *self._plan_entries(snapshot_id, partition_filters, column_predicates)
+        )
+        if df is None:
+            df = spark.createDataFrame([], self.schema().to_spark())
         for c, op, v in column_predicates or []:
             from pyspark.sql import functions as F
 
@@ -405,19 +389,21 @@ class Table:
         return df
 
     @staticmethod
-    def _parquet_stats(path: str) -> dict:
-        """Per-file column min/max from the parquet footer, for the
-        manifest skip-index. Writer-side cost only (one footer read per
-        file just written). Restricted to types whose ordering is
-        unambiguous and JSON-stable (ints, floats, strings); other columns
-        simply have no stats and are never skipped on."""
+    def _footer(path: str) -> dict:
+        """A written file's manifest ``stats`` (per-column min/max, the
+        skip-index) and ``records`` (row count) from ONE parquet footer
+        read — writer-side cost only, no data read. Stats are restricted to
+        types whose ordering is unambiguous and JSON-stable (ints, floats,
+        strings); other columns simply have no stats and are never skipped
+        on. An unreadable footer gives no stats (the file is never
+        skipped) and an unknown count."""
         import pyarrow.lib
         import pyarrow.parquet as pq
 
         try:
             md = pq.ParquetFile(path).metadata
         except (OSError, pyarrow.lib.ArrowInvalid):
-            return {}  # unreadable footer: no stats, the file is never skipped
+            return {"stats": {}, "records": None}
         out: dict = {}
         for rg in range(md.num_row_groups):
             row = md.row_group(rg)
@@ -434,18 +420,7 @@ class Table:
                     out[name] = [min(out[name][0], mn), max(out[name][1], mx)]
                 else:
                     out[name] = [mn, mx]
-        return out
-
-    @staticmethod
-    def _parquet_records(path: str) -> int | None:
-        """Row count from the parquet footer (writer-side, no data read)."""
-        import pyarrow.lib
-        import pyarrow.parquet as pq
-
-        try:
-            return pq.ParquetFile(path).metadata.num_rows
-        except (OSError, pyarrow.lib.ArrowInvalid):
-            return None  # unreadable footer: count unknown
+        return {"stats": out, "records": md.num_rows}
 
     def row_count(self, snapshot_id: int | None = None) -> int | None:
         """``count(*)`` from METADATA alone — per-file record counts in the
@@ -487,7 +462,7 @@ class Table:
                 else:
                     total -= rr
                 deletes_pending = True
-            for e in self._manifest_entries(s):
+            for e in doc["entries"]:
                 if e.get("records") is None:
                     inexact = True
                     continue
@@ -528,7 +503,7 @@ class Table:
 
     def _write_data_files(self, df: DataFrame, n_files: int | None) -> list[dict]:
         """Write df as data files honoring sort order + partition spec;
-        returns the manifest entries ({path, partition, stats})."""
+        returns the manifest entries ({path, partition, stats, records})."""
         from pyspark.sql import functions as F
 
         rel = os.path.join("data", uuid.uuid4().hex)
@@ -554,43 +529,33 @@ class Table:
         # Source columns stay in the files (the _p_ columns are derived
         # copies), so explicit-schema reads are unaffected.
         spec = self.metadata.get("partition-specs") or []
+        pcols = [f"_p_{s['name']}" for s in spec]
         if spec:
-            pcols = [f"_p_{s['name']}" for s in spec]
             w = w.select(
                 "*", *[self._transform_col(s).alias(p) for s, p in zip(spec, pcols)]
             )
-            w.write.mode("overwrite").partitionBy(*pcols).parquet(out)
-            added = []
-            for dp, _dn, fns in sorted(self.catalog.fio.walk(out)):
-                for f in sorted(fns):
-                    if not f.endswith(".parquet"):
-                        continue
-                    relpath = os.path.relpath(os.path.join(dp, f), out)
-                    partition = {}
-                    for seg in relpath.split(os.sep)[:-1]:
-                        k, _, v = seg.partition("=")
-                        if k.startswith("_p_"):
-                            partition[k[len("_p_") :]] = v
-                    added.append(
-                        {
-                            "path": os.path.join(rel, relpath),
-                            "partition": partition,
-                            "stats": self._parquet_stats(os.path.join(dp, f)),
-                            "records": self._parquet_records(os.path.join(dp, f)),
-                        }
-                    )
-        else:
-            w.write.mode("overwrite").parquet(out)
-            added = [
-                {
-                    "path": os.path.join(rel, f),
-                    "partition": {},
-                    "stats": self._parquet_stats(os.path.join(out, f)),
-                    "records": self._parquet_records(os.path.join(out, f)),
-                }
-                for f in sorted(self.catalog.fio.listdir(out))
-                if f.endswith(".parquet")
-            ]
+        writer = w.write.mode("overwrite")
+        (writer.partitionBy(*pcols) if pcols else writer).parquet(out)
+        # one walk lists the written files of either layout (flat, or one
+        # directory level per partition column)
+        added = []
+        for dp, _dn, fns in sorted(self.catalog.fio.walk(out)):
+            for f in sorted(fns):
+                if not f.endswith(".parquet"):
+                    continue
+                relpath = os.path.relpath(os.path.join(dp, f), out)
+                partition = {}
+                for seg in relpath.split(os.sep)[:-1]:
+                    k, _, v = seg.partition("=")
+                    if k.startswith("_p_"):
+                        partition[k[len("_p_") :]] = v
+                added.append(
+                    {
+                        "path": os.path.join(rel, relpath),
+                        "partition": partition,
+                        **self._footer(os.path.join(dp, f)),
+                    }
+                )
         return added
 
     def _commit_files(
@@ -668,7 +633,7 @@ class Table:
             # tuple deletes exactly one live row) — keeps row_count()
             # metadata-only through merge-on-read DML
             recs = [
-                self._parquet_records(os.path.join(self.location, p))
+                self._footer(os.path.join(self.location, p))["records"]
                 for p in position_deletes
             ]
             if all(r is not None for r in recs):
@@ -762,13 +727,12 @@ class Table:
         expire + remove_orphan_files reclaims them later."""
         from pyspark.sql import functions as F
 
-        cand = self._plan_entries(column_predicates=prune)
-        if not cand:
-            return self
-        schema = self.schema().to_spark()
         # _candidate_df applies pending merge-on-read deletes so a
         # copy-on-write rewrite of the same files cannot resurrect rows
-        df = self._candidate_df(spark, prune)
+        cand, df = self._candidate_df(spark, prune)
+        if df is None:
+            return self
+        schema = self.schema().to_spark()
         cond = F.expr(condition)
         if df.filter(cond).isEmpty():
             return self  # nothing matches: no commit, no rewrite
@@ -820,18 +784,12 @@ class Table:
 
     def _candidate_df(
         self, spark: SparkSession, prune: list[tuple] | None
-    ) -> DataFrame | None:
-        """Stats-pruned candidate files as a DataFrame with pending
-        merge-on-read deletes already applied; None when no file can match."""
-        cand = self._plan_entries(column_predicates=prune)
-        if not cand:
-            return None
-        files = [os.path.join(self.location, e["path"]) for e in cand]
-        df = spark.read.schema(self.schema().to_spark()).parquet(*files)
-        dels = self._deletes_at(None)
-        if dels:
-            df = self._apply_position_deletes(spark, df, dels)
-        return df
+    ) -> tuple[list[dict], DataFrame | None]:
+        """The stats-pruned candidate entries and their rows through
+        :meth:`_read_entries` (pending merge-on-read deletes applied,
+        field-ID projection); the rows are None when no file can match."""
+        cand, dels = self._plan_entries(column_predicates=prune)
+        return cand, self._read_entries(spark, cand, dels)
 
     def _write_position_delete_files(self, matches: DataFrame) -> list[str]:
         """Persist (file_path, pos) tuples as parquet delete files under
@@ -857,16 +815,21 @@ class Table:
         intermediate state."""
         from pyspark.sql import functions as F
 
-        df = self._candidate_df(spark, prune)
+        cand, dels = self._plan_entries(column_predicates=prune)
+        df = self._read_entries(spark, cand, dels)
         if df is None:
             return self
         matching = df.filter(F.expr(condition))
         if matching.isEmpty():
             return self
+        # The keys come from a second read of the same plan: a frame that
+        # carries them makes Spark read ``_metadata`` in every job over it,
+        # so the emptiness check and the UPDATE rows read without them.
+        keyed = self._read_entries(spark, cand, dels, keys=True)
         delete_files = self._write_position_delete_files(
-            matching.select(
-                self._rel_file_path_col().alias("file_path"),
-                F.col("_metadata.row_index").alias("pos"),
+            keyed.filter(F.expr(condition)).select(
+                F.col("__icb_file").alias("file_path"),
+                F.col("__icb_pos").alias("pos"),
             )
         )
         added: list[dict] = []
@@ -956,8 +919,7 @@ class Table:
         if rng.mn is None:
             return self  # empty source: nothing to merge
         prune = [(on, ">=", rng.mn), (on, "<=", rng.mx)]
-        cand = self._plan_entries(column_predicates=prune)
-        tdf = self._candidate_df(spark, prune)
+        cand, tdf = self._candidate_df(spark, prune)
         if tdf is None:
             if when_not_matched is None:
                 return self
@@ -1515,10 +1477,9 @@ class Table:
             if s.get("parent-snapshot-id") not in expire_ids:
                 continue
             sid = s["snapshot-id"]
-            folded = self._entries_at(sid)
             # merge-on-read deletes visible at the rebase point must fold
             # with the entries or expired-ancestor deletes would resurrect
-            dels = self._deletes_at(sid)
+            folded, dels = self._visible_at(sid)
             rb = {
                 "snapshot-id": sid,
                 "manifest-path": self.catalog._write_manifest(
@@ -1585,9 +1546,8 @@ class Table:
         """
         referenced: set[str] = set()
         for s in self.metadata.get("snapshots", []):
-            for e in self._manifest_entries(s):
-                referenced.add(os.path.normpath(e["path"]))
-            for p in self._manifest_position_deletes(s):
+            doc = self._manifest_doc(s)
+            for p in [e["path"] for e in doc["entries"]] + doc.get("position-deletes", []):
                 referenced.add(os.path.normpath(p))
         data_root = os.path.join(self.location, "data")
         removed: list[str] = []

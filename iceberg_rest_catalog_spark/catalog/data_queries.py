@@ -501,7 +501,7 @@ def q_delete_merge_on_read(spark, sf_dir):
         tbl = tbl.delete_where(spark, "o_totalprice < 50000.0", mode="merge-on-read")
         tbl = tbl.delete_where(spark, "o_totalprice > 250000.0", mode="merge-on-read")
         assert {e["path"] for e in tbl._entries_at(None)} == files_before
-        assert len(tbl._deletes_at(None)) >= 2
+        assert len(tbl._visible_at(None)[1]) >= 2
         open(marker, "w").close()
     return cat.load_table(("db", "orders_m")).df(spark).select(
         "o_orderkey", "o_custkey", F.round("o_totalprice", 4).alias("o_totalprice")

@@ -8,12 +8,15 @@ Data Source API) so a cataloged table reads like any other source:
           .option("warehouse", "/path/wh").option("table", "db.t").load())
     stream = (spark.readStream.format("icsb") ... .load())   # incremental
 
-Batch semantics match ``Table.scan``: snapshot isolation (optional
-``snapshot`` option), merge-on-read position deletes applied, field-ID
-schema projection for evolved tables, and file pruning from manifest
-column stats when Spark pushes comparison filters down (stats PRUNE, never
-decide — every filter is also reported back as unsupported so Spark still
-applies it exactly). The streaming reader is the incremental append scan:
+Batch reads plan like ``Table.scan`` (snapshot isolation through the
+optional ``snapshot`` option, merge-on-read position deletes applied, file
+pruning from manifest column stats when Spark pushes comparison filters
+down — stats PRUNE, never decide: every filter is also reported back as
+unsupported so Spark still applies it exactly), and every file, batch or
+streamed, passes through the one arrow projection :func:`_to_current`,
+which resolves columns by field ID through the table's field-ID mapping
+(``Table._field_sources``, the same one ``Table._read_entries`` uses).
+The streaming reader is the incremental append scan:
 each micro-batch covers the append snapshots committed since the last
 offset ({"snapshot-id": N} — the same offset model as
 ``streaming/catalog_source.py``), so a consumer processes O(new data) per
@@ -61,6 +64,26 @@ def _open_catalog(options) -> Catalog:
     return SqlCatalog(wh, db) if db else Catalog(wh)
 
 
+def _to_current(tbl, at, schema_id: int | None):
+    """The one arrow projection: ``at``, the rows of a file written under
+    ``schema_id`` (None: before schema-id stamping, name-matched), as the
+    table's CURRENT schema. Renamed fields follow their id, fields the file
+    lacks read as typed nulls, promoted fields cast to the current type."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_type
+
+    cur = tbl.schema()
+    pairs = tbl._field_sources(cur.schema_id if schema_id is None else schema_id)
+    cols = []
+    for (_, w), sf in zip(pairs, cur.to_spark().fields):
+        t = to_arrow_type(sf.dataType)
+        if w is not None and w.name in at.column_names:
+            cols.append(at.column(w.name).cast(t))
+        else:
+            cols.append(pa.nulls(at.num_rows, t))
+    return pa.table(cols, names=[f.name for f, _ in pairs])
+
+
 def _ident(options) -> tuple:
     table = options.get("table")
     if not table:
@@ -104,11 +127,10 @@ class CatalogBatchReader(DataSourceReader):
 
     def partitions(self):
         tbl = self.table
-        entries = tbl._plan_entries(
+        entries, dels = tbl._plan_entries(
             snapshot_id=self.snapshot_id,
             column_predicates=self.predicates or None,
         )
-        dels = tbl._deletes_at(self.snapshot_id)
         by_file: dict[str, list[int]] = {}
         if dels:
             import pyarrow.parquet as pq
@@ -135,7 +157,6 @@ class CatalogBatchReader(DataSourceReader):
         import pyarrow as pa
         import pyarrow.parquet as pq
 
-        tbl = self.table
         at = pq.read_table(partition.path)
         if partition.delete_pos:
             mask = [True] * at.num_rows
@@ -143,24 +164,7 @@ class CatalogBatchReader(DataSourceReader):
                 if p < at.num_rows:
                     mask[p] = False
             at = at.filter(pa.array(mask))
-        cur = tbl.schema()
-        cur_sid = tbl.metadata["current-schema-id"]
-        if partition.schema_id is not None and partition.schema_id != cur_sid:
-            # field-ID projection: rename follows the id, drop omits,
-            # later-added columns read as nulls
-            ws = tbl._schema_by_id(partition.schema_id)
-            old_by_id = {f.id: f.name for f in ws.fields}
-            cols = []
-            for f in cur.fields:
-                old = old_by_id.get(f.id)
-                if old is not None and old in at.column_names:
-                    cols.append(at.column(old))
-                else:
-                    cols.append(pa.nulls(at.num_rows))
-            at = pa.table(cols, names=[f.name for f in cur.fields])
-        else:
-            at = at.select([f.name for f in cur.fields])
-        yield from at.to_batches()
+        yield from _to_current(self.table, at, partition.schema_id).to_batches()
 
 
 class CatalogSimpleStreamReader(SimpleDataSourceStreamReader):
@@ -182,7 +186,6 @@ class CatalogSimpleStreamReader(SimpleDataSourceStreamReader):
         import pyarrow.parquet as pq
 
         tbl = self.catalog.load_table(self.ident)
-        names = [f.name for f in tbl.schema().fields]
         cur = tbl.metadata.get("current-snapshot-id")
         if cur is None:
             return
@@ -194,8 +197,8 @@ class CatalogSimpleStreamReader(SimpleDataSourceStreamReader):
                 continue
             for e in tbl._manifest_entries(s):
                 at = pq.read_table(os.path.join(tbl.location, e["path"]))
-                at = at.select(names)
-                yield from (tuple(r[n] for n in names) for r in at.to_pylist())
+                at = _to_current(tbl, at, e.get("schema-id"))
+                yield from zip(*(c.to_pylist() for c in at.columns))
 
     def read(self, start: dict):
         tbl = self.catalog.load_table(self.ident)
@@ -242,7 +245,6 @@ class CatalogDataSource(DataSource):
 @dataclasses.dataclass
 class _WrittenFile(WriterCommitMessage):
     rel_path: str | None
-    records: int | None = None
 
 
 class CatalogDataWriter(DataSourceArrowWriter):
@@ -273,7 +275,7 @@ class CatalogDataWriter(DataSourceArrowWriter):
         out_dir = os.path.join(self.location, self.rel_dir)
         os.makedirs(out_dir, exist_ok=True)
         rel = os.path.join(self.rel_dir, f"task-{_uuid.uuid4().hex}.parquet")
-        writer, n = None, 0
+        writer = None
         for batch in iterator:
             tb = pa.Table.from_batches([batch]).select(self.field_names)
             if writer is None:
@@ -281,29 +283,23 @@ class CatalogDataWriter(DataSourceArrowWriter):
                     os.path.join(self.location, rel), tb.schema
                 )
             writer.write_table(tb)
-            n += tb.num_rows
         if writer is None:
             return _WrittenFile(None)  # empty task: no file
         writer.close()
-        return _WrittenFile(rel, n)
+        return _WrittenFile(rel)
 
     def _entries(self, messages):
         from .catalog import Table
 
-        added = []
-        for m in messages:
-            if m is None or m.rel_path is None:
-                continue
-            full = os.path.join(self.location, m.rel_path)
-            added.append(
-                {
-                    "path": m.rel_path,
-                    "partition": {},
-                    "stats": Table._parquet_stats(full),
-                    "records": m.records,
-                }
-            )
-        return added
+        return [
+            {
+                "path": m.rel_path,
+                "partition": {},
+                **Table._footer(os.path.join(self.location, m.rel_path)),
+            }
+            for m in messages
+            if m is not None and m.rel_path is not None
+        ]
 
     def commit(self, messages) -> None:
         from . import errors as E

@@ -20,6 +20,11 @@ rewrites history it already delivered, so it is skipped with its id
 recorded; ``overwrite``/``delete`` (row-level DML) change already-delivered
 rows and either skip (default, append-only consumers) or raise under
 ``fail_on_changes=True`` (consumers that must not miss retractions).
+
+Every batch reads through the table's one read path,
+``Table._read_entries``: files grouped by write-time schema, position
+deletes anti-joined, rows projected to the current schema by field ID —
+the same rows a batch scan of those files returns.
 """
 
 from __future__ import annotations
@@ -75,57 +80,15 @@ class CatalogStreamReader:
         off = self.last_committed()
         return [s for s in tbl._ancestors(cur) if s["snapshot-id"] > off]
 
-    def _batch_df(self, spark: SparkSession, tbl, snap: dict) -> DataFrame | None:
-        entries = tbl._manifest_entries(snap)
-        if not entries:
-            return None
-        files = [os.path.join(tbl.location, e["path"]) for e in entries]
-        # read each batch under its write-time schema, projected to current
-        # (same field-id contract as the batch scan)
-        gid = entries[0].get("schema-id")
-        cur_sid = tbl.metadata["current-schema-id"]
-        if gid is not None and gid != cur_sid:
-            ws = tbl._schema_by_id(gid)
-            df = spark.read.schema(ws.to_spark()).parquet(*files)
-            return tbl._project_to_current(df, ws)
-        return spark.read.schema(tbl.schema().to_spark()).parquet(*files)
-
-    def _entries_df(self, spark, tbl, entries, apply_deletes=None) -> DataFrame | None:
-        """Rows of specific manifest entries, projected to the current
-        schema by write-time schema id (same contract as Table.scan).
-        ``apply_deletes``: position-delete files to subtract BEFORE the
-        projection (needed when reconstructing a logical view of old
-        files for a changelog diff)."""
-        if not entries:
-            return None
-        cur_sid = tbl.metadata["current-schema-id"]
-        groups: dict = {}
-        for e in entries:
-            gid = e.get("schema-id")
-            groups.setdefault(None if gid == cur_sid else gid, []).append(
-                os.path.join(tbl.location, e["path"])
-            )
-        parts = []
-        for gid in sorted(groups, key=lambda g: -1 if g is None else g):
-            ws = tbl._schema_by_id(gid) if gid is not None else None
-            df = spark.read.schema(
-                (ws or tbl.schema()).to_spark()
-            ).parquet(*groups[gid])
-            if apply_deletes:
-                df = tbl._apply_position_deletes(spark, df, apply_deletes)
-            parts.append(tbl._project_to_current(df, ws) if ws else df)
-        out = parts[0]
-        for p in parts[1:]:
-            out = out.union(p)
-        return out
-
     def _deleted_rows_df(self, spark, tbl, delete_rel_paths, sid) -> DataFrame | None:
         """Resolve position-delete tuples back to the ROWS they delete —
-        the retraction half of a changelog batch. Reads only the data
-        files the tuples reference (their distinct file list is collected;
-        it is bounded by touched-file count, not row count). Entries are
-        resolved AT the snapshot being processed — later rewrites may have
-        removed the touched files from the current view."""
+        the retraction half of a changelog batch: a semi-join of the
+        touched files' rows, read with their keys, against the tuples.
+        Reads only the data files the tuples reference (their distinct file
+        list is collected; it is bounded by touched-file count, not row
+        count). Entries are resolved AT the snapshot being processed —
+        later rewrites may have removed the touched files from the current
+        view."""
         from pyspark.sql import functions as F
 
         ddf = spark.read.parquet(
@@ -133,43 +96,22 @@ class CatalogStreamReader:
         )
         # driver-side bound: O(|files churned this micro-batch|) paths —
         # metadata-plane only, never row data
-        touched = [r.file_path for r in ddf.select("file_path").distinct().collect()]
-        if not touched:
-            return None
-        by_path = {
-            os.path.normpath(e["path"]): e for e in tbl._entries_at(sid)
+        touched = {
+            os.path.normpath(r.file_path)
+            for r in ddf.select("file_path").distinct().collect()
         }
-        entries = [by_path[os.path.normpath(p)] for p in touched if os.path.normpath(p) in by_path]
-        if not entries:
+        entries = [
+            e for e in tbl._entries_at(sid) if os.path.normpath(e["path"]) in touched
+        ]
+        keyed = tbl._read_entries(spark, entries, keys=True)
+        if keyed is None:
             return None
-        # keyed semi-join: keep exactly the rows the tuples point at.
-        # Needs _metadata, so read per schema group manually.
-        cur_sid = tbl.metadata["current-schema-id"]
-        parts = []
-        groups: dict = {}
-        for e in entries:
-            gid = e.get("schema-id")
-            groups.setdefault(None if gid == cur_sid else gid, []).append(
-                os.path.join(tbl.location, e["path"])
-            )
-        for gid in sorted(groups, key=lambda g: -1 if g is None else g):
-            ws = tbl._schema_by_id(gid) if gid is not None else None
-            df = spark.read.schema(
-                (ws or tbl.schema()).to_spark()
-            ).parquet(*groups[gid])
-            keyed = df.withColumn("__f", tbl._rel_file_path_col()).withColumn(
-                "__p", F.col("_metadata.row_index")
-            )
-            hit = keyed.join(
-                F.broadcast(ddf),
-                on=(F.col("__f") == ddf["file_path"]) & (F.col("__p") == ddf["pos"]),
-                how="left_semi",
-            ).drop("__f", "__p")
-            parts.append(tbl._project_to_current(hit, ws) if ws else hit)
-        out = parts[0]
-        for p in parts[1:]:
-            out = out.union(p)
-        return out
+        return keyed.join(
+            F.broadcast(ddf),
+            on=(F.col("__icb_file") == ddf["file_path"])
+            & (F.col("__icb_pos") == ddf["pos"]),
+            how="left_semi",
+        ).drop("__icb_file", "__icb_pos")
 
     def run_changelog(self, spark: SparkSession, sink) -> list[int]:
         """CDC drain: per pending snapshot, call ``sink(batch_df, sid)``
@@ -193,7 +135,7 @@ class CatalogStreamReader:
                 return df.withColumn("_change_type", F.lit(kind))
 
             if op == "append":
-                df = self._entries_df(spark, tbl, tbl._manifest_entries(snap))
+                df = tbl._read_entries(spark, doc["entries"])
                 if df is not None:
                     batch = _tag(df, "insert")
             elif op == "replace":
@@ -204,30 +146,23 @@ class CatalogStreamReader:
                     gone = self._deleted_rows_df(spark, tbl, dels, sid)
                     if gone is not None:
                         batch = _tag(gone, "delete")
-                    add = self._entries_df(spark, tbl, tbl._manifest_entries(snap))
+                    add = tbl._read_entries(spark, doc["entries"])
                     if add is not None:
                         ins = _tag(add, "insert")
                         batch = ins if batch is None else batch.union(ins)
                 elif doc.get("removed"):
-                    by_path = {
-                        os.path.normpath(e["path"]): e
-                        for a in tbl._ancestors(sid)
-                        for e in tbl._manifest_entries(a)
-                    }
-                    removed_entries = [
-                        by_path[os.path.normpath(p)]
-                        for p in doc["removed"]
-                        if os.path.normpath(p) in by_path
-                    ]
-                    # the LOGICAL old view: raw removed files minus the
-                    # MoR deletes pending at the parent — already-retracted
-                    # rows must not retract twice
+                    # the LOGICAL old view: the removed files as the parent
+                    # saw them, minus the MoR deletes pending there —
+                    # already-retracted rows must not retract twice
                     parent = snap.get("parent-snapshot-id")
-                    pending = tbl._deletes_at(parent) if parent else []
-                    old = self._entries_df(
-                        spark, tbl, removed_entries, apply_deletes=pending
+                    seen, pending = tbl._visible_at(parent) if parent else ([], [])
+                    removed = {os.path.normpath(p) for p in doc["removed"]}
+                    old = tbl._read_entries(
+                        spark,
+                        [e for e in seen if os.path.normpath(e["path"]) in removed],
+                        pending,
                     )
-                    new = self._entries_df(spark, tbl, tbl._manifest_entries(snap))
+                    new = tbl._read_entries(spark, doc["entries"])
                     if old is not None:
                         deleted = old.exceptAll(new) if new is not None else old
                         batch = _tag(deleted, "delete")
@@ -261,7 +196,7 @@ class CatalogStreamReader:
                 self._commit_offset(sid)
                 continue
             tbl = self.catalog.load_table(self.identifier)
-            df = self._batch_df(spark, tbl, snap)
+            df = tbl._read_entries(spark, tbl._manifest_entries(snap))
             if df is not None:
                 sink(df, sid)
             self._commit_offset(sid)

@@ -631,7 +631,7 @@ def test_delete_where_merge_on_read(spark, catalog, table):
     assert sorted(r.id for r in t3.df(spark).collect()) == list(range(5, 95))
     # compaction folds the deletes: list clears, contents unchanged
     t4 = t3.compact(spark)
-    assert t4._deletes_at(None) == []
+    assert t4._visible_at(None)[1] == []
     assert sorted(r.id for r in t4.df(spark).collect()) == list(range(5, 95))
 
 
@@ -1369,3 +1369,117 @@ class TestLineageIntegrity:
         t.append(self._mk(spark, 50), branch="b")
         with pytest.raises(E.CommitFailedException):
             stale.append(self._mk(spark, 2))  # retries=0: surfaced, not corrupted
+
+
+# -- one field-ID read path: scan, DML, changelog and format("icsb") -------
+def _renamed(spark, table):
+    """Three rows written as (id, name), then ``name`` renamed to ``label``."""
+    t = table.append(spark.createDataFrame(
+        [(1, "a"), (2, "b"), (3, "c")], "id long, name string").coalesce(1))
+    return t.evolve_schema(renames={"name": "label"})
+
+
+@pytest.mark.parametrize("mode,where", [("copy-on-write", "id = 2"),
+                                        ("merge-on-read", "label = 'b'")])
+@pytest.mark.parametrize("op", ["delete", "update"])
+def test_dml_after_rename_reads_by_field_id(spark, catalog, table, mode, where, op):
+    """DML reads its candidate files through the field-ID read path: a
+    copy-on-write rewrite keeps the renamed column's values, a predicate
+    on the renamed column matches under merge-on-read."""
+    t = _renamed(spark, table)
+    if op == "delete":
+        t = t.delete_where(spark, where, mode=mode)
+        want = [(1, "a"), (3, "c")]
+    else:
+        t = t.update_where(spark, where, {"label": "upper(label)"}, mode=mode)
+        want = [(1, "a"), (2, "B"), (3, "c")]
+    assert sorted((r.id, r.label) for r in t.df(spark).collect()) == want
+
+
+def test_merge_after_rename_keeps_unmatched_rows(spark, catalog, table):
+    t = _renamed(spark, table)
+    src = spark.createDataFrame([(2, "B"), (4, "d")], "id long, label string")
+    t = t.merge_into(spark, src, on="id")
+    assert sorted((r.id, r.label) for r in t.df(spark).collect()) == [
+        (1, "a"), (2, "B"), (3, "c"), (4, "d")]
+
+
+def _icsb_opts(catalog, table="db.t"):
+    opts = {"warehouse": catalog.warehouse, "table": table}
+    if getattr(catalog, "db_path", None):
+        opts["db"] = catalog.db_path
+    return opts
+
+
+def test_stream_source_reads_pre_rename_rows(spark, catalog, table):
+    from iceberg_rest_catalog_spark.catalog.datasource import (
+        CatalogSimpleStreamReader,
+    )
+
+    t = _renamed(spark, table)
+    t = t.append(spark.createDataFrame([(4, "d")], "id long, label string"))
+    reader = CatalogSimpleStreamReader(_icsb_opts(catalog))
+    rows = reader.readBetweenOffsets(
+        {"snapshot-id": 0}, {"snapshot-id": t.metadata["current-snapshot-id"]})
+    assert sorted(rows) == [(1, "a"), (2, "b"), (3, "c"), (4, "d")]
+
+
+def test_datasource_reads_promoted_types(spark, catalog, table):
+    """format("icsb") casts files written before a promotion to the
+    current types and fills a later-added column with nulls."""
+    _register_icsb(spark)
+    tbl = catalog.create_table(
+        ("db", "prom"),
+        Schema(0, [NestedField(1, "id", "int", False),
+                   NestedField(2, "score", "float", False)]),
+    )
+    t = tbl.append(spark.createDataFrame([(1, 0.5), (2, 1.5)], "id int, score float"))
+    t = t.evolve_schema(promotes={"id": "long", "score": "double"},
+                        adds=[("tag", "string")])
+    t.append(spark.createDataFrame([(3, 2.5, "n")], "id long, score double, tag string"))
+    df = _icsb(spark, catalog, table="db.prom")
+    assert df.dtypes == [("id", "bigint"), ("score", "double"), ("tag", "string")]
+    assert sorted(tuple(r) for r in df.collect()) == [
+        (1, 0.5, None), (2, 1.5, None), (3, 2.5, "n")]
+
+
+def test_scan_reads_each_manifest_once(spark, tmp_path):
+    """One lineage walk plans a scan: over appends, a merge-on-read delete
+    and a copy-on-write delete, every manifest is read exactly once."""
+    from tests.test_catalog import _recording_fileio
+
+    log: list[tuple] = []
+    cat = Catalog(str(tmp_path / "wh"), fileio=_recording_fileio(log))
+    cat.create_namespace(("db",))
+    t = cat.create_table(("db", "t"), SCHEMA)
+    t = t.append(_rows(spark, 0, 5)).append(_rows(spark, 5, 10))
+    t = t.delete_where(spark, "id = 1", mode="merge-on-read")
+    t = t.delete_where(spark, "id = 7")
+    log.clear()
+    df = t.scan(spark)
+    reads = [a[0] for name, a in log if name == "read_text" and "manifests" in a[0]]
+    assert len(reads) == len(set(reads)) == len(t.metadata["snapshots"]) == 4
+    assert sorted(r.id for r in df.collect()) == [0, 2, 3, 4, 5, 6, 8, 9]
+
+
+def test_write_reads_each_footer_once(spark, catalog, monkeypatch):
+    """A write reads each new file's footer once for both its column stats
+    and its record count."""
+    import os
+
+    import pyarrow.parquet as pq
+
+    catalog.create_namespace(("fdb",))
+    tbl = catalog.create_table(
+        ("fdb", "p"), SCHEMA,
+        partition_spec=[{"name": "name", "transform": "identity"}])
+    opened, real = [], pq.ParquetFile
+    monkeypatch.setattr(
+        pq, "ParquetFile", lambda src, *a, **k: opened.append(src) or real(src, *a, **k))
+    df = spark.createDataFrame([(i, "ab"[i % 2]) for i in range(10)], "id long, name string")
+    t = tbl.append(df.coalesce(1))
+    entries = t._entries_at(None)
+    assert sorted(opened) == sorted(os.path.join(t.location, e["path"]) for e in entries)
+    assert sorted((e["partition"]["name"], e["stats"]["id"], e["records"])
+                  for e in entries) == [("a", [0, 8], 5), ("b", [1, 9], 5)]
+    assert t.row_count() == 10

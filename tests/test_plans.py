@@ -455,6 +455,39 @@ def test_only_fixpoint_stages_inside_loops():
     assert not sites, sites
 
 
+def test_one_field_id_read_path():
+    """Table._read_entries is the one Spark reader and datasource._to_current
+    the one arrow projection: only they resolve write-time schemas
+    (``_schema_by_id``) or the field-ID mapping (``_field_sources``). A
+    second copy of the read rule fails here."""
+    import ast
+    from pathlib import Path
+
+    import iceberg_rest_catalog_spark
+
+    names = {"_schema_by_id", "_field_sources"}
+    allowed = {"_read_entries", "_to_current"}
+    sites = []
+
+    def visit(node, path, fn):
+        for child in ast.iter_child_nodes(node):
+            if isinstance(child, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                visit(child, path, child.name)
+                continue
+            ref = (
+                child.attr if isinstance(child, ast.Attribute)
+                else child.id if isinstance(child, ast.Name) else None
+            )
+            if ref in names and fn not in allowed:
+                sites.append(f"{path}:{child.lineno} in {fn}")
+            visit(child, path, fn)
+
+    root = Path(iceberg_rest_catalog_spark.__file__).parent
+    for path in sorted(root.rglob("*.py")):
+        visit(ast.parse(path.read_text()), path.relative_to(root), "<module>")
+    assert not sites, sites
+
+
 def test_warm_pass_compiles_nothing(spark):
     """The generated-code cache holds a pass's working set: a second pass
     over the perfbench llm ops and the drift controls compiles no class.
