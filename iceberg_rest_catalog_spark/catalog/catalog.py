@@ -35,6 +35,43 @@ NS_MARKER = ".namespace.json"
 Ident = tuple[str, ...]
 
 
+class _Visible:
+    """What a lineage leaves visible, folded one snapshot at a time, oldest
+    first: manifest entries ({path, partition, ...}), merge-on-read
+    position-delete files, and the delete-tuple count they carry.
+
+    A ``replace`` (compaction) snapshot supersedes earlier files and folds
+    the deletes into its rewritten data, so it clears all three; a
+    copy-on-write ``overwrite`` drops the files it rewrote and leaves stale
+    delete rows pointing at them — inert, since the anti-join matches
+    nothing for them. The count is None once a contributing snapshot lacks
+    its ``removed-records`` stamp: a fold must then stay unstamped, so
+    ``row_count`` reports inexact rather than confidently wrong."""
+
+    def __init__(self):
+        self.entries: list[dict] = []
+        self.deletes: list[str] = []
+        self.removed_records: int | None = 0
+
+    def add(self, s: dict, doc: dict) -> None:
+        """Fold in snapshot ``s`` with its manifest document ``doc``."""
+        if s.get("operation", "append") == "replace":
+            self.__init__()
+        gone = {os.path.normpath(p) for p in doc.get("removed", [])}
+        if gone:
+            self.entries = [
+                e for e in self.entries if os.path.normpath(e["path"]) not in gone
+            ]
+        self.entries.extend(doc["entries"])
+        if doc.get("position-deletes"):
+            self.deletes.extend(doc["position-deletes"])
+            rr = s.get("removed-records")
+            self.removed_records = (
+                None if rr is None or self.removed_records is None
+                else self.removed_records + rr
+            )
+
+
 class Table:
     """Handle over one table's current metadata version."""
 
@@ -145,15 +182,13 @@ class Table:
             cur = by_id.get(parent) if parent is not None else None
         return list(reversed(chain))
 
-    def _visible_at(self, snapshot_id: int | None) -> tuple[list[dict], list[str]]:
-        """Manifest entries ({path, partition, ...}) and position-delete
-        files (merge-on-read) visible at a snapshot (default: current), from
-        ONE walk of its lineage that reads each manifest once. A
-        ``replace`` (compaction) snapshot supersedes earlier files and folds
-        the deletes into its rewritten data, so it clears both lists; a
-        copy-on-write ``overwrite`` drops the files it rewrote and leaves
-        stale delete rows pointing at them — inert, since the anti-join
-        matches nothing for them."""
+    def _visible_at(
+        self, snapshot_id: int | None
+    ) -> tuple[list[dict], list[str], int | None]:
+        """Manifest entries, position-delete files and their delete-tuple
+        count visible at a snapshot (default: current; see
+        :class:`_Visible`), from ONE walk of its lineage that reads each
+        manifest once."""
         sid = (
             snapshot_id
             if snapshot_id is not None
@@ -165,20 +200,10 @@ class Table:
             raise E.BadRequestException(
                 f"snapshot {snapshot_id} not found (expired or never existed)"
             )
-        entries: list[dict] = []
-        dels: list[str] = []
+        v = _Visible()
         for s in self._ancestors(sid) if sid is not None else []:
-            doc = self._manifest_doc(s)
-            if s.get("operation", "append") == "replace":
-                entries, dels = [], []
-            gone = {os.path.normpath(p) for p in doc.get("removed", [])}
-            if gone:
-                entries = [
-                    e for e in entries if os.path.normpath(e["path"]) not in gone
-                ]
-            entries.extend(doc["entries"])
-            dels.extend(doc.get("position-deletes", []))
-        return entries, dels
+            v.add(s, self._manifest_doc(s))
+        return v.entries, v.deletes, v.removed_records
 
     def _entries_at(self, snapshot_id: int | None) -> list[dict]:
         """Manifest entries visible at a snapshot (see :meth:`_visible_at`)."""
@@ -186,25 +211,6 @@ class Table:
 
     def _files_at(self, snapshot_id: int | None) -> list[str]:
         return [e["path"] for e in self._entries_at(snapshot_id)]
-
-    def _removed_records_at(self, snapshot_id: int) -> int | None:
-        """Accumulated merge-on-read delete-tuple count visible at a
-        snapshot, mirroring :meth:`_visible_at` (a ``replace`` folds deletes
-        into rewritten data, clearing the sum). None when any contributing
-        snapshot lacks its ``removed-records`` stamp — the caller must then
-        leave the fold unstamped so ``row_count`` reports inexact rather
-        than confidently wrong."""
-        total, exact = 0, True
-        for s in self._ancestors(snapshot_id):
-            if s.get("operation", "append") == "replace":
-                total, exact = 0, True
-            if self._manifest_doc(s).get("position-deletes"):
-                rr = s.get("removed-records")
-                if rr is None:
-                    exact = False
-                else:
-                    total += rr
-        return total if exact else None
 
     def _read_entries(
         self,
@@ -318,7 +324,7 @@ class Table:
         """A read plan from metadata alone: the entries visible at the
         snapshot that the partition filters and column stats keep, and
         the position-delete files visible there."""
-        entries, dels = self._visible_at(snapshot_id)
+        entries, dels, _ = self._visible_at(snapshot_id)
         if partition_filters:
             entries = [
                 e
@@ -576,10 +582,14 @@ class Table:
         operation: str,
         added: list[dict],
         removed: list[str] | None = None,
-        position_deletes: list[str] | None = None,
+        position_deletes: dict[str, int | None] | None = None,
         to_ref: str | None = None,
         summary: dict | None = None,
     ) -> "Table":
+        """Commit a snapshot adding the ``added`` entries; ``removed``
+        lists the paths a copy-on-write overwrite drops and
+        ``position_deletes`` maps each merge-on-read delete file to its
+        tuple count (None: unknown)."""
         # Stamp every entry with its WRITE-TIME schema id: evolution
         # (rename/drop) later resolves these files' columns by field ID
         # against this schema, never by name. Per-entry (not per-snapshot)
@@ -615,7 +625,7 @@ class Table:
             # nothing references it (same story as its orphan data files).
             "manifest-path": self.catalog._write_manifest(
                 self.identifier, sid, added,
-                removed=removed, position_deletes=position_deletes,
+                removed=removed, position_deletes=list(position_deletes or ()),
             ),
             "added-files-count": len(added),
         }
@@ -632,10 +642,7 @@ class Table:
             # delete-tuple count from the delete files' own footers (each
             # tuple deletes exactly one live row) — keeps row_count()
             # metadata-only through merge-on-read DML
-            recs = [
-                self._footer(os.path.join(self.location, p))["records"]
-                for p in position_deletes
-            ]
+            recs = position_deletes.values()
             if all(r is not None for r in recs):
                 snap["removed-records"] = sum(recs)
         if to_ref is not None:
@@ -791,16 +798,21 @@ class Table:
         cand, dels = self._plan_entries(column_predicates=prune)
         return cand, self._read_entries(spark, cand, dels)
 
-    def _write_position_delete_files(self, matches: DataFrame) -> list[str]:
+    def _write_position_delete_files(
+        self, matches: DataFrame
+    ) -> tuple[str, dict[str, int | None]]:
         """Persist (file_path, pos) tuples as parquet delete files under
-        ``data/`` (inside the orphan-sweep root); returns relative paths."""
+        ``data/`` (inside the orphan-sweep root); returns their directory
+        and each file's relative path with its tuple count, read from its
+        footer."""
         rel = os.path.join("data", uuid.uuid4().hex + "-deletes")
-        matches.write.parquet(os.path.join(self.location, rel))
-        return [
-            os.path.join(rel, f)
-            for f in sorted(self.catalog.fio.listdir(os.path.join(self.location, rel)))
+        out = os.path.join(self.location, rel)
+        matches.write.parquet(out)
+        return rel, {
+            os.path.join(rel, f): self._footer(os.path.join(out, f))["records"]
+            for f in sorted(self.catalog.fio.listdir(out))
             if f.endswith(".parquet")
-        ]
+        }
 
     def _mor_commit(
         self,
@@ -812,26 +824,26 @@ class Table:
         """Merge-on-read DML core: position-delete the matching rows; for
         UPDATE, additionally append the rewritten versions of just those
         rows. One snapshot carries both halves, so readers never see the
-        intermediate state."""
+        intermediate state. The candidates are read once, with their keys:
+        the delete files are written straight away, and their footers'
+        tuple counts say whether anything matched (nothing matched: the
+        files are removed and nothing is committed)."""
         from pyspark.sql import functions as F
 
         cand, dels = self._plan_entries(column_predicates=prune)
-        df = self._read_entries(spark, cand, dels)
-        if df is None:
-            return self
-        matching = df.filter(F.expr(condition))
-        if matching.isEmpty():
-            return self
-        # The keys come from a second read of the same plan: a frame that
-        # carries them makes Spark read ``_metadata`` in every job over it,
-        # so the emptiness check and the UPDATE rows read without them.
         keyed = self._read_entries(spark, cand, dels, keys=True)
-        delete_files = self._write_position_delete_files(
-            keyed.filter(F.expr(condition)).select(
+        if keyed is None:
+            return self
+        matching = keyed.filter(F.expr(condition))
+        rel, delete_files = self._write_position_delete_files(
+            matching.select(
                 F.col("__icb_file").alias("file_path"),
                 F.col("__icb_pos").alias("pos"),
             )
         )
+        if all(r == 0 for r in delete_files.values()):
+            self.catalog.fio.rmtree(os.path.join(self.location, rel))
+            return self
         added: list[dict] = []
         op = "delete"
         if assignments is not None:
@@ -1479,7 +1491,7 @@ class Table:
             sid = s["snapshot-id"]
             # merge-on-read deletes visible at the rebase point must fold
             # with the entries or expired-ancestor deletes would resurrect
-            folded, dels = self._visible_at(sid)
+            folded, dels, removed_records = self._visible_at(sid)
             rb = {
                 "snapshot-id": sid,
                 "manifest-path": self.catalog._write_manifest(
@@ -1487,14 +1499,12 @@ class Table:
                 ),
                 "count": len(folded),
             }
-            if dels:
+            if dels and removed_records is not None:
                 # row_count() subtracts the per-snapshot removed-records;
                 # the fold must carry the ACCUMULATED delete-tuple count of
                 # the collapsed chain or counts go silently wrong (reads
                 # apply every folded delete file, the summary must agree)
-                rr = self._removed_records_at(sid)
-                if rr is not None:
-                    rb["removed-records"] = rr
+                rb["removed-records"] = removed_records
             rebases.append(rb)
         out = self.catalog.update_table(
             self.identifier,

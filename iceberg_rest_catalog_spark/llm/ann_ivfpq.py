@@ -260,8 +260,7 @@ def q_sim_index_update(spark, sf_dir):
     index(base) ∪ index(delta) == index(all) row-for-row, and the
     merged-index search must value-hash-match q_sim_ann_ivf_pq's
     rebuild-from-scratch answer exactly — the invariant incremental
-    maintenance has to preserve (documented in tools/ORACLE_SIMILARITY.md
-    as a deliberate shared-oracle pair).
+    maintenance has to preserve (a deliberate shared-oracle pair).
 
     Reference anchor: the append-commit lineage the reference catalog
     exists to serve (internal/catalog/tables.go:150-227 — table updates

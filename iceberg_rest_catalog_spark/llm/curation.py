@@ -588,8 +588,7 @@ def q_text_bpe_train(spark, sf_dir):
 def _bpe_apply_oracle() -> str:
     """The q_text_bpe_train CTE chain extended one step: the final symbol
     table s{N_MERGES} collapses to per-word token counts, which join back
-    onto the per-doc word multiset (the shared-oracle family documented
-    in tools/ORACLE_SIMILARITY.md)."""
+    onto the per-doc word multiset (a deliberate shared-oracle family)."""
     ctes = [
         """w AS (
       SELECT word, count(*) AS freq FROM (
@@ -656,7 +655,7 @@ def q_tokenizer_bpe_apply(spark, sf_dir):
     Reference scope: no tokenizer surface in the reference facade
     (api/router/router.go:9-55); completes the q_text_bpe_pairs ->
     q_text_bpe_train -> q_tokenizer_bpe_apply chain (shared CTE family
-    with the train oracle, documented in tools/ORACLE_SIMILARITY.md)."""
+    with the train oracle)."""
     _, syms = _bpe_train(spark, sf_dir, N_MERGES, BPE_BATCH_M, return_syms=True)
     wtok = syms.groupBy("word").agg(F.count("*").alias("k"))
     dw = (

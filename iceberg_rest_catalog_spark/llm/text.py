@@ -465,7 +465,7 @@ def q_text_perplexity_bigram(spark, sf_dir):
 
     Reference scope: no text surface in the reference facade
     (api/router/router.go:9-55); backoff extension of q_text_perplexity
-    (shared unigram CTE family, documented in tools/ORACLE_SIMILARITY.md)."""
+    (shared unigram CTE family)."""
     d = t(spark, sf_dir, "documents")
     toks = d.select("doc_id", F.explode(F.split("text", " ")).alias("tok"))
     cnt = toks.groupBy("tok").agg(F.count("*").alias("c"))

@@ -130,7 +130,7 @@ def release_persistent_state(spark: SparkSession) -> int:
     """Unpersist every cached plan and persistent RDD in the session;
     returns how many RDDs were released.
 
-    Iterative operators (pagerank, connected components, k-means, BFS,
+    Iterative operators (connected components, k-means, BFS, k-core,
     LSH signature reuse) truncate lineage with ``localCheckpoint()``,
     whose backing RDDs are NOT tracked by the SQL cache manager and stay
     resident until the Python DataFrame is garbage-collected AND the

@@ -9,13 +9,15 @@ next-action modeling and Markov-chain attribution.
 
 Scale shape: the expensive part is building the edge list — one window
 (lead) over the partitioning key plus one aggregate, both sharing the
-user_id/edge-key shuffle. Each of the k power-iteration rounds is one join
-and one aggregate: the rank vector joins the edge list (a broadcast of the
-smaller side here, a shuffle join on src at scale), each node's inflow is
-the map-side-combined sum keyed on dst, and a (node, 0.0) row per node
-rides the same aggregate so a sink or unreached node keeps its teleport
-share. There is no join back to the node set and no node-count cross join,
-so a round here is one shuffle, and common.fixpoint stages the rank vector.
+user_id/edge-key shuffle. The k power-iteration rounds then run inside one
+expression over one packed row: the sorted node array and, aligned with
+it, each node's in-edges as (source index, probability) pairs, built from
+one equi-join of the node set to the edges and two aggregates. The row
+holds |nodes| + |edges| values (the node set is the event-type
+vocabulary, and the edge list is what a join-per-round plan broadcast
+every round), a round is O(|edges|) work, and running all k rounds costs
+no Spark job of its own.
+
 The node set is DISTINCT event_type from the events themselves (not
 edges.src), so a sink node — one with inbound transitions but none
 outbound — still holds rank; its outflow leaks, the classic dangling-mass
@@ -24,8 +26,8 @@ same unrolled recurrence over the same node set.
 
 Unlike q_dedup_cluster (rows-only by design), the fixed iteration count
 makes this one fully oracle-checkable: the DuckDB oracle UNROLLS the ten
-power-iteration steps as chained CTEs generated at import time — iterative
-Spark loop vs closed-form SQL recurrence, hash-compared.
+power-iteration steps as chained CTEs generated at import time — Spark's
+in-expression iteration vs the unrolled SQL recurrence, hash-compared.
 """
 
 from __future__ import annotations
@@ -81,7 +83,16 @@ def _pagerank_oracle(iters: int) -> str:
 def _pagerank(ev):
     """Core PageRank over an events DataFrame (user_id, event_type, ts,
     event_id). Extracted so unit tests can run it on a hand-built graph
-    (e.g. one containing a sink node) without parquet fixtures."""
+    (e.g. one containing a sink node) without parquet fixtures.
+
+    All ITERS rounds run inside one expression over one packed row: the
+    sorted node array N and, aligned with it, each node's in-edges as
+    (j, p) structs, j being the source's index in N.  The rank vector is
+    the accumulator of one ``aggregate`` over the round numbers, so each
+    round reads the previous one's array and no round is evaluated
+    twice; a round is O(|edges|) work.  The row holds |nodes| + |edges|
+    values, the same edge list the join-per-round plan broadcast every
+    round, and the node set is the event-type vocabulary."""
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     nxt = ev.select(
         F.col("event_type").alias("src"), F.lead("event_type").over(w).alias("dst")
@@ -94,31 +105,41 @@ def _pagerank(ev):
         "src",
         "dst",
         (F.col("cnt") * 1.0 / F.sum("cnt").over(Window.partitionBy("src"))).alias("p"),
-    ).localCheckpoint()  # edge build runs ONCE, not once per iteration
+    )
     # Node set comes from the EVENTS, not from edges.src: a sink node (only
     # ever a dst, no out-transitions) must still hold rank, matching the
-    # oracle's `SELECT DISTINCT event_type FROM events`.
-    nodes = ev.select(F.col("event_type").alias("node")).distinct().localCheckpoint()
-    # |nodes| as a Python constant: 1.0 / n and 0.15 / n are the same IEEE
-    # divisions the oracle's `1.0 / (SELECT c FROM n)` performs.
-    n = nodes.count()
-    ranks = nodes.select("node", F.lit(1.0 / n).alias("rank"))
-    # One (node, 0.0) row per node enters every round's aggregate: adding
-    # 0.0 to a sum is exact, and a node no edge reaches still gets a group.
-    zero = nodes.select("node", F.lit(0.0).alias("inflow"))
-
-    def _round(ranks):
-        inflow = ranks.join(edges, ranks.node == edges.src).select(
-            F.col("dst").alias("node"), (F.col("rank") * F.col("p")).alias("inflow")
-        )
-        return (
-            inflow.unionByName(zero)
-            .groupBy("node")
-            .agg((F.lit(0.15 / n) + F.lit(DAMPING) * F.sum("inflow")).alias("rank"))
-        )
-
-    ranks = fixpoint(_round, ranks, ITERS, stage_every=5)
-    return ranks.select("node", F.round("rank", 6).alias("rank"))
+    # oracle's `SELECT DISTINCT event_type FROM events`.  A node no edge
+    # reaches keeps an empty in-edge list (collect_list skips the null).
+    nodes = ev.select(F.col("event_type").alias("node")).distinct()
+    inbound = (
+        nodes.join(edges, nodes.node == edges.dst, "left")
+        .groupBy("node")
+        .agg(F.expr("collect_list(IF(src IS NULL, NULL, struct(src, p)))").alias("ins"))
+    )
+    # N: the sorted nodes; IN[i]: N[i]'s in-edges as (j, p), j being the
+    # source's index in N
+    packed = inbound.agg(
+        F.sort_array(F.collect_list(F.struct("node", "ins"))).alias("g")
+    ).selectExpr(
+        "g.node AS N",
+        "transform(g, x -> transform(x.ins, e ->"
+        " struct(int(array_position(g.node, e.src)) - 1 AS j, e.p AS p))) AS IN",
+    )
+    # 1.0D / n and 0.15D / n are the same double divisions as the oracle's
+    # `1.0 / (SELECT c FROM n)`.  The start vector is sized by IN so that IN
+    # is read twice: CollapseProject inlines a column read once into the
+    # round lambda, where every round would rebuild it.
+    ranks = packed.selectExpr(
+        "N",
+        f"aggregate(sequence(1, {ITERS}), array_repeat(1.0D / size(N), size(IN)),"
+        f" (r, k) -> transform(IN, ins -> 0.15D / size(N) + {DAMPING}D"
+        " * aggregate(ins, 0.0D, (acc, e) -> acc + r[e.j] * e.p))) AS R",
+    )
+    # explode N, not the ranks: the filter Spark infers for a generator
+    # would otherwise carry the whole rank expression a second time
+    return ranks.selectExpr("posexplode(N) AS (i, node)", "R").selectExpr(
+        "node", "round(R[i], 6) AS rank"
+    )
 
 
 @query("q_graph_pagerank", oracle=_pagerank_oracle(ITERS))
@@ -1783,7 +1804,7 @@ def q_graph_modularity(spark, sf_dir):
 
     Reference scope: no graph surface in the reference facade
     (api/router/router.go:9-55); eval sibling of q_graph_label_propagation
-    (shared label CTEs, documented in tools/ORACLE_SIMILARITY.md)."""
+    (shared label CTEs)."""
     edges, labels = _lpa_labels(spark, sf_dir)
     lu = labels.select(F.col("node").alias("u"), F.col("lbl").alias("lu"))
     lv = labels.select(F.col("node").alias("v"), F.col("lbl").alias("lv"))

@@ -36,6 +36,7 @@ import tempfile
 from pyspark.sql import DataFrame, SparkSession
 
 from ..catalog import errors as E
+from ..catalog.catalog import _Visible
 
 
 class CatalogStreamReader:
@@ -73,22 +74,26 @@ class CatalogStreamReader:
         """Snapshots on the current lineage with id > the committed offset,
         oldest first. Lineage-based (not id-sorted): WAP branch snapshots
         never leak into the stream until fast-forwarded."""
-        tbl = self.catalog.load_table(self.identifier)
+        return self._lineage(self.catalog.load_table(self.identifier))[1]
+
+    def _lineage(self, tbl) -> tuple[list[dict], list[dict]]:
+        """The current lineage of ``tbl``, oldest first, and its snapshots
+        past the committed offset."""
         cur = tbl.metadata.get("current-snapshot-id")
         if cur is None:
-            return []
-        off = self.last_committed()
-        return [s for s in tbl._ancestors(cur) if s["snapshot-id"] > off]
+            return [], []
+        chain, off = tbl._ancestors(cur), self.last_committed()
+        return chain, [s for s in chain if s["snapshot-id"] > off]
 
-    def _deleted_rows_df(self, spark, tbl, delete_rel_paths, sid) -> DataFrame | None:
+    def _deleted_rows_df(self, spark, tbl, delete_rel_paths, entries) -> DataFrame | None:
         """Resolve position-delete tuples back to the ROWS they delete —
         the retraction half of a changelog batch: a semi-join of the
         touched files' rows, read with their keys, against the tuples.
         Reads only the data files the tuples reference (their distinct file
         list is collected; it is bounded by touched-file count, not row
-        count). Entries are resolved AT the snapshot being processed —
-        later rewrites may have removed the touched files from the current
-        view."""
+        count). ``entries`` are those the snapshot's parent left visible,
+        which the tuples point into — later rewrites may have removed the
+        touched files from the current view."""
         from pyspark.sql import functions as F
 
         ddf = spark.read.parquet(
@@ -100,9 +105,7 @@ class CatalogStreamReader:
             os.path.normpath(r.file_path)
             for r in ddf.select("file_path").distinct().collect()
         }
-        entries = [
-            e for e in tbl._entries_at(sid) if os.path.normpath(e["path"]) in touched
-        ]
+        entries = [e for e in entries if os.path.normpath(e["path"]) in touched]
         keyed = tbl._read_entries(spark, entries, keys=True)
         if keyed is None:
             return None
@@ -113,6 +116,47 @@ class CatalogStreamReader:
             how="left_semi",
         ).drop("__icb_file", "__icb_pos")
 
+    def _change_batch(self, spark, tbl, snap, doc, parent) -> DataFrame | None:
+        """One snapshot's changelog rows, tagged with ``_change_type``;
+        ``parent`` is what its parent snapshot left visible."""
+        from pyspark.sql import functions as F
+
+        def _tag(df, kind):
+            return df.withColumn("_change_type", F.lit(kind))
+
+        op = snap.get("operation", "append")
+        if op == "replace":
+            return None  # compaction: no logical change
+        new = tbl._read_entries(spark, doc["entries"])
+        if op == "append":
+            return None if new is None else _tag(new, "insert")
+        batch = None
+        if doc.get("position-deletes"):
+            gone = self._deleted_rows_df(spark, tbl, doc["position-deletes"], parent.entries)
+            if gone is not None:
+                batch = _tag(gone, "delete")
+            if new is not None:
+                ins = _tag(new, "insert")
+                batch = ins if batch is None else batch.union(ins)
+        elif doc.get("removed"):
+            # the LOGICAL old view: the removed files as the parent saw
+            # them, minus the MoR deletes pending there — already-retracted
+            # rows must not retract twice
+            removed = {os.path.normpath(p) for p in doc["removed"]}
+            old = tbl._read_entries(
+                spark,
+                [e for e in parent.entries if os.path.normpath(e["path"]) in removed],
+                parent.deletes,
+            )
+            if old is not None:
+                deleted = old.exceptAll(new) if new is not None else old
+                batch = _tag(deleted, "delete")
+            if new is not None:
+                inserted = new.exceptAll(old) if old is not None else new
+                ins = _tag(inserted, "insert")
+                batch = ins if batch is None else batch.union(ins)
+        return batch
+
     def run_changelog(self, spark: SparkSession, sink) -> list[int]:
         """CDC drain: per pending snapshot, call ``sink(batch_df, sid)``
         where batch_df carries a ``_change_type`` column — the Iceberg
@@ -120,60 +164,29 @@ class CatalogStreamReader:
         emits exact deletes (tuples resolved to rows) plus inserts;
         copy-on-write overwrites emit the content DIFF of the rewritten
         files (exceptAll both ways — bounded by candidate-file size);
-        compactions emit nothing (no logical change)."""
-        from pyspark.sql import functions as F
+        compactions emit nothing (no logical change).
 
+        A drain loads the table once and reads each manifest once. With
+        row-level DML pending it folds the whole lineage as it goes, so
+        each snapshot sees what its parent left visible; an append-only
+        drain reads only the pending snapshots' manifests."""
+        tbl = self.catalog.load_table(self.identifier)
+        chain, pending = self._lineage(tbl)
+        dml = any(
+            s.get("operation", "append") not in ("append", "replace") for s in pending
+        )
+        pending_ids = {s["snapshot-id"] for s in pending}
+        visible = _Visible()
         done: list[int] = []
-        for snap in self.pending_snapshots():
-            sid = snap["snapshot-id"]
-            op = snap.get("operation", "append")
-            tbl = self.catalog.load_table(self.identifier)
-            doc = tbl._manifest_doc(snap)
-            batch = None
-
-            def _tag(df, kind):
-                return df.withColumn("_change_type", F.lit(kind))
-
-            if op == "append":
-                df = tbl._read_entries(spark, doc["entries"])
-                if df is not None:
-                    batch = _tag(df, "insert")
-            elif op == "replace":
-                pass  # compaction: no logical change
-            else:
-                dels = doc.get("position-deletes") or []
-                if dels:
-                    gone = self._deleted_rows_df(spark, tbl, dels, sid)
-                    if gone is not None:
-                        batch = _tag(gone, "delete")
-                    add = tbl._read_entries(spark, doc["entries"])
-                    if add is not None:
-                        ins = _tag(add, "insert")
-                        batch = ins if batch is None else batch.union(ins)
-                elif doc.get("removed"):
-                    # the LOGICAL old view: the removed files as the parent
-                    # saw them, minus the MoR deletes pending there —
-                    # already-retracted rows must not retract twice
-                    parent = snap.get("parent-snapshot-id")
-                    seen, pending = tbl._visible_at(parent) if parent else ([], [])
-                    removed = {os.path.normpath(p) for p in doc["removed"]}
-                    old = tbl._read_entries(
-                        spark,
-                        [e for e in seen if os.path.normpath(e["path"]) in removed],
-                        pending,
-                    )
-                    new = tbl._read_entries(spark, doc["entries"])
-                    if old is not None:
-                        deleted = old.exceptAll(new) if new is not None else old
-                        batch = _tag(deleted, "delete")
-                    if new is not None:
-                        inserted = new.exceptAll(old) if old is not None else new
-                        ins = _tag(inserted, "insert")
-                        batch = ins if batch is None else batch.union(ins)
-            if batch is not None:
-                sink(batch, sid)
-            self._commit_offset(sid)
-            done.append(sid)
+        for snap in chain if dml else pending:
+            sid, doc = snap["snapshot-id"], tbl._manifest_doc(snap)
+            if sid in pending_ids:
+                batch = self._change_batch(spark, tbl, snap, doc, visible)
+                if batch is not None:
+                    sink(batch, sid)
+                self._commit_offset(sid)
+                done.append(sid)
+            visible.add(snap, doc)
         return done
 
     # -- drain --------------------------------------------------------------
@@ -183,8 +196,9 @@ class CatalogStreamReader:
         committing the offset after each sink return. Returns the processed
         snapshot ids. Skipped non-append snapshots also advance the offset
         (their changes are visible only through a fresh batch scan)."""
+        tbl = self.catalog.load_table(self.identifier)
         done: list[int] = []
-        for snap in self.pending_snapshots():
+        for snap in self._lineage(tbl)[1]:
             sid = snap["snapshot-id"]
             op = snap.get("operation", "append")
             if op != "append":
@@ -195,7 +209,6 @@ class CatalogStreamReader:
                     )
                 self._commit_offset(sid)
                 continue
-            tbl = self.catalog.load_table(self.identifier)
             df = tbl._read_entries(spark, tbl._manifest_entries(snap))
             if df is not None:
                 sink(df, sid)

@@ -2248,7 +2248,7 @@ def q_stream_topk_bounded(spark, sf_dir):
     the finisher rolls the changelog up exactly.  Counting is
     associative, so the result is bit-identical to q_stream_topk and the
     batch oracle at ANY batch split — the shared oracle IS the swap's
-    correctness contract (tools/ORACLE_SIMILARITY.md).
+    correctness contract.
 
     Why not a SpaceSaving/count-min shortlist + exact second pass: a
     sketch shortlist is provably top-k-complete only when the key

@@ -28,31 +28,55 @@ def test_pagerank_is_a_probability_vector(spark, qs):
     assert abs(sum(r.rank for r in rows) - 1.0) < 1e-3
 
 
-def test_pagerank_keeps_sink_nodes(spark):
-    """A node that only ever appears as a transition TARGET (no outbound
-    edges) must still be in the rank vector — regression for deriving the
-    node set from edges.src, which silently dropped sinks."""
+# (user_id, event_type) per graph, each user's events in ts order
+PAGERANK_GRAPHS = {
+    # a -> b -> a -> c: c is terminal => sink node
+    "sink": [(1, "a"), (1, "b"), (1, "a"), (1, "c")],
+    # user 2 has a single event: d is in no edge at all
+    "isolated": [(1, "a"), (1, "b"), (1, "a"), (2, "d")],
+    # s only ever leads somewhere: no in-edges
+    "source_only": [(1, "s"), (1, "a"), (1, "b"), (2, "s"), (2, "b")],
+    # a -> a
+    "self_loop": [(1, "a"), (1, "a"), (1, "b"), (1, "a"), (2, "b"), (2, "b")],
+    # first-appearance order z, m, b is the reverse of the sort order
+    "unsorted_names": [(1, "z"), (1, "m"), (1, "b"), (1, "z"), (2, "m"), (2, "z")],
+}
+
+
+@pytest.mark.parametrize("graph", sorted(PAGERANK_GRAPHS))
+def test_pagerank_keeps_sink_nodes(spark, graph):
+    """Every event type is in the rank vector with the damped recurrence's
+    value — sinks, isolated and source-only nodes, self-loops, and names
+    whose sort order differs from their order of appearance (regression
+    for deriving the node set from edges.src, which silently dropped
+    sinks)."""
     from iceberg_rest_catalog_spark.operators.graph import DAMPING, ITERS, _pagerank
 
-    # one user: a -> b -> a -> c ; c is terminal => sink node
+    events = PAGERANK_GRAPHS[graph]
     ev = spark.createDataFrame(
-        [(1, "a", 1, 1), (1, "b", 2, 2), (1, "a", 3, 3), (1, "c", 4, 4)],
+        [(u, e, i, i) for i, (u, e) in enumerate(events)],
         "user_id long, event_type string, ts long, event_id long",
     )
     got = {r.node: r.rank for r in _pagerank(ev).collect()}
-    assert set(got) == {"a", "b", "c"}
 
     # reference implementation of the same damped recurrence
-    edges = {("a", "b"): 0.5, ("a", "c"): 0.5, ("b", "a"): 1.0}
-    pr = {n: 1 / 3 for n in "abc"}
+    nodes = {e for _, e in events}
+    cnt: dict = {}
+    for (u, src), (v, dst) in zip(events, events[1:]):
+        if u == v:
+            cnt[src, dst] = cnt.get((src, dst), 0) + 1
+    out = {s: sum(c for (s2, _), c in cnt.items() if s2 == s) for s, _ in cnt}
+    edges = {(s, d): c / out[s] for (s, d), c in cnt.items()}
+    pr = {n: 1 / len(nodes) for n in nodes}
     for _ in range(ITERS):
         pr = {
-            n: 0.15 / 3
+            n: 0.15 / len(nodes)
             + DAMPING * sum(pr[s] * p for (s, d), p in edges.items() if d == n)
-            for n in "abc"
+            for n in nodes
         }
-    for n in "abc":
-        assert abs(got[n] - pr[n]) < 1e-6
+    assert set(got) == nodes
+    for n in nodes:
+        assert abs(got[n] - pr[n]) < 1e-6, (n, got[n], pr[n])
 
 
 def test_quantize_preserves_geometry_and_is_deterministic(spark, qs):

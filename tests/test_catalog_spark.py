@@ -661,6 +661,24 @@ def test_update_where_merge_on_read(spark, catalog, table):
     assert t2.df(spark, snapshot_id=1).filter("name = 'b'").count() == 1
 
 
+@pytest.mark.parametrize("op", ["delete", "update"])
+def test_mor_no_match_commits_nothing(spark, catalog, table, op):
+    """A merge-on-read DML that matches no row commits no snapshot and
+    leaves no file under ``data/``: its empty delete files are removed."""
+    import os
+
+    t = table.append(_rows(spark, 0, 5))
+    data = os.path.join(t.location, "data")
+    before = sorted(os.walk(data))
+    if op == "delete":
+        t2 = t.delete_where(spark, "id > 100", mode="merge-on-read")
+    else:
+        t2 = t.update_where(spark, "id > 100", {"name": "'y'"}, mode="merge-on-read")
+    assert t2 is t
+    assert len(catalog.load_table(("db", "t")).metadata["snapshots"]) == 1
+    assert sorted(os.walk(data)) == before
+
+
 def test_mor_delete_files_survive_orphan_sweep_and_expire(spark, catalog, table):
     t = table.append(
         spark.createDataFrame([(i, f"r{i}") for i in range(20)], "id long, name string")
@@ -1460,6 +1478,63 @@ def test_scan_reads_each_manifest_once(spark, tmp_path):
     reads = [a[0] for name, a in log if name == "read_text" and "manifests" in a[0]]
     assert len(reads) == len(set(reads)) == len(t.metadata["snapshots"]) == 4
     assert sorted(r.id for r in df.collect()) == [0, 2, 3, 4, 5, 6, 8, 9]
+
+
+def test_expire_reads_each_manifest_once(spark, tmp_path):
+    """Expiring a prefix walks the rebased snapshot's lineage once: its
+    entries, deletes and accumulated removed-records come from one read of
+    each manifest."""
+    from tests.test_catalog import _recording_fileio
+
+    log: list[tuple] = []
+    cat = Catalog(str(tmp_path / "wh"), fileio=_recording_fileio(log))
+    cat.create_namespace(("db",))
+    t = cat.create_table(("db", "t"), SCHEMA)
+    t = t.append(_rows(spark, 0, 5)).append(_rows(spark, 5, 10))
+    t = t.delete_where(spark, "id = 1", mode="merge-on-read")
+    t = t.append(_rows(spark, 10, 12)).append(_rows(spark, 12, 14))
+    log.clear()
+    t = t.expire_snapshots(retain_last=1)
+    reads = [a[0] for name, a in log if name == "read_text" and "manifests" in a[0]]
+    assert len(reads) == len(set(reads)) == 5
+    assert t.current_snapshot()["removed-records"] == 1
+    assert t.row_count() == 13
+    assert sorted(r.id for r in t.df(spark).collect()) == [0, *range(2, 14)]
+
+
+def test_changelog_drain_reads_each_manifest_once(spark, tmp_path):
+    """A changelog drain loads the table once and reads each manifest
+    once, over appends, a merge-on-read delete, a copy-on-write delete and
+    a merge."""
+    from iceberg_rest_catalog_spark.streaming.catalog_source import CatalogStreamReader
+    from tests.test_catalog import _recording_fileio
+
+    log: list[tuple] = []
+    cat = Catalog(str(tmp_path / "wh"), fileio=_recording_fileio(log))
+    cat.create_namespace(("db",))
+    t = cat.create_table(("db", "t"), SCHEMA)
+    for i in range(4):
+        t = t.append(_rows(spark, 5 * i, 5 * i + 5))
+    t = t.delete_where(spark, "id = 1", mode="merge-on-read")
+    t = t.delete_where(spark, "id = 7")
+    t = t.merge_into(spark, _rows(spark, 18, 22, tag="m"), "id")
+    reader = CatalogStreamReader(cat, ("db", "t"), str(tmp_path / "cdc"))
+    seen = {}
+    log.clear()
+    done = reader.run_changelog(
+        spark, lambda df, sid: seen.setdefault(sid, sorted(
+            (r._change_type, r.id, r.name) for r in df.collect()))
+    )
+    assert done == list(range(1, 8))
+    reads = [a[0] for name, a in log if name == "read_text" and "manifests" in a[0]]
+    assert len(reads) == len(set(reads)) == 7
+    loads = [a[0] for name, a in log if name == "read_text" and "metadata.json" in a[0]]
+    assert len(loads) == 1
+    assert seen[5] == [("delete", 1, "x")]
+    assert seen[6] == [("delete", 7, "x")]
+    assert seen[7] == [("delete", 18, "x"), ("delete", 19, "x"),
+                       ("insert", 18, "m"), ("insert", 19, "m"),
+                       ("insert", 20, "m"), ("insert", 21, "m")]
 
 
 def test_write_reads_each_footer_once(spark, catalog, monkeypatch):

@@ -369,7 +369,7 @@ def test_release_persistent_state_clears_checkpoint_leak(spark):
     from iceberg_rest_catalog_spark.registry import collect
 
     release_persistent_state(spark)  # start clean
-    fn = collect()["q_graph_pagerank"].fn
+    fn = collect()["q_graph_kcore"].fn
     fn(spark, SF_DIR).count()
     jmap = spark.sparkContext._jsc.getPersistentRDDs()
     assert jmap.size() > 0  # the loop really does checkpoint
@@ -378,11 +378,22 @@ def test_release_persistent_state_clears_checkpoint_leak(spark):
     assert spark.sparkContext._jsc.getPersistentRDDs().size() == 0
 
 
+def _job_count(spark, group, action):
+    """Spark jobs ``action`` runs, counted by job group."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = action()
+    finally:
+        sc._jsc.clearJobGroup()
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
 # Spark jobs run while BUILDING each fixpoint-loop query on the tier-1
 # fixture (the eager localCheckpoint and signature actions), counted after
 # a first build has warmed the kNN edge cache.
 LOOP_BUILD_JOBS = {
-    "q_graph_pagerank": 24,
     "q_graph_knn_bfs": 24,
     "q_graph_kcore": 21,
     "q_sim_graph_search": 28,
@@ -397,27 +408,36 @@ LOOP_BUILD_JOBS = {
 def test_loop_build_job_floor(spark, name):
     """Staging cadence and convergence checks are what a loop's job count
     is made of, so moving a loop onto common.fixpoint must not change it.
-    PageRank's count also pins its one-shuffle round: the earlier round,
-    which also joined back to the node set and cross-joined a broadcast
-    1-row node count, ran 39 build jobs.
 
     The floor is the fewest jobs over three builds: depending on task
     timing, AQE now and then runs one more query-stage job (q_graph_kcore
     builds in 21 or 22 jobs, with or without common.fixpoint)."""
-    sc = spark.sparkContext
     fn = registry.queries()[name]
     fn(spark, SF_DIR)  # warm the kNN edge cache
+    counts = [
+        _job_count(spark, f"test_loop_build_job_floor_{name}_{i}",
+                   lambda: fn(spark, SF_DIR))[1]
+        for i in range(3)
+    ]
+    assert min(counts) == LOOP_BUILD_JOBS[name], counts
+
+
+def test_pagerank_job_floor(spark):
+    """PageRank runs its ten rounds inside one expression over one packed
+    row, so building and running it (to the noop sink) is 8 jobs on the
+    tier-1 fixture, whatever ITERS is: the edge build's and packing's
+    query stages. A join-and-aggregate round per iteration ran 25 (24 to
+    build, with its staging every fifth round, plus 1 to run)."""
+    fn = registry.queries()["q_graph_pagerank"]
     counts = []
     for i in range(3):
-        group = f"test_loop_build_job_floor_{name}_{i}"
-        sc.setJobGroup(group, group)
-        try:
-            fn(spark, SF_DIR)
-        finally:
-            sc._jsc.clearJobGroup()
-        sc._jsc.sc().listenerBus().waitUntilEmpty()
-        counts.append(len(sc.statusTracker().getJobIdsForGroup(group)))
-    assert min(counts) == LOOP_BUILD_JOBS[name], counts
+        group = f"test_pagerank_job_floor_{i}"
+        df, build = _job_count(spark, group + "_build", lambda: fn(spark, SF_DIR))
+        _, run = _job_count(
+            spark, group + "_run",
+            lambda: df.write.format("noop").mode("overwrite").save())
+        counts.append(build + run)
+    assert min(counts) == 8, counts
 
 
 def test_only_fixpoint_stages_inside_loops():
