@@ -1,16 +1,23 @@
-"""Filesystem-metastore catalog with versioned metadata + CAS commits.
+"""Table lifecycle with versioned metadata + CAS commits, and the Table handle.
 
 Re-expresses the reference's executed surface (all 15 §2.A operators) as a
-library API over a warehouse directory:
+library API. :class:`Catalog` writes every namespace and table method once:
+the validation order, the new-table metadata document, CommitTable's
+load -> assert requirements -> apply updates -> write next metadata -> swap
+the pointer (reference api/handlers/tables.go:150-227), rename's location
+rule and the namespace property summary. Those methods reach storage only
+through a few private primitives that decide where namespace properties
+and the current-metadata pointer live. This class keeps them on its FileIO
+(a local directory or an S3 prefix):
 
 - namespace = nested directories with a ``.namespace.json`` marker holding
   properties (multi-level, reference api/handlers/models.go:10-12)
 - table    = ``<ns...>/<name>/metadata/v{N}.metadata.json`` + a
   ``version-hint.text`` pointer, parquet data files under ``data/``
-- commit   = optimistic concurrency: requirements are asserted against the
-  CURRENT metadata, the new version file is claimed with O_CREAT|O_EXCL
-  (the check-and-swap), then the hint pointer is atomically replaced —
-  mirroring CommitTable (reference api/handlers/tables.go:150-227)
+- commit   = the next version file is claimed with O_CREAT|O_EXCL (the
+  check-and-swap), then the hint pointer is atomically replaced
+
+:class:`~.sql_catalog.SqlCatalog` keeps the same two things in SQLite.
 
 Error semantics (404/409/422/400/501 types) follow the reference exactly;
 see errors.py. Single-writer-per-filesystem assumption documented in
@@ -21,6 +28,7 @@ from __future__ import annotations
 
 import json
 import os
+import re
 import time
 import uuid
 
@@ -32,7 +40,20 @@ from .fileio import FileIO, LocalFileIO
 from .schema import NestedField, Schema
 
 NS_MARKER = ".namespace.json"
+#: Joins namespace levels in REST URLs and in the sql backend's keys
+#: (reference models.go:10), so no level may contain it.
+NS_SEP = "\x1f"
 Ident = tuple[str, ...]
+
+
+def _version_of(metadata_location: str) -> int:
+    """N of a ``v{N}.metadata.json`` or ``v{N}-{suffix}.metadata.json`` file."""
+    m = re.match(r"v(\d+)", os.path.basename(metadata_location))
+    if not m:
+        raise E.InternalServerError(
+            f"unparseable metadata-location {metadata_location!r}"
+        )
+    return int(m.group(1))
 
 
 class _Visible:
@@ -81,33 +102,22 @@ class Table:
         identifier: Ident,
         version: int,
         metadata: dict,
-        metadata_location: str | None = None,
+        metadata_location: str,
     ):
         self.catalog = catalog
         self.identifier = identifier
         self.version = version
         self.metadata = metadata
-        # Backends with a pointer table (sql) pass the actual location; the
-        # fs backend's deterministic v{N} layout computes it on demand.
-        self._metadata_location = metadata_location
+        # The file this version was read from or written to. Its directory is
+        # the table's metadata dir (manifests live under it), which stays
+        # under the catalog-managed table dir even when the DATA location is
+        # custom (create_table(location=…)).
+        self.metadata_location = metadata_location
 
     # -- metadata accessors -------------------------------------------------
     @property
     def location(self) -> str:
         return self.metadata["location"]
-
-    @property
-    def metadata_location(self) -> str:
-        if self._metadata_location is not None:
-            return self._metadata_location
-        # Metadata always lives under the catalog-managed table dir, even
-        # when the table's DATA location is custom (create_table(location=…)),
-        # so load_table/list_tables can always discover it.
-        return os.path.join(
-            self.catalog._table_dir(self.identifier),
-            "metadata",
-            f"v{self.version}.metadata.json",
-        )
 
     def schema(self) -> Schema:
         cur = self.metadata["current-schema-id"]
@@ -159,14 +169,38 @@ class Table:
                 for e in s.get("added-files", [])
             ]}
         if not os.path.isabs(mp):
-            mp = os.path.join(
-                self.catalog._table_dir(self.identifier), "metadata", mp
-            )
+            mp = os.path.join(os.path.dirname(self.metadata_location), mp)
         return self.catalog._read_json(mp)
 
     def _manifest_entries(self, s: dict) -> list[dict]:
         """A snapshot's added-file entries."""
         return self._manifest_doc(s)["entries"]
+
+    def _write_manifest(
+        self,
+        snapshot_id: int,
+        entries: list[dict],
+        removed: list[str] | None = None,
+        position_deletes: list[str] | None = None,
+    ) -> str:
+        """Write a per-snapshot manifest file; returns its path RELATIVE to
+        the table's metadata dir (relative so table renames keep working).
+        Uniquely suffixed: concurrent CAS losers leave harmless orphans.
+        ``removed`` lists paths this snapshot logically deletes (the
+        copy-on-write overwrite operation); ``position_deletes`` lists
+        merge-on-read delete files this snapshot adds."""
+        rel = os.path.join(
+            "manifests", f"snap-{snapshot_id}-{uuid.uuid4().hex[:8]}.json"
+        )
+        path = os.path.join(os.path.dirname(self.metadata_location), rel)
+        self.catalog.fio.mkdirs(os.path.dirname(path))
+        doc = {"entries": entries}
+        if removed:
+            doc["removed"] = sorted(removed)
+        if position_deletes:
+            doc["position-deletes"] = sorted(position_deletes)
+        self.catalog._write_json(path, doc)
+        return rel
 
     def _ancestors(self, snapshot_id: int) -> list[dict]:
         """The parent chain ending at ``snapshot_id``, oldest first. Reads
@@ -623,8 +657,8 @@ class Table:
             # metadata JSON carries only the reference + a summary count.
             # A losing CAS writer leaves an orphan manifest — harmless,
             # nothing references it (same story as its orphan data files).
-            "manifest-path": self.catalog._write_manifest(
-                self.identifier, sid, added,
+            "manifest-path": self._write_manifest(
+                sid, added,
                 removed=removed, position_deletes=list(position_deletes or ()),
             ),
             "added-files-count": len(added),
@@ -1230,7 +1264,7 @@ class Table:
                 }
             ],
         )
-        mroot = os.path.join(self.catalog._table_dir(self.identifier), "metadata")
+        mroot = os.path.dirname(self.metadata_location)
         for s in drop:  # best-effort manifest cleanup, orphans harmless
             mp = s.get("manifest-path")
             if mp and not os.path.isabs(mp):
@@ -1494,8 +1528,8 @@ class Table:
             folded, dels, removed_records = self._visible_at(sid)
             rb = {
                 "snapshot-id": sid,
-                "manifest-path": self.catalog._write_manifest(
-                    self.identifier, sid, folded, position_deletes=dels
+                "manifest-path": self._write_manifest(
+                    sid, folded, position_deletes=dels
                 ),
                 "count": len(folded),
             }
@@ -1531,7 +1565,7 @@ class Table:
             for s in snaps
             if s["snapshot-id"] in rebased_ids
         ]
-        mroot = os.path.join(self.catalog._table_dir(self.identifier), "metadata")
+        mroot = os.path.dirname(self.metadata_location)
         for mp in stale:
             if mp and not os.path.isabs(mp):
                 try:
@@ -1659,90 +1693,14 @@ class Catalog:
     def health(self) -> dict:
         return {"status": "ok"}
 
-    # -- namespace helpers --------------------------------------------------
+    # -- validation ---------------------------------------------------------
     def _ns_dir(self, ns: Ident) -> str:
         for level in ns:
-            if not level or "/" in level or level.startswith("."):
+            if (not level or "/" in level or NS_SEP in level
+                    or level.startswith(".")):
                 raise E.BadRequestException(f"bad namespace level {level!r}")
         return os.path.join(self.warehouse, *ns)
 
-    def _ns_exists(self, ns: Ident) -> bool:
-        return self.fio.isfile(os.path.join(self._ns_dir(ns), NS_MARKER))
-
-    def _require_ns(self, ns: Ident) -> str:
-        d = self._ns_dir(ns)
-        if not self._ns_exists(ns):
-            raise E.NoSuchNamespaceException(".".join(ns))
-        return d
-
-    # -- namespace CRUD (reference namespaces.go) ---------------------------
-    def create_namespace(self, ns: Ident, properties: dict | None = None) -> dict:
-        ns = tuple(ns)
-        if not ns:
-            raise E.BadRequestException("empty namespace")
-        if self._ns_exists(ns):
-            raise E.NamespaceAlreadyExistsException(".".join(ns))
-        d = self._ns_dir(ns)
-        self.fio.mkdirs(d)
-        self._write_json(os.path.join(d, NS_MARKER), dict(properties or {}))
-        return {"namespace": list(ns), "properties": dict(properties or {})}
-
-    def list_namespaces(self, parent: Ident | None = None) -> list[Ident]:
-        base = self.warehouse if parent is None else self._require_ns(tuple(parent))
-        prefix = tuple(parent) if parent else ()
-        out = []
-        if self.fio.isdir(base):
-            for name in sorted(self.fio.listdir(base)):
-                child = prefix + (name,)
-                if self.fio.isdir(os.path.join(base, name)) and self._ns_exists(child):
-                    out.append(child)
-        return out
-
-    def load_namespace(self, ns: Ident) -> dict:
-        d = self._require_ns(tuple(ns))
-        return {
-            "namespace": list(ns),
-            "properties": self._read_json(os.path.join(d, NS_MARKER)),
-        }
-
-    def namespace_exists(self, ns: Ident) -> bool:
-        return self._ns_exists(tuple(ns))
-
-    def drop_namespace(self, ns: Ident) -> None:
-        """RESTRICT drop: refuses when tables or child namespaces remain
-        (reference namespaces.go:131-136 — no cascade)."""
-        ns = tuple(ns)
-        d = self._require_ns(ns)
-        if self.list_tables(ns) or self.list_namespaces(ns):
-            raise E.NamespaceNotEmptyException(".".join(ns))
-        self.fio.rmtree(d)
-
-    def update_namespace_properties(
-        self, ns: Ident, removals: list[str] | None = None, updates: dict | None = None
-    ) -> dict:
-        """Returns the reference's 3-way summary {updated, removed, missing}
-        (namespaces.go:182-186); a key in both lists is a 422
-        (namespaces.go:159-166)."""
-        ns, removals, updates = tuple(ns), list(removals or []), dict(updates or {})
-        overlap = set(removals) & set(updates)
-        if overlap:
-            raise E.UnprocessableEntityException(", ".join(sorted(overlap)))
-        d = self._require_ns(ns)
-        marker = os.path.join(d, NS_MARKER)
-        props = self._read_json(marker)
-        removed = [k for k in removals if k in props]
-        missing = [k for k in removals if k not in props]
-        for k in removed:
-            del props[k]
-        props.update(updates)
-        self._write_json(marker, props)
-        return {
-            "updated": sorted(updates.keys()),
-            "removed": sorted(removed),
-            "missing": sorted(missing),
-        }
-
-    # -- table helpers ------------------------------------------------------
     def _table_dir(self, ident: Ident) -> str:
         ns, name = tuple(ident[:-1]), ident[-1]
         if not ns or not name:
@@ -1762,49 +1720,73 @@ class Catalog:
             raise E.BadRequestException(f"table path escapes warehouse: {name!r}")
         return d
 
-    def _write_manifest(
-        self,
-        ident: Ident,
-        snapshot_id: int,
-        entries: list[dict],
-        removed: list[str] | None = None,
-        position_deletes: list[str] | None = None,
-    ) -> str:
-        """Write a per-snapshot manifest file; returns its path RELATIVE to
-        the table's metadata dir (relative so table renames keep working).
-        Uniquely suffixed: concurrent CAS losers leave harmless orphans.
-        ``removed`` lists paths this snapshot logically deletes (the
-        copy-on-write overwrite operation); ``position_deletes`` lists
-        merge-on-read delete files this snapshot adds."""
-        rel = os.path.join(
-            "manifests", f"snap-{snapshot_id}-{uuid.uuid4().hex[:8]}.json"
-        )
-        path = os.path.join(self._table_dir(ident), "metadata", rel)
-        self.fio.mkdirs(os.path.dirname(path))
-        doc = {"entries": entries}
-        if removed:
-            doc["removed"] = sorted(removed)
-        if position_deletes:
-            doc["position-deletes"] = sorted(position_deletes)
-        self._write_json(path, doc)
-        return rel
+    def _require_ns(self, ns: Ident) -> None:
+        if not self.namespace_exists(ns):
+            raise E.NoSuchNamespaceException(".".join(ns))
 
-    def _is_table(self, ident: Ident) -> bool:
-        return self._has_hint(self._table_dir(ident))
+    # -- namespace CRUD (reference namespaces.go) ---------------------------
+    def create_namespace(self, ns: Ident, properties: dict | None = None) -> dict:
+        ns, properties = tuple(ns), dict(properties or {})
+        if not ns:
+            raise E.BadRequestException("empty namespace")
+        self._ns_dir(ns)
+        if not self._ns_create(ns, properties):
+            raise E.NamespaceAlreadyExistsException(".".join(ns))
+        return {"namespace": list(ns), "properties": properties}
 
-    def _has_hint(self, tdir: str) -> bool:
-        return self.fio.isfile(os.path.join(tdir, "metadata", "version-hint.text"))
+    def list_namespaces(self, parent: Ident | None = None) -> list[Ident]:
+        if parent is not None:
+            self._require_ns(tuple(parent))
+        return self._ns_list(tuple(parent or ()))
+
+    def load_namespace(self, ns: Ident) -> dict:
+        ns = tuple(ns)
+        self._require_ns(ns)
+        return {"namespace": list(ns), "properties": self._ns_read(ns)}
+
+    def namespace_exists(self, ns: Ident) -> bool:
+        ns = tuple(ns)
+        self._ns_dir(ns)
+        return self._ns_exists(ns)
+
+    def drop_namespace(self, ns: Ident) -> None:
+        """RESTRICT drop: refuses when tables or child namespaces remain
+        (reference namespaces.go:131-136 — no cascade)."""
+        ns = tuple(ns)
+        self._require_ns(ns)
+        if self.list_tables(ns) or self.list_namespaces(ns):
+            raise E.NamespaceNotEmptyException(".".join(ns))
+        self._ns_remove(ns)
+
+    def update_namespace_properties(
+        self, ns: Ident, removals: list[str] | None = None, updates: dict | None = None
+    ) -> dict:
+        """Returns the reference's 3-way summary {updated, removed, missing}
+        (namespaces.go:182-186); a key in both lists is a 422
+        (namespaces.go:159-166)."""
+        ns, removals, updates = tuple(ns), list(removals or []), dict(updates or {})
+        overlap = set(removals) & set(updates)
+        if overlap:
+            raise E.UnprocessableEntityException(", ".join(sorted(overlap)))
+        self._require_ns(ns)
+        props = self._ns_read(ns)
+        removed = [k for k in removals if k in props]
+        missing = [k for k in removals if k not in props]
+        for k in removed:
+            del props[k]
+        props.update(updates)
+        self._ns_update(ns, props)
+        return {
+            "updated": sorted(updates.keys()),
+            "removed": sorted(removed),
+            "missing": sorted(missing),
+        }
 
     # -- table CRUD (reference tables.go) -----------------------------------
     def list_tables(self, ns: Ident) -> list[Ident]:
         ns = tuple(ns)
-        d = self._require_ns(ns)
-        out = []
-        for name in sorted(self.fio.listdir(d)):
-            ident = ns + (name,)
-            if not name.startswith(".") and self._is_table(ident):
-                out.append(ident)
-        return out
+        self._require_ns(ns)
+        return self._ptr_list(ns)
 
     def create_table(
         self,
@@ -1820,16 +1802,11 @@ class Catalog:
         if stage_create:  # reference tables.go:91-96
             raise E.NotImplementedException("stage-create")
         self._require_ns(ident[:-1])
-        if self._is_table(ident):
-            raise E.TableAlreadyExistsException(".".join(ident))
         tdir = self._table_dir(ident)
-        # Metadata (and the version hint) ALWAYS live under the
-        # catalog-managed table dir so the table stays discoverable by
-        # load_table/list_tables/table_exists; a custom ``location`` only
-        # redirects where DATA files are written (metadata["location"]),
-        # mirroring how an object-store warehouse separates the two.
-        mdir = os.path.join(tdir, "metadata")
-        self.fio.mkdirs(mdir)
+        # Metadata ALWAYS lives under the catalog-managed table dir so the
+        # table stays discoverable; a custom ``location`` only redirects
+        # where DATA files are written (metadata["location"]), mirroring how
+        # an object-store warehouse separates the two.
         metadata = {
             "format-version": 2,
             "table-uuid": str(uuid.uuid4()),
@@ -1855,23 +1832,123 @@ class Catalog:
             "snapshots": [],
             "current-snapshot-id": None,
         }
-        # v1 is claimed EXCLUSIVELY (O_EXCL / S3 conditional put) like every
-        # later version: two clients racing create_table must not both
-        # report success with one schema silently clobbered — the loser
-        # gets the same AlreadyExists the _is_table precheck gives.
-        mloc = os.path.join(mdir, "v1.metadata.json")
-        if not self.fio.create_exclusive(
-            mloc, json.dumps(metadata, indent=1, sort_keys=True)
-        ):
+        mloc = self._ptr_claim(ident, tdir, metadata)
+        if mloc is None:
             raise E.TableAlreadyExistsException(".".join(ident))
-        self.fio.write_text_atomic(os.path.join(mdir, "version-hint.text"), "1")
         return Table(self, ident, 1, metadata, mloc)
 
     def load_table(self, ident: Ident) -> Table:
-        """Load current metadata. The version hint is ADVISORY: a stalled
-        writer can swap it after a later commit (regression). The true
-        current version is the newest COMPLETE metadata file at or above the
-        hint; a partially-written claim file falls back one version.
+        ident = tuple(ident)
+        self._require_ns(ident[:-1])
+        return self._ptr_read(ident, self._table_dir(ident))
+
+    def table_exists(self, ident: Ident) -> bool:
+        ident = tuple(ident)
+        return self.namespace_exists(ident[:-1]) and self._ptr_exists(
+            ident, self._table_dir(ident)
+        )
+
+    def drop_table(self, ident: Ident, purge: bool = False) -> None:
+        """Metadata-only drop; data files are orphaned, not deleted.
+        purge=True is rejected with the reference's NotImplemented error
+        body (tables.go:288-295 serves ErrNotImplemented; the facade
+        mirrors its HTTP-400-status quirk)."""
+        ident = tuple(ident)
+        if purge:
+            raise E.NotImplementedException("purgeRequested")
+        self._require_ns(ident[:-1])
+        if not self._ptr_unregister(ident, self._table_dir(ident)):
+            raise E.NoSuchTableException(".".join(ident))
+
+    def rename_table(self, src: Ident, dst: Ident) -> Table:
+        """Metadata pointer move (ALTER TABLE RENAME); cross-namespace
+        allowed (reference tables.go:365-402). The table dir moves with it;
+        a data location that was that dir follows it."""
+        src, dst = tuple(src), tuple(dst)
+        self._require_ns(src[:-1])
+        self._require_ns(dst[:-1])
+        src_dir = self._table_dir(src)
+        if not self._ptr_exists(src, src_dir):
+            raise E.NoSuchTableException(".".join(src))
+        dst_dir = self._table_dir(dst)
+        if self._ptr_exists(dst, dst_dir):
+            raise E.TableAlreadyExistsException(".".join(dst))
+        t = self._ptr_move(src, src_dir, dst, dst_dir)
+        if t.metadata["location"] == src_dir:
+            t.metadata["location"] = dst_dir
+            self._write_json(t.metadata_location, t.metadata)
+        return t
+
+    # -- optimistic commit (reference tables.go:150-227) --------------------
+    def update_table(
+        self, ident: Ident, requirements: list[dict], updates: list[dict]
+    ) -> Table:
+        """CommitTable: validate requirements against CURRENT metadata, apply
+        updates, write the next metadata file and swap the pointer to it
+        (the check-and-swap: it fails if another writer swapped first)."""
+        ident = tuple(ident)
+        current = self.load_table(ident)
+        self._check_requirements(current, requirements)
+        new_meta = self._apply_updates(current, updates)
+        new_meta["last-updated-ms"] = int(time.time() * 1000)
+        new_loc = self._ptr_swap(current, new_meta)
+        if new_loc is None:
+            raise E.CommitFailedException(
+                f"concurrent writer committed {'.'.join(ident)} "
+                f"v{current.version + 1} first"
+            )
+        return Table(self, ident, current.version + 1, new_meta, new_loc)
+
+    # -- fs storage: namespace markers --------------------------------------
+    # Where namespace properties and the current-metadata pointer live: the
+    # public methods above touch storage only through these primitives,
+    # after validating the namespace (and resolving ``tdir`` with
+    # :meth:`_table_dir`). ``_ptr_read`` raises NoSuchTable; ``_ns_create``
+    # and ``_ptr_claim`` (entry already there), ``_ptr_swap`` (lost the CAS)
+    # and ``_ptr_unregister`` (no entry) return False/None and the caller
+    # raises the typed error.
+    def _ns_marker(self, ns: Ident) -> str:
+        return os.path.join(self._ns_dir(ns), NS_MARKER)
+
+    def _ns_exists(self, ns: Ident) -> bool:
+        return self.fio.isfile(self._ns_marker(ns))
+
+    def _ns_read(self, ns: Ident) -> dict:
+        return self._read_json(self._ns_marker(ns))
+
+    def _ns_create(self, ns: Ident, properties: dict) -> bool:
+        """False if ``ns`` already exists."""
+        if self._ns_exists(ns):
+            return False
+        self.fio.mkdirs(self._ns_dir(ns))
+        self._ns_update(ns, properties)
+        return True
+
+    def _ns_update(self, ns: Ident, properties: dict) -> None:
+        self._write_json(self._ns_marker(ns), properties)
+
+    def _ns_list(self, parent: Ident) -> list[Ident]:
+        base, out = self._ns_dir(parent), []
+        if self.fio.isdir(base):
+            for name in sorted(self.fio.listdir(base)):
+                child = parent + (name,)
+                if self.fio.isdir(os.path.join(base, name)) and self._ns_exists(child):
+                    out.append(child)
+        return out
+
+    def _ns_remove(self, ns: Ident) -> None:
+        self.fio.rmtree(self._ns_dir(ns))
+
+    # -- fs storage: v{N} files + version-hint pointer ----------------------
+    def _ptr_exists(self, ident: Ident, tdir: str) -> bool:
+        return self.fio.isfile(os.path.join(tdir, "metadata", "version-hint.text"))
+
+    def _ptr_read(self, ident: Ident, tdir: str) -> Table:
+        """The current version (NoSuchTable if there is none). The version
+        hint is ADVISORY: a stalled writer can swap it after a later commit
+        (regression). The true current version is the newest COMPLETE
+        metadata file at or above the hint; a partially-written claim file
+        falls back one version.
 
         Versions are contiguous, so probing upward from the hint until a
         version is missing finds every candidate without listing the
@@ -1879,13 +1956,6 @@ class Catalog:
         v{N}, the claim is exclusive (O_EXCL / conditional put), and
         :meth:`_gc_stale_claim` removes only an unparseable top claim.
         """
-        ident = tuple(ident)
-        self._require_ns(ident[:-1])
-        return self._load_from(ident, self._table_dir(ident))
-
-    def _load_from(self, ident: Ident, tdir: str) -> Table:
-        """:meth:`load_table` for a table dir already resolved and checked
-        by :meth:`_table_dir`."""
         mdir = os.path.join(tdir, "metadata")
         try:
             hint = int(self.fio.read_text(os.path.join(mdir, "version-hint.text")))
@@ -1902,68 +1972,58 @@ class Catalog:
                 continue  # claimed-but-unflushed writer; try the next older
         raise E.InternalServerError(f"no readable metadata for {'.'.join(ident)}")
 
-    def table_exists(self, ident: Ident) -> bool:
-        ident = tuple(ident)
-        return self._ns_exists(ident[:-1]) and self._is_table(ident)
-
-    def drop_table(self, ident: Ident, purge: bool = False) -> None:
-        """Metadata-only drop; data files are orphaned, not deleted.
-        purge=True is rejected with the reference's NotImplemented error
-        body (tables.go:288-295 serves ErrNotImplemented; the facade
-        mirrors its HTTP-400-status quirk)."""
-        ident = tuple(ident)
-        if purge:
-            raise E.NotImplementedException("purgeRequested")
-        self._require_ns(ident[:-1])
-        if not self._is_table(ident):
-            raise E.NoSuchTableException(".".join(ident))
-        self.fio.rmtree(os.path.join(self._table_dir(ident), "metadata"))
-
-    def rename_table(self, src: Ident, dst: Ident) -> Table:
-        """Metadata pointer move (ALTER TABLE RENAME); cross-namespace
-        allowed (reference tables.go:365-402)."""
-        src, dst = tuple(src), tuple(dst)
-        self._require_ns(src[:-1])
-        self._require_ns(dst[:-1])
-        src_dir = self._table_dir(src)
-        if not self._has_hint(src_dir):
-            raise E.NoSuchTableException(".".join(src))
-        dst_dir = self._table_dir(dst)
-        if self._has_hint(dst_dir):
-            raise E.TableAlreadyExistsException(".".join(dst))
-        self.fio.rename(src_dir, dst_dir)
-        t = self._load_from(dst, dst_dir)
-        if t.metadata["location"] == src_dir:  # data moved with the dir
-            t.metadata["location"] = dst_dir
-            self._write_json(t.metadata_location, t.metadata)
-        return t
-
-    # -- optimistic commit (reference tables.go:150-227) --------------------
-    def update_table(
-        self, ident: Ident, requirements: list[dict], updates: list[dict]
-    ) -> Table:
-        """CommitTable: validate requirements against CURRENT metadata, apply
-        updates, claim v{N+1} with O_CREAT|O_EXCL (CAS), swap the hint."""
-        ident = tuple(ident)
-        current = self.load_table(ident)
-        mdir = os.path.dirname(current.metadata_location)  # resolved by the load
-        self._check_requirements(current, requirements)
-        new_meta = self._apply_updates(current, updates)
-        new_meta["last-updated-ms"] = int(time.time() * 1000)
-
-        new_v = current.version + 1
-        new_path = os.path.join(mdir, f"v{new_v}.metadata.json")
-        self._gc_stale_claim(new_path)
+    def _ptr_claim(self, ident: Ident, tdir: str, metadata: dict) -> str | None:
+        """Write v1 and point at it; None if the table exists. v1 is claimed
+        EXCLUSIVELY (O_EXCL / S3 conditional put) like every later version:
+        two clients racing create_table must not both report success with
+        one schema silently clobbered."""
+        if self._ptr_exists(ident, tdir):
+            return None
+        mdir = os.path.join(tdir, "metadata")
+        self.fio.mkdirs(mdir)
+        mloc = os.path.join(mdir, "v1.metadata.json")
         if not self.fio.create_exclusive(
-            new_path, json.dumps(new_meta, indent=1, sort_keys=True)
+            mloc, json.dumps(metadata, indent=1, sort_keys=True)
         ):
-            raise E.CommitFailedException(
-                f"version {new_v} already committed by a concurrent writer"
-            )
-        self.fio.write_text_atomic(
-            os.path.join(mdir, "version-hint.text"), str(new_v)
-        )
-        return Table(self, ident, new_v, new_meta, new_path)
+            return None
+        self.fio.write_text_atomic(os.path.join(mdir, "version-hint.text"), "1")
+        return mloc
+
+    def _ptr_swap(self, current: Table, metadata: dict) -> str | None:
+        """Claim v{N+1} with O_CREAT|O_EXCL (the CAS), then swap the hint;
+        None if another writer claimed it first."""
+        mdir = os.path.dirname(current.metadata_location)
+        new_v = current.version + 1
+        path = os.path.join(mdir, f"v{new_v}.metadata.json")
+        self._gc_stale_claim(path)
+        if not self.fio.create_exclusive(
+            path, json.dumps(metadata, indent=1, sort_keys=True)
+        ):
+            return None
+        self.fio.write_text_atomic(os.path.join(mdir, "version-hint.text"), str(new_v))
+        return path
+
+    def _ptr_move(self, src: Ident, src_dir: str, dst: Ident, dst_dir: str) -> Table:
+        """Move the table dir (its pointer moves with it); the moved table."""
+        self.fio.rename(src_dir, dst_dir)
+        return self._ptr_read(dst, dst_dir)
+
+    def _ptr_unregister(self, ident: Ident, tdir: str) -> bool:
+        """Remove the table's metadata dir; False if ``ident`` is no table."""
+        if not self._ptr_exists(ident, tdir):
+            return False
+        self.fio.rmtree(os.path.join(tdir, "metadata"))
+        return True
+
+    def _ptr_list(self, ns: Ident) -> list[Ident]:
+        out = []
+        for name in sorted(self.fio.listdir(self._ns_dir(ns))):
+            ident = ns + (name,)
+            if not name.startswith(".") and self._ptr_exists(
+                ident, self._table_dir(ident)
+            ):
+                out.append(ident)
+        return out
 
     def _gc_stale_claim(self, path: str) -> None:
         """Commit liveness after a writer crash.

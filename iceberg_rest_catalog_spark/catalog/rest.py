@@ -34,10 +34,8 @@ from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 from urllib.parse import parse_qs, unquote, urlsplit
 
 from . import errors as E
-from .catalog import Catalog
+from .catalog import NS_SEP, Catalog
 from .schema import Schema
-
-SEP = "\x1f"  # namespace level separator in URLs (reference models.go:10)
 
 #: Request logger — the reference's logging middleware
 #: (api/middleware/middleware.go:12-35) attaches a per-request UUID and
@@ -47,7 +45,7 @@ LOG = logging.getLogger("iceberg_rest_catalog_spark.rest")
 
 
 def _split_ns(raw: str) -> tuple[str, ...]:
-    return tuple(unquote(raw).split(SEP))
+    return tuple(unquote(raw).split(NS_SEP))
 
 
 class _Handler(BaseHTTPRequestHandler):
@@ -227,7 +225,7 @@ class _Handler(BaseHTTPRequestHandler):
         # the catalog if the parent namespace is missing.
         q = parse_qs(urlsplit(self.path).query)
         raw = q.get("parent", [None])[-1]
-        parent = tuple(unquote(raw).split(SEP)) if raw else None
+        parent = tuple(unquote(raw).split(NS_SEP)) if raw else None
         out = self.catalog.list_namespaces(parent)
         self._send(200, {"namespaces": [list(n) for n in out]})
 

@@ -37,17 +37,13 @@ from __future__ import annotations
 
 import http.client
 import json
-import os
-import re
 import select
 import threading
 import urllib.parse
 
 from . import errors as E
-from .catalog import Catalog, Ident, Table
+from .catalog import NS_SEP, Catalog, Ident, Table, _version_of
 from .schema import Schema
-
-SEP = "\x1f"  # namespace level separator in URLs (reference models.go:10)
 
 #: canonical (type, message) -> exception class, built from the error module
 #: so the mapping can never drift from the wire format.
@@ -145,14 +141,11 @@ class RestCatalog(Catalog):
 
     @staticmethod
     def _ns_path(ns: Ident) -> str:
-        return urllib.parse.quote(SEP.join(ns), safe="")
+        return urllib.parse.quote(NS_SEP.join(ns), safe="")
 
     def _table_from_response(self, ident: Ident, doc: dict) -> Table:
         mloc = doc["metadata-location"]
-        m = re.match(r"^v(\d+)", os.path.basename(mloc))
-        if not m:
-            raise E.InternalServerError(f"unparseable metadata-location {mloc!r}")
-        return Table(self, tuple(ident), int(m.group(1)), doc["metadata"], mloc)
+        return Table(self, tuple(ident), _version_of(mloc), doc["metadata"], mloc)
 
     # -- config / health (reference tables.go:38-46, router.go:54) ----------
     def config(self) -> dict:
@@ -170,7 +163,7 @@ class RestCatalog(Catalog):
         )[1]
 
     def list_namespaces(self, parent: Ident | None = None) -> list[Ident]:
-        query = {"parent": SEP.join(parent)} if parent else None
+        query = {"parent": NS_SEP.join(parent)} if parent else None
         _, doc = self._request("GET", "/v1/namespaces", query=query)
         return [tuple(n) for n in doc.get("namespaces", [])]
 

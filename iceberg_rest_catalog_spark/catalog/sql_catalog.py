@@ -23,8 +23,9 @@ that crashes between file write and pointer swap leaves only an orphan
 file nothing points to — there is no claim to brick the table, unlike the
 fs backend's O_EXCL protocol (which needs stale-claim GC).
 
-Data-plane behavior (append/scan/time-travel via :class:`~.catalog.Table`)
-is identical: Table only talks to its catalog through ``update_table``.
+Every public method — validation, metadata documents, requirement checks,
+rename and the data plane — is :class:`~.catalog.Catalog`'s; this class
+only supplies its private namespace and pointer storage primitives.
 """
 
 from __future__ import annotations
@@ -32,29 +33,19 @@ from __future__ import annotations
 import json
 import os
 import sqlite3
-import time
 import uuid
 from contextlib import contextmanager
 
 from . import errors as E
-from .catalog import Catalog, Ident, Table
-from .schema import Schema
-
-SEP = "\x1f"  # namespace joiner in DB keys (same separator as the REST URLs)
+from .catalog import NS_SEP, Catalog, Ident, Table, _version_of
 
 
 def _key(ns: Ident) -> str:
-    return SEP.join(ns)
+    return NS_SEP.join(ns)
 
 
 class SqlCatalog(Catalog):
-    """Catalog whose namespace/table registry lives in a SQLite database.
-
-    Inherits the path validation (`_ns_dir`/`_table_dir`), requirement and
-    update semantics (`_check_requirements`/`_apply_updates`), and the whole
-    data plane from :class:`Catalog`; overrides every method that touched
-    namespace markers or the version-hint pointer.
-    """
+    """Catalog whose namespace/table registry lives in a SQLite database."""
 
     backend = "sql"
 
@@ -89,113 +80,66 @@ class SqlCatalog(Catalog):
         finally:
             con.close()
 
-    # -- namespace CRUD ------------------------------------------------------
-    def _ns_exists(self, ns: Ident) -> bool:
-        self._ns_dir(ns)  # validation only
+    def _one(self, sql: str, *args):
         with self._db() as con:
-            row = con.execute(
-                "SELECT 1 FROM iceberg_namespaces WHERE namespace = ?", (_key(ns),)
-            ).fetchone()
-        return row is not None
+            return con.execute(sql, args).fetchone()
 
-    def create_namespace(self, ns: Ident, properties: dict | None = None) -> dict:
-        ns = tuple(ns)
-        if not ns:
-            raise E.BadRequestException("empty namespace")
-        self._ns_dir(ns)  # level validation
+    # -- namespace rows -------------------------------------------------------
+    def _ns_exists(self, ns: Ident) -> bool:
+        return self._one(
+            "SELECT 1 FROM iceberg_namespaces WHERE namespace = ?", _key(ns)
+        ) is not None
+
+    def _ns_read(self, ns: Ident) -> dict:
+        return json.loads(self._one(
+            "SELECT properties FROM iceberg_namespaces WHERE namespace = ?", _key(ns)
+        )[0])
+
+    def _ns_create(self, ns: Ident, properties: dict) -> bool:
         try:
             with self._db() as con:
                 con.execute(
                     "INSERT INTO iceberg_namespaces VALUES (?, ?)",
-                    (_key(ns), json.dumps(dict(properties or {}))),
+                    (_key(ns), json.dumps(properties)),
                 )
-        except sqlite3.IntegrityError as exc:
-            raise E.NamespaceAlreadyExistsException(".".join(ns)) from exc
-        return {"namespace": list(ns), "properties": dict(properties or {})}
+        except sqlite3.IntegrityError:
+            return False
+        return True
 
-    def list_namespaces(self, parent: Ident | None = None) -> list[Ident]:
-        parent = tuple(parent) if parent else ()
-        if parent and not self._ns_exists(parent):
-            raise E.NoSuchNamespaceException(".".join(parent))
+    def _ns_update(self, ns: Ident, properties: dict) -> None:
+        with self._db() as con:
+            con.execute(
+                "UPDATE iceberg_namespaces SET properties = ? WHERE namespace = ?",
+                (json.dumps(properties), _key(ns)),
+            )
+
+    def _ns_list(self, parent: Ident) -> list[Ident]:
         with self._db() as con:
             rows = con.execute(
                 "SELECT namespace FROM iceberg_namespaces ORDER BY namespace"
             ).fetchall()
         out = []
         for (raw,) in rows:
-            levels = tuple(raw.split(SEP))
+            levels = tuple(raw.split(NS_SEP))
             if len(levels) == len(parent) + 1 and levels[: len(parent)] == parent:
                 out.append(levels)
         return out
 
-    def load_namespace(self, ns: Ident) -> dict:
-        ns = tuple(ns)
-        self._ns_dir(ns)
-        with self._db() as con:
-            row = con.execute(
-                "SELECT properties FROM iceberg_namespaces WHERE namespace = ?",
-                (_key(ns),),
-            ).fetchone()
-        if row is None:
-            raise E.NoSuchNamespaceException(".".join(ns))
-        return {"namespace": list(ns), "properties": json.loads(row[0])}
-
-    def drop_namespace(self, ns: Ident) -> None:
-        ns = tuple(ns)
-        if not self._ns_exists(ns):
-            raise E.NoSuchNamespaceException(".".join(ns))
-        if self.list_tables(ns) or self.list_namespaces(ns):
-            raise E.NamespaceNotEmptyException(".".join(ns))
+    def _ns_remove(self, ns: Ident) -> None:
         with self._db() as con:
             con.execute(
                 "DELETE FROM iceberg_namespaces WHERE namespace = ?", (_key(ns),)
             )
 
-    def update_namespace_properties(
-        self, ns: Ident, removals: list[str] | None = None, updates: dict | None = None
-    ) -> dict:
-        ns, removals, updates = tuple(ns), list(removals or []), dict(updates or {})
-        overlap = set(removals) & set(updates)
-        if overlap:
-            raise E.UnprocessableEntityException(", ".join(sorted(overlap)))
-        props = self.load_namespace(ns)["properties"]
-        removed = [k for k in removals if k in props]
-        missing = [k for k in removals if k not in props]
-        for k in removed:
-            del props[k]
-        props.update(updates)
-        with self._db() as con:
-            con.execute(
-                "UPDATE iceberg_namespaces SET properties = ? WHERE namespace = ?",
-                (json.dumps(props), _key(ns)),
-            )
-        return {
-            "updated": sorted(updates.keys()),
-            "removed": sorted(removed),
-            "missing": sorted(missing),
-        }
-
-    # -- table helpers -------------------------------------------------------
-    def _pointer(self, ident: Ident) -> tuple[str, str] | None:
-        """(namespace_key, name) row's metadata_location, or None."""
-        ns, name = tuple(ident[:-1]), ident[-1]
-        with self._db() as con:
-            row = con.execute(
-                "SELECT metadata_location FROM iceberg_tables"
-                " WHERE namespace = ? AND name = ?",
-                (_key(ns), name),
-            ).fetchone()
+    # -- table pointer rows ---------------------------------------------------
+    def _pointer(self, ident: Ident) -> str | None:
+        """The table row's metadata_location, or None."""
+        row = self._one(
+            "SELECT metadata_location FROM iceberg_tables"
+            " WHERE namespace = ? AND name = ?",
+            _key(ident[:-1]), ident[-1],
+        )
         return row if row is None else row[0]
-
-    def _is_table(self, ident: Ident) -> bool:
-        self._table_dir(ident)  # name validation
-        return self._pointer(ident) is not None
-
-    @staticmethod
-    def _version_of(metadata_location: str) -> int:
-        # v{N}-{uuid8}.metadata.json
-        base = os.path.basename(metadata_location)
-        return int(base.split("-", 1)[0][1:])
 
     def _new_metadata_file(self, tdir: str, version: int, metadata: dict) -> str:
         """Write ``metadata`` as a new uniquely-named file under the table
@@ -206,163 +150,44 @@ class SqlCatalog(Catalog):
         self._write_json(path, metadata)
         return path
 
-    # -- table CRUD ----------------------------------------------------------
-    def list_tables(self, ns: Ident) -> list[Ident]:
-        ns = tuple(ns)
-        if not self._ns_exists(ns):
-            raise E.NoSuchNamespaceException(".".join(ns))
-        with self._db() as con:
-            rows = con.execute(
-                "SELECT name FROM iceberg_tables WHERE namespace = ? ORDER BY name",
-                (_key(ns),),
-            ).fetchall()
-        return [ns + (name,) for (name,) in rows]
-
-    def create_table(
-        self,
-        ident: Ident,
-        schema: Schema,
-        partition_spec: list[dict] | None = None,
-        write_order: list[dict] | None = None,
-        properties: dict | None = None,
-        location: str | None = None,
-        stage_create: bool = False,
-    ) -> Table:
-        ident = tuple(ident)
-        if stage_create:
-            raise E.NotImplementedException("stage-create")
-        ns = ident[:-1]
-        if not self._ns_exists(ns):
-            raise E.NoSuchNamespaceException(".".join(ns))
-        tdir = self._table_dir(ident)
-        metadata = {
-            "format-version": 2,
-            "table-uuid": str(uuid.uuid4()),
-            # URI locations pass through verbatim (same rule as the fs
-            # backend): abspath would mangle s3:// into a local path
-            "location": (
-                location
-                if location and "://" in location
-                else os.path.abspath(location)
-                if location
-                else tdir
-            ),
-            "last-updated-ms": int(time.time() * 1000),
-            "schemas": [schema.to_json()],
-            "current-schema-id": schema.schema_id,
-            "last-column-id": schema.highest_field_id(),
-            "partition-specs": partition_spec or [],
-            "default-spec-id": 0,
-            "sort-orders": write_order or [],
-            "default-sort-order-id": 0,
-            "properties": dict(properties or {}),
-            "snapshots": [],
-            "current-snapshot-id": None,
-        }
-        mloc = self._new_metadata_file(tdir, 1, metadata)
-        try:
-            with self._db() as con:
-                con.execute(
-                    "INSERT INTO iceberg_tables VALUES (?, ?, ?, NULL)",
-                    (_key(ns), ident[-1], mloc),
-                )
-        except sqlite3.IntegrityError as exc:
-            self.fio.remove(mloc)  # lost the create race; drop the orphan file
-            raise E.TableAlreadyExistsException(".".join(ident)) from exc
-        return Table(self, ident, 1, metadata, metadata_location=mloc)
-
-    def load_table(self, ident: Ident) -> Table:
-        ident = tuple(ident)
-        if not self._ns_exists(ident[:-1]):
-            raise E.NoSuchNamespaceException(".".join(ident[:-1]))
-        mloc = self._pointer(ident)
-        if mloc is None:
-            self._table_dir(ident)  # name validation for a clean 400 vs 404
-            raise E.NoSuchTableException(".".join(ident))
-        return self._load_from(ident, mloc)
-
-    def _load_from(self, ident: Ident, mloc: str) -> Table:
-        """:meth:`load_table` for a pointer already read."""
+    def _table_at(self, ident: Ident, mloc: str) -> Table:
         try:
             metadata = self._read_json(mloc)
         except (OSError, json.JSONDecodeError) as exc:
             raise E.InternalServerError(
                 f"pointer {mloc} unreadable for {'.'.join(ident)}"
             ) from exc
-        return Table(
-            self, ident, self._version_of(mloc), metadata, metadata_location=mloc
-        )
+        return Table(self, ident, _version_of(mloc), metadata, mloc)
 
-    def table_exists(self, ident: Ident) -> bool:
-        ident = tuple(ident)
-        return self._ns_exists(ident[:-1]) and self._is_table(ident)
+    def _ptr_exists(self, ident: Ident, tdir: str) -> bool:
+        return self._pointer(ident) is not None
 
-    def drop_table(self, ident: Ident, purge: bool = False) -> None:
-        ident = tuple(ident)
-        if purge:
-            raise E.NotImplementedException("purgeRequested")
-        tdir = self._table_dir(ident)  # validates the name BEFORE any delete
-        if not self._ns_exists(ident[:-1]):
-            raise E.NoSuchNamespaceException(".".join(ident[:-1]))
-        with self._db() as con:
-            cur = con.execute(
-                "DELETE FROM iceberg_tables WHERE namespace = ? AND name = ?",
-                (_key(ident[:-1]), ident[-1]),
-            )
-        if cur.rowcount == 0:
+    def _ptr_read(self, ident: Ident, tdir: str) -> Table:
+        mloc = self._pointer(ident)
+        if mloc is None:
             raise E.NoSuchTableException(".".join(ident))
-        # metadata-only drop, like the fs backend: data files are orphaned
-        mdir = os.path.join(tdir, "metadata")
-        if self.fio.isdir(mdir):
-            self.fio.rmtree(mdir)
+        return self._table_at(ident, mloc)
 
-    def rename_table(self, src: Ident, dst: Ident) -> Table:
-        src, dst = tuple(src), tuple(dst)
-        for ns in (src[:-1], dst[:-1]):
-            if not self._ns_exists(ns):
-                raise E.NoSuchNamespaceException(".".join(ns))
-        src_dir = self._table_dir(src)
-        src_loc = self._pointer(src)
-        if src_loc is None:
-            raise E.NoSuchTableException(".".join(src))
-        dst_dir = self._table_dir(dst)
-        if self._pointer(dst) is not None:
-            raise E.TableAlreadyExistsException(".".join(dst))
-        t = self._load_from(src, src_loc)
-        new_meta = dict(t.metadata)
-        if new_meta["location"] == src_dir:  # data moves with the dir
-            new_meta["location"] = dst_dir
-        # Unlike the fs backend, namespaces have no on-disk presence here —
-        # materialize the destination's parent dirs before moving.
-        self.fio.mkdirs(os.path.dirname(dst_dir))
-        self.fio.rename(src_dir, dst_dir)
-        mloc = self._new_metadata_file(dst_dir, t.version, new_meta)
-        with self._db() as con:
-            con.execute(
-                "UPDATE iceberg_tables SET namespace = ?, name = ?,"
-                " metadata_location = ?, previous_metadata_location = ?"
-                " WHERE namespace = ? AND name = ?",
-                (_key(dst[:-1]), dst[-1], mloc, src_loc,
-                 _key(src[:-1]), src[-1]),
-            )
-        return Table(self, dst, t.version, new_meta, metadata_location=mloc)
+    def _ptr_claim(self, ident: Ident, tdir: str, metadata: dict) -> str | None:
+        mloc = self._new_metadata_file(tdir, 1, metadata)
+        try:
+            with self._db() as con:
+                con.execute(
+                    "INSERT INTO iceberg_tables VALUES (?, ?, ?, NULL)",
+                    (_key(ident[:-1]), ident[-1], mloc),
+                )
+        except sqlite3.IntegrityError:
+            self.fio.remove(mloc)  # lost the create race; drop the orphan file
+            return None
+        return mloc
 
-    # -- optimistic commit ----------------------------------------------------
-    def update_table(
-        self, ident: Ident, requirements: list[dict], updates: list[dict]
-    ) -> Table:
-        """CommitTable: the pointer-row UPDATE is the check-and-swap — it
-        succeeds only if metadata_location still equals the version this
-        writer validated against."""
-        ident = tuple(ident)
-        current = self.load_table(ident)
-        self._check_requirements(current, requirements)
-        new_meta = self._apply_updates(current, updates)
-        new_meta["last-updated-ms"] = int(time.time() * 1000)
-
-        new_loc = self._new_metadata_file(
-            self._table_dir(ident), current.version + 1, new_meta
-        )
+    def _ptr_swap(self, current: Table, metadata: dict) -> str | None:
+        """The pointer-row UPDATE is the check-and-swap: it succeeds only if
+        metadata_location still equals the version this writer validated
+        against."""
+        tdir = os.path.dirname(os.path.dirname(current.metadata_location))
+        new_loc = self._new_metadata_file(tdir, current.version + 1, metadata)
+        ident = current.identifier
         with self._db() as con:
             cur = con.execute(
                 "UPDATE iceberg_tables SET metadata_location = ?,"
@@ -373,13 +198,47 @@ class SqlCatalog(Catalog):
             )
         if cur.rowcount == 0:
             self.fio.remove(new_loc)  # lost the swap; remove the orphan
-            raise E.CommitFailedException(
-                f"concurrent writer moved {'.'.join(ident)} past "
-                f"v{current.version}"
+            return None
+        return new_loc
+
+    def _ptr_move(self, src: Ident, src_dir: str, dst: Ident, dst_dir: str) -> Table:
+        """Move the table dir and re-point the row at the moved current
+        file (rename then rewrites that file in place if the data location
+        follows the dir, as on fs)."""
+        src_loc = self._pointer(src)
+        mloc = os.path.join(dst_dir, "metadata", os.path.basename(src_loc))
+        # Namespaces have no directories here: make the destination's parent.
+        self.fio.mkdirs(os.path.dirname(dst_dir))
+        self.fio.rename(src_dir, dst_dir)
+        with self._db() as con:
+            con.execute(
+                "UPDATE iceberg_tables SET namespace = ?, name = ?,"
+                " metadata_location = ?, previous_metadata_location = ?"
+                " WHERE namespace = ? AND name = ?",
+                (_key(dst[:-1]), dst[-1], mloc, src_loc, _key(src[:-1]), src[-1]),
             )
-        return Table(
-            self, ident, current.version + 1, new_meta, metadata_location=new_loc
-        )
+        return self._table_at(dst, mloc)
+
+    def _ptr_unregister(self, ident: Ident, tdir: str) -> bool:
+        with self._db() as con:
+            cur = con.execute(
+                "DELETE FROM iceberg_tables WHERE namespace = ? AND name = ?",
+                (_key(ident[:-1]), ident[-1]),
+            )
+        if cur.rowcount == 0:
+            return False
+        mdir = os.path.join(tdir, "metadata")
+        if self.fio.isdir(mdir):
+            self.fio.rmtree(mdir)
+        return True
+
+    def _ptr_list(self, ns: Ident) -> list[Ident]:
+        with self._db() as con:
+            rows = con.execute(
+                "SELECT name FROM iceberg_tables WHERE namespace = ? ORDER BY name",
+                (_key(ns),),
+            ).fetchall()
+        return [ns + (name,) for (name,) in rows]
 
 
 def open_catalog(props: dict) -> Catalog:

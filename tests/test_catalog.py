@@ -226,6 +226,49 @@ class TestErrorHandling:
             }
         }
 
+    def test_namespace_level_with_separator_rejected(self, catalog: Catalog):
+        # "\x1f" joins levels in REST URLs and sql keys: ("a\x1fb",) would
+        # alias ("a", "b") there
+        for ns in (("a\x1fb",), ("a", "b\x1f")):
+            with pytest.raises(E.BadRequestException):
+                catalog.create_namespace(ns)
+        assert not catalog.namespace_exists(("a", "b"))
+        assert catalog.list_namespaces() == []
+
+
+#: One invalid input per case and the exception every backend raises for it
+#: (the fs order wins where backends could disagree: it is what REST serves).
+PARITY_CASES = {
+    "load_bad_name_missing_ns": (
+        lambda c: c.load_table(("nope", "..x")), E.NoSuchNamespaceException),
+    "drop_bad_name_missing_ns": (
+        lambda c: c.drop_table(("nope", "..x")), E.NoSuchNamespaceException),
+    "create_bad_name_missing_ns": (
+        lambda c: c.create_table(("nope", "..x"), SCHEMA), E.NoSuchNamespaceException),
+    "rename_bad_name_missing_ns": (
+        lambda c: c.rename_table(("nope", "..x"), ("db", "y")),
+        E.NoSuchNamespaceException),
+    "list_tables_missing_ns": (
+        lambda c: c.list_tables(("nope",)), E.NoSuchNamespaceException),
+    "drop_table_missing_ns": (
+        lambda c: c.drop_table(("nope", "t")), E.NoSuchNamespaceException),
+    "duplicate_create": (
+        lambda c: c.create_table(("db", "t"), SCHEMA), E.TableAlreadyExistsException),
+    "drop_non_empty_ns": (
+        lambda c: c.drop_namespace(("db",)), E.NamespaceNotEmptyException),
+    "bad_ns_level": (
+        lambda c: c.create_namespace(("db", ".hidden")), E.BadRequestException),
+}
+
+
+@pytest.mark.parametrize("case", sorted(PARITY_CASES))
+def test_invalid_input_parity(catalog: Catalog, case):
+    op, exc = PARITY_CASES[case]
+    catalog.create_namespace(("db",))
+    catalog.create_table(("db", "t"), SCHEMA)
+    with pytest.raises(exc):
+        op(catalog)
+
 
 class TestCleanup:
     def test_full_teardown_sweep(self, catalog: Catalog):
@@ -573,6 +616,34 @@ class TestFileIOSeam:
         )
         self._assert_rename_resolves_once_and_loads_once(cat, log, monkeypatch)
 
+    def test_manifest_reads_resolve_no_paths(self, catalog: Catalog, monkeypatch):
+        """A table finds its manifests next to ``metadata_location``: reading
+        a lineage runs no ``_table_dir`` containment check (two realpath
+        calls each)."""
+        import os
+
+        catalog.create_namespace(("db",))
+        t = catalog.create_table(("db", "t"), SCHEMA)
+        mdir = os.path.dirname(t.metadata_location)
+        catalog.fio.mkdirs(os.path.join(mdir, "manifests"))
+        for sid in (1, 2, 3):
+            rel = os.path.join("manifests", f"m{sid}.json")
+            catalog._write_json(os.path.join(mdir, rel), {
+                "entries": [{"path": f"/d/{sid}.parquet", "partition": {}}]})
+            snap = {"snapshot-id": sid, "parent-snapshot-id": sid - 1 or None,
+                    "manifest-path": rel, "operation": "append"}
+            t = catalog.update_table(
+                ("db", "t"), [], [{"action": "add-snapshot", "snapshot": snap}]
+            )
+        realpath, resolved = os.path.realpath, []
+        monkeypatch.setattr(
+            os.path, "realpath", lambda p: resolved.append(p) or realpath(p)
+        )
+        entries = t._visible_at(None)[0]
+        monkeypatch.undo()
+        assert [e["path"] for e in entries] == [f"/d/{i}.parquet" for i in (1, 2, 3)]
+        assert resolved == []
+
 
 class TestLogRotation:
     """Reference logger parity (logger/zerolog.go:10-41): a `logger:`
@@ -684,7 +755,7 @@ class TestCreateRaceAndSchemes:
         catalog.create_table(("ns", "t"), SCHEMA)
         if catalog.backend != "fs":
             return  # claim detail is the fs protocol's; sql/rest CAS differs
-        # simulate a racer that passed the _is_table precheck before the
+        # simulate a racer that passed the existence precheck before the
         # winner's hint write: hint gone, v1 claim present
         import os
 

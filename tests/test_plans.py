@@ -508,6 +508,30 @@ def test_one_field_id_read_path():
     assert not sites, sites
 
 
+def test_one_table_lifecycle():
+    """Catalog writes every public namespace and table method once; the sql
+    backend supplies only private storage primitives. A public method that
+    SqlCatalog redefines is a second copy of the lifecycle and fails here."""
+    import ast
+    from pathlib import Path
+
+    import iceberg_rest_catalog_spark
+
+    root = Path(iceberg_rest_catalog_spark.__file__).parent / "catalog"
+
+    def public_methods(module, cls):
+        tree = ast.parse((root / module).read_text())
+        (node,) = [n for n in tree.body
+                   if isinstance(n, ast.ClassDef) and n.name == cls]
+        return {n.name for n in node.body
+                if isinstance(n, (ast.FunctionDef, ast.AsyncFunctionDef))
+                and not n.name.startswith("_")}
+
+    base = public_methods("catalog.py", "Catalog")
+    assert {"create_table", "update_table", "rename_table"} <= base
+    assert not base & public_methods("sql_catalog.py", "SqlCatalog")
+
+
 def test_warm_pass_compiles_nothing(spark):
     """The generated-code cache holds a pass's working set: a second pass
     over the perfbench llm ops and the drift controls compiles no class.
