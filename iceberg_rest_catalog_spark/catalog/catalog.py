@@ -1694,10 +1694,14 @@ class Catalog:
         return {"status": "ok"}
 
     # -- validation ---------------------------------------------------------
+    @staticmethod
+    def _bad_level(level: str) -> bool:
+        return (not level or "/" in level or NS_SEP in level
+                or level.startswith("."))
+
     def _ns_dir(self, ns: Ident) -> str:
         for level in ns:
-            if (not level or "/" in level or NS_SEP in level
-                    or level.startswith(".")):
+            if self._bad_level(level):
                 raise E.BadRequestException(f"bad namespace level {level!r}")
         return os.path.join(self.warehouse, *ns)
 
@@ -1932,7 +1936,11 @@ class Catalog:
         if self.fio.isdir(base):
             for name in sorted(self.fio.listdir(base)):
                 child = parent + (name,)
-                if self.fio.isdir(os.path.join(base, name)) and self._ns_exists(child):
+                # a directory no client could have named (".snapshots", a
+                # temp dir) is not a namespace, as _ptr_list skips it too
+                if (not self._bad_level(name)
+                        and self.fio.isdir(os.path.join(base, name))
+                        and self._ns_exists(child)):
                     out.append(child)
         return out
 

@@ -11,13 +11,11 @@ directly over the fixture table.
 from __future__ import annotations
 
 import os
-import shutil
 
 from pyspark.sql import functions as F
 
-from ..operators.common import scratch_dir, t
+from ..operators.common import cached_warehouse, t
 from ..registry import query
-from .catalog import Catalog
 from .schema import NestedField, Schema
 
 _ORDERS_SCHEMA = Schema(
@@ -30,27 +28,33 @@ _ORDERS_SCHEMA = Schema(
 )
 
 
-def _two_snapshot_table(spark, sf_dir, name: str):
-    """Create (idempotently per sf_dir) a cataloged orders subset with two
-    append snapshots: keys 1..100, then 101..200."""
-    wh = scratch_dir(sf_dir, "catalog_data", name)
-    cat = Catalog(wh)
-    marker = os.path.join(wh, ".ready")
-    if not os.path.exists(marker):
-        shutil.rmtree(wh, ignore_errors=True)
-        os.makedirs(wh, exist_ok=True)
-        cat = Catalog(wh)
+def _orders_table(spark, sf_dir, name: str, table: str, script,
+                  schema=_ORDERS_SCHEMA, **create):
+    """Table ``db.<table>`` of the build-once warehouse ``name``
+    (``cached_warehouse``): on a fixture the warehouse has not seen, the
+    table is created with ``schema`` (and ``create``'s partition spec or
+    write order) and ``script(tbl, orders)`` commits its history from the
+    fixture's orders, projected to the schema's columns."""
+
+    def build(cat):
         cat.create_namespace(("db",))
-        tbl = cat.create_table(("db", "orders_s"), _ORDERS_SCHEMA)
-        orders = t(spark, sf_dir, "orders").select(
-            "o_orderkey", "o_custkey", "o_totalprice"
-        )
+        tbl = cat.create_table(("db", table), schema, **create)
+        script(tbl, t(spark, sf_dir, "orders").select(*schema.field_names()))
+
+    return cached_warehouse(sf_dir, name, build).load_table(("db", table))
+
+
+def _two_snapshot_table(spark, sf_dir, name: str):
+    """A cataloged orders subset with two append snapshots: keys 1..100,
+    then 101..200."""
+
+    def script(tbl, orders):
         tbl = tbl.append(orders.filter(F.col("o_orderkey") <= 100))
         tbl.append(
             orders.filter((F.col("o_orderkey") > 100) & (F.col("o_orderkey") <= 200))
         )
-        open(marker, "w").close()
-    return cat.load_table(("db", "orders_s"))
+
+    return _orders_table(spark, sf_dir, name, "orders_s", script)
 
 
 @query(
@@ -145,23 +149,13 @@ def q_schema_evolution_read(spark, sf_dir):
     """Commit a schema evolution (add column) and read OLD files under the
     NEW schema: the added column reads as null, old files stay readable —
     the field-ID evolution contract (SURVEY §1.2)."""
-    wh = scratch_dir(sf_dir, "catalog_data", "evolution")
-    cat = Catalog(wh)
-    marker = os.path.join(wh, ".ready")
-    if not os.path.exists(marker):
-        shutil.rmtree(wh, ignore_errors=True)
-        os.makedirs(wh, exist_ok=True)
-        cat = Catalog(wh)
-        cat.create_namespace(("db",))
-        tbl = cat.create_table(("db", "orders_e"), _ORDERS_SCHEMA)
-        orders = t(spark, sf_dir, "orders").select(
-            "o_orderkey", "o_custkey", "o_totalprice"
-        )
+
+    def script(tbl, orders):
         tbl.append(orders.filter(F.col("o_orderkey") <= 100))
         new_schema = Schema(
             1, _ORDERS_SCHEMA.fields + [NestedField(4, "o_note", "string")]
         )
-        cat.update_table(
+        tbl.catalog.update_table(
             ("db", "orders_e"),
             [{"type": "assert-current-schema-id", "current-schema-id": 0}],
             [
@@ -169,8 +163,8 @@ def q_schema_evolution_read(spark, sf_dir):
                 {"action": "set-current-schema", "schema-id": 1},
             ],
         )
-        open(marker, "w").close()
-    tbl = cat.load_table(("db", "orders_e"))
+
+    tbl = _orders_table(spark, sf_dir, "evolution", "orders_e", script)
     return tbl.df(spark).select(
         "o_orderkey", F.round("o_totalprice", 4).alias("o_totalprice"), "o_note"
     )
@@ -188,66 +182,34 @@ def q_compact(spark, sf_dir):
     rewritten into one replace snapshot; contents are identical, file count
     drops, pre-compaction snapshots stay time-travelable. The maintenance
     action that keeps 100 TB tables scannable after streaming ingest."""
-    wh = scratch_dir(sf_dir, "catalog_data", "compact")
-    cat = Catalog(wh)
-    marker = os.path.join(wh, ".ready")
-    if not os.path.exists(marker):
-        shutil.rmtree(wh, ignore_errors=True)
-        os.makedirs(wh, exist_ok=True)
-        cat = Catalog(wh)
-        cat.create_namespace(("db",))
-        tbl = cat.create_table(("db", "orders_c"), _ORDERS_SCHEMA)
-        orders = t(spark, sf_dir, "orders").select(
-            "o_orderkey", "o_custkey", "o_totalprice"
-        )
+
+    def script(tbl, orders):
         tbl = tbl.append(orders.filter(F.col("o_orderkey") <= 100))
         tbl = tbl.append(
             orders.filter((F.col("o_orderkey") > 100) & (F.col("o_orderkey") <= 200))
         )
         compacted = tbl.compact(spark)
         assert len(compacted._files_at(None)) == 1
-        open(marker, "w").close()
-    tbl = cat.load_table(("db", "orders_c"))
+
+    tbl = _orders_table(spark, sf_dir, "compact", "orders_c", script)
     return tbl.df(spark).select(
         "o_orderkey", "o_custkey", F.round("o_totalprice", 4).alias("o_totalprice")
     )
 
 
 def _partitioned_orders_table(spark, sf_dir):
-    """Build (idempotently per sf_dir) the year-partitioned orders table
-    shared by q_meta_prune and q_meta_partition_stats."""
-    from .schema import NestedField as NF
-    from .schema import Schema as Sch
-
-    wh = scratch_dir(sf_dir, "catalog_data", "meta_prune")
-    cat = Catalog(wh)
-    marker = os.path.join(wh, ".ready")
-    if not os.path.exists(marker):
-        shutil.rmtree(wh, ignore_errors=True)
-        os.makedirs(wh, exist_ok=True)
-        cat = Catalog(wh)
-        cat.create_namespace(("db",))
-        sch = Sch(
+    """The year-partitioned orders table shared by q_meta_prune and
+    q_meta_partition_stats."""
+    return _orders_table(
+        spark, sf_dir, "meta_prune", "orders_p",
+        lambda tbl, orders: tbl.append(orders.filter(F.col("o_orderkey") <= 2000)),
+        Schema(
             0,
-            [
-                NF(1, "o_orderkey", "long"),
-                NF(2, "o_custkey", "long"),
-                NF(3, "o_totalprice", "double"),
-                NF(4, "o_orderdate", "timestamp"),
-            ],
-        )
-        tbl = cat.create_table(
-            ("db", "orders_p"),
-            sch,
-            partition_spec=[{"name": "o_orderdate", "transform": "year"}],
-            write_order=[{"name": "o_orderkey", "direction": "asc"}],
-        )
-        orders = t(spark, sf_dir, "orders").select(
-            "o_orderkey", "o_custkey", "o_totalprice", "o_orderdate"
-        )
-        tbl.append(orders.filter(F.col("o_orderkey") <= 2000))
-        open(marker, "w").close()
-    return cat.load_table(("db", "orders_p"))
+            _ORDERS_SCHEMA.fields + [NestedField(4, "o_orderdate", "timestamp")],
+        ),
+        partition_spec=[{"name": "o_orderdate", "transform": "year"}],
+        write_order=[{"name": "o_orderkey", "direction": "asc"}],
+    )
 
 
 @query(
@@ -355,18 +317,8 @@ def q_snapshot_expire(spark, sf_dir):
     pair that bounds metadata AND storage growth under streaming ingest
     (micro-batch = snapshot = small files, forever).
     """
-    wh = scratch_dir(sf_dir, "catalog_data", "snapshot_expire")
-    cat = Catalog(wh)
-    marker = os.path.join(wh, ".ready")
-    if not os.path.exists(marker):
-        shutil.rmtree(wh, ignore_errors=True)
-        os.makedirs(wh, exist_ok=True)
-        cat = Catalog(wh)
-        cat.create_namespace(("db",))
-        tbl = cat.create_table(("db", "orders_x"), _ORDERS_SCHEMA)
-        orders = t(spark, sf_dir, "orders").select(
-            "o_orderkey", "o_custkey", "o_totalprice"
-        )
+
+    def script(tbl, orders):
         for lo, hi in ((-1, 100), (100, 200), (200, 300)):
             tbl = tbl.append(
                 orders.filter((F.col("o_orderkey") > lo) & (F.col("o_orderkey") <= hi))
@@ -383,8 +335,8 @@ def q_snapshot_expire(spark, sf_dir):
         tbl = tbl.expire_snapshots(retain_last=1)
         removed += tbl.remove_orphan_files()
         assert removed, "expected superseded append files to be reclaimed"
-        open(marker, "w").close()
-    tbl = cat.load_table(("db", "orders_x"))
+
+    tbl = _orders_table(spark, sf_dir, "snapshot_expire", "orders_x", script)
     return tbl.df(spark).select(
         "o_orderkey", "o_custkey", F.round("o_totalprice", 4).alias("o_totalprice")
     )
@@ -407,24 +359,15 @@ def q_delete_where(spark, sf_dir):
     full contents (asserted). Scale: with a prune hint only candidate
     files rewrite — see tests/test_catalog_spark.py for the file-survival
     assertion."""
-    wh = scratch_dir(sf_dir, "catalog_data", "delete_where")
-    cat = Catalog(wh)
-    marker = os.path.join(wh, ".ready")
-    if not os.path.exists(marker):
-        shutil.rmtree(wh, ignore_errors=True)
-        os.makedirs(wh, exist_ok=True)
-        cat = Catalog(wh)
-        cat.create_namespace(("db",))
-        tbl = cat.create_table(("db", "orders_d"), _ORDERS_SCHEMA)
-        orders = t(spark, sf_dir, "orders").select(
-            "o_orderkey", "o_custkey", "o_totalprice"
-        )
+
+    def script(tbl, orders):
         tbl = tbl.append(orders.filter(F.col("o_orderkey") <= 200))
         n_before = tbl.df(spark).count()
         tbl = tbl.delete_where(spark, "o_totalprice < 100000.0")
         assert tbl.df(spark, snapshot_id=1).count() == n_before  # time travel
-        open(marker, "w").close()
-    return cat.load_table(("db", "orders_d")).df(spark).select(
+
+    tbl = _orders_table(spark, sf_dir, "delete_where", "orders_d", script)
+    return tbl.df(spark).select(
         "o_orderkey", "o_custkey", F.round("o_totalprice", 4).alias("o_totalprice")
     )
 
@@ -441,26 +384,17 @@ def q_delete_where(spark, sf_dir):
 def q_update_where(spark, sf_dir):
     """Row-level UPDATE (copy-on-write): SET o_totalprice *= 1.1 on cheap
     orders; non-matching rows pass through byte-identical."""
-    wh = scratch_dir(sf_dir, "catalog_data", "update_where")
-    cat = Catalog(wh)
-    marker = os.path.join(wh, ".ready")
-    if not os.path.exists(marker):
-        shutil.rmtree(wh, ignore_errors=True)
-        os.makedirs(wh, exist_ok=True)
-        cat = Catalog(wh)
-        cat.create_namespace(("db",))
-        tbl = cat.create_table(("db", "orders_u"), _ORDERS_SCHEMA)
-        orders = t(spark, sf_dir, "orders").select(
-            "o_orderkey", "o_custkey", "o_totalprice"
-        )
+
+    def script(tbl, orders):
         tbl = tbl.append(orders.filter(F.col("o_orderkey") <= 200))
         tbl.update_where(
             spark,
             "o_totalprice < 100000.0",
             {"o_totalprice": "o_totalprice * 1.1"},
         )
-        open(marker, "w").close()
-    return cat.load_table(("db", "orders_u")).df(spark).select(
+
+    tbl = _orders_table(spark, sf_dir, "update_where", "orders_u", script)
+    return tbl.df(spark).select(
         "o_orderkey", "o_custkey", F.round("o_totalprice", 4).alias("o_totalprice")
     )
 
@@ -484,26 +418,17 @@ def q_delete_merge_on_read(spark, sf_dir):
     Scale: a CoW delete of k rows spread over many files rewrites the
     files; MoR writes O(k) tuples — the only viable shape for frequent
     small deletes (GDPR erasure) at 100 TB."""
-    wh = scratch_dir(sf_dir, "catalog_data", "delete_mor")
-    cat = Catalog(wh)
-    marker = os.path.join(wh, ".ready")
-    if not os.path.exists(marker):
-        shutil.rmtree(wh, ignore_errors=True)
-        os.makedirs(wh, exist_ok=True)
-        cat = Catalog(wh)
-        cat.create_namespace(("db",))
-        tbl = cat.create_table(("db", "orders_m"), _ORDERS_SCHEMA)
-        orders = t(spark, sf_dir, "orders").select(
-            "o_orderkey", "o_custkey", "o_totalprice"
-        )
+
+    def script(tbl, orders):
         tbl = tbl.append(orders.filter(F.col("o_orderkey") <= 200))
         files_before = {e["path"] for e in tbl._entries_at(None)}
         tbl = tbl.delete_where(spark, "o_totalprice < 50000.0", mode="merge-on-read")
         tbl = tbl.delete_where(spark, "o_totalprice > 250000.0", mode="merge-on-read")
         assert {e["path"] for e in tbl._entries_at(None)} == files_before
         assert len(tbl._visible_at(None)[1]) >= 2
-        open(marker, "w").close()
-    return cat.load_table(("db", "orders_m")).df(spark).select(
+
+    tbl = _orders_table(spark, sf_dir, "delete_mor", "orders_m", script)
+    return tbl.df(spark).select(
         "o_orderkey", "o_custkey", F.round("o_totalprice", 4).alias("o_totalprice")
     )
 
@@ -530,28 +455,8 @@ def q_schema_evolution_rename(spark, sf_dir):
     so old files read null), never by name — the Iceberg evolution
     contract (reference test/server_test.go:216-219 models evolution as a
     new schema id)."""
-    wh = scratch_dir(sf_dir, "catalog_data", "schema_rename")
-    cat = Catalog(wh)
-    marker = os.path.join(wh, ".ready")
-    if not os.path.exists(marker):
-        shutil.rmtree(wh, ignore_errors=True)
-        os.makedirs(wh, exist_ok=True)
-        cat = Catalog(wh)
-        cat.create_namespace(("db",))
-        tbl = cat.create_table(
-            ("db", "orders_e"),
-            Schema(
-                0,
-                [
-                    NestedField(1, "o_orderkey", "long", False),
-                    NestedField(2, "o_custkey", "long", False),
-                    NestedField(3, "o_totalprice", "double", False),
-                ],
-            ),
-        )
-        orders = t(spark, sf_dir, "orders").select(
-            "o_orderkey", "o_custkey", "o_totalprice"
-        )
+
+    def script(tbl, orders):
         tbl = tbl.append(orders.filter(F.col("o_orderkey") <= 100))
         tbl = tbl.evolve_schema(
             renames={"o_orderkey": "order_id", "o_totalprice": "price"},
@@ -566,8 +471,17 @@ def q_schema_evolution_rename(spark, sf_dir):
                 F.col("o_custkey").alias("cust"),
             )
         )
-        open(marker, "w").close()
-    return cat.load_table(("db", "orders_e")).df(spark).select(
+
+    required = Schema(
+        0,
+        [
+            NestedField(1, "o_orderkey", "long", False),
+            NestedField(2, "o_custkey", "long", False),
+            NestedField(3, "o_totalprice", "double", False),
+        ],
+    )
+    tbl = _orders_table(spark, sf_dir, "schema_rename", "orders_e", script, required)
+    return tbl.df(spark).select(
         "order_id", F.round("price", 4).alias("price"), "cust"
     )
 
@@ -591,26 +505,8 @@ def q_partition_evolution(spark, sf_dir):
 
     Scale: evolution is a metadata commit; re-layout rides normal
     compaction. Old files prune at their own (year) granularity."""
-    wh = scratch_dir(sf_dir, "catalog_data", "part_evolve")
-    cat = Catalog(wh)
-    marker = os.path.join(wh, ".ready")
-    if not os.path.exists(marker):
-        shutil.rmtree(wh, ignore_errors=True)
-        os.makedirs(wh, exist_ok=True)
-        cat = Catalog(wh)
-        cat.create_namespace(("db",))
-        tbl = cat.create_table(
-            ("db", "orders_p"),
-            Schema(
-                0,
-                [
-                    NestedField(1, "o_orderkey", "long"),
-                    NestedField(2, "o_orderdate", "timestamp"),
-                ],
-            ),
-            partition_spec=[{"name": "o_orderdate", "transform": "year"}],
-        )
-        orders = t(spark, sf_dir, "orders").select("o_orderkey", "o_orderdate")
+
+    def script(tbl, orders):
         tbl = tbl.append(orders.filter(F.col("o_orderkey") <= 150))
         tbl = tbl.evolve_partition_spec(
             [{"name": "o_orderdate", "transform": "month"}]
@@ -623,8 +519,18 @@ def q_partition_evolution(spark, sf_dir):
             e for e in tbl._entries_at(None) if "-" in str(e["partition"].get("o_orderdate"))
         ]
         assert new_entries, "second append should be month-partitioned"
-        open(marker, "w").close()
-    df = cat.load_table(("db", "orders_p")).df(spark)
+
+    df = _orders_table(
+        spark, sf_dir, "part_evolve", "orders_p", script,
+        Schema(
+            0,
+            [
+                NestedField(1, "o_orderkey", "long"),
+                NestedField(2, "o_orderdate", "timestamp"),
+            ],
+        ),
+        partition_spec=[{"name": "o_orderdate", "transform": "year"}],
+    ).df(spark)
     return df.filter(F.date_format("o_orderdate", "yyyy-MM") == "1997-03").select(
         "o_orderkey", F.year("o_orderdate").cast("long").alias("order_year")
     )
@@ -652,21 +558,8 @@ def q_merge_into_catalog(spark, sf_dir):
     touching one file's key range rewrites one file, never the table
     (cold files survive verbatim; asserted). Complements q_merge_upsert,
     which shows the same semantics as a pure DataFrame plan."""
-    wh = scratch_dir(sf_dir, "catalog_data", "merge_into")
-    cat = Catalog(wh)
-    marker = os.path.join(wh, ".ready")
-    if not os.path.exists(marker):
-        shutil.rmtree(wh, ignore_errors=True)
-        os.makedirs(wh, exist_ok=True)
-        cat = Catalog(wh)
-        cat.create_namespace(("db",))
-        tbl = cat.create_table(
-            ("db", "orders_mi"), _ORDERS_SCHEMA,
-            write_order=[{"name": "o_orderkey", "direction": "asc"}],
-        )
-        orders = t(spark, sf_dir, "orders").select(
-            "o_orderkey", "o_custkey", "o_totalprice"
-        )
+
+    def script(tbl, orders):
         tbl = tbl.append(
             orders.filter(F.col("o_orderkey") <= 150).repartitionByRange(
                 4, "o_orderkey"
@@ -683,8 +576,12 @@ def q_merge_into_catalog(spark, sf_dir):
         after = {e["path"] for e in tbl._entries_at(None)}
         assert before & after, "files below the source key range must survive"
         assert tbl.current_snapshot()["operation"] == "overwrite"
-        open(marker, "w").close()
-    return cat.load_table(("db", "orders_mi")).df(spark).select(
+
+    tbl = _orders_table(
+        spark, sf_dir, "merge_into", "orders_mi", script,
+        write_order=[{"name": "o_orderkey", "direction": "asc"}],
+    )
+    return tbl.df(spark).select(
         "o_orderkey", "o_custkey", F.round("o_totalprice", 4).alias("o_totalprice")
     )
 
@@ -712,18 +609,8 @@ def q_wap_publish(spark, sf_dir):
     At 100 TB this is the only safe ingest shape: the expensive data write
     happens once into an unpublished branch, validation runs against real
     committed files, and publish/abandon are both metadata-sized."""
-    wh = scratch_dir(sf_dir, "catalog_data", "wap")
-    cat = Catalog(wh)
-    marker = os.path.join(wh, ".ready")
-    if not os.path.exists(marker):
-        shutil.rmtree(wh, ignore_errors=True)
-        os.makedirs(wh, exist_ok=True)
-        cat = Catalog(wh)
-        cat.create_namespace(("db",))
-        tbl = cat.create_table(("db", "orders_wap"), _ORDERS_SCHEMA)
-        orders = t(spark, sf_dir, "orders").select(
-            "o_orderkey", "o_custkey", "o_totalprice"
-        )
+
+    def script(tbl, orders):
         tbl = tbl.append(orders.filter(F.col("o_orderkey") <= 100))
         main_before = tbl.metadata.get("current-snapshot-id")
 
@@ -752,15 +639,16 @@ def q_wap_publish(spark, sf_dir):
         restaged = tbl.df(spark, snapshot_id=tbl.snapshot_for_ref("audit_retry"))
         assert restaged.filter(F.col("o_totalprice") < 0).count() == 0
         tbl = tbl.fast_forward("audit_retry")
-        open(marker, "w").close()
-    return cat.load_table(("db", "orders_wap")).df(spark).select(
+
+    tbl = _orders_table(spark, sf_dir, "wap", "orders_wap", script)
+    return tbl.df(spark).select(
         "o_orderkey", "o_custkey", F.round("o_totalprice", 4).alias("o_totalprice")
     )
 
 
 def _cdc_lineage_table(spark, sf_dir):
-    """Build (idempotently per sf_dir) the append → CoW-DELETE → append
-    lineage shared by q_snapshot_diff and q_meta_history.
+    """The append → CoW-DELETE → append lineage shared by q_snapshot_diff,
+    q_meta_history and q_incremental_agg_maintenance.
 
     The DELETE predicate includes the table's min key so it matches at
     least one row on ANY non-empty fixture — a predicate that happens to
@@ -768,21 +656,8 @@ def _cdc_lineage_table(spark, sf_dir):
     lineage (and q_meta_history's literal oracle) fixture-dependent
     (found by the perturbed-fixture audit, which deletes every
     %10 key)."""
-    wh = scratch_dir(sf_dir, "catalog_data", "snapshot_diff")
-    cat = Catalog(wh)
-    marker = os.path.join(wh, ".ready")
-    if not os.path.exists(marker):
-        shutil.rmtree(wh, ignore_errors=True)
-        os.makedirs(wh, exist_ok=True)
-        cat = Catalog(wh)
-        cat.create_namespace(("db",))
-        tbl = cat.create_table(
-            ("db", "orders_cdc"), _ORDERS_SCHEMA,
-            write_order=[{"name": "o_orderkey", "direction": "asc"}],
-        )
-        orders = t(spark, sf_dir, "orders").select(
-            "o_orderkey", "o_custkey", "o_totalprice"
-        )
+
+    def script(tbl, orders):
         mn = orders.agg(F.min("o_orderkey")).collect()[0][0]  # 1 scalar
         tbl = tbl.append(
             orders.filter(F.col("o_orderkey") <= 200).repartitionByRange(
@@ -797,8 +672,11 @@ def _cdc_lineage_table(spark, sf_dir):
         tbl.append(orders.filter(
             (F.col("o_orderkey") > 200) & (F.col("o_orderkey") <= 250)
         ))
-        open(marker, "w").close()
-    return cat
+
+    return _orders_table(
+        spark, sf_dir, "snapshot_diff", "orders_cdc", script,
+        write_order=[{"name": "o_orderkey", "direction": "asc"}],
+    )
 
 
 @query(
@@ -826,8 +704,7 @@ def q_snapshot_diff(spark, sf_dir):
     opened (asserted below). Row-level work is then two exceptAll
     hash-aggregates over just the churned files: a 100 TB table whose day
     touched 1% of files diffs 1% of the data, not the table."""
-    cat = _cdc_lineage_table(spark, sf_dir)
-    tbl = cat.load_table(("db", "orders_cdc"))
+    tbl = _cdc_lineage_table(spark, sf_dir)
     f_old = set(tbl._files_at(1))
     f_new = set(tbl._files_at(None))
     assert f_old & f_new, "files untouched by the DELETE must survive the diff"
@@ -879,8 +756,7 @@ def q_meta_history(spark, sf_dir):
     parent-snapshot-id, never id order). At 100 TB this is THE debugging
     query — what happened to this table, in order — and costs O(history
     length), independent of data size."""
-    cat = _cdc_lineage_table(spark, sf_dir)
-    tbl = cat.load_table(("db", "orders_cdc"))
+    tbl = _cdc_lineage_table(spark, sf_dir)
     cur = tbl.metadata["current-snapshot-id"]
     chain = tbl._ancestors(cur)
     rows = [
@@ -957,8 +833,7 @@ def q_incremental_agg_maintenance(spark, sf_dir):
     maintenance pass never touches cold data. The oracle computes the
     view directly over the final state, so hash equality proves the
     delta algebra is exact."""
-    cat = _cdc_lineage_table(spark, sf_dir)
-    tbl = cat.load_table(("db", "orders_cdc"))
+    tbl = _cdc_lineage_table(spark, sf_dir)
     schema = tbl.schema().to_spark()
 
     def _read(paths):
@@ -1036,22 +911,12 @@ def q_meta_column_stats(spark, sf_dir):
     These properties are what a 100 TB engine reads for join sizing and
     file skipping; a stats-integrity probe like this belongs in any
     warehouse's nightly QA."""
-    wh = scratch_dir(sf_dir, "catalog_data", "column_stats")
-    cat = Catalog(wh)
-    marker = os.path.join(wh, ".ready")
-    if not os.path.exists(marker):
-        shutil.rmtree(wh, ignore_errors=True)
-        os.makedirs(wh, exist_ok=True)
-        cat = Catalog(wh)
-        cat.create_namespace(("db",))
-        tbl = cat.create_table(("db", "orders_an"), _ORDERS_SCHEMA)
-        orders = t(spark, sf_dir, "orders").select(
-            "o_orderkey", "o_custkey", "o_totalprice"
-        )
+
+    def script(tbl, orders):
         tbl = tbl.append(orders.filter(F.col("o_orderkey") <= 300))
         tbl.analyze(spark)
-        open(marker, "w").close()
-    tbl = cat.load_table(("db", "orders_an"))
+
+    tbl = _orders_table(spark, sf_dir, "column_stats", "orders_an", script)
     props = tbl.metadata.get("properties", {})
     base = t(spark, sf_dir, "orders").filter(F.col("o_orderkey") <= 300)
     rows = []
@@ -1109,25 +974,12 @@ def q_meta_orphan_files(spark, sf_dir):
     Mirrors the reference's commit lineage (api/handlers/tables.go:
     150-227) composed with this repo's expire/fold semantics
     (catalog.py expire_snapshots)."""
-    wh = scratch_dir(sf_dir, "catalog_data", "orphan_files")
-    cat = Catalog(wh)
-    marker = os.path.join(wh, ".ready")
-    if not os.path.exists(marker):
-        shutil.rmtree(wh, ignore_errors=True)
-        os.makedirs(wh, exist_ok=True)
-        cat = Catalog(wh)
-        cat.create_namespace(("db",))
-        tbl = cat.create_table(("db", "orders_o"), _ORDERS_SCHEMA)
-        from pyspark.sql import Window as W
+    from pyspark.sql import Window as W
 
-        ranked = (
-            t(spark, sf_dir, "orders")
-            .select("o_orderkey", "o_custkey", "o_totalprice")
-            .withColumn(
-                "rn", F.row_number().over(W.orderBy("o_orderkey"))
-            )
+    def script(tbl, orders):
+        ranked = orders.withColumn(
+            "rn", F.row_number().over(W.orderBy("o_orderkey"))
         )
-        orders = ranked.drop("rn")
         tbl = tbl.append(
             ranked.filter(F.col("rn") <= 100).drop("rn").coalesce(1)
         )
@@ -1145,8 +997,8 @@ def q_meta_orphan_files(spark, sf_dir):
         ranked.filter(F.col("rn") <= 7).drop("rn").coalesce(1).write.mode(
             "overwrite"
         ).parquet(stray)
-        open(marker, "w").close()
-    tbl = cat.load_table(("db", "orders_o"))
+
+    tbl = _orders_table(spark, sf_dir, "orphan_files", "orders_o", script)
 
     # live set: every data dir any retained snapshot or ref head references
     live_dirs = set()
@@ -1238,18 +1090,8 @@ def q_meta_refs(spark, sf_dir):
     UpdateTable commit path (api/handlers/tables.go:150-227) carries
     set-ref updates; this repo's Table.set_ref/refs implements them
     (catalog.py)."""
-    wh = scratch_dir(sf_dir, "catalog_data", "meta_refs")
-    cat = Catalog(wh)
-    marker = os.path.join(wh, ".ready")
-    if not os.path.exists(marker):
-        shutil.rmtree(wh, ignore_errors=True)
-        os.makedirs(wh, exist_ok=True)
-        cat = Catalog(wh)
-        cat.create_namespace(("db",))
-        tbl = cat.create_table(("db", "orders_r"), _ORDERS_SCHEMA)
-        orders = t(spark, sf_dir, "orders").select(
-            "o_orderkey", "o_custkey", "o_totalprice"
-        )
+
+    def script(tbl, orders):
         tbl = tbl.append(orders.filter(F.col("o_orderkey") <= 50).coalesce(1))
         tbl = tbl.set_ref("v1.0", 1, type="tag")
         tbl = tbl.append(
@@ -1263,8 +1105,8 @@ def q_meta_refs(spark, sf_dir):
                 (F.col("o_orderkey") > 100) & (F.col("o_orderkey") <= 150)
             ).coalesce(1)
         )
-        open(marker, "w").close()
-    tbl = cat.load_table(("db", "orders_r"))
+
+    tbl = _orders_table(spark, sf_dir, "meta_refs", "orders_r", script)
     cur = tbl.metadata.get("current-snapshot-id")
     rows = [
         (name, ref["type"], int(ref["snapshot-id"]), ref["snapshot-id"] == cur)
@@ -1312,19 +1154,8 @@ def q_meta_snapshot_lineage(spark, sf_dir):
     Reference scope: the reference's UpdateTable commit path maintains
     parent-snapshot-id the same way (api/handlers/tables.go:150-227);
     the lineage table is the [CAP] query surface over it."""
-    wh = scratch_dir(sf_dir, "catalog_data", "snapshot_lineage")
-    cat = Catalog(wh)
-    marker = os.path.join(wh, ".ready")
-    if not os.path.exists(marker):
-        shutil.rmtree(wh, ignore_errors=True)
-        os.makedirs(wh, exist_ok=True)
-        cat = Catalog(wh)
-        cat.create_namespace(("db",))
-        tbl = cat.create_table(("db", "orders_lin"), _ORDERS_SCHEMA)
-        orders = t(spark, sf_dir, "orders").select(
-            "o_orderkey", "o_custkey", "o_totalprice"
-        )
 
+    def script(tbl, orders):
         def chunk(lo, hi):
             return orders.filter(
                 (F.col("o_orderkey") > lo) & (F.col("o_orderkey") <= hi)
@@ -1335,8 +1166,8 @@ def q_meta_snapshot_lineage(spark, sf_dir):
         tbl = tbl.append(chunk(100, 150), branch="audit")  # snap 3, parent 2
         tbl = tbl.append(chunk(150, 200))       # snap 4, parent 2 (fork)
         tbl = tbl.append(chunk(200, 250), branch="audit")  # snap 5, parent 3
-        open(marker, "w").close()
-    tbl = cat.load_table(("db", "orders_lin"))
+
+    tbl = _orders_table(spark, sf_dir, "snapshot_lineage", "orders_lin", script)
     snaps = {int(s["snapshot-id"]): s for s in tbl.metadata.get("snapshots", [])}
     cur = int(tbl.metadata["current-snapshot-id"])
     main_ids = {int(s["snapshot-id"]) for s in tbl._ancestors(cur)}
@@ -1389,18 +1220,8 @@ def q_time_travel_asof(spark, sf_dir):
     UpdateTable lineage (api/handlers/tables.go:150-227) carries the
     same timestamp-ms per snapshot; as-of resolution is the [CAP] query
     surface over it."""
-    wh = scratch_dir(sf_dir, "catalog_data", "tt_asof")
-    cat = Catalog(wh)
-    marker = os.path.join(wh, ".ready")
-    if not os.path.exists(marker):
-        shutil.rmtree(wh, ignore_errors=True)
-        os.makedirs(wh, exist_ok=True)
-        cat = Catalog(wh)
-        cat.create_namespace(("db",))
-        tbl = cat.create_table(("db", "orders_tt"), _ORDERS_SCHEMA)
-        orders = t(spark, sf_dir, "orders").select(
-            "o_orderkey", "o_custkey", "o_totalprice"
-        )
+
+    def script(tbl, orders):
         tbl = tbl.append(orders.filter(F.col("o_orderkey") <= 100).coalesce(1))
         tbl = tbl.append(
             orders.filter(
@@ -1414,8 +1235,8 @@ def q_time_travel_asof(spark, sf_dir):
             ).coalesce(1),
             branch="audit",
         )
-        open(marker, "w").close()
-    tbl = cat.load_table(("db", "orders_tt"))
+
+    tbl = _orders_table(spark, sf_dir, "tt_asof", "orders_tt", script)
     snaps = {s["snapshot-id"]: s for s in tbl.metadata["snapshots"]}
     # as-of the BRANCH snapshot's commit instant: resolution must stay on
     # main's lineage (snapshot 2), not leak the staged snapshot 3
@@ -1452,18 +1273,8 @@ def q_snapshot_rollback(spark, sf_dir):
     set-current-snapshot commit (api/handlers/tables.go:150-227,
     requirement assert-ref-snapshot-id); the recovery workflow is the
     [CAP] surface over it."""
-    wh = scratch_dir(sf_dir, "catalog_data", "rollback")
-    cat = Catalog(wh)
-    marker = os.path.join(wh, ".ready")
-    if not os.path.exists(marker):
-        shutil.rmtree(wh, ignore_errors=True)
-        os.makedirs(wh, exist_ok=True)
-        cat = Catalog(wh)
-        cat.create_namespace(("db",))
-        tbl = cat.create_table(("db", "orders_rb"), _ORDERS_SCHEMA)
-        orders = t(spark, sf_dir, "orders").select(
-            "o_orderkey", "o_custkey", "o_totalprice"
-        )
+
+    def script(tbl, orders):
         good = orders.filter(F.col("o_orderkey") <= 100).coalesce(1)
         batch2 = orders.filter(
             (F.col("o_orderkey") > 100) & (F.col("o_orderkey") <= 200)
@@ -1482,8 +1293,8 @@ def q_snapshot_rollback(spark, sf_dir):
             > 0
         )
         tbl.append(batch2.coalesce(1))  # corrected re-append (forks from 1)
-        open(marker, "w").close()
-    tbl = cat.load_table(("db", "orders_rb"))
+
+    tbl = _orders_table(spark, sf_dir, "rollback", "orders_rb", script)
     df = tbl.df(spark)
     assert df.filter(F.col("o_totalprice") < 0).count() == 0
     return df.select(

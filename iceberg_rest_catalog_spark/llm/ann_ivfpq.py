@@ -222,26 +222,6 @@ def _ivfpq_index_rows(spark, sf_dir, pred=None):
     )
 
 
-def _ivfpq_base_index_dir(sf_dir: str) -> str:
-    """Fixture-signature-keyed cache dir for the BASE (vec_id % 5 != 0)
-    inverted-list index — the cataloged index an incremental update
-    merges into (the _knn_edge_cache_dir discipline)."""
-    import glob as _glob
-    import hashlib
-    import os
-
-    from ..operators.common import scratch_dir
-
-    src = os.path.join(sf_dir, "embeddings.parquet")
-    parts = sorted(_glob.glob(os.path.join(src, "*.parquet"))) or [src]
-    sig = hashlib.md5()
-    for p in parts:
-        st = os.stat(p)
-        sig.update(f"{p}:{st.st_mtime_ns}:{st.st_size};".encode())
-    sig.update(f"K={K_CODES};S={N_SUB};M={DELTA_MOD}".encode())
-    return scratch_dir("ivfpq_index", sf_dir, sig.hexdigest()[:16])
-
-
 @query("q_sim_index_update", oracle=_IVFPQ_ORACLE)
 def q_sim_index_update(spark, sf_dir):
     """INCREMENTAL IVF-PQ index maintenance: a production vector index is
@@ -250,9 +230,8 @@ def q_sim_index_update(spark, sf_dir):
     assigned + PQ-encoded ALONE — a filter pushed to the embedding scan,
     so the update's cost is bounded by |delta|, not |corpus| — and
     MERGEd (unionByName) into the cataloged base inverted-list layout
-    (built once per fixture, atomically published parquet keyed by the
-    corpus signature).  The merged index then serves the exact
-    q_sim_ann_ivf_pq search.
+    (a build-once parquet artifact keyed by the fixture signature).
+    The merged index then serves the exact q_sim_ann_ivf_pq search.
 
     THE ORACLE IS THE FULL REBUILD: per-vector assignment and encoding
     depend only on the vector itself and the full-corpus centroid/
@@ -266,16 +245,14 @@ def q_sim_index_update(spark, sf_dir):
     exists to serve (internal/catalog/tables.go:150-227 — table updates
     are staged requirements + updates MERGEd onto prior metadata, never
     a rewrite); this is that contract applied to a vector index."""
-    import os
-
-    from ..operators.common import publish_parquet_atomic
+    from ..operators.common import cached_parquet
 
     delta_pred = F.col("vec_id") % DELTA_MOD == 0
-    cache = _ivfpq_base_index_dir(sf_dir)
-    if not os.path.exists(os.path.join(cache, "_SUCCESS")):
-        publish_parquet_atomic(
-            _ivfpq_index_rows(spark, sf_dir, pred=~delta_pred), cache
-        )
+    cache = cached_parquet(
+        sf_dir, "ivfpq_index",
+        lambda: _ivfpq_index_rows(spark, sf_dir, pred=~delta_pred),
+        salt=f"K={K_CODES};S={N_SUB};M={DELTA_MOD}",
+    )
     base = spark.read.parquet(cache)
 
     # |delta|-bounded work: assignment + encode of the arriving batch only

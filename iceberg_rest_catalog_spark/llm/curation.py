@@ -375,9 +375,6 @@ def _bpe_train_oracle() -> str:
     )
 
 
-BPE_BATCH_M = 1  # registered contract: m=1 (exact sequential selection)
-
-
 def _apply_merge(syms, wlead, lhs: str, rhs: str):
     """One relational merge application over the (word, freq, pos, sym)
     symbol table: every adjacent (lhs, rhs) occurrence fuses (for
@@ -421,35 +418,15 @@ def _apply_merge(syms, wlead, lhs: str, rhs: str):
     )
 
 
-def _bpe_train(
-    spark, sf_dir, n_merges: int = N_MERGES, batch_m: int = 1,
-    return_syms: bool = False,
-):
-    """Core of q_text_bpe_train with the merge-round budget and the
-    SELECTION BATCH SIZE as parameters (VERDICT r10 item 5).
-
-    batch_m = 1 is the registered contract: classic sequential BPE, one
-    pair-counting shuffle per merge.  batch_m = m > 1 is the scale path
-    for real vocab sizes (30k+ merges): ONE counting shuffle selects the
-    top-m MUTUALLY NON-INTERFERING pairs (no shared symbol, and no
-    symbol equal to an earlier pick's concatenation), which are then all
-    applied before the next count — so the counting rounds drop from
-    n_merges to n_merges/m.  Non-interference makes the batch exact in
-    the values it records: a pair that shares no symbol with (and is not
-    produced by) an earlier in-batch merge has provably identical
-    adjacency counts, run structure and merge events before and after
-    that merge, so each recorded pair_freq / tokens_after equals its
-    sequential value.  The one semantic trade (documented, knob-gated):
-    a pair CONTAINING a just-merged symbol cannot be selected until the
-    next batch, so the merge ORDER can differ from strict
-    highest-frequency-first across batch boundaries — the standard
-    batched-trainer relaxation.
+def _bpe_train(spark, sf_dir, return_syms: bool = False):
+    """Core of q_text_bpe_train: N_MERGES rounds of classic sequential
+    BPE, one pair-counting shuffle per merge.
 
     tokens_after is maintained arithmetically (tokens -= merge events;
     events = pair_freq for lhs != rhs since occurrences can never
     overlap, and sum over runs of floor(len/2) * freq for lhs == rhs),
-    removing the per-merge recount job — per batch the driver runs one
-    counting TakeOrdered pull plus at most one run-length aggregate."""
+    removing the per-merge recount job — per merge one counting
+    TakeOrdered pull runs, plus one run-length aggregate for lhs == rhs."""
     wlead = Window.partitionBy("word").orderBy("pos")
 
     words = (
@@ -474,66 +451,35 @@ def _bpe_train(
     tokens = int(syms.agg(F.sum("freq")).collect()[0][0])
 
     rows = []
-    step = 0
-    # not common.fixpoint: staging happens once per driver-side merge batch
-    while step < n_merges:
-        want = min(batch_m, n_merges - step)
-        # one counting shuffle per BATCH; over-fetch 4x so the
-        # driver-side non-interference filter can still fill the batch
-        # (bounded pull: 4*want rows of (sym, nxt, f))
-        cand = (
+    # not common.fixpoint: each round collects its argmax
+    for step in range(1, N_MERGES + 1):
+        top = (
             syms.withColumn("nxt", F.lead("sym").over(wlead))
             .filter(F.col("nxt").isNotNull())
             .groupBy("sym", "nxt")
             .agg(F.sum("freq").alias("f"))
             .orderBy(F.desc("f"), "sym", "nxt")
-            .limit(4 * want)
+            .limit(1)
             .collect()
         )
-        if not cand:
+        if not top:
             break
-        used: set = set()
-        picked = []
-        for r in cand:
-            if len(picked) == want:
-                break
-            if r.sym in used or r.nxt in used or (r.sym + r.nxt) in used:
-                continue
-            picked.append((r.sym, r.nxt, int(r.f)))
-            used.update((r.sym, r.nxt, r.sym + r.nxt))
-
-        # merge events per picked pair (exact, computed at batch start —
-        # valid under non-interference): lhs != rhs -> pair_freq;
-        # lhs == rhs -> run parity, one bounded aggregate for all such picks
-        events = {(l, r): f for l, r, f in picked if l != r}
-        eq_syms = [l for l, r, _ in picked if l == r]
-        if eq_syms:
-            ev = (
-                syms.filter(F.col("sym").isin(eq_syms))
+        lhs, rhs, fcnt = top[0].sym, top[0].nxt, int(top[0].f)
+        events = fcnt
+        if lhs == rhs:
+            events = int(
+                syms.filter(F.col("sym") == lhs)
                 .withColumn(
-                    "rid",
-                    F.col("pos")
-                    - F.row_number().over(
-                        Window.partitionBy("word", "sym").orderBy("pos")
-                    ),
+                    "rid", F.col("pos") - F.row_number().over(wlead)
                 )
-                .groupBy("word", "sym", "rid")
+                .groupBy("word", "rid")
                 .agg(F.count("*").alias("len"), F.first("freq").alias("freq"))
-                .groupBy("sym")
-                .agg(
-                    F.sum(F.floor(F.col("len") / 2) * F.col("freq")).alias("ev")
-                )
-                .collect()
+                .agg(F.sum(F.floor(F.col("len") / 2) * F.col("freq")))
+                .collect()[0][0]
             )
-            for r in ev:
-                events[(r.sym, r.sym)] = int(r.ev)
-
-        for lhs, rhs, fcnt in picked:
-            syms = _apply_merge(syms, wlead, lhs, rhs)
-            step += 1
-            tokens -= events[(lhs, rhs)]
-            rows.append((step, lhs, rhs, lhs + rhs, fcnt, tokens))
-        syms = syms.localCheckpoint()
+        syms = _apply_merge(syms, wlead, lhs, rhs).localCheckpoint()
+        tokens -= events
+        rows.append((step, lhs, rhs, lhs + rhs, fcnt, tokens))
 
     out = spark.createDataFrame(
         rows,
@@ -566,23 +512,19 @@ def q_text_bpe_train(spark, sf_dir):
     + a map-combined pair count, argmax as a TakeOrdered pull (the
     Lloyd's-iteration driver scalar), then the merge applied with literal
     lhs/rhs — window functions only, no Python in the loop,
-    localCheckpoint per merge batch.
+    localCheckpoint per merge.
     Merge application is RELATIONAL, not a sequential scan: for
     lhs <> rhs adjacent occurrences can never overlap, so all merge; for
     lhs = rhs the greedy left-to-right rule is exactly `offset within the
     run is even` (gaps-and-islands parity) — the oracle unrolls the
     identical rounds as chained CTEs.  At real vocab sizes (30k+ merges)
-    the sequencing cost is the round count, not the corpus: the
-    _bpe_train batch_m knob selects the top-m non-interfering pairs per
-    counting round (see its docstring for the exactness argument and the
-    ordering trade); the registered query pins batch_m = {BPE_BATCH_M}
-    so the oracle contract stays strictly sequential.
+    the sequencing cost is the round count, not the corpus.
 
     Reference scope: no tokenizer surface in the reference (Go metadata
     facade, api/router/router.go:9-55); north-star LLM-pipeline operator
     completing the q_text_bpe_pairs -> q_text_bpe_train ->
     q_tokenizer_apply chain."""
-    return _bpe_train(spark, sf_dir, N_MERGES, BPE_BATCH_M)
+    return _bpe_train(spark, sf_dir)
 
 
 def _bpe_apply_oracle() -> str:
@@ -656,7 +598,7 @@ def q_tokenizer_bpe_apply(spark, sf_dir):
     (api/router/router.go:9-55); completes the q_text_bpe_pairs ->
     q_text_bpe_train -> q_tokenizer_bpe_apply chain (shared CTE family
     with the train oracle)."""
-    _, syms = _bpe_train(spark, sf_dir, N_MERGES, BPE_BATCH_M, return_syms=True)
+    _, syms = _bpe_train(spark, sf_dir, return_syms=True)
     wtok = syms.groupBy("word").agg(F.count("*").alias("k"))
     dw = (
         t(spark, sf_dir, "documents")

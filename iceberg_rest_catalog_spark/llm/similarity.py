@@ -1503,30 +1503,46 @@ FROM q LEFT JOIN hits h USING (q_vec_id) ORDER BY q_vec_id
 """
 
 
-def _recall_eval(spark, sf_dir, qstep: int | None = None):
-    """Core of q_sim_recall_eval with the probe stride as a parameter.
-    Since round 9 the REGISTERED query passes qstep=None, which
-    self-computes recall_qstep_for(count) — the probe batch (and with it
-    the |batch| x corpus exact baseline) stays FIXED-SIZE as the corpus
-    grows, and the oracle computes the identical stride from count(*)
-    (SCALED_QSTEP_SQL).  Explicit strides serve tests; the fixed vs
-    scaled stride is in SCALE.md "Round-8 probe-stride knob"."""
+@query("q_sim_recall_eval", oracle=_RECALL_ORACLE)
+def q_sim_recall_eval(spark, sf_dir):
+    """Recall@k audit of the IVF ANN index: for every query in the
+    deterministic probe batch (vec_id % {QSTEP} == 0), intersect the
+    IVF top-{K} (q_sim_knn_batch, probed-cells-only) with the EXACT
+    top-{K} (brute force over the full corpus) and report hits/recall per
+    query.  This is the measurement every ANN deployment runs before
+    trusting an index — approximate results without a recall number are
+    not results — and the op whose output tunes N_PROBE/N_CELLS.
+
+    Scale shape: the exact baseline is deliberately brute-force — that is
+    what makes it ground truth — but it runs over the PROBE BATCH only
+    (a fixed sample, ~4% here; a few hundred queries in production), so
+    cost is |batch| x corpus map work with the batch BROADCAST against
+    one corpus scan (the q_embed_matryoshka recall-audit shape, never a
+    corpus x corpus product).  The IVF side inherits q_sim_knn_batch's
+    equi-join-on-cell plan.  Both sides rank on the 4dp-ROUNDED cosine
+    with vec_id tiebreak, so hit membership is bit-stable across engines.
+
+    The probe stride scales with the corpus:
+    qstep = recall_qstep_for(count) pins the batch at
+    ~RECALL_TARGET_PROBES probes (a recall CI depends on batch SIZE, not
+    fraction), so the exact baseline stays one linear corpus scan as the
+    corpus grows (x10 measured 8.25x fixed -> 4.94x scaled, SCALE.md r8);
+    the oracle computes the identical stride from count(*)
+    (SCALED_QSTEP_SQL), keeping the value-hash twin exact at any size.
+    """
     from pyspark.sql import Window
 
-    if qstep is None:
-        # one count serves all three knobs (qstep here, cells and the
-        # flat/two-level assignment branch in _knn_batch)
-        n = _emb_count(spark, sf_dir)
-        qstep = recall_qstep_for(n)
-        ivf = _knn_batch(
-            spark,
-            sf_dir,
-            qstep,
-            n_cells=ivf_cells_for(n),
-            two_level=assignment_two_level(n),
-        ).select("q_vec_id", "nn_vec_id")
-    else:
-        ivf = _knn_batch(spark, sf_dir, qstep).select("q_vec_id", "nn_vec_id")
+    # one count serves all three knobs (qstep here, cells and the
+    # flat/two-level assignment branch in _knn_batch)
+    n = _emb_count(spark, sf_dir)
+    qstep = recall_qstep_for(n)
+    ivf = _knn_batch(
+        spark,
+        sf_dir,
+        qstep,
+        n_cells=ivf_cells_for(n),
+        two_level=assignment_two_level(n),
+    ).select("q_vec_id", "nn_vec_id")
 
     e = _emb(spark, sf_dir).select("vec_id", _dbl("embedding").alias("emb"))
     q = e.filter(F.col("vec_id") % qstep == 0).select(
@@ -1559,36 +1575,6 @@ def _recall_eval(spark, sf_dir, qstep: int | None = None):
         )
         .orderBy("q_vec_id")
     )
-
-
-@query("q_sim_recall_eval", oracle=_RECALL_ORACLE)
-def q_sim_recall_eval(spark, sf_dir):
-    """Recall@k audit of the IVF ANN index: for every query in the
-    deterministic probe batch (vec_id % {QSTEP} == 0), intersect the
-    IVF top-{K} (q_sim_knn_batch, probed-cells-only) with the EXACT
-    top-{K} (brute force over the full corpus) and report hits/recall per
-    query.  This is the measurement every ANN deployment runs before
-    trusting an index — approximate results without a recall number are
-    not results — and the op whose output tunes N_PROBE/N_CELLS.
-
-    Scale shape: the exact baseline is deliberately brute-force — that is
-    what makes it ground truth — but it runs over the PROBE BATCH only
-    (a fixed sample, ~4% here; a few hundred queries in production), so
-    cost is |batch| x corpus map work with the batch BROADCAST against
-    one corpus scan (the q_embed_matryoshka recall-audit shape, never a
-    corpus x corpus product).  The IVF side inherits q_sim_knn_batch's
-    equi-join-on-cell plan.  Both sides rank on the 4dp-ROUNDED cosine
-    with vec_id tiebreak, so hit membership is bit-stable across engines.
-
-    Since round 9 the probe stride is the SCALE KNOB by default:
-    qstep = recall_qstep_for(count) pins the batch at
-    ~RECALL_TARGET_PROBES probes (a recall CI depends on batch SIZE, not
-    fraction), so the exact baseline stays one linear corpus scan as the
-    corpus grows (x10 measured 8.25x fixed -> 4.94x scaled, SCALE.md r8);
-    the oracle computes the identical stride from count(*)
-    (SCALED_QSTEP_SQL), keeping the value-hash twin exact at any size.
-    """
-    return _recall_eval(spark, sf_dir)
 
 
 
@@ -2066,7 +2052,7 @@ def _two_level_within(spark, sf_dir, n_cells: int, pred=None):
 def _knn_batch_2level(spark, sf_dir, qstep: int, n_cells: int | None = None):
     """Core of q_sim_knn_batch_2level with the probe stride and fine-cell
     count as parameters — also the two-level arm the REGISTERED
-    q_sim_knn_batch/_recall_eval take above ASSIGN_FLAT_MAX vectors
+    q_sim_knn_batch/q_sim_recall_eval take above ASSIGN_FLAT_MAX vectors
     (assignment_two_level)."""
     from pyspark.sql import Window
 

@@ -2,9 +2,13 @@
 
 from __future__ import annotations
 
+import errno
+import hashlib
 import logging
 import os
+import shutil
 import tempfile
+import uuid
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -29,48 +33,99 @@ def ntz(s: str) -> Column:
     return F.expr(f"TIMESTAMP_NTZ '{s}'")
 
 
+def _flat(part: str) -> str:
+    return part.replace("/", "_").strip("_")
+
+
 def scratch_dir(*parts: str) -> str:
     """Per-query scratch dir for sink/partition round-trip queries."""
-    d = os.path.join(SCRATCH_ROOT, *[p.replace("/", "_").strip("_") for p in parts])
+    d = os.path.join(SCRATCH_ROOT, *map(_flat, parts))
     os.makedirs(d, exist_ok=True)
     return d
 
 
-def publish_parquet_atomic(df: DataFrame, cache: str) -> None:
-    """Materialize ``df`` into the cache directory ATOMICALLY: write to a
-    unique temp sibling, then rename into place.  Readers key on the
-    ``_SUCCESS`` marker, which only ever appears inside a fully-written
-    directory; two concurrent builders race harmlessly (the loser removes
-    its temp and reads the winner's).  rename() is atomic on one
-    filesystem — the check-then-overwrite pattern it replaces could serve
-    a torn cache to a concurrent session (r13 ADVICE).
+def fixture_cache_dir(sf_dir: str, name: str, salt: str = "") -> str:
+    """Directory of the build-once artifact ``name`` over the fixture at
+    ``sf_dir``: ``SCRATCH_ROOT/name/<sf_dir>/<key>``.  The key digests the
+    path, ``st_mtime_ns`` and size of every parquet file in the fixture
+    plus the caller's version ``salt``, so a rewritten fixture or a
+    changed build lands in a new directory and never reads a stale one.
+    Not created here: :func:`cached_parquet` and :func:`cached_warehouse`
+    build it."""
+    sig = hashlib.md5(salt.encode())
+    for root, dirs, files in os.walk(sf_dir):
+        dirs.sort()
+        for f in sorted(files):
+            if f.endswith(".parquet"):
+                p = os.path.join(root, f)
+                st = os.stat(p)
+                sig.update(f"{p}:{st.st_mtime_ns}:{st.st_size};".encode())
+    return os.path.join(SCRATCH_ROOT, name, _flat(sf_dir), sig.hexdigest()[:16])
+
+
+def _drop_other_keys(cache: str) -> None:
+    """Create ``cache``'s parent and remove every other key of the same
+    name and fixture path (a fixture rewritten on every run would
+    otherwise grow the scratch root without bound).  Entries that start
+    with this key — its in-flight temp directories — stay."""
+    parent, key = os.path.split(cache)
+    os.makedirs(parent, exist_ok=True)
+    for old in os.listdir(parent):
+        if not old.startswith(key):
+            shutil.rmtree(os.path.join(parent, old), ignore_errors=True)
+
+
+def cached_parquet(
+    sf_dir: str, name: str, frame, *partition_by: str, salt: str = ""
+) -> str:
+    """Path of the parquet artifact ``name`` over the fixture at ``sf_dir``;
+    on a miss ``frame()`` is written once and published atomically
+    (:func:`publish_parquet_atomic`).  The directory exists only after the
+    rename, so its existence is the completion mark."""
+    cache = fixture_cache_dir(sf_dir, name, salt)
+    if not os.path.isdir(cache):
+        _drop_other_keys(cache)
+        publish_parquet_atomic(frame(), cache, *partition_by)
+    return cache
+
+
+def cached_warehouse(sf_dir: str, name: str, build):
+    """Catalog over the build-once warehouse ``name`` of the fixture at
+    ``sf_dir``; on a miss ``build(catalog)`` scripts it into an empty
+    warehouse.  A warehouse cannot be renamed into place (its metadata
+    holds absolute locations), so it is built in its keyed directory and
+    the ``.ready`` marker, written last, is the completion mark."""
+    from ..catalog import Catalog
+
+    wh = fixture_cache_dir(sf_dir, name)
+    marker = os.path.join(wh, ".ready")
+    if not os.path.exists(marker):
+        _drop_other_keys(wh)
+        shutil.rmtree(wh, ignore_errors=True)  # a build that did not finish
+        build(Catalog(wh))
+        open(marker, "w").close()
+    return Catalog(wh)
+
+
+def publish_parquet_atomic(df: DataFrame, cache: str, *partition_by: str) -> None:
+    """Materialize ``df`` (partitioned by ``partition_by``) into the
+    directory ``cache`` ATOMICALLY: write to a unique temp sibling, then
+    rename into place, so ``cache`` only ever appears fully written.  Two
+    concurrent writers race harmlessly: the loser removes its temp and
+    reads the winner's.
 
     Only ENOTEMPTY/EEXIST on the rename mean "lost the race" (the winner's
     populated directory is in the way); any other errno — permissions, a
     stray file where the directory should be — is a REAL failure and
-    re-raises instead of silently leaving an empty cache dir for the
-    caller to read with a confusing downstream error (r14 ADVICE).  The
-    publish is verified by asserting ``_SUCCESS`` exists before return."""
-    import errno
-    import shutil
-    import uuid
-
+    re-raises instead of leaving the caller without a cache."""
     tmp = f"{cache}.tmp-{os.getpid()}-{uuid.uuid4().hex[:8]}"
-    df.write.mode("overwrite").parquet(tmp)
-    try:
-        os.rmdir(cache)  # scratch_dir pre-creates it empty
-    except OSError:
-        pass  # non-empty: another builder already published
+    df.write.mode("overwrite").partitionBy(*partition_by).parquet(tmp)
     try:
         os.rename(tmp, cache)
     except OSError as exc:
         shutil.rmtree(tmp, ignore_errors=True)
         if exc.errno not in (errno.ENOTEMPTY, errno.EEXIST):
             raise  # genuine failure, not a concurrent-builder race
-    if not os.path.exists(os.path.join(cache, "_SUCCESS")):
-        raise RuntimeError(
-            f"publish_parquet_atomic: no _SUCCESS in {cache} after publish"
-        )
 
 
 def widen(df: DataFrame, key: str) -> DataFrame:

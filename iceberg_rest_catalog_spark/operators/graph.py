@@ -32,13 +32,11 @@ in-expression iteration vs the unrolled SQL recurrence, hash-compared.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from ..registry import query
-from .common import fixpoint, t
+from .common import cached_parquet, fixpoint, t
 
 ITERS = 10
 DAMPING = 0.85
@@ -595,7 +593,7 @@ BFS_SRC = 0  # source vector (the q_sim_topk / q_sim_ann_ivf query vector)
 BFS_K = 3  # out-degree of the kNN graph (matches q_sim_knn_batch's KNN_K)
 _UNREACHED = 9999  # sentinel > any reachable fixed-round distance
 # Version token for the kNN pair-scoring code path, folded into the durable
-# edge-cache signature (_knn_edge_cache_dir).  Bump on ANY change to how
+# edge-cache key (the salt in _knn_edges).  Bump on ANY change to how
 # candidate pairs are scored/ranked so a scoring fix can never be masked by
 # stale cached edges built under the old path (r14 ADVICE: the cache was
 # keyed only on fixture identity + K, so whichever environment built first
@@ -664,28 +662,6 @@ def _knn_bfs_oracle(iters: int) -> str:
     SELECT node AS vec_id, CAST(dist AS INTEGER) AS dist
     FROM d{iters} WHERE dist < {_UNREACHED} ORDER BY vec_id"""
     )
-
-
-def _knn_edge_cache_dir(sf_dir: str) -> str:
-    """Cache location for the materialized kNN edge list, keyed by the
-    SOURCE FIXTURE's identity (mtime_ns + size of every embeddings
-    parquet part) so a regenerated fixture can never serve stale edges.
-    The q_dedup_index precedent: the edge build is the dominant cost of
-    five graph consumers (94% of q_graph_clustering_coeff's x100 wall),
-    so it is built ONCE per corpus as a parquet table and re-read."""
-    import glob as _glob
-    import hashlib
-
-    from .common import scratch_dir
-
-    src = os.path.join(sf_dir, "embeddings.parquet")
-    parts = sorted(_glob.glob(os.path.join(src, "*.parquet"))) or [src]
-    sig = hashlib.md5()
-    for p in parts:
-        st = os.stat(p)
-        sig.update(f"{p}:{st.st_mtime_ns}:{st.st_size};".encode())
-    sig.update(f"K={BFS_K};SCORING_V={_KNN_SCORING_VERSION}".encode())
-    return scratch_dir("knn_edges", sf_dir, sig.hexdigest()[:16])
 
 
 def _ranked_cells(src, n_cells: int, two_level: bool):
@@ -757,35 +733,41 @@ def _knn_edges(
     from multiple arms (wedge join + degree + anti join).
 
     MATERIALIZED ONCE per corpus (VERDICT r12 item 6): with default
-    knobs the symmetrized edge list is written to a fixture-signature-
-    keyed parquet cache (_knn_edge_cache_dir) on first build and re-read
-    by every later consumer — five operators share one edge build per
-    bench run instead of five.  Explicit knob values (the measurement
-    tools' path) always rebuild live, which also keeps a standalone
-    correctness path."""
-    import math
+    knobs the symmetrized edge list is a build-once parquet artifact of
+    the fixture (common.cached_parquet), salted with BFS_K and
+    _KNN_SCORING_VERSION, and re-read by every later consumer — five
+    operators share one edge build per bench run instead of five.
+    Explicit knob values (the measurement tools' path) always rebuild
+    live, which also keeps a standalone correctness path."""
+    from ..llm.similarity import _dbl, _emb, _norm
 
+    e = _emb(spark, sf_dir).select(
+        "vec_id", _dbl("embedding").alias("emb")
+    ).withColumn("nrm", _norm("emb"))
+    if n_cells is None and two_level is None:
+        cache = cached_parquet(
+            sf_dir, "knn_edges", lambda: _knn_edge_frame(spark, sf_dir, e),
+            salt=f"K={BFS_K};SCORING_V={_KNN_SCORING_VERSION}",
+        )
+        return e, spark.read.parquet(cache)
+    # one build per EXPLICIT-knob caller
+    return e, _knn_edge_frame(spark, sf_dir, e, n_cells, two_level).localCheckpoint()
+
+
+def _knn_edge_frame(spark, sf_dir, e, n_cells=None, two_level=None):
+    """The symmetrized kNN edge frame over the corpus frame ``e``
+    (unmaterialized; see _knn_edges for the knobs)."""
     from pyspark.sql import Window as W
 
     from ..llm.similarity import (
-        N_COARSE_MIN,
         N_PROBE,
-        _cos,
         _dbl,
         _emb,
+        _emb_count,
         _norm,
         assignment_two_level,
         ivf_cells_for,
     )
-    from ..llm.similarity import _emb_count
-
-    cacheable = n_cells is None and two_level is None
-    cache = _knn_edge_cache_dir(sf_dir) if cacheable else None
-    if cacheable and os.path.exists(os.path.join(cache, "_SUCCESS")):
-        e = _emb(spark, sf_dir).select(
-            "vec_id", _dbl("embedding").alias("emb")
-        ).withColumn("nrm", _norm("emb"))
-        return e, spark.read.parquet(cache)
 
     if n_cells is None:
         n = _emb_count(spark, sf_dir)
@@ -803,9 +785,6 @@ def _knn_edges(
     def _ranked(src):
         return _ranked_cells(src, n_cells, two_level)
 
-    e = _emb(spark, sf_dir).select(
-        "vec_id", _dbl("embedding").alias("emb")
-    ).withColumn("nrm", _norm("emb"))
     assigned = _ranked(e).filter(F.col("rn") == 1).select(
         "vec_id", "emb", "nrm", "cell"
     )
@@ -871,21 +850,9 @@ def _knn_edges(
         .filter(F.col("rk") <= BFS_K)
         .select(F.col("q_vec_id").alias("u"), F.col("nn_vec_id").alias("v"))
     )
-    edges = knn.unionAll(
+    return knn.unionAll(
         knn.select(F.col("v").alias("u"), F.col("u").alias("v"))
     ).distinct()
-    if cacheable:
-        # materialize to the fixture-keyed parquet cache: same one-build
-        # cost as the localCheckpoint it replaces, but durable across the
-        # five consumers (and across sessions on one bench box).
-        # ATOMIC PUBLISH (r13 ADVICE): temp-write + rename via the shared
-        # helper — two concurrent sessions previously raced
-        # check-then-build with mode('overwrite') into one directory.
-        from .common import publish_parquet_atomic
-
-        publish_parquet_atomic(edges, cache)
-        return e, spark.read.parquet(cache)
-    return e, edges.localCheckpoint()  # one build per EXPLICIT-knob caller
 
 
 def _knn_bfs(spark, sf_dir):

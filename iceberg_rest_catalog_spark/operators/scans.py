@@ -15,7 +15,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from ..registry import query
-from .common import scratch_dir, t
+from .common import cached_parquet, cached_warehouse, scratch_dir, t
 
 
 @query(
@@ -54,6 +54,16 @@ def q_scan_filter(spark, sf_dir):
     )
 
 
+def _year_partitioned_orders(spark, sf_dir) -> str:
+    """Path of the build-once copy of orders partitioned by o_year, shared
+    by q_scan_partition_prune and q_scan_runtime_filter."""
+    return cached_parquet(
+        sf_dir, "part_orders",
+        lambda: t(spark, sf_dir, "orders").withColumn("o_year", F.year("o_orderdate")),
+        "o_year",
+    )
+
+
 @query(
     "q_scan_partition_prune",
     oracle="""
@@ -68,13 +78,7 @@ def q_scan_partition_prune(spark, sf_dir):
     The read-back plan prunes directories (PartitionFilters: [o_year = 1997]);
     at 100 TB this is the difference between scanning one year and all years.
     """
-    import os
-
-    out = scratch_dir("part_orders", sf_dir)
-    if not os.path.exists(os.path.join(out, "_SUCCESS")):  # idempotent per sf_dir
-        orders = t(spark, sf_dir, "orders").withColumn("o_year", F.year("o_orderdate"))
-        orders.write.mode("overwrite").partitionBy("o_year").parquet(out)
-    back = spark.read.parquet(out)
+    back = spark.read.parquet(_year_partitioned_orders(spark, sf_dir))
     return back.filter(F.col("o_year") == 1997).select(
         "o_orderkey",
         "o_custkey",
@@ -146,19 +150,9 @@ def q_scan_stats_prune(spark, sf_dir):
     O(matching) files, not O(all). The assert pins the pruning (planned
     file set strictly smaller than the full set).
     """
-    import os
+    from ..catalog import NestedField, Schema
 
-    from ..catalog import Catalog, NestedField, Schema
-
-    wh = scratch_dir(sf_dir, "stats_prune")
-    marker = os.path.join(wh, ".ready")
-    cat = Catalog(os.path.join(wh, "warehouse"))
-    if not os.path.exists(marker):
-        import shutil
-
-        shutil.rmtree(wh, ignore_errors=True)
-        os.makedirs(wh, exist_ok=True)
-        cat = Catalog(os.path.join(wh, "warehouse"))
+    def build(cat):
         cat.create_namespace(("db",))
         sch = Schema(
             0,
@@ -177,7 +171,8 @@ def q_scan_stats_prune(spark, sf_dir):
         )
         # range-cluster into 8 files so per-file min/max are disjoint bands
         tbl.append(orders.repartitionByRange(8, "o_totalprice"))
-        open(marker, "w").close()
+
+    cat = cached_warehouse(sf_dir, "stats_prune", build)
     tbl = cat.load_table(("db", "orders_clustered"))
     pred = [("o_totalprice", ">=", 400000.0)]
     planned = tbl.plan_files(column_predicates=pred)
@@ -209,19 +204,9 @@ def q_scan_zorder(spark, sf_dir):
     exactly, so the oracle is the plain fixture filter; pruning
     effectiveness itself is pinned by ``tests/test_catalog_spark.py``.
     """
-    import os
+    from ..catalog import NestedField, Schema
 
-    from ..catalog import Catalog, NestedField, Schema
-
-    wh = scratch_dir(sf_dir, "zorder")
-    marker = os.path.join(wh, ".ready")
-    cat = Catalog(os.path.join(wh, "warehouse"))
-    if not os.path.exists(marker):
-        import shutil
-
-        shutil.rmtree(wh, ignore_errors=True)
-        os.makedirs(wh, exist_ok=True)
-        cat = Catalog(os.path.join(wh, "warehouse"))
+    def build(cat):
         cat.create_namespace(("db",))
         sch = Schema(
             0,
@@ -241,8 +226,8 @@ def q_scan_zorder(spark, sf_dir):
         )
         tbl = tbl.append(li)
         tbl.rewrite_zorder(spark, ["l_orderkey", "l_partkey"], n_files=16)
-        open(marker, "w").close()
-    tbl = cat.load_table(("db", "lineitem_z"))
+
+    tbl = cached_warehouse(sf_dir, "zorder", build).load_table(("db", "lineitem_z"))
     pred = [("l_orderkey", "<=", 1200), ("l_partkey", "<=", 300)]
     return tbl.scan(spark, column_predicates=pred).select(
         "l_orderkey",
@@ -344,22 +329,16 @@ def q_scan_runtime_filter(spark, sf_dir):
     dynamicpruningexpression, so a regression to a full scan fails CI,
     not production.
 
-    Reuses q_scan_partition_prune's idempotent year-partitioned scratch
-    sink for the fact; the year dim (with the is_complete flag
+    Reuses q_scan_partition_prune's build-once year-partitioned orders
+    for the fact; the year dim (with the is_complete flag
     precomputed at prep time — star-schema shape, the flag is DATA, not
     a plan-time literal) is its own tiny parquet, so the DPP benefit
     heuristic sees a cheap build side against the partitioned fact.
     Reference scope: scan planning is the reference's getTable +
     client-side parquet read (tables.go:94-148); runtime pruning is the
     Spark-native upgrade of that path."""
-    import os
 
-    out = scratch_dir("part_orders", sf_dir)
-    if not os.path.exists(os.path.join(out, "_SUCCESS")):
-        orders = t(spark, sf_dir, "orders").withColumn("o_year", F.year("o_orderdate"))
-        orders.write.mode("overwrite").partitionBy("o_year").parquet(out)
-    dim_out = scratch_dir("year_dim_v2", sf_dir)
-    if not os.path.exists(os.path.join(dim_out, "_SUCCESS")):
+    def year_dim():
         yr = (
             t(spark, sf_dir, "orders")
             .groupBy(F.year("o_orderdate").alias("o_year"))
@@ -375,13 +354,18 @@ def q_scan_runtime_filter(spark, sf_dir):
         # in both engines and the subtraction is Sterbenz-exact at these
         # magnitudes (n within 2x of 0.8*avg) — no rounded-share epsilon
         # band (ADVICE r12).
-        yr.join(F.broadcast(avg)).select(
+        return yr.join(F.broadcast(avg)).select(
             "o_year",
             "n",
             (F.col("n") - F.lit(0.8) * F.col("avg_n")).alias("margin"),
-        ).coalesce(1).write.mode("overwrite").parquet(dim_out)
-    back = spark.read.parquet(out)
-    dim = spark.read.parquet(dim_out).filter(F.col("margin") >= 0.0).select("o_year")
+        ).coalesce(1)
+
+    back = spark.read.parquet(_year_partitioned_orders(spark, sf_dir))
+    dim = (
+        spark.read.parquet(cached_parquet(sf_dir, "year_dim", year_dim))
+        .filter(F.col("margin") >= 0.0)
+        .select("o_year")
+    )
     return (
         back.join(F.broadcast(dim), "o_year")
         .groupBy("o_year")

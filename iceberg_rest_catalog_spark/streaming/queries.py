@@ -285,10 +285,8 @@ def q_stream_stateful(spark, sf_dir):
 
 
 def _max_gap_fold(state_tuple, pdfs):
-    """q_stream_transform_state's per-batch state fold — ONE function run
-    by BOTH state-API arms (transformWithStateInPandas and the
-    applyInPandasWithState fallback), module-level so the unit suite can
-    pin its algebra without a streaming harness.  Vectorized: within a
+    """q_stream_transform_state's per-batch state fold, module-level so
+    the unit suite can pin its algebra without a streaming harness.  Vectorized: within a
     batch the gaps are one np.diff over the sorted stamps; only the
     boundary gap touches the carried (last_ts, n, max_gap) state."""
     import numpy as np
@@ -311,30 +309,6 @@ def _max_gap_fold(state_tuple, pdfs):
         last_ts = int(us[-1])
         n += len(us)
     return last_ts, n, max_gap
-
-
-def _tws_available() -> bool:
-    """Probe for Spark 4's native transformWithStateInPandas arm: its
-    Python state server speaks protobuf, so the arm needs the
-    ``protobuf`` package.  ICSB_STREAM_STATE_API=tws|apply overrides the
-    probe so each arm is testable explicitly (VERDICT r11 item 8):
-    forcing ``tws`` without protobuf raises ImportError loudly rather
-    than silently falling back."""
-    forced = os.environ.get("ICSB_STREAM_STATE_API", "").lower()
-    if forced == "apply":
-        return False
-    try:
-        import google.protobuf  # noqa: F401  (state-server wire format)
-
-        return True
-    except ImportError:
-        if forced == "tws":
-            raise ImportError(
-                "ICSB_STREAM_STATE_API=tws forced the native "
-                "transformWithStateInPandas arm, but the protobuf package "
-                "its state server requires is not installed"
-            )
-        return False
 
 
 @query(
@@ -370,16 +344,10 @@ def q_stream_transform_state(spark, sf_dir):
     nondecreasing, so the final state is a plain max — the standard
     upsert-sink collapse (q_stream_upsert's MERGE shape).
 
-    API: prefers Spark 4's ``transformWithStateInPandas`` (ValueState on
-    a StatefulProcessor — the arbitrary-state successor of
-    applyInPandasWithState), whose Python side needs the ``protobuf``
-    package for its state-server wire format; in environments without it
-    (this container) the operator runs the IDENTICAL state fold on
-    ``applyInPandasWithState``.  Both paths share the same per-batch
-    fold function (module-level ``_max_gap_fold``), and the API knob is
-    an import probe overridable via ICSB_STREAM_STATE_API=tws|apply
-    (each arm explicitly testable, VERDICT r11 item 8), so the
-    semantics — and the oracle — are one.
+    API: ``applyInPandasWithState`` folding each batch into the
+    (last_ts, n, max_gap) state with the module-level ``_max_gap_fold``.
+    It runs on every platform; Spark 4's ``transformWithStateInPandas``
+    would need the ``protobuf`` package for its state-server wire format.
 
     Reference scope: no streaming in the reference facade
     (api/router/router.go:9-55); state-API sibling of q_stream_stateful
@@ -408,71 +376,32 @@ def q_stream_transform_state(spark, sf_dir):
     for i, p in enumerate(sorted(_glob.glob(os.path.join(src, "part-*.parquet")))):
         os.utime(p, (1_000_000_000 + i, 1_000_000_000 + i))
 
-    _fold = _max_gap_fold
-    have_tws = _tws_available()
+    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
+
+    def update(key, pdfs, state: GroupState):
+        cur = state.get if state.exists else (None, 0, None)
+        last_ts, n, max_gap = _max_gap_fold(cur, pdfs)
+        state.update((last_ts, n, max_gap))
+        yield pd.DataFrame(
+            {
+                "user_id": [key[0]],
+                "n_events": [n],
+                "max_gap_us": [max_gap],
+            }
+        )
 
     sdf = (
         spark.readStream.schema(ev.schema)
         .option("maxFilesPerTrigger", 1)
         .parquet(src)
     )
-    if have_tws:
-        from pyspark.sql.streaming.stateful_processor import (
-            StatefulProcessor,
-            StatefulProcessorHandle,
-        )
-
-        class MaxGap(StatefulProcessor):
-            def init(self, handle: StatefulProcessorHandle) -> None:
-                self.state = handle.getValueState(
-                    "gapstate", "last_ts long, n long, max_gap long"
-                )
-
-            def handleInputRows(self, key, rows, timerValues):
-                cur = (
-                    self.state.get() if self.state.exists() else (None, 0, None)
-                )
-                last_ts, n, max_gap = _fold(cur, rows)
-                self.state.update((last_ts, n, max_gap))
-                yield pd.DataFrame(
-                    {
-                        "user_id": [key[0]],
-                        "n_events": [n],
-                        "max_gap_us": [max_gap],
-                    }
-                )
-
-            def close(self) -> None:
-                pass
-
-        out = sdf.groupBy("user_id").transformWithStateInPandas(
-            statefulProcessor=MaxGap(),
-            outputStructType="user_id long, n_events long, max_gap_us long",
-            outputMode="Update",
-            timeMode="None",
-        )
-    else:
-        from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-
-        def update(key, pdfs, state: GroupState):
-            cur = state.get if state.exists else (None, 0, None)
-            last_ts, n, max_gap = _fold(cur, pdfs)
-            state.update((last_ts, n, max_gap))
-            yield pd.DataFrame(
-                {
-                    "user_id": [key[0]],
-                    "n_events": [n],
-                    "max_gap_us": [max_gap],
-                }
-            )
-
-        out = sdf.groupBy("user_id").applyInPandasWithState(
-            update,
-            outputStructType="user_id long, n_events long, max_gap_us long",
-            stateStructType="last_ts long, n long, max_gap long",
-            outputMode="update",
-            timeoutConf=GroupStateTimeout.NoTimeout,
-        )
+    out = sdf.groupBy("user_id").applyInPandasWithState(
+        update,
+        outputStructType="user_id long, n_events long, max_gap_us long",
+        stateStructType="last_ts long, n long, max_gap long",
+        outputMode="update",
+        timeoutConf=GroupStateTimeout.NoTimeout,
+    )
     sink = os.path.join(wh, "sink")
     result = _run_foreach_batch(spark, out, "update", sink)
     # upsert-collapse: both features are monotone, the final state is max

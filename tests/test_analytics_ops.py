@@ -467,7 +467,7 @@ def test_ivm_equals_direct_recompute(spark, qs):
         r.o_custkey: (r.n_orders, r.sum_price)
         for r in qs["q_incremental_agg_maintenance"](spark, SF).collect()
     }
-    tbl = _cdc_lineage_table(spark, SF).load_table(("db", "orders_cdc"))
+    tbl = _cdc_lineage_table(spark, SF)
     direct = {
         r.o_custkey: (r.n, round(r.s, 4))
         for r in tbl.df(spark)
@@ -1676,10 +1676,9 @@ def test_orphan_audit_partitions_physical_files(spark, qs):
 
     rows = {r.kind: r for r in qs["q_meta_orphan_files"](spark, SF).collect()}
     assert set(rows) == {"live", "orphan"}
-    from iceberg_rest_catalog_spark.operators.common import scratch_dir
+    from iceberg_rest_catalog_spark.operators.common import fixture_cache_dir
 
-    wh = scratch_dir(SF, "catalog_data", "orphan_files")
-    loc = os.path.join(wh, "db", "orders_o")
+    loc = os.path.join(fixture_cache_dir(SF, "orphan_files"), "db", "orders_o")
     physical = glob.glob(os.path.join(loc, "data", "**", "*.parquet"), recursive=True)
     assert rows["live"].n_files + rows["orphan"].n_files == len(physical)
     assert rows["live"].n_rows == 150 and rows["orphan"].n_rows == 157
@@ -1744,29 +1743,15 @@ def test_max_gap_fold_is_batch_split_invariant():
     assert st == whole
 
 
-def _run_transform_state_arm(spark, qs, arm):
-    import os
-
-    old = os.environ.get("ICSB_STREAM_STATE_API")
-    os.environ["ICSB_STREAM_STATE_API"] = arm
-    try:
-        return {
-            r.user_id: (r.n_events, r.max_gap_us)
-            for r in qs["q_stream_transform_state"](spark, SF).collect()
-        }
-    finally:
-        if old is None:
-            del os.environ["ICSB_STREAM_STATE_API"]
-        else:
-            os.environ["ICSB_STREAM_STATE_API"] = old
-
-
 def test_transform_state_apply_arm(spark, qs):
-    """The applyInPandasWithState fallback arm, forced explicitly: per-user
-    event counts must match the batch table; gaps are positive."""
+    """The applyInPandasWithState operator: per-user event counts must
+    match the batch table; gaps are positive."""
     from iceberg_rest_catalog_spark.io import load_table
 
-    got = _run_transform_state_arm(spark, qs, "apply")
+    got = {
+        r.user_id: (r.n_events, r.max_gap_us)
+        for r in qs["q_stream_transform_state"](spark, SF).collect()
+    }
     expect = {
         r.user_id: r.n
         for r in load_table(spark, SF, "events")
@@ -1778,30 +1763,6 @@ def test_transform_state_apply_arm(spark, qs):
     }
     assert {u: v[0] for u, v in got.items()} == expect
     assert all(v[1] is None or v[1] >= 0 for v in got.values())
-
-
-def test_transform_state_native_arm_matches_fallback(spark, qs):
-    """The native transformWithStateInPandas arm (needs protobuf for its
-    state server; skip-marked where the container lacks it) must produce
-    EXACTLY the fallback arm's answer — the one-semantics contract."""
-    pytest.importorskip("google.protobuf")
-    native = _run_transform_state_arm(spark, qs, "tws")
-    fallback = _run_transform_state_arm(spark, qs, "apply")
-    assert native == fallback
-
-
-def test_transform_state_forcing_tws_without_protobuf_raises(spark, qs):
-    """ICSB_STREAM_STATE_API=tws on a protobuf-less container must raise
-    loudly, never silently fall back (the override exists so each arm is
-    genuinely exercised when forced)."""
-    try:
-        import google.protobuf  # noqa: F401
-
-        pytest.skip("protobuf present: the forced arm would succeed")
-    except ImportError:
-        pass
-    with pytest.raises(ImportError, match="transformWithStateInPandas"):
-        _run_transform_state_arm(spark, qs, "tws")
 
 
 def test_kcore_is_a_fixpoint(spark, qs):
@@ -2767,12 +2728,12 @@ def test_rollback_recovery_end_state(spark, qs):
     """After rollback + corrected re-append: full key range, no poison,
     and the recovery created a lineage fork from snapshot 1."""
     from iceberg_rest_catalog_spark.catalog.catalog import Catalog
-    from iceberg_rest_catalog_spark.operators.common import scratch_dir
+    from iceberg_rest_catalog_spark.operators.common import fixture_cache_dir
 
     rows = qs["q_snapshot_rollback"](spark, SF).collect()
     assert all(r.o_totalprice > 0 for r in rows)
     assert max(r.o_orderkey for r in rows) <= 200 < len(rows) + 100
-    cat = Catalog(scratch_dir(SF, "catalog_data", "rollback"))
+    cat = Catalog(fixture_cache_dir(SF, "rollback"))
     tbl = cat.load_table(("db", "orders_rb"))
     cur = tbl.metadata["current-snapshot-id"]
     chain = [s["snapshot-id"] for s in tbl._ancestors(cur)]
@@ -3735,7 +3696,7 @@ def test_publish_parquet_atomic_race(spark, tmp_path):
     )
 
     cache = str(tmp_path / "cache")
-    os.makedirs(cache, exist_ok=True)  # scratch_dir pre-creates it empty
+    os.makedirs(cache, exist_ok=True)  # an empty target is replaced
     df1 = spark.range(10).withColumnRenamed("id", "v")
     df2 = spark.range(99).withColumnRenamed("id", "v")
     publish_parquet_atomic(df1, cache)
@@ -3743,6 +3704,53 @@ def test_publish_parquet_atomic_race(spark, tmp_path):
     assert os.path.exists(os.path.join(cache, "_SUCCESS"))
     assert spark.read.parquet(cache).count() == 10  # first writer won
     assert not glob.glob(cache + ".tmp-*")  # loser cleaned up its temp
+
+
+def test_build_once_caches_follow_fixture_rewrite(spark, tmp_path, monkeypatch):
+    """A fixture rewritten in place gets fresh build-once inputs: after
+    the odd o_orderkey rows are dropped from orders.parquet, q_time_travel
+    (a cached catalog warehouse) and q_scan_partition_prune (a cached
+    partitioned parquet copy) match their DuckDB oracles on the new data,
+    and the old keys are gone.  A repeat call on an unchanged fixture
+    leaves each cache directory untouched."""
+    import os
+    import shutil
+
+    import duckdb
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+
+    from iceberg_rest_catalog_spark import registry
+    from iceberg_rest_catalog_spark.operators import common
+    from tools.check_queries import norm
+
+    sf = str(tmp_path / "sf")
+    shutil.copytree(SF, sf)
+    monkeypatch.setattr(common, "SCRATCH_ROOT", str(tmp_path / "scratch"))
+    qs, oracles = registry.queries(), registry.oracles()
+    caches = {"q_time_travel": "time_travel", "q_scan_partition_prune": "part_orders"}
+
+    def run_and_compare():
+        con = duckdb.connect()
+        con.execute(
+            f"CREATE VIEW orders AS SELECT * FROM read_parquet('{sf}/orders.parquet')"
+        )
+        stats = {}
+        for name, cache in caches.items():
+            got = norm(qs[name](spark, sf).toPandas())
+            assert got.equals(norm(con.execute(oracles[name]).fetchdf())), name
+            d = common.fixture_cache_dir(sf, cache)
+            assert os.listdir(os.path.dirname(d)) == [os.path.basename(d)], name
+            st = os.stat(d)
+            stats[name] = (st.st_ino, st.st_mtime_ns)
+        return stats
+
+    first = run_and_compare()
+    assert run_and_compare() == first
+    orders = pq.read_table(os.path.join(sf, "orders.parquet"))
+    even = pc.equal(pc.bit_wise_and(orders["o_orderkey"], 1), 0)
+    pq.write_table(orders.filter(even), os.path.join(sf, "orders.parquet"))
+    run_and_compare()
 
 
 # -- round-15 newborns ---------------------------------------------------------

@@ -82,6 +82,21 @@ class TestNamespaceOperations:
         with pytest.raises(E.NoSuchNamespaceException):
             catalog.list_namespaces(("missing_parent",))
 
+    def test_list_skips_directories_that_are_not_levels(self, catalog: Catalog):
+        # a warehouse or namespace directory may hold directories no client
+        # could name (a snapshot dir, a writer's temp dir): listing skips them
+        import os
+
+        if catalog.backend != "fs":
+            pytest.skip("stray directories are a warehouse-layout concept")
+        catalog.create_namespace(("db",))
+        for stray in ((".snapshots",), ("db", ".tmp")):
+            d = os.path.join(catalog.warehouse, *stray)
+            catalog.fio.mkdirs(d)
+            catalog.fio.write_text_atomic(os.path.join(d, "part"), "")
+        assert catalog.list_namespaces() == [("db",)]
+        assert catalog.list_namespaces(("db",)) == []
+
     def test_drop_restrict_semantics(self, catalog: Catalog):
         # reference namespaces.go:131-136 — no cascade
         catalog.create_namespace(("ns1",))

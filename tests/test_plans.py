@@ -443,8 +443,8 @@ def test_pagerank_job_floor(spark):
 def test_only_fixpoint_stages_inside_loops():
     """common.fixpoint is the one place that stages lineage inside a loop.
     Two loops keep their own: _lpa_rounds (q_graph_edge_audit reads every
-    round's staged frame) and _bpe_train (it stages once per driver-side
-    merge batch).  A new hand-written staging loop fails here."""
+    round's staged frame) and _bpe_train (it collects each round's
+    argmax).  A new hand-written staging loop fails here."""
     import ast
     from pathlib import Path
 
@@ -530,6 +530,43 @@ def test_one_table_lifecycle():
     base = public_methods("catalog.py", "Catalog")
     assert {"create_table", "update_table", "rename_table"} <= base
     assert not base & public_methods("sql_catalog.py", "SqlCatalog")
+
+
+def test_one_build_once_cache():
+    """operators/common.py owns the build-once cache of fixture-derived
+    scratch inputs: the key (an md5 over the fixture's file stats) and the
+    completion marks.  A ``.ready`` marker, an existence check on
+    ``_SUCCESS`` or an md5 fixture signature anywhere else in the package
+    is a second cache and fails here."""
+    import ast
+    from pathlib import Path
+
+    import iceberg_rest_catalog_spark
+
+    root = Path(iceberg_rest_catalog_spark.__file__).parent
+    checks = {"exists", "isfile", "isdir", "lexists"}
+    sites = []
+    for path in sorted(root.rglob("*.py")):
+        rel = path.relative_to(root)
+        if rel == Path("operators", "common.py"):
+            continue
+        for node in ast.walk(ast.parse(path.read_text())):
+            if (isinstance(node, ast.Constant) and isinstance(node.value, str)
+                    and node.value.endswith(".ready")):
+                sites.append(f"{rel}:{node.lineno} .ready marker")
+            fn = getattr(node, "func", None)
+            if (isinstance(node, ast.Call)
+                    and getattr(fn, "attr", getattr(fn, "id", None)) in checks
+                    and any(isinstance(c, ast.Constant) and c.value == "_SUCCESS"
+                            for a in node.args for c in ast.walk(a))):
+                sites.append(f"{rel}:{node.lineno} _SUCCESS check")
+            if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                attrs = {(getattr(n.value, "id", None), n.attr)
+                         for n in ast.walk(node) if isinstance(n, ast.Attribute)}
+                if ("hashlib", "md5") in attrs and any(
+                        a == "st_mtime_ns" for _, a in attrs):
+                    sites.append(f"{rel}:{node.lineno} md5 fixture signature")
+    assert not sites, sites
 
 
 def test_warm_pass_compiles_nothing(spark):
