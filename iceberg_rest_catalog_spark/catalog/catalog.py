@@ -43,6 +43,9 @@ NS_MARKER = ".namespace.json"
 #: Joins namespace levels in REST URLs and in the sql backend's keys
 #: (reference models.go:10), so no level may contain it.
 NS_SEP = "\x1f"
+#: The one schema of a position-delete file (what ``_mor_commit`` writes);
+#: reads pass it, so a merge-on-read read runs no schema-inference job.
+POSITION_DELETE_SCHEMA = "file_path string, pos bigint"
 Ident = tuple[str, ...]
 
 
@@ -281,7 +284,9 @@ class Table:
                 os.path.join(self.location, e["path"])
             )
         ddf = (
-            spark.read.parquet(*[os.path.join(self.location, p) for p in deletes])
+            spark.read.schema(POSITION_DELETE_SCHEMA).parquet(
+                *[os.path.join(self.location, p) for p in deletes]
+            )
             if deletes
             else None
         )

@@ -2280,9 +2280,11 @@ def _ecc_oracle() -> str:
       SELECT vec_id AS qid, vec_id AS node, 0 AS dist FROM e
       WHERE vec_id % {SCALED_QSTEP_SQL} = 0)"""
     )
+    # MATERIALIZED: each round reads the one before twice, and an inlined
+    # chain re-evaluates every earlier round (and the kNN edges) per read.
     for k in range(1, ECC_ROUNDS + 1):
         ctes += f""",
-    b{k} AS (
+    b{k} AS MATERIALIZED (
       SELECT qid, node, min(dist) AS dist FROM (
         SELECT qid, node, dist FROM b{k - 1}
         UNION ALL

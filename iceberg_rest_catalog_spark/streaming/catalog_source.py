@@ -36,7 +36,7 @@ import tempfile
 from pyspark.sql import DataFrame, SparkSession
 
 from ..catalog import errors as E
-from ..catalog.catalog import _Visible
+from ..catalog.catalog import POSITION_DELETE_SCHEMA, _Visible
 
 
 class CatalogStreamReader:
@@ -96,7 +96,7 @@ class CatalogStreamReader:
         touched files from the current view."""
         from pyspark.sql import functions as F
 
-        ddf = spark.read.parquet(
+        ddf = spark.read.schema(POSITION_DELETE_SCHEMA).parquet(
             *[os.path.join(tbl.location, p) for p in delete_rel_paths]
         )
         # driver-side bound: O(|files churned this micro-batch|) paths —

@@ -9,9 +9,14 @@ functions are the same in both execution modes, and batch keeps the result
 deterministic for the oracle.
 
 Scale notes: a micro-batch pipeline over 100 TB/day shards by file; state
-(dedup keys, session state, per-user aggregates) lives in the state store
-partitioned by ``spark.sql.shuffle.partitions``; watermarks bound state
-size. The availableNow trigger used here is the standard backfill mode.
+(dedup keys, session state, per-user aggregates) lives in the state store,
+one store per shuffle partition; watermarks bound state size. The
+availableNow trigger used here is the standard backfill mode.
+
+Per-query floor (fixed costs every run pays whatever its rows): the file
+sources take their schema from ``io.parquet_schema`` (inferred once per
+fixture file, not by one Spark job per query), and a run gets
+``min(8, session shuffle partitions)`` state stores (:class:`_state_parallelism`).
 """
 
 from __future__ import annotations
@@ -22,7 +27,7 @@ import shutil
 
 from pyspark.sql import functions as F
 
-from ..io import load_table
+from ..io import load_table, parquet_schema
 from ..operators.common import r4, scratch_dir, t
 from ..registry import query
 
@@ -62,8 +67,7 @@ def _stream_events(spark, sf_dir):
     link = os.path.join(d, "events.parquet")
     if not os.path.exists(link):
         os.symlink(src, link)
-    raw_schema = spark.read.parquet(src).schema
-    sdf = spark.readStream.schema(raw_schema).parquet(d)
+    sdf = spark.readStream.schema(parquet_schema(spark, src)).parquet(d)
     if dict(sdf.dtypes).get("ts") == "bigint":
         sdf = sdf.withColumn("ts", F.expr("timestamp_micros(ts DIV 1000)"))
     else:
@@ -72,20 +76,27 @@ def _stream_events(spark, sf_dir):
 
 
 class _state_parallelism:
-    """Scope a lower shuffle/state parallelism to one streaming run.
+    """Scope one streaming run's state-store count: ``min(8, n)`` for a
+    session with ``n`` shuffle partitions.
 
-    Each stateful partition owns a state-store instance, and store init
-    dominates micro-benchmarks (measured: 1h-window agg 2.2s at 32 stores
-    vs 1.1s at 4). Production sizing: partitions ~ key cardinality / target
-    state per store — fixed at plan time because the checkpoint pins it.
+    Each stateful partition owns a state-store instance, and every store
+    pays its init and a commit per micro-batch whatever its rows (40-50
+    ms a store on local[2]; a 1h-window agg took 2.2 s at 32 stores, 1.1 s
+    at 4). Eight is the cap; a session with fewer shuffle partitions has
+    fewer cores to run stores on and gets one store per partition.
+    Production sizing: partitions ~ key cardinality / target state per
+    store. The count is fixed at plan time: a restart from an existing
+    checkpoint runs with the count stored there, whatever is set here.
     """
 
-    def __init__(self, spark, n: int = 8):
-        self.spark, self.n = spark, str(n)
+    def __init__(self, spark):
+        self.spark = spark
 
     def __enter__(self):
         self.prev = self.spark.conf.get("spark.sql.shuffle.partitions")
-        self.spark.conf.set("spark.sql.shuffle.partitions", self.n)
+        self.spark.conf.set(
+            "spark.sql.shuffle.partitions", str(min(8, int(self.prev)))
+        )
 
     def __exit__(self, *exc):
         self.spark.conf.set("spark.sql.shuffle.partitions", self.prev)
@@ -1121,8 +1132,7 @@ def q_stream_ingest_gate(spark, sf_dir):
         )
         out.write.mode("append").parquet(sink)
 
-    schema = spark.read.parquet(src).schema
-    sdf = spark.readStream.schema(schema).parquet(d)
+    sdf = spark.readStream.schema(parquet_schema(spark, src)).parquet(d)
     with _state_parallelism(spark):
         q = (
             sdf.writeStream.foreachBatch(admit)

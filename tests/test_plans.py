@@ -392,15 +392,16 @@ def _job_count(spark, group, action):
 
 # Spark jobs run while BUILDING each fixpoint-loop query on the tier-1
 # fixture (the eager localCheckpoint and signature actions), counted after
-# a first build has warmed the kNN edge cache.
+# a first build has warmed the kNN edge cache and inferred the fixture
+# schemas (io.parquet_schema), so no fixture load in them runs a job.
 LOOP_BUILD_JOBS = {
-    "q_graph_knn_bfs": 24,
-    "q_graph_kcore": 21,
-    "q_sim_graph_search": 28,
-    "q_graph_eccentricity": 25,
-    "q_graph_cc": 27,
-    "q_dedup_cluster": 31,
-    "q_cluster_dbscan": 53,
+    "q_graph_knn_bfs": 23,
+    "q_graph_kcore": 20,
+    "q_sim_graph_search": 26,
+    "q_graph_eccentricity": 23,
+    "q_graph_cc": 26,
+    "q_dedup_cluster": 30,
+    "q_cluster_dbscan": 52,
 }
 
 
@@ -411,7 +412,7 @@ def test_loop_build_job_floor(spark, name):
 
     The floor is the fewest jobs over three builds: depending on task
     timing, AQE now and then runs one more query-stage job (q_graph_kcore
-    builds in 21 or 22 jobs, with or without common.fixpoint)."""
+    builds in 20 or 21 jobs, with or without common.fixpoint)."""
     fn = registry.queries()[name]
     fn(spark, SF_DIR)  # warm the kNN edge cache
     counts = [
@@ -424,10 +425,11 @@ def test_loop_build_job_floor(spark, name):
 
 def test_pagerank_job_floor(spark):
     """PageRank runs its ten rounds inside one expression over one packed
-    row, so building and running it (to the noop sink) is 8 jobs on the
+    row, so building and running it (to the noop sink) is 7 jobs on the
     tier-1 fixture, whatever ITERS is: the edge build's and packing's
-    query stages. A join-and-aggregate round per iteration ran 25 (24 to
-    build, with its staging every fifth round, plus 1 to run)."""
+    query stages; a fixture load runs no job after the first (its schema
+    is inferred once). A join-and-aggregate round per iteration ran 25
+    (24 to build, with its staging every fifth round, plus 1 to run)."""
     fn = registry.queries()["q_graph_pagerank"]
     counts = []
     for i in range(3):
@@ -437,7 +439,100 @@ def test_pagerank_job_floor(spark):
             spark, group + "_run",
             lambda: df.write.format("noop").mode("overwrite").save())
         counts.append(build + run)
-    assert min(counts) == 8, counts
+    assert min(counts) == 7, counts
+
+
+def _write_ints(path, n):
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    pq.write_table(pa.table({"id": list(range(n))}), str(path))
+
+
+def test_load_table_infers_schema_once(spark, tmp_path):
+    """The first load_table of a file infers its schema (one Spark job);
+    every later load of the same file runs none."""
+    from iceberg_rest_catalog_spark.io import load_table
+
+    _write_ints(tmp_path / "t.parquet", 3)
+    jobs = [_job_count(spark, f"test_load_table_infers_schema_once_{i}",
+                       lambda: load_table(spark, str(tmp_path), "t"))[1]
+            for i in range(3)]
+    assert jobs == [1, 0, 0]
+
+
+def test_schema_cache_sees_a_rewritten_file(spark, tmp_path):
+    """A file rewritten in place (new size and mtime) is inferred again."""
+    import os
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from iceberg_rest_catalog_spark.io import load_table
+
+    path = tmp_path / "t.parquet"
+    _write_ints(path, 3)
+    assert load_table(spark, str(tmp_path), "t").columns == ["id"]
+    st = os.stat(path)
+    pq.write_table(pa.table({"id": [1], "name": ["a"]}), str(path))
+    os.utime(path, ns=(st.st_atime_ns, st.st_mtime_ns + 1_000_000_000))
+    df = load_table(spark, str(tmp_path), "t")
+    assert df.columns == ["id", "name"]
+    assert df.collect()[0].name == "a"
+
+
+def test_schema_cache_keys_on_type_mapping_confs(spark, tmp_path):
+    """A session whose parquet type-mapping confs differ misses the cache."""
+    from iceberg_rest_catalog_spark.io import parquet_schema
+
+    conf = "spark.sql.legacy.parquet.nanosAsLong"
+    path = str(tmp_path / "t.parquet")
+    _write_ints(path, 3)
+    prev = spark.conf.get(conf)
+    try:
+        counts = []
+        for i, value in enumerate(["true", "true", "false", "false"]):
+            spark.conf.set(conf, value)
+            counts.append(_job_count(spark, f"test_schema_cache_confs_{i}",
+                                     lambda: parquet_schema(spark, path))[1])
+    finally:
+        spark.conf.set(conf, prev)
+    assert counts == [1, 0, 1, 0]
+
+
+@pytest.mark.parametrize("n, stores", [(2, "2"), (32, "8")])
+def test_state_parallelism_caps_at_session_partitions(spark, n, stores):
+    """A streaming run gets min(8, shuffle partitions) state stores, and
+    the session's partition count comes back after it."""
+    from iceberg_rest_catalog_spark.streaming.queries import _state_parallelism
+
+    conf = "spark.sql.shuffle.partitions"
+    prev = spark.conf.get(conf)
+    try:
+        spark.conf.set(conf, str(n))
+        with _state_parallelism(spark):
+            assert spark.conf.get(conf) == stores
+        assert spark.conf.get(conf) == str(n)
+    finally:
+        spark.conf.set(conf, prev)
+
+
+def test_merge_on_read_plan_runs_no_job(spark, tmp_path):
+    """Position-delete files are read under their one known schema, so
+    building a read over pending deletes runs no Spark job."""
+    from iceberg_rest_catalog_spark.catalog import Catalog, NestedField, Schema
+
+    cat = Catalog(str(tmp_path / "warehouse"))
+    cat.create_namespace(("db",))
+    t = cat.create_table(("db", "t"), Schema(0, [
+        NestedField(1, "id", "long", required=False)]))
+    t = t.append(spark.range(10)).delete_where(spark, "id >= 7", mode="merge-on-read")
+    cand, dels = t._plan_entries()
+    assert dels
+    df, jobs = _job_count(spark, "test_merge_on_read_plan_runs_no_job",
+                          lambda: t._read_entries(spark, cand, dels))
+    assert jobs == 0
+    assert sorted(r.id for r in df.collect()) == list(range(7))
 
 
 def test_only_fixpoint_stages_inside_loops():
@@ -566,6 +661,32 @@ def test_one_build_once_cache():
                 if ("hashlib", "md5") in attrs and any(
                         a == "st_mtime_ns" for _, a in attrs):
                     sites.append(f"{rel}:{node.lineno} md5 fixture signature")
+    assert not sites, sites
+
+
+def test_one_schema_inference_site():
+    """io.parquet_schema infers each fixture file's schema once; a
+    ``spark.read.parquet(...).schema`` anywhere else in the package pays
+    one Spark job per call and fails here."""
+    import ast
+    from pathlib import Path
+
+    import iceberg_rest_catalog_spark
+
+    root = Path(iceberg_rest_catalog_spark.__file__).parent
+    sites = []
+    for path in sorted(root.rglob("*.py")):
+        rel = path.relative_to(root)
+        if rel == Path("io.py"):
+            continue
+        for node in ast.walk(ast.parse(path.read_text())):
+            call = getattr(node, "value", None)
+            fn = getattr(call, "func", None)
+            if (isinstance(node, ast.Attribute) and node.attr == "schema"
+                    and isinstance(call, ast.Call)
+                    and isinstance(fn, ast.Attribute) and fn.attr == "parquet"
+                    and getattr(fn.value, "attr", None) == "read"):
+                sites.append(f"{rel}:{node.lineno}")
     assert not sites, sites
 
 
