@@ -29,10 +29,13 @@ _TO_SPARK = {
     # time has no Spark type: stored as long micros + metadata tag
     "time": T.LongType(),
 }
+# Keyed by ``DataType.simpleString()``; Iceberg has no 8/16-bit ints, so
+# tinyint and smallint widen to int.
 _FROM_SPARK = {
     "boolean": "boolean",
-    "integer": "int",
-    "long": "long",
+    "tinyint": "int",
+    "smallint": "int",
+    "int": "int",
     "bigint": "long",
     "float": "float",
     "double": "double",
@@ -114,7 +117,9 @@ class Schema:
             tname = f.dataType.simpleString()
             if tname.startswith("decimal"):
                 ice_t = tname  # decimal(p,s) identical spelling
+            elif tname in _FROM_SPARK:
+                ice_t = _FROM_SPARK[tname]
             else:
-                ice_t = _FROM_SPARK.get(tname, "string")
+                raise ValueError(f"no Iceberg type for Spark {tname} (field {f.name!r})")
             fields.append(NestedField(fid, f.name, ice_t, required=not f.nullable))
         return cls(schema_id, fields)

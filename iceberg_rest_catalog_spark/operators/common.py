@@ -201,8 +201,8 @@ def release_persistent_state(spark: SparkSession) -> int:
 
     SIDE EFFECT (r16-OPT, flagged by r16 ADVICE): this also DROPS every
     ``icsb_stream_*`` memory-sink temp view.  A caller still holding an
-    unconsumed DataFrame returned by a ``_run_memory``-based streaming
-    query (``spark.table(name)`` is lazy) will hit
+    unconsumed DataFrame read from a streaming query's memory sink
+    (``spark.table(name)`` is lazy) will hit
     TABLE_OR_VIEW_NOT_FOUND on first use after the release — fully
     consume (collect / write) memory-sink results before calling this.
     Every in-repo call site does; the constraint is part of the
@@ -223,7 +223,7 @@ def release_persistent_state(spark: SparkSession) -> int:
     pay per call, hence the separate deep variant."""
     spark.catalog.clearCache()
     # Memory-sink temp views leak the same way (r16-OPT): every
-    # _run_memory streaming drain registers a fresh icsb_stream_<uid>
+    # memory-sink streaming drain registers a fresh icsb_stream_<uid>
     # view whose MemorySink holds the ENTIRE drained result in memory and
     # is referenced by the catalog forever — across a 102-query x 4-pass
     # suite that is dozens of full stream-join results resident at once,

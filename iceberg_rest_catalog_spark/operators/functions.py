@@ -426,7 +426,8 @@ def q_fn_variant(spark, sf_dir):
     "q_fn_regexp",
     oracle="""
     SELECT doc_id,
-           coalesce(array_to_string(regexp_extract_all(text, '[0-9]+'), ','), '') AS nums,
+           coalesce(array_to_string(regexp_extract_all(text, '[0-9]+'), ','),
+                    CASE WHEN text IS NOT NULL THEN '' END) AS nums,
            CAST(len(regexp_extract_all(text, '[a-z]+')) AS INTEGER) AS n_words,
            regexp_replace(text, '[aeiou]', '', 'g')            AS no_vowels,
            regexp_matches(text, '[0-9]')                       AS has_digit,
@@ -443,9 +444,9 @@ def q_fn_regexp(spark, sf_dir):
     subset where Java regex (Spark) and RE2 (DuckDB) agree; DuckDB's
     regexp_replace needs the explicit 'g' flag to match Spark's
     always-global semantics, and its array_to_string yields NULL on an
-    empty array where Spark's array_join yields '' (coalesced in the
-    oracle).  All map-only, whole-stage codegen'd —
-    no Python.
+    empty array where Spark's array_join yields '' (the oracle coalesces
+    to '' only for non-NULL text: NULL text stays NULL on both engines).
+    All map-only, whole-stage codegen'd — no Python.
 
     Reference scope: no expression surface in the reference (Go metadata
     facade, api/router/router.go:9-55); [CAP] row alongside q_fn_string."""

@@ -610,11 +610,13 @@ def _knn_edges_ctes() -> str:
     {BFS_K}-NN graph of the embedding corpus under the IVF cell-join
     shape, with the scale-knob cell count computed from count(*)
     (similarity.SCALED_CELLS_SQL) — the exact twin of the
-    ivf_cells_for(count) the registered Spark queries pass.  Used by
-    q_graph_knn_bfs and q_graph_jaccard_neighbors.  Since round 10 the
-    assignment block is the BRANCH-GUARDED ivf_ranked_ctes (flat below
-    ASSIGN_FLAT_MAX vectors, two-level above) — the exact twin of the
-    assignment_two_level knob the Spark _knn_edges takes."""
+    ivf_cells_for(count) the registered Spark queries pass.  Since round
+    10 the assignment block is the BRANCH-GUARDED ivf_ranked_ctes (flat
+    below ASSIGN_FLAT_MAX vectors, two-level above) — the exact twin of
+    the assignment_two_level knob the Spark _knn_edges takes.  ``edges``
+    is MATERIALIZED: DuckDB otherwise inlines it at every reference, and
+    the round-unrolled oracles reference it once per round, so the kNN
+    build would rerun in every round."""
     from ..llm.similarity import N_PROBE, ivf_ranked_ctes
 
     return ivf_ranked_ctes(None) + f""",
@@ -631,7 +633,8 @@ def _knn_edges_ctes() -> str:
                  ORDER BY cos DESC, nn_vec_id) AS rk
         FROM kscore
       ) WHERE rk <= {BFS_K}),
-    edges AS (SELECT u, v FROM knn UNION SELECT v AS u, u AS v FROM knn)"""
+    edges AS MATERIALIZED (
+      SELECT u, v FROM knn UNION SELECT v AS u, u AS v FROM knn)"""
 
 
 def _knn_bfs_oracle(iters: int) -> str:

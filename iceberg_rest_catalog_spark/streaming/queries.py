@@ -1,78 +1,137 @@
 """Streaming queries (SURVEY §2.B streaming rows).
 
-Four ops run a REAL Structured Streaming query (file source over the events
-parquet, ``availableNow`` trigger, memory / foreachBatch sink) and return
-the materialized batch result; the driver can collect it like any other
-DataFrame. Sliding and session windows use the identical ``window()`` /
-``session_window()`` functions in batch mode — Spark's semantics for these
-functions are the same in both execution modes, and batch keeps the result
-deterministic for the oracle.
+Most ops here run a REAL Structured Streaming query and return its
+drained result as a batch DataFrame a caller collects like any other.
+Each is built from the same few pieces:
+
+* a source: the fixture file itself (:func:`_fixture_stream`), a catalog
+  table (``catalog_source.CatalogStreamReader``) or a replay of a derived
+  frame, one micro-batch per file (:func:`_replay`);
+* one runner, :func:`_drain`: ``availableNow`` trigger, memory or
+  ``foreachBatch`` sink, state stores scoped by :class:`_state_parallelism`;
+* for the catalog sinks, a scratch table typed like the frame it receives
+  (:func:`_sink_table`).
+
+Sliding and session windows use the identical ``window()`` /
+``session_window()`` functions in batch mode: Spark's semantics for these
+functions are the same in both execution modes, and batch keeps the
+result deterministic for the oracle.
 
 Scale notes: a micro-batch pipeline over 100 TB/day shards by file; state
 (dedup keys, session state, per-user aggregates) lives in the state store,
 one store per shuffle partition; watermarks bound state size. The
 availableNow trigger used here is the standard backfill mode.
 
-Per-query floor (fixed costs every run pays whatever its rows): the file
-sources take their schema from ``io.parquet_schema`` (inferred once per
-fixture file, not by one Spark job per query), and a run gets
-``min(8, session shuffle partitions)`` state stores (:class:`_state_parallelism`).
+Per-query floor (fixed costs every run pays whatever its rows): the
+fixture sources take their schema from ``io.parquet_schema`` (inferred
+once per fixture file, not by one Spark job per query), and a run gets
+``min(8, session shuffle partitions)`` state stores.
 """
 
 from __future__ import annotations
 
+import glob
 import itertools
 import os
 import shutil
 
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
-from ..io import load_table, parquet_schema
+from ..io import parquet_schema
 from ..operators.common import r4, scratch_dir, t
 from ..registry import query
 
 _uid = itertools.count()
 
-# Micro-batches per replayed stream for the stateful ops whose declared
-# result is SPLIT-INVARIANT (associative folds / monotone update-mode
-# emissions: topk, bitmap_distinct, velocity, transform_state).  Was 4
-# through r16; r17 (VERDICT items 4-5): each availableNow micro-batch pays
-# a fixed floor of planning + state-store checkpoint + sink commit (~0.8-1 s
-# at sf0.1 — the measured r16 "streaming floor": topk drained 5 batches in
-# 4.0 s over only 100k rows), so replaying the SAME fixture through 4
-# batches instead of 2 buys nothing but 2 extra floors.  Two batches keep
-# everything these ops exist to demonstrate — state crossing a micro-batch
-# boundary, cross-batch monotone emissions, crash-resume between batches —
-# and the final results are bit-identical at ANY split by construction
-# (each op's docstring states the invariance argument; the batch oracles
-# never see the split).  NOT applied to ops whose batch structure is
-# semantic: q_stream_late_audit / q_stream_drift_psi (the oracle mirrors
-# the ntile replay), q_stream_dim_join (dim updates between batches),
-# q_stream_catalog_sink (per-batch commit lineage).  At 100 TB batch count
-# is workload-driven (file arrival rate), not this harness constant.
+# Micro-batches per replayed stream for the ops whose declared result is
+# split-invariant: associative folds and monotone update-mode emissions
+# (transform_state, velocity, bitmap_distinct, topk, topk_bounded, hll,
+# kmv; each docstring gives its argument, and the batch oracles never see
+# the split).  Every micro-batch pays a fixed floor (planning, a state
+# store commit, a sink commit), and two batches already carry state across
+# a batch boundary, which is what these ops exist to show.  Ops whose
+# batch structure is part of the answer keep their own count: late_audit
+# and drift_psi (the oracle mirrors the ntile split), dim_join (dim
+# updates between batches), catalog_sink (one commit per batch), wap (one
+# poison batch among clean ones) and upsert (two ordered waves).
 REPLAY_SPLITS = 2
+
+# mtime of replay file i is _REPLAY_MTIME + i: the file source orders
+# micro-batches by mtime
+_REPLAY_MTIME = 1_000_000_000
+
+
+def _fresh_dir(sf_dir, name: str) -> str:
+    """Empty per-run scratch directory ``name``."""
+    d = scratch_dir(sf_dir, name)
+    shutil.rmtree(d)
+    os.makedirs(d)
+    return d
+
+
+def _fixture_stream(spark, sf_dir, table: str):
+    """readStream over the fixture file ``<table>.parquet``.
+
+    The file source wants a directory, so the file is exposed through a
+    scratch dir via symlink (testdata stays untouched); its schema comes
+    from ``io.parquet_schema``."""
+    src = os.path.join(sf_dir, f"{table}.parquet")
+    d = scratch_dir(sf_dir, f"stream_src_{table}")
+    link = os.path.join(d, f"{table}.parquet")
+    if not os.path.exists(link):
+        os.symlink(src, link)
+    return spark.readStream.schema(parquet_schema(spark, src)).parquet(d)
 
 
 def _stream_events(spark, sf_dir):
-    """readStream over events.parquet with the same ts normalization as the
-    batch loader (INT64 nanos; io.load_table docstring).
-
-    The file source wants a directory, so the single fixture file is exposed
-    through a scratch dir via symlink (testdata stays untouched). Event time
+    """The events fixture as a stream, with the same ts normalization as
+    the batch loader (INT64 nanos; io.load_table docstring).  Event time
     is TIMESTAMP (LTZ): watermarks reject TIMESTAMP_NTZ; with the session
     timezone pinned to UTC the rendered values equal the batch NTZ ones.
     """
-    src = os.path.join(sf_dir, "events.parquet")
-    d = scratch_dir(sf_dir, "stream_src")
-    link = os.path.join(d, "events.parquet")
-    if not os.path.exists(link):
-        os.symlink(src, link)
-    sdf = spark.readStream.schema(parquet_schema(spark, src)).parquet(d)
+    sdf = _fixture_stream(spark, sf_dir, "events")
     if dict(sdf.dtypes).get("ts") == "bigint":
-        sdf = sdf.withColumn("ts", F.expr("timestamp_micros(ts DIV 1000)"))
-    else:
-        sdf = sdf.withColumn("ts", F.col("ts").cast("timestamp"))
-    return sdf
+        return sdf.withColumn("ts", F.expr("timestamp_micros(ts DIV 1000)"))
+    return sdf.withColumn("ts", F.col("ts").cast("timestamp"))
+
+
+def _replay(frame, batch, src: str):
+    """Write ``frame`` under ``src`` as a replay source and return the file
+    stream over it that reads one file per micro-batch.
+
+    One partitioned write leaves one file per value ``i`` of the ``batch``
+    column, renamed to ``part-{i:05d}.parquet`` with mtimes ascending in
+    ``i``, so micro-batches replay in batch order.  Each batch value must
+    come from a single task of ``frame``: ``spark_partition_id()`` does by
+    construction, an ntile needs a repartition on it.  A batch that lands
+    as any number of files but one (a split task, or
+    ``spark.sql.files.maxRecordsPerFile`` set) raises.  Files already in
+    ``src`` stay, so a later call with new batch values adds files that a
+    checkpointed stream has not read yet."""
+    tmp = src + "_build"
+    frame.withColumn("_batch", batch).write.mode("overwrite").partitionBy(
+        "_batch"
+    ).parquet(tmp)
+    os.makedirs(src, exist_ok=True)
+    for d in glob.glob(os.path.join(tmp, "_batch=*")):
+        i = int(d.rsplit("=", 1)[1])
+        parts = glob.glob(os.path.join(d, "*.parquet"))
+        if len(parts) != 1:
+            raise RuntimeError(
+                f"replay batch {i}: expected exactly 1 parquet file, got "
+                f"{len(parts)} (batch split across tasks, or "
+                f"maxRecordsPerFile set)"
+            )
+        dst = os.path.join(src, f"part-{i:05d}.parquet")
+        os.replace(parts[0], dst)
+        os.utime(dst, (_REPLAY_MTIME + i, _REPLAY_MTIME + i))
+    shutil.rmtree(tmp)
+    return (
+        frame.sparkSession.readStream.schema(frame.schema)
+        .option("maxFilesPerTrigger", 1)
+        .parquet(src)
+    )
 
 
 class _state_parallelism:
@@ -102,43 +161,43 @@ class _state_parallelism:
         self.spark.conf.set("spark.sql.shuffle.partitions", self.prev)
 
 
-def _run_memory(spark, sdf, mode: str, with_progress: bool = False):
-    """Execute a streaming DF to completion into a memory sink; return the
-    result as a batch DataFrame.  with_progress=True also returns the
-    query's progress events (one per micro-batch) so callers whose oracle
-    hard-codes batch structure can assert it loudly (r14 ADVICE)."""
-    name = f"icsb_stream_{next(_uid)}"
-    with _state_parallelism(spark):
-        q = (
-            sdf.writeStream.format("memory")
-            .queryName(name)
-            .outputMode(mode)
-            .trigger(availableNow=True)
-            .start()
-        )
+def _drain(sdf, mode: str = "append", each=None, checkpoint=None):
+    """Run ``sdf`` to completion under the ``availableNow`` trigger, inside
+    :class:`_state_parallelism`, and return the finished query.
+
+    ``each`` is the ``foreachBatch`` function; without one the rows land
+    in the memory table ``spark.table(q.name)``.  With ``checkpoint`` a
+    rerun resumes where a crashed run stopped; a failed run raises."""
+    w = sdf.writeStream.outputMode(mode)
+    if each is None:
+        w = w.format("memory").queryName(f"icsb_stream_{next(_uid)}")
+    else:
+        w = w.foreachBatch(each)
+    if checkpoint is not None:
+        w = w.option("checkpointLocation", checkpoint)
+    with _state_parallelism(sdf.sparkSession):
+        q = w.trigger(availableNow=True).start()
         q.awaitTermination()
-        progress = list(q.recentProgress)
-    if with_progress:
-        return spark.table(name), progress
-    return spark.table(name)
+    return q
 
 
-def _run_foreach_batch(spark, sdf, mode: str, sink: str):
-    """Execute a streaming DF via foreachBatch into a parquet scratch sink
-    (the pattern for sinks/modes the memory sink does not support)."""
-    if os.path.exists(sink):
-        shutil.rmtree(sink)
-    with _state_parallelism(spark):
-        q = (
-            sdf.writeStream.foreachBatch(
-                lambda df, _id: df.write.mode("append").parquet(sink)
-            )
-            .outputMode(mode)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    return spark.read.parquet(sink)
+def _append_to(sink: str):
+    """foreachBatch function appending every micro-batch to parquet at
+    ``sink``."""
+    return lambda df, _id: df.write.mode("append").parquet(sink)
+
+
+def _sink_table(wh: str, name: str, frame):
+    """Create the empty table ``db.<name>`` in a new catalog under ``wh``,
+    typed like ``frame`` with every field optional; return the catalog
+    and the table identifier."""
+    from ..catalog import Catalog, Schema
+
+    cat = Catalog(os.path.join(wh, "warehouse"))
+    cat.create_namespace(("db",))
+    st = T.StructType([T.StructField(f.name, f.dataType) for f in frame.schema])
+    cat.create_table(("db", name), Schema.from_spark(st))
+    return cat, ("db", name)
 
 
 @query(
@@ -156,7 +215,7 @@ def q_stream_tumbling(spark, sf_dir):
     agg = sdf.groupBy(F.window("ts", "1 hour"), "event_type").agg(
         F.count("*").alias("n")
     )
-    out = _run_memory(spark, agg, "complete")
+    out = spark.table(_drain(agg, "complete").name)
     return out.select(
         F.col("window.start").cast("string").alias("window_start"), "event_type", "n"
     )
@@ -238,7 +297,7 @@ def q_stream_watermark(spark, sf_dir):
     agg = sdf.groupBy(F.window("ts", "1 hour")).agg(
         F.count("*").alias("n"), r4(F.sum("value")).alias("total")
     )
-    out = _run_memory(spark, agg, "complete")
+    out = spark.table(_drain(agg, "complete").name)
     return out.select(
         F.col("window.start").cast("string").alias("window_start"), "n", "total"
     )
@@ -256,7 +315,7 @@ def q_stream_dedup(spark, sf_dir):
     standard exactly-once repair for at-least-once sources."""
     sdf = _stream_events(spark, sf_dir).withWatermark("ts", "1 hour")
     deduped = sdf.dropDuplicates(["event_id"]).select("event_id", "event_type")
-    return _run_memory(spark, deduped, "append")
+    return spark.table(_drain(deduped).name)
 
 
 @query(
@@ -291,8 +350,9 @@ def q_stream_stateful(spark, sf_dir):
         outputMode="update",
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
-    sink = scratch_dir(sf_dir, "stream_stateful")
-    return _run_foreach_batch(spark, stateful, "update", sink)
+    sink = _fresh_dir(sf_dir, "stream_stateful")
+    _drain(stateful, "update", _append_to(sink))
+    return spark.read.parquet(sink)
 
 
 def _max_gap_fold(state_tuple, pdfs):
@@ -364,14 +424,9 @@ def q_stream_transform_state(spark, sf_dir):
     (api/router/router.go:9-55); state-API sibling of q_stream_stateful
     (applyInPandasWithState running totals) and q_stream_session_features
     (session_window)."""
-    import glob as _glob
-
     import pandas as pd
 
-    wh = scratch_dir(sf_dir, "stream_transform_state")
-    shutil.rmtree(wh, ignore_errors=True)
-    src = os.path.join(wh, "src")
-
+    wh = _fresh_dir(sf_dir, "stream_transform_state")
     ev = (
         t(spark, sf_dir, "events")
         .filter(F.col("user_id").isNotNull())
@@ -379,13 +434,14 @@ def q_stream_transform_state(spark, sf_dir):
             "event_id", "user_id", F.col("ts").cast("timestamp").alias("ts")
         )
     )
-    # time-ordered micro-batches: range-split on ts, mtimes ascending in
-    # range order (part file names follow the range partition order);
-    # REPLAY_SPLITS batches — the gap fold is split-invariant (state
-    # carries last_ts across every boundary), see the constant's rationale
-    ev.repartitionByRange(REPLAY_SPLITS, "ts").write.mode("overwrite").parquet(src)
-    for i, p in enumerate(sorted(_glob.glob(os.path.join(src, "part-*.parquet")))):
-        os.utime(p, (1_000_000_000 + i, 1_000_000_000 + i))
+    # time-ordered micro-batches: range partition i holds the i-th ts
+    # range; the gap fold is split-invariant (state carries last_ts across
+    # every boundary)
+    sdf = _replay(
+        ev.repartitionByRange(REPLAY_SPLITS, "ts"),
+        F.spark_partition_id(),
+        os.path.join(wh, "src"),
+    )
 
     from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
@@ -401,11 +457,6 @@ def q_stream_transform_state(spark, sf_dir):
             }
         )
 
-    sdf = (
-        spark.readStream.schema(ev.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
-    )
     out = sdf.groupBy("user_id").applyInPandasWithState(
         update,
         outputStructType="user_id long, n_events long, max_gap_us long",
@@ -414,12 +465,91 @@ def q_stream_transform_state(spark, sf_dir):
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
     sink = os.path.join(wh, "sink")
-    result = _run_foreach_batch(spark, out, "update", sink)
+    _drain(out, "update", _append_to(sink))
+    result = spark.read.parquet(sink)
     # upsert-collapse: both features are monotone, the final state is max
     return result.groupBy("user_id").agg(
         F.max("n_events").alias("n_events"),
         F.max("max_gap_us").alias("max_gap_us"),
     )
+
+
+def _join_sides(sdf):
+    """The purchase and click sides of the stream-stream joins over one
+    event stream, each watermarked 2 hours."""
+    purchases = (
+        sdf.filter(F.col("event_type") == "purchase")
+        .select(
+            F.col("event_id").alias("purchase_id"),
+            "user_id",
+            F.col("ts").alias("purchase_ts"),
+        )
+        .withWatermark("purchase_ts", "2 hours")
+    )
+    clicks = (
+        sdf.filter(F.col("event_type") == "click")
+        .select(
+            F.col("event_id").alias("click_id"),
+            F.col("user_id").alias("c_user_id"),
+            F.col("ts").alias("click_ts"),
+        )
+        .withWatermark("click_ts", "2 hours")
+    )
+    return purchases, clicks
+
+
+def _join(sides, how: str):
+    """Each purchase joined to the same user's clicks in the hour before."""
+    purchases, clicks = sides
+    return purchases.join(
+        clicks,
+        F.expr(
+            """user_id = c_user_id
+               AND click_ts >= purchase_ts - INTERVAL 1 HOUR
+               AND click_ts <= purchase_ts"""
+        ),
+        how,
+    )
+
+
+def _sentinel_join_sides(spark, sf_dir, name: str):
+    """:func:`_join_sides` over the purchases and clicks plus one
+    far-future sentinel row per side at max ts + 4h and again at + 8h, past
+    the 2h watermark delay, so the final watermark clears every real row
+    and the outer joins emit their whole NULL-padded tail (see
+    q_stream_join_outer).  Sentinels carry negative event_ids and
+    user_ids: they never equi-match a real row, and callers filter them
+    from the drained result by event_id.  The source is ONE micro-batch
+    (no maxFilesPerTrigger), so no real row arrives behind a watermark
+    another real row has already moved."""
+    ev = (
+        t(spark, sf_dir, "events")
+        .filter(F.col("event_type").isin("purchase", "click"))
+        .select(
+            "event_id",
+            "user_id",
+            "event_type",
+            F.col("ts").cast("timestamp").alias("ts"),
+        )
+    )
+    mx = ev.agg(F.max("ts")).collect()[0][0]  # bounded 1-row pull
+    sentinels = spark.createDataFrame(
+        [
+            (-10, -1, "purchase", 4),
+            (-9, -2, "click", 4),
+            (-20, -1, "purchase", 8),
+            (-19, -2, "click", 8),
+        ],
+        "event_id long, user_id long, event_type string, h int",
+    ).select(
+        "event_id",
+        "user_id",
+        "event_type",
+        (F.lit(mx) + F.expr("INTERVAL 1 HOUR") * F.col("h")).alias("ts"),
+    )
+    src = os.path.join(_fresh_dir(sf_dir, name), "src")
+    ev.unionByName(sentinels).write.parquet(src)
+    return _join_sides(spark.readStream.schema(ev.schema).parquet(src))
 
 
 @query(
@@ -439,41 +569,14 @@ def q_stream_join(spark, sf_dir):
     evicts rows older than the time bound — the join state stays O(window),
     not O(stream). Drained with availableNow, the result equals the batch
     join (oracle)."""
-    purchases = (
-        _stream_events(spark, sf_dir)
-        .filter(F.col("event_type") == "purchase")
-        .select(
-            F.col("event_id").alias("purchase_id"),
-            "user_id",
-            F.col("ts").alias("purchase_ts"),
-        )
-        .withWatermark("purchase_ts", "2 hours")
-    )
-    clicks = (
-        _stream_events(spark, sf_dir)
-        .filter(F.col("event_type") == "click")
-        .select(
-            F.col("event_id").alias("click_id"),
-            F.col("user_id").alias("c_user_id"),
-            F.col("ts").alias("click_ts"),
-        )
-        .withWatermark("click_ts", "2 hours")
-    )
-    joined = purchases.join(
-        clicks,
-        F.expr(
-            """user_id = c_user_id
-               AND click_ts >= purchase_ts - INTERVAL 1 HOUR
-               AND click_ts <= purchase_ts"""
-        ),
-    ).select(
+    joined = _join(_join_sides(_stream_events(spark, sf_dir)), "inner").select(
         "purchase_id",
         "click_id",
         "user_id",
         F.col("purchase_ts").cast("string").alias("purchase_ts"),
         F.col("click_ts").cast("string").alias("click_ts"),
     )
-    return _run_memory(spark, joined, "append")
+    return spark.table(_drain(joined).name)
 
 
 @query(
@@ -518,68 +621,8 @@ def q_stream_join_outer(spark, sf_dir):
     Reference scope: no streaming in the reference facade
     (api/router/router.go:9-55); watermark-eviction sibling of
     q_stream_join (inner) and q_stream_watermark (late-row drop)."""
-    wh = scratch_dir(sf_dir, "stream_join_outer")
-    shutil.rmtree(wh, ignore_errors=True)
-    src = os.path.join(wh, "src")
-
-    ev = (
-        t(spark, sf_dir, "events")
-        .filter(F.col("event_type").isin("purchase", "click"))
-        .select(
-            "event_id",
-            "user_id",
-            "event_type",
-            F.col("ts").cast("timestamp").alias("ts"),
-        )
-    )
-    mx = ev.agg(F.max("ts")).collect()[0][0]  # bounded 1-row pull
-
-    def _sentinel(hours: int, base: int):
-        return spark.createDataFrame(
-            [
-                (base, -1, "purchase"),
-                (base + 1, -2, "click"),
-            ],
-            "event_id long, user_id long, event_type string",
-        ).select(
-            "event_id",
-            "user_id",
-            "event_type",
-            (F.lit(mx) + F.expr(f"INTERVAL {hours} HOURS")).alias("ts"),
-        )
-
-    ev.unionByName(_sentinel(4, -10)).unionByName(_sentinel(8, -20)).write.mode(
-        "overwrite"
-    ).parquet(src)
-
-    sdf = spark.readStream.schema(ev.schema).parquet(src)
-    purchases = (
-        sdf.filter(F.col("event_type") == "purchase")
-        .select(
-            F.col("event_id").alias("purchase_id"),
-            "user_id",
-            F.col("ts").alias("purchase_ts"),
-        )
-        .withWatermark("purchase_ts", "2 hours")
-    )
-    clicks = (
-        sdf.filter(F.col("event_type") == "click")
-        .select(
-            F.col("event_id").alias("click_id"),
-            F.col("user_id").alias("c_user_id"),
-            F.col("ts").alias("click_ts"),
-        )
-        .withWatermark("click_ts", "2 hours")
-    )
-    joined = purchases.join(
-        clicks,
-        F.expr(
-            """user_id = c_user_id
-               AND click_ts >= purchase_ts - INTERVAL 1 HOUR
-               AND click_ts <= purchase_ts"""
-        ),
-        "leftOuter",
-    ).select(
+    sides = _sentinel_join_sides(spark, sf_dir, "stream_join_outer")
+    joined = _join(sides, "leftOuter").select(
         "purchase_id",
         "click_id",
         "user_id",
@@ -592,9 +635,7 @@ def q_stream_join_outer(spark, sf_dir):
     # NULL-able on real purchases and NULL never matches a click, so a
     # NULL-user purchase is a legitimate unmatched row the batch LEFT
     # JOIN keeps (caught by tools/perturbed_check.py's NULL injection)
-    return _run_memory(spark, joined, "append").filter(
-        F.col("purchase_id") >= 0
-    )
+    return spark.table(_drain(joined).name).filter(F.col("purchase_id") >= 0)
 
 
 @query(
@@ -624,68 +665,8 @@ def q_stream_join_full(spark, sf_dir):
     Reference scope: no streaming in the reference facade
     (api/router/router.go:9-55); completes the stream-join family
     (q_stream_join inner, q_stream_join_outer left)."""
-    wh = scratch_dir(sf_dir, "stream_join_full")
-    shutil.rmtree(wh, ignore_errors=True)
-    src = os.path.join(wh, "src")
-
-    ev = (
-        t(spark, sf_dir, "events")
-        .filter(F.col("event_type").isin("purchase", "click"))
-        .select(
-            "event_id",
-            "user_id",
-            "event_type",
-            F.col("ts").cast("timestamp").alias("ts"),
-        )
-    )
-    mx = ev.agg(F.max("ts")).collect()[0][0]  # bounded 1-row pull
-
-    def _sentinel(hours: int, base: int):
-        return spark.createDataFrame(
-            [
-                (base, -1, "purchase"),
-                (base + 1, -2, "click"),
-            ],
-            "event_id long, user_id long, event_type string",
-        ).select(
-            "event_id",
-            "user_id",
-            "event_type",
-            (F.lit(mx) + F.expr(f"INTERVAL {hours} HOURS")).alias("ts"),
-        )
-
-    ev.unionByName(_sentinel(4, -10)).unionByName(_sentinel(8, -20)).write.mode(
-        "overwrite"
-    ).parquet(src)
-
-    sdf = spark.readStream.schema(ev.schema).parquet(src)
-    purchases = (
-        sdf.filter(F.col("event_type") == "purchase")
-        .select(
-            F.col("event_id").alias("purchase_id"),
-            "user_id",
-            F.col("ts").alias("purchase_ts"),
-        )
-        .withWatermark("purchase_ts", "2 hours")
-    )
-    clicks = (
-        sdf.filter(F.col("event_type") == "click")
-        .select(
-            F.col("event_id").alias("click_id"),
-            F.col("user_id").alias("c_user_id"),
-            F.col("ts").alias("click_ts"),
-        )
-        .withWatermark("click_ts", "2 hours")
-    )
-    joined = purchases.join(
-        clicks,
-        F.expr(
-            """user_id = c_user_id
-               AND click_ts >= purchase_ts - INTERVAL 1 HOUR
-               AND click_ts <= purchase_ts"""
-        ),
-        "fullOuter",
-    ).select(
+    sides = _sentinel_join_sides(spark, sf_dir, "stream_join_full")
+    joined = _join(sides, "fullOuter").select(
         "purchase_id",
         "click_id",
         F.coalesce("user_id", "c_user_id").alias("user_id"),
@@ -694,7 +675,7 @@ def q_stream_join_full(spark, sf_dir):
     )
     # NULL-tolerant sentinel filter on the drained result (each row has
     # at least one NULL id; sentinels carry negative event_ids)
-    return _run_memory(spark, joined, "append").filter(
+    return spark.table(_drain(joined).name).filter(
         F.coalesce(F.col("purchase_id") >= 0, F.lit(True))
         & F.coalesce(F.col("click_id") >= 0, F.lit(True))
     )
@@ -735,27 +716,14 @@ def q_stream_dim_join(spark, sf_dir):
     (create/append = the reference's commit lineage,
     api/handlers/tables.go:150-227); no streaming in the reference
     facade (api/router/router.go:9-55)."""
-    from ..catalog import Catalog, NestedField, Schema
-
-    wh = scratch_dir(sf_dir, "stream_dim_join")
-    shutil.rmtree(wh, ignore_errors=True)
-    os.makedirs(wh, exist_ok=True)
-
+    wh = _fresh_dir(sf_dir, "stream_dim_join")
     ev = (
         t(spark, sf_dir, "events")
         .filter(F.col("event_type") == "purchase")
         .select("event_id", "user_id", F.round("value", 4).alias("value"))
     )
 
-    # cataloged dimension: per-user spend tier
-    cat = Catalog(os.path.join(wh, "warehouse"))
-    cat.create_namespace(("db",))
-    sch = Schema(
-        0,
-        [NestedField(1, "user_id", "long"), NestedField(2, "tier", "string")],
-    )
-    dim_tbl = cat.create_table(("db", "user_tier"), sch)
-    # Tier thresholds compare an INTEGER e4-unit sum, not a double sum:
+    # cataloged dimension: per-user spend tier.  Tier thresholds compare an INTEGER e4-unit sum, not a double sum:
     # binary64 addition is non-associative, so Spark's partial-agg order
     # vs DuckDB's could flip `sum(value) >= 100` at a boundary (ADVICE
     # r11).  round(value*10000) is the identical binary64->integer map on
@@ -773,33 +741,21 @@ def q_stream_dim_join(spark, sf_dir):
             .alias("tier"),
         )
     )
-    dim_tbl.append(dim)
+    cat, ident = _sink_table(wh, "user_tier", dim)
+    cat.load_table(ident).append(dim)
 
-    # stream the purchases in multiple micro-batches
-    src = os.path.join(wh, "src")
-    ev.repartition(4).write.mode("overwrite").parquet(src)
-    sdf = (
-        spark.readStream.schema(ev.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
-    )
-
+    # stream the purchases in 4 micro-batches
+    sdf = _replay(ev.repartition(4), F.spark_partition_id(), os.path.join(wh, "src"))
     sink = os.path.join(wh, "sink")
 
     def enrich(batch_df, _batch_id):
         # fresh catalog read per batch: dim updates apply next batch
-        d = cat.load_table(("db", "user_tier")).df(spark)
+        d = cat.load_table(ident).df(spark)
         batch_df.join(F.broadcast(d), "user_id", "left").select(
             "event_id", "user_id", "value", "tier"
         ).write.mode("append").parquet(sink)
 
-    with _state_parallelism(spark):
-        q = (
-            sdf.writeStream.foreachBatch(enrich)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    _drain(sdf, each=enrich)
     return spark.read.parquet(sink)
 
 
@@ -818,49 +774,16 @@ def q_stream_catalog_sink(spark, sf_dir):
     (reference commit lineage, api/handlers/tables.go:150-227). The final
     table contents equal the batch answer; the snapshot count equals the
     number of micro-batches."""
-    from ..catalog import Catalog, NestedField, Schema
-
-    wh = scratch_dir(sf_dir, "stream_catalog_sink")
-    shutil.rmtree(wh, ignore_errors=True)
-    os.makedirs(wh, exist_ok=True)
-
-    # split the source into 4 files so availableNow yields 4 micro-batches
-    src_dir = os.path.join(wh, "src")
+    wh = _fresh_dir(sf_dir, "stream_catalog_sink")
     ev = t(spark, sf_dir, "events").filter(F.col("event_type") == "purchase").select(
         "event_id", "user_id", "event_type", F.round("value", 4).alias("value")
     )
-    ev.repartition(4).write.mode("overwrite").parquet(src_dir)
+    cat, ident = _sink_table(wh, "purchases", ev)
+    # 4 source files, so availableNow yields 4 micro-batches
+    sdf = _replay(ev.repartition(4), F.spark_partition_id(), os.path.join(wh, "src"))
+    _drain(sdf, each=lambda batch_df, _id: cat.load_table(ident).append(batch_df))
 
-    cat = Catalog(os.path.join(wh, "warehouse"))
-    cat.create_namespace(("db",))
-    sch = Schema(
-        0,
-        [
-            NestedField(1, "event_id", "long"),
-            NestedField(2, "user_id", "long"),
-            NestedField(3, "event_type", "string"),
-            NestedField(4, "value", "double"),
-        ],
-    )
-    cat.create_table(("db", "purchases"), sch)
-
-    sdf = (
-        spark.readStream.schema(ev.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src_dir)
-    )
-
-    def commit_batch(batch_df, _batch_id):
-        cat.load_table(("db", "purchases")).append(batch_df)
-
-    q = (
-        sdf.writeStream.foreachBatch(commit_batch)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-
-    tbl = cat.load_table(("db", "purchases"))
+    tbl = cat.load_table(ident)
     assert len(tbl.metadata["snapshots"]) >= 2  # one commit per micro-batch
     return tbl.df(spark)
 
@@ -880,30 +803,18 @@ def q_stream_catalog_source(spark, sf_dir):
     rows are tagged with the snapshot id whose batch delivered them, which
     must equal the snapshot that appended them (keys 1-100 -> snapshot 1,
     101-200 -> snapshot 2). Dual of q_stream_catalog_sink."""
-    from ..catalog import Catalog, NestedField, Schema
     from .catalog_source import CatalogStreamReader
 
-    wh = scratch_dir(sf_dir, "stream_catalog_source")
-    shutil.rmtree(wh, ignore_errors=True)
-    os.makedirs(wh, exist_ok=True)
-    cat = Catalog(os.path.join(wh, "warehouse"))
-    cat.create_namespace(("db",))
-    sch = Schema(
-        0,
-        [
-            NestedField(1, "o_orderkey", "long"),
-            NestedField(2, "o_custkey", "long"),
-            NestedField(3, "o_totalprice", "double"),
-        ],
-    )
-    tbl = cat.create_table(("db", "orders_src"), sch)
+    wh = _fresh_dir(sf_dir, "stream_catalog_source")
     orders = t(spark, sf_dir, "orders").select(
         "o_orderkey", "o_custkey", "o_totalprice"
     )
+    cat, ident = _sink_table(wh, "orders_src", orders)
+    tbl = cat.load_table(ident)
     tbl = tbl.append(orders.filter((F.col("o_orderkey") >= 1) & (F.col("o_orderkey") <= 100)))
     tbl.append(orders.filter((F.col("o_orderkey") > 100) & (F.col("o_orderkey") <= 200)))
 
-    reader = CatalogStreamReader(cat, ("db", "orders_src"), os.path.join(wh, "ckpt"))
+    reader = CatalogStreamReader(cat, ident, os.path.join(wh, "ckpt"))
     batches = []
     reader.run_available_now(
         spark, lambda df, sid: batches.append(df.withColumn("batch_snapshot", F.lit(sid)))
@@ -939,25 +850,16 @@ def q_stream_changelog(spark, sf_dir):
     tuples resolved back to rows) — the Iceberg changelog-scan shape. The
     oracle reconstructs all three batches, value-checking both the rows
     and which snapshot delivered them."""
-    from ..catalog import Catalog, NestedField, Schema
     from .catalog_source import CatalogStreamReader
 
-    wh = scratch_dir(sf_dir, "stream_changelog")
-    shutil.rmtree(wh, ignore_errors=True)
-    os.makedirs(wh, exist_ok=True)
-    cat = Catalog(os.path.join(wh, "warehouse"))
-    cat.create_namespace(("db",))
-    tbl = cat.create_table(
-        ("db", "orders_c"),
-        Schema(0, [NestedField(1, "o_orderkey", "long"),
-                   NestedField(2, "o_totalprice", "double")]),
-    )
+    wh = _fresh_dir(sf_dir, "stream_changelog")
     orders = t(spark, sf_dir, "orders").select("o_orderkey", "o_totalprice")
-    tbl = tbl.append(orders.filter((F.col("o_orderkey") >= 1) & (F.col("o_orderkey") <= 100)))
+    cat, ident = _sink_table(wh, "orders_c", orders)
+    tbl = cat.load_table(ident).append(orders.filter((F.col("o_orderkey") >= 1) & (F.col("o_orderkey") <= 100)))
     tbl = tbl.append(orders.filter((F.col("o_orderkey") > 100) & (F.col("o_orderkey") <= 200)))
     tbl.delete_where(spark, "o_totalprice < 50000.0", mode="merge-on-read")
 
-    reader = CatalogStreamReader(cat, ("db", "orders_c"), os.path.join(wh, "ckpt"))
+    reader = CatalogStreamReader(cat, ident, os.path.join(wh, "ckpt"))
     batches = []
     reader.run_changelog(
         spark, lambda df, sid: batches.append(df.withColumn("batch_snapshot", F.lit(sid)))
@@ -993,12 +895,7 @@ def q_stream_upsert(spark, sf_dir):
     Two ordered waves: keys 1..100 at original price, then 51..150 at
     price*1.1 (updates 51..100, inserts 101..150). The oracle is the
     final CDC-applied state over the fixture."""
-    from ..catalog import Catalog, NestedField, Schema
-
-    wh = scratch_dir(sf_dir, "stream_upsert")
-    shutil.rmtree(wh, ignore_errors=True)
-    os.makedirs(wh, exist_ok=True)
-
+    wh = _fresh_dir(sf_dir, "stream_upsert")
     orders = t(spark, sf_dir, "orders").select(
         "o_orderkey", "o_custkey", F.col("o_totalprice").cast("double")
     )
@@ -1007,27 +904,7 @@ def q_stream_upsert(spark, sf_dir):
         orders.filter((F.col("o_orderkey") > 50) & (F.col("o_orderkey") <= 150))
         .withColumn("o_totalprice", F.col("o_totalprice") * 1.1)
     )
-    # one file per wave, mtime + path order both increasing so the file
-    # source delivers them as ordered micro-batches
-    src_dir = os.path.join(wh, "src")
-    for i, wave in enumerate((wave1, wave2)):
-        d = os.path.join(src_dir, f"wave{i}")
-        wave.coalesce(1).write.mode("overwrite").parquet(d)
-        for f in os.listdir(d):
-            os.utime(os.path.join(d, f), (1_000_000 + i * 60, 1_000_000 + i * 60))
-
-    cat = Catalog(os.path.join(wh, "warehouse"))
-    cat.create_namespace(("db",))
-    sch = Schema(
-        0,
-        [
-            NestedField(1, "o_orderkey", "long"),
-            NestedField(2, "o_custkey", "long"),
-            NestedField(3, "o_totalprice", "double"),
-        ],
-    )
-    cat.create_table(("db", "orders_up"), sch)
-    ident = ("db", "orders_up")
+    cat, ident = _sink_table(wh, "orders_up", wave1)
 
     def commit_batch(batch_df, batch_id):
         tbl = cat.load_table(ident)
@@ -1044,13 +921,10 @@ def q_stream_upsert(spark, sf_dir):
             },
         )
 
-    sdf = (
-        spark.readStream.schema(wave1.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(os.path.join(src_dir, "*"))
-    )
-    q = sdf.writeStream.foreachBatch(commit_batch).trigger(availableNow=True).start()
-    q.awaitTermination()
+    # one file, so one ordered micro-batch, per wave
+    src = os.path.join(wh, "src")
+    _replay(wave1.coalesce(1), F.lit(0), src)
+    _drain(_replay(wave2.coalesce(1), F.lit(1), src), each=commit_batch)
 
     tbl = cat.load_table(ident)
     n_snaps = len(tbl.metadata["snapshots"])
@@ -1088,8 +962,6 @@ def q_stream_ingest_gate(spark, sf_dir):
     the sink. State is bounded: the stream holds no aggregation state at
     all — every batch joins against the static index, so watermarks are
     unnecessary and a 100 TB/day delta shards by file."""
-    import shutil
-
     from ..llm.dedup import (
         _candidate_pairs,
         _ingest_verdict,
@@ -1106,14 +978,7 @@ def q_stream_ingest_gate(spark, sf_dir):
         .localCheckpoint()
     )
 
-    src = os.path.join(sf_dir, "documents.parquet")
-    d = scratch_dir(sf_dir, "stream_gate_src")
-    link = os.path.join(d, "documents.parquet")
-    if not os.path.exists(link):
-        os.symlink(src, link)
-    sink = os.path.join(scratch_dir(sf_dir, "stream_gate"), "out")
-    if os.path.exists(sink):
-        shutil.rmtree(sink)
+    sink = os.path.join(_fresh_dir(sf_dir, "stream_gate"), "out")
 
     def admit(batch_df, _batch_id):
         b = batch_df.filter(
@@ -1132,14 +997,7 @@ def q_stream_ingest_gate(spark, sf_dir):
         )
         out.write.mode("append").parquet(sink)
 
-    sdf = spark.readStream.schema(parquet_schema(spark, src)).parquet(d)
-    with _state_parallelism(spark):
-        q = (
-            sdf.writeStream.foreachBatch(admit)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    _drain(_fixture_stream(spark, sf_dir, "documents"), each=admit)
     return spark.read.parquet(sink)
 
 
@@ -1165,46 +1023,27 @@ def q_stream_wap(spark, sf_dir):
     against real committed files, and the publish is an O(1) metadata
     swap per batch — a failed audit quarantines exactly one batch without
     stalling the stream or dirtying readers."""
-    from ..catalog import Catalog, NestedField, Schema
-
-    wh = scratch_dir(sf_dir, "stream_wap")
-    shutil.rmtree(wh, ignore_errors=True)
-    os.makedirs(wh, exist_ok=True)
-
-    src_dir = os.path.join(wh, "src")
+    wh = _fresh_dir(sf_dir, "stream_wap")
     ev = t(spark, sf_dir, "events").filter(
         (F.col("event_type") == "purchase") & F.col("value").isNotNull()
     ).select(
         "event_id", "user_id", "event_type", F.round("value", 4).alias("value")
     )
-    # one source file carries synthesized poison (every 7th event's value
-    # nulled), three are clean — exactly one audit fails, three publish
+    # the last source file carries synthesized poison (every 7th event's
+    # value nulled), three are clean — exactly one audit fails, three publish
     clean = ev.filter(F.col("event_id") % 7 != 0).repartition(3)
     poison = ev.filter(F.col("event_id") % 7 == 0).withColumn(
         "value", F.lit(None).cast("double")
     )
-    clean.write.mode("overwrite").parquet(src_dir)
-    poison.write.mode("append").parquet(src_dir)
-
-    cat = Catalog(os.path.join(wh, "warehouse"))
-    cat.create_namespace(("db",))
-    sch = Schema(
-        0,
-        [
-            NestedField(1, "event_id", "long"),
-            NestedField(2, "user_id", "long"),
-            NestedField(3, "event_type", "string"),
-            NestedField(4, "value", "double"),
-        ],
-    )
-    cat.create_table(("db", "purchases_wap"), sch)
+    src = os.path.join(wh, "src")
+    _replay(clean, F.spark_partition_id(), src)
+    sdf = _replay(poison.coalesce(1), F.lit(3), src)
+    cat, ident = _sink_table(wh, "purchases_wap", ev)
     outcomes: list[tuple[int, bool]] = []
 
     def wap_batch(batch_df, batch_id):
         branch = f"audit-{batch_id}"
-        tbl = cat.load_table(("db", "purchases_wap")).append(
-            batch_df, branch=branch
-        )
+        tbl = cat.load_table(ident).append(batch_df, branch=branch)
         staged = tbl.df(spark, snapshot_id=tbl.snapshot_for_ref(branch))
         n_bad = staged.filter(F.col("value").isNull()).count()
         if n_bad == 0:
@@ -1213,22 +1052,12 @@ def q_stream_wap(spark, sf_dir):
         else:
             outcomes.append((batch_id, False))  # branch stays unpublished
 
-    q = (
-        spark.readStream.schema(ev.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src_dir)
-        .writeStream.foreachBatch(wap_batch)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-
+    _drain(sdf, each=wap_batch)
     published = [b for b, ok in outcomes if ok]
     rejected = [b for b, ok in outcomes if not ok]
     assert len(rejected) >= 1, "the poison batch must fail its audit"
     assert len(published) >= 2, "clean batches must publish"
-    tbl = cat.load_table(("db", "purchases_wap"))
-    out = tbl.df(spark)
+    out = cat.load_table(ident).df(spark)
     assert out.filter(F.col("value").isNull()).count() == 0
     return out
 
@@ -1256,12 +1085,11 @@ def q_stream_hll(spark, sf_dir):
     within 5% of the exact answer and emits the boolean with the exact
     count. The merge being associative ACROSS batches is exactly what the
     oracle's hash equality then certifies."""
-    wh = scratch_dir(sf_dir, "stream_hll")
-    shutil.rmtree(wh, ignore_errors=True)
-    os.makedirs(wh, exist_ok=True)
-    src_dir = os.path.join(wh, "src")
+    wh = _fresh_dir(sf_dir, "stream_hll")
     ev = t(spark, sf_dir, "events").select("event_type", "user_id")
-    ev.repartition(4).write.mode("overwrite").parquet(src_dir)
+    sdf = _replay(
+        ev.repartition(REPLAY_SPLITS), F.spark_partition_id(), os.path.join(wh, "src")
+    )
 
     batch_sketches: list = []
 
@@ -1275,15 +1103,7 @@ def q_stream_hll(spark, sf_dir):
         )
         batch_sketches.append(rows)  # |types| x ~1 KB per batch
 
-    q = (
-        spark.readStream.schema(ev.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src_dir)
-        .writeStream.foreachBatch(fold_batch)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    _drain(sdf, each=fold_batch)
     assert len(batch_sketches) >= 2, "must merge across micro-batches"
 
     flat = [(r.event_type, bytes(r.sketch)) for rows in batch_sketches for r in rows]
@@ -1364,31 +1184,6 @@ def q_stream_session_features(spark, sf_dir):
     Reference scope: no streaming surface in the reference (Go facade,
     api/router/router.go:9-55); [CAP] composition of the catalog's
     append-log contract with Spark Structured Streaming."""
-    from ..catalog import Catalog, NestedField, Schema
-
-    wh = scratch_dir(sf_dir, "stream_session_features")
-    shutil.rmtree(wh, ignore_errors=True)
-    os.makedirs(wh, exist_ok=True)
-    cat = Catalog(os.path.join(wh, "warehouse"))
-    cat.create_namespace(("db",))
-    cat.create_table(
-        ("db", "session_features"),
-        Schema(
-            0,
-            [
-                NestedField(1, "skey", "string"),
-                NestedField(2, "user_id", "long"),
-                NestedField(3, "start_ts", "string"),
-                NestedField(4, "dur_min", "long"),
-                NestedField(5, "n_events", "long"),
-                NestedField(6, "n_types", "long"),
-                NestedField(7, "revenue", "double"),
-                NestedField(8, "had_error", "int"),
-            ],
-        ),
-    )
-    ident = ("db", "session_features")
-
     sdf = _stream_events(spark, sf_dir)
     agg = (
         sdf.groupBy(F.session_window("ts", "30 minutes"), "user_id")
@@ -1427,6 +1222,10 @@ def q_stream_session_features(spark, sf_dir):
         )
     )
 
+    cat, ident = _sink_table(
+        _fresh_dir(sf_dir, "stream_session_features"), "session_features", agg
+    )
+
     def commit_batch(batch_df, batch_id):
         tbl = cat.load_table(ident)
         last = tbl.last_committed_batch_id("session_features_sink")
@@ -1442,15 +1241,7 @@ def q_stream_session_features(spark, sf_dir):
             },
         )
 
-    with _state_parallelism(spark):
-        q = (
-            agg.writeStream.foreachBatch(commit_batch)
-            .outputMode("complete")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-
+    _drain(agg, "complete", commit_batch)
     return (
         cat.load_table(ident)
         .df(spark)
@@ -1514,15 +1305,15 @@ def q_stream_kmv(spark, sf_dir):
 
     from ..operators.aggregates import KMV_K
 
-    wh = scratch_dir(sf_dir, "stream_kmv")
-    shutil.rmtree(wh, ignore_errors=True)
-    src = os.path.join(wh, "src")
+    wh = _fresh_dir(sf_dir, "stream_kmv")
     ev = (
         t(spark, sf_dir, "events")
         .filter(F.col("user_id").isNotNull() & F.col("event_type").isNotNull())
         .select("event_id", "user_id", "event_type")
     )
-    ev.repartition(4).write.mode("overwrite").parquet(src)
+    sdf = _replay(
+        ev.repartition(REPLAY_SPLITS), F.spark_partition_id(), os.path.join(wh, "src")
+    )
 
     state: dict[str, list[int]] = {}  # type -> sorted bottom-K hashes
     n_batches = [0]
@@ -1555,15 +1346,7 @@ def q_stream_kmv(spark, sf_dir):
             merged = sorted(set(state.get(et, [])) | hs)
             state[et] = merged[:KMV_K]  # k-smallest-of-union
 
-    q = (
-        spark.readStream.schema(ev.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
-        .writeStream.foreachBatch(fold)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    _drain(sdf, each=fold)
     assert n_batches[0] >= 2, "must merge across micro-batches"
 
     sk = spark.createDataFrame(
@@ -1653,24 +1436,16 @@ def _velocity_update(key, pdfs, state):
 
 
 def _velocity_source(spark, sf_dir, src):
-    """Write the purchase stream range-split on ts into REPLAY_SPLITS
-    mtime-ordered files under ``src`` and return the file-stream DataFrame (availableNow
-    replays time-ordered micro-batches, the q_stream_transform_state
-    harness)."""
-    import glob as _glob
-
+    """The purchase stream replayed from ``src`` as REPLAY_SPLITS
+    time-ordered micro-batches (range partition i holds the i-th ts range,
+    the q_stream_transform_state harness)."""
     p = (
         t(spark, sf_dir, "events")
         .filter((F.col("event_type") == "purchase") & F.col("user_id").isNotNull())
         .select("user_id", F.col("ts").cast("timestamp").alias("ts"))
     )
-    p.repartitionByRange(REPLAY_SPLITS, "ts").write.mode("overwrite").parquet(src)
-    for i, f_ in enumerate(sorted(_glob.glob(os.path.join(src, "part-*.parquet")))):
-        os.utime(f_, (1_000_000_000 + i, 1_000_000_000 + i))
-    return (
-        spark.readStream.schema(p.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
+    return _replay(
+        p.repartitionByRange(REPLAY_SPLITS, "ts"), F.spark_partition_id(), src
     )
 
 
@@ -1737,12 +1512,13 @@ def q_stream_velocity(spark, sf_dir):
     (api/router/router.go:9-55); stateful sibling of
     q_stream_transform_state (max-gap state) and the batch rule
     q_evt_velocity."""
-    wh = scratch_dir(sf_dir, "stream_velocity")
-    shutil.rmtree(wh, ignore_errors=True)
-    src = os.path.join(wh, "src")
-    out = _velocity_stateful(spark, _velocity_source(spark, sf_dir, src))
+    wh = _fresh_dir(sf_dir, "stream_velocity")
+    out = _velocity_stateful(
+        spark, _velocity_source(spark, sf_dir, os.path.join(wh, "src"))
+    )
     sink = os.path.join(wh, "sink")
-    res = _run_foreach_batch(spark, out, "update", sink)
+    _drain(out, "update", _append_to(sink))
+    res = spark.read.parquet(sink)
     # monotone emissions: final state per user is the max/min collapse
     return (
         res.groupBy("user_id")
@@ -1822,9 +1598,7 @@ def q_stream_bitmap_distinct(spark, sf_dir):
     Reference scope: streaming ingest = the reference's append-commit
     lineage (api/handlers/tables.go:150-227); no sketch surface in the
     facade (api/router/router.go:9-55)."""
-    wh = scratch_dir(sf_dir, "stream_bitmap")
-    shutil.rmtree(wh, ignore_errors=True)
-    src = os.path.join(wh, "src")
+    wh = _fresh_dir(sf_dir, "stream_bitmap")
     ev = (
         t(spark, sf_dir, "events")
         .filter(F.col("user_id").isNotNull() & F.col("event_type").isNotNull())
@@ -1836,12 +1610,8 @@ def q_stream_bitmap_distinct(spark, sf_dir):
             ).alias("bit"),
         )
     )
-    ev.repartition(REPLAY_SPLITS).write.mode("overwrite").parquet(src)
-
-    sdf = (
-        spark.readStream.schema(ev.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
+    sdf = _replay(
+        ev.repartition(REPLAY_SPLITS), F.spark_partition_id(), os.path.join(wh, "src")
     )
     # update-mode emissions: every key touched by the batch emits its
     # cumulative OR; the popcount projection is stateless and rides the
@@ -1857,9 +1627,10 @@ def q_stream_bitmap_distinct(spark, sf_dir):
         )
     )
     sink = os.path.join(wh, "sink")
-    res = _run_foreach_batch(spark, out, "update", sink)
+    _drain(out, "update", _append_to(sink))
     return (
-        res.groupBy("event_type", "word")
+        spark.read.parquet(sink)
+        .groupBy("event_type", "word")
         .agg(F.max("nbits").alias("nbits"))
         .groupBy("event_type")
         .agg(F.sum("nbits").alias("n_users"))
@@ -1930,28 +1701,26 @@ def q_stream_topk(spark, sf_dir):
     the facade (api/router/router.go:9-55)."""
     from pyspark.sql import Window as W
 
-    wh = scratch_dir(sf_dir, "stream_topk")
-    shutil.rmtree(wh, ignore_errors=True)
-    src = os.path.join(wh, "src")
+    wh = _fresh_dir(sf_dir, "stream_topk")
     ev = (
         t(spark, sf_dir, "events")
         .filter(F.col("user_id").isNotNull() & F.col("event_type").isNotNull())
         .select("event_type", "user_id")
     )
-    ev.repartition(REPLAY_SPLITS).write.mode("overwrite").parquet(src)
-
-    sdf = (
-        spark.readStream.schema(ev.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
+    sdf = _replay(
+        ev.repartition(REPLAY_SPLITS), F.spark_partition_id(), os.path.join(wh, "src")
     )
     out = (
         sdf.groupBy("event_type", "user_id")
         .agg(F.count(F.lit(1)).alias("n"))
     )
     sink = os.path.join(wh, "sink")
-    res = _run_foreach_batch(spark, out, "update", sink)
-    final = res.groupBy("event_type", "user_id").agg(F.max("n").alias("n"))
+    _drain(out, "update", _append_to(sink))
+    final = (
+        spark.read.parquet(sink)
+        .groupBy("event_type", "user_id")
+        .agg(F.max("n").alias("n"))
+    )
     w = W.partitionBy("event_type").orderBy(F.desc("n"), "user_id")
     return (
         final.withColumn("rk", F.row_number().over(w))
@@ -1966,79 +1735,36 @@ LATE_DELAY_DAYS = 2    # withWatermark("ts", "2 days")
 LATE_SPLIT = 4         # on-time replay files (ntile quartiles on (ts, id))
 
 
-def _late_audit_source(spark, sf_dir, src: str):
-    """Build the out-of-order replay source for q_stream_late_audit: the
-    on-time rows (event_id % LATE_MOD != 0) split into LATE_SPLIT
-    time-ordered, mtime-ordered files by ntile over (ts, event_id) — a
+def _late_audit_stream(spark, sf_dir, src: str):
+    """The out-of-order replay of q_stream_late_audit and its watermarked
+    per-day aggregate; returns ``(events, aggregate stream)``.
+
+    The on-time rows (event_id % LATE_MOD != 0) replay as LATE_SPLIT
+    time-ordered batches split by ntile over (ts, event_id) — a
     DETERMINISTIC split both engines can reproduce (repartitionByRange
     boundaries are reservoir-sampled and oracle-inexpressible, the
     q_evt_power_users lesson) — then the LATE TAIL (event_id % LATE_MOD
-    == 0, rows from EVERY day of the stream) planted as a single file
-    that is LAST in both mtime and path order.
+    == 0, rows from EVERY day of the stream) replays as the last batch.
 
     The global-window ntile is fixture prep, not the measured plan: a
     production replay would land range files with RECORDED boundaries
     and the audit rule would read those boundaries instead."""
-    import glob as _glob
-
     from pyspark.sql import Window as W
 
     ev = t(spark, sf_dir, "events").select(
         "event_id", F.col("ts").cast("timestamp").alias("ts")
     )
-    late = ev.filter(F.col("event_id") % LATE_MOD == 0)
-    ontime = (
+    frame = (
         ev.filter(F.col("event_id") % LATE_MOD != 0)
         .withColumn("q", F.ntile(LATE_SPLIT).over(W.orderBy("ts", "event_id")))
-        .localCheckpoint()  # one ntile sort, not one per split file (r15)
-    )
-    os.makedirs(src, exist_ok=True)
-    # ONE partitioned write materializes all {LATE_SPLIT} on-time replay
-    # files (q=<i>/part-*.parquet, exactly one file per quartile via the
-    # single-partition-per-key repartition), then each is renamed into the
-    # flat mtime/path order the replay contract requires.  r16-OPT: the
-    # previous loop ran {LATE_SPLIT} sequential coalesce(1) write jobs —
-    # 4 full scans of the checkpointed frame, each serialized on one task;
-    # this is one job, same bytes, same per-file row sets (row order
-    # within a replay file is irrelevant: each micro-batch consumes the
-    # whole file into an aggregate).
-    tmp = src + "_build"
-    ontime.repartition(LATE_SPLIT, "q").write.mode("overwrite").partitionBy(
-        "q"
-    ).parquet(tmp)
-    for i in range(1, LATE_SPLIT + 1):
-        parts = _glob.glob(os.path.join(tmp, f"q={i}", "*.parquet"))
-        # Exactly one file per quartile by construction: repartition(N,"q")
-        # pins each q to one partition and spark.sql.files.maxRecordsPerFile
-        # is unset (a nonzero value would split the file; an empty ntile
-        # bucket would produce NO q=<i> directory) — fail loudly if either
-        # assumption breaks rather than unpacking a surprise (r16 ADVICE).
-        assert len(parts) == 1, (
-            f"replay split q={i}: expected exactly 1 parquet file, got "
-            f"{len(parts)} — maxRecordsPerFile set, or empty ntile bucket?"
+        .unionByName(
+            ev.filter(F.col("event_id") % LATE_MOD == 0).withColumn(
+                "q", F.lit(LATE_SPLIT + 1)
+            )
         )
-        (part,) = parts
-        dst = os.path.join(src, f"part-{i:05d}.parquet")
-        os.replace(part, dst)
-        os.utime(dst, (1_000_000_000 + i, 1_000_000_000 + i))
-    late.coalesce(1).write.mode("overwrite").parquet(tmp)
-    (tail_part,) = _glob.glob(os.path.join(tmp, "part-*.parquet"))
-    tail = os.path.join(src, "zz-late-tail.parquet")  # sorts after part-*
-    os.replace(tail_part, tail)
-    os.utime(tail, (1_000_000_100, 1_000_000_100))
-    shutil.rmtree(tmp, ignore_errors=True)
-    return ev
-
-
-def _late_audit_stream(spark, src: str, schema):
-    """The watermarked per-day aggregate over the replay source — shared
-    by the registered query and the crash-resume proof."""
-    sdf = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
     )
-    return (
+    sdf = _replay(frame.repartition(LATE_SPLIT + 1, "q"), F.col("q"), src)
+    return ev, (
         sdf.withWatermark("ts", f"{LATE_DELAY_DAYS} days")
         .groupBy(F.window("ts", "1 day"))
         .agg(F.count("*").alias("n_streamed"))
@@ -2105,12 +1831,10 @@ def q_stream_late_audit(spark, sf_dir):
     Reference scope: no streaming surface in the reference facade
     (api/router/router.go:9-55); observability sibling of
     q_stream_watermark (API wiring) and the q_dq_freshness batch audit."""
-    wh = scratch_dir(sf_dir, "stream_late_audit")
-    shutil.rmtree(wh, ignore_errors=True)
-    src = os.path.join(wh, "src")
-    ev = _late_audit_source(spark, sf_dir, src)
-    agg = _late_audit_stream(spark, src, ev.schema)
-    out, progress = _run_memory(spark, agg, "append", with_progress=True)
+    ev, agg = _late_audit_stream(
+        spark, sf_dir, os.path.join(_fresh_dir(sf_dir, "stream_late_audit"), "src")
+    )
+    q = _drain(agg)
     # ORACLE-STRUCTURE GUARD (r14 ADVICE): the oracle hard-codes the
     # micro-batch structure — maxFilesPerTrigger=1 over LATE_SPLIT
     # mtime-ordered on-time quartiles, then the late tail LAST — plus the
@@ -2123,7 +1847,11 @@ def q_stream_late_audit(spark, sf_dir):
     n_ontime = n_total - n_late
     base, extra = divmod(n_ontime, LATE_SPLIT)
     expected = [base + (1 if i < extra else 0) for i in range(LATE_SPLIT)] + [n_late]
-    got = [int(p["numInputRows"]) for p in progress if int(p["numInputRows"]) > 0]
+    got = [
+        int(p["numInputRows"])
+        for p in q.recentProgress
+        if int(p["numInputRows"]) > 0
+    ]
     # Explicit raise, not assert: this guard lives in the production query
     # path and must survive `python -O` (asserts are stripped — r16 ADVICE).
     if got != expected:
@@ -2132,7 +1860,7 @@ def q_stream_late_audit(spark, sf_dir):
             f"{got} != expected quartiles+tail {expected} — the oracle's "
             f"batch-aligned drop rule no longer matches the stream"
         )
-    streamed = out.select(
+    streamed = spark.table(q.name).select(
         F.col("window.start").cast("string").alias("window_start"),
         F.col("n_streamed").cast("long").alias("n_streamed"),
     )
@@ -2207,20 +1935,14 @@ def q_stream_topk_bounded(spark, sf_dir):
     per-key Arrow-group floor (SCALE.md's measured 4-8 s) never engages."""
     from pyspark.sql import Window as W
 
-    wh = scratch_dir(sf_dir, "stream_topk_bounded")
-    shutil.rmtree(wh, ignore_errors=True)
-    src = os.path.join(wh, "src")
+    wh = _fresh_dir(sf_dir, "stream_topk_bounded")
     ev = (
         t(spark, sf_dir, "events")
         .filter(F.col("user_id").isNotNull() & F.col("event_type").isNotNull())
         .select("event_type", "user_id")
     )
-    ev.repartition(4).write.mode("overwrite").parquet(src)
-
-    sdf = (
-        spark.readStream.schema(ev.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
+    sdf = _replay(
+        ev.repartition(REPLAY_SPLITS), F.spark_partition_id(), os.path.join(wh, "src")
     )
     sink = os.path.join(wh, "sink")
 
@@ -2230,15 +1952,7 @@ def q_stream_topk_bounded(spark, sf_dir):
             F.count("*").alias("n")
         ).write.mode("overwrite").parquet(os.path.join(sink, f"batch={bid}"))
 
-    with _state_parallelism(spark):
-        q = (
-            sdf.writeStream.foreachBatch(_partials)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-
+    _drain(sdf, each=_partials)
     final = (
         spark.read.parquet(os.path.join(sink, "batch=*"))
         .groupBy("event_type", "user_id")
@@ -2295,15 +2009,13 @@ def _psi_fold(counts: dict, n: int, ref: dict, rtot: int) -> float:
 
 
 def _psi_source(spark, sf_dir, src: str):
-    """Write the post-reference stream rows ({PSI_SPLIT} time-quantile
-    files by ntile over (ts, event_id), mtime-ordered — the
-    q_stream_late_audit deterministic-split discipline) and return the
+    """Replay the post-reference stream rows from ``src`` as PSI_SPLIT
+    time-quantile batches by ntile over (ts, event_id) (the
+    q_stream_late_audit deterministic split); return the stream and the
     expected per-batch row counts for the structure guard."""
-    import glob as _glob
-
     from pyspark.sql import Window as W
 
-    ev = (
+    rows = (
         t(spark, sf_dir, "events")
         .filter(F.col("value").isNotNull())
         .select(
@@ -2311,39 +2023,14 @@ def _psi_source(spark, sf_dir, src: str):
             F.col("ts").cast("timestamp").alias("ts"),
             _psi_bin(F.col("value")).alias("bin"),
         )
+        .filter(F.dayofmonth("ts") > PSI_REF_DAYS)
     )
-    srows = (
-        ev.filter(F.dayofmonth("ts") > PSI_REF_DAYS)
-        .withColumn("q", F.ntile(PSI_SPLIT).over(W.orderBy("ts", "event_id")))
-        .localCheckpoint()  # one ntile sort, not one per split file
-    )
-    n_stream = srows.count()
-    base, extra = divmod(n_stream, PSI_SPLIT)
+    base, extra = divmod(rows.count(), PSI_SPLIT)
     expected = [base + (1 if i < extra else 0) for i in range(PSI_SPLIT)]
-    os.makedirs(src, exist_ok=True)
-    # ONE partitioned write for all {PSI_SPLIT} replay files (the
-    # q_stream_late_audit r16-OPT single-job build): repartition by q
-    # pins one file per quantile, renames restore the flat mtime/path
-    # replay order, row order within a file is irrelevant to the
-    # per-batch bin aggregate.
-    tmp = src + "_build"
-    srows.select("bin", "q").repartition(PSI_SPLIT, "q").write.mode(
-        "overwrite"
-    ).partitionBy("q").parquet(tmp)
-    for i in range(1, PSI_SPLIT + 1):
-        parts = _glob.glob(os.path.join(tmp, f"q={i}", "*.parquet"))
-        # one file per quantile by construction — same loud-failure guard
-        # as the q_stream_late_audit twin (r16 ADVICE)
-        assert len(parts) == 1, (
-            f"replay split q={i}: expected exactly 1 parquet file, got "
-            f"{len(parts)} — maxRecordsPerFile set, or empty ntile bucket?"
-        )
-        (part,) = parts
-        dst = os.path.join(src, f"part-{i:05d}.parquet")
-        os.replace(part, dst)
-        os.utime(dst, (1_000_000_000 + i, 1_000_000_000 + i))
-    shutil.rmtree(tmp, ignore_errors=True)
-    return expected
+    frame = rows.select(
+        "bin", F.ntile(PSI_SPLIT).over(W.orderBy("ts", "event_id")).alias("q")
+    )
+    return _replay(frame.repartition(PSI_SPLIT, "q"), F.col("q"), src), expected
 
 
 def _psi_reference(spark, sf_dir):
@@ -2464,26 +2151,11 @@ def q_stream_drift_psi(spark, sf_dir):
     Reference scope: no streaming/DQ surface in the reference facade
     (api/router/router.go:9-55); streaming sibling of q_evt_drift_ks and
     the q_stream_ingest_gate admission pattern."""
-    wh = scratch_dir(sf_dir, "stream_drift_psi")
-    shutil.rmtree(wh, ignore_errors=True)
-    src = os.path.join(wh, "src")
+    wh = _fresh_dir(sf_dir, "stream_drift_psi")
     sink = os.path.join(wh, "sink")
-    expected = _psi_source(spark, sf_dir, src)
+    sdf, expected = _psi_source(spark, sf_dir, os.path.join(wh, "src"))
     ref, rtot = _psi_reference(spark, sf_dir)
-
-    sdf = (
-        spark.readStream.schema("bin int")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
-    )
-    with _state_parallelism(spark):
-        q = (
-            sdf.writeStream.foreachBatch(_psi_writer(spark, sink, ref, rtot))
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    _drain(sdf, each=_psi_writer(spark, sink, ref, rtot))
 
     res = spark.read.parquet(os.path.join(sink, "batch=*"))
     got = [

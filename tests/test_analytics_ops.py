@@ -2257,6 +2257,26 @@ def test_velocity_fold_out_of_order_chunks():
     assert got == want and got[1] == 3 and got[2] == 1
 
 
+def _drain_crashing(sdf, mode, write, ckpt, crash_on):
+    """Drain ``sdf`` through the production runner with checkpoint
+    ``ckpt``, handing each micro-batch to ``write(df, batch_id)``; from
+    batch ``crash_on`` on, raise after the write (an injected crash between
+    micro-batches).  An armed run must fail, an unarmed one must not."""
+    from iceberg_rest_catalog_spark.streaming.queries import _drain
+
+    def fb(df, bid):
+        write(df, bid)
+        if crash_on is not None and bid >= crash_on:
+            raise RuntimeError("injected crash between micro-batches")
+
+    try:
+        _drain(sdf, mode, fb, ckpt)
+    except Exception:
+        assert crash_on is not None, "only the armed run may fail"
+    else:
+        assert crash_on is None, "armed run must crash"
+
+
 def test_stream_velocity_crash_resume(spark, qs, tmp_path):
     """Crash-resume proof for the stateful velocity stream (VERDICT r12
     item 5): kill the query between micro-batches (injected foreachBatch
@@ -2268,48 +2288,28 @@ def test_stream_velocity_crash_resume(spark, qs, tmp_path):
     from pyspark.sql import functions as F
 
     from iceberg_rest_catalog_spark.streaming.queries import (
-        _state_parallelism,
         _velocity_source,
         _velocity_stateful,
     )
 
-    src = str(tmp_path / "src")
     ckpt = str(tmp_path / "ckpt")
     sink = str(tmp_path / "sink")
-    sdf = _velocity_source(spark, SF, src)  # build the REPLAY_SPLITS-file source ONCE
+    # the production replay source, built ONCE: the restart reopens the
+    # same stream over the SAME files (a rebuild would desync the
+    # checkpoint's file index)
+    sdf = _velocity_source(spark, SF, str(tmp_path / "src"))
 
-    def run(stream_df, crash_on):
-        armed = {"on": crash_on}
+    def run(crash_on):
+        _drain_crashing(
+            _velocity_stateful(spark, sdf),
+            "update",
+            lambda df, _bid: df.write.mode("append").parquet(sink),
+            ckpt,
+            crash_on,
+        )
 
-        def fb(df, bid):
-            df.write.mode("append").parquet(sink)
-            if armed["on"] is not None and bid >= armed["on"]:
-                raise RuntimeError("injected crash between micro-batches")
-
-        with _state_parallelism(spark):
-            q = (
-                _velocity_stateful(spark, stream_df)
-                .writeStream.foreachBatch(fb)
-                .option("checkpointLocation", ckpt)
-                .outputMode("update")
-                .trigger(availableNow=True)
-                .start()
-            )
-            try:
-                q.awaitTermination()
-                assert crash_on is None, "armed run must crash"
-            except Exception:
-                assert crash_on is not None, "only the armed run may fail"
-
-    run(sdf, crash_on=1)  # batches 0 committed, 1 written-then-crashed
-    # RESTART from the same checkpoint over the SAME files (no source
-    # rebuild: new part files would desync the checkpoint's file index)
-    resumed = (
-        spark.readStream.schema(spark.read.parquet(src).schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
-    )
-    run(resumed, crash_on=None)
+    run(crash_on=1)  # batch 0 committed, 1 written-then-crashed
+    run(crash_on=None)  # RESTART from the same checkpoint
     got = {
         r.user_id: (r.max_burst, r.n_flagged, r.ff)
         for r in spark.read.parquet(sink)
@@ -2348,15 +2348,16 @@ def test_stream_kmv_crash_resume(spark, tmp_path):
     from pyspark.sql import functions as F
 
     from iceberg_rest_catalog_spark.operators.aggregates import KMV_K
-    from iceberg_rest_catalog_spark.streaming.queries import _state_parallelism
+    from iceberg_rest_catalog_spark.streaming.queries import REPLAY_SPLITS, _replay
 
     ev = (
         spark.read.parquet(f"{SF}/events.parquet")
         .filter("user_id is not null and event_type is not null")
         .select("event_id", "user_id", "event_type")
     )
-    src = str(tmp_path / "src")
-    ev.repartition(4).write.parquet(src)
+    sdf = _replay(
+        ev.repartition(REPLAY_SPLITS), F.spark_partition_id(), str(tmp_path / "src")
+    )
 
     def fold_into(state_file, batch_df, bid):
         st = (
@@ -2393,26 +2394,9 @@ def test_stream_kmv_crash_resume(spark, tmp_path):
         state_file.write_text(json.dumps(st))
 
     def run(ckpt, state_file, crash_on):
-        def fb(df, bid):
-            fold_into(state_file, df, bid)
-            if crash_on is not None and bid >= crash_on:
-                raise RuntimeError("injected crash after persisted fold")
-
-        with _state_parallelism(spark):
-            q = (
-                spark.readStream.schema(ev.schema)
-                .option("maxFilesPerTrigger", 1)
-                .parquet(src)
-                .writeStream.foreachBatch(fb)
-                .option("checkpointLocation", ckpt)
-                .trigger(availableNow=True)
-                .start()
-            )
-            try:
-                q.awaitTermination()
-                assert crash_on is None
-            except Exception:
-                assert crash_on is not None
+        _drain_crashing(
+            sdf, "append", lambda df, bid: fold_into(state_file, df, bid), ckpt, crash_on
+        )
 
     crashed = tmp_path / "state_crashed.json"
     run(str(tmp_path / "ckpt1"), crashed, crash_on=1)
@@ -2421,7 +2405,7 @@ def test_stream_kmv_crash_resume(spark, tmp_path):
     run(str(tmp_path / "ckpt2"), clean, crash_on=None)  # uninterrupted
     a, b = json.loads(crashed.read_text()), json.loads(clean.read_text())
     assert a["sk"] == b["sk"]
-    assert sorted(a["applied"]) == sorted(b["applied"]) == [0, 1, 2, 3]
+    assert sorted(a["applied"]) == sorted(b["applied"]) == list(range(REPLAY_SPLITS))
 
 
 def test_ivfpq_recall_vs_exact_l2(spark, qs):
@@ -3232,8 +3216,9 @@ def test_stream_bitmap_crash_resume(spark, tmp_path):
     from pyspark.sql.streaming.state import GroupStateTimeout
 
     from iceberg_rest_catalog_spark.streaming.queries import (
+        REPLAY_SPLITS,
         _bitmap_update,
-        _state_parallelism,
+        _replay,
     )
 
     ev = (
@@ -3245,39 +3230,24 @@ def test_stream_bitmap_crash_resume(spark, tmp_path):
             "shiftleft(CAST(1 AS BIGINT), CAST(user_id % 64 AS INT)) AS bit",
         )
     )
-    src = str(tmp_path / "src")
-    ev.repartition(4).write.parquet(src)
+    sdf = _replay(
+        ev.repartition(REPLAY_SPLITS), F.spark_partition_id(), str(tmp_path / "src")
+    )
 
     def run(ckpt, sink, crash_on):
-        def fb(df, bid):
-            df.write.mode("append").parquet(sink)
-            if crash_on is not None and bid >= crash_on:
-                raise RuntimeError("injected crash")
-
-        with _state_parallelism(spark):
-            q = (
-                spark.readStream.schema(ev.schema)
-                .option("maxFilesPerTrigger", 1)
-                .parquet(src)
-                .groupBy("event_type", "word")
-                .applyInPandasWithState(
-                    _bitmap_update,
-                    outputStructType="event_type string, word long, nbits long",
-                    stateStructType="bits long",
-                    outputMode="update",
-                    timeoutConf=GroupStateTimeout.NoTimeout,
-                )
-                .writeStream.foreachBatch(fb)
-                .option("checkpointLocation", ckpt)
-                .outputMode("update")
-                .trigger(availableNow=True)
-                .start()
-            )
-            try:
-                q.awaitTermination()
-                assert crash_on is None
-            except Exception:
-                assert crash_on is not None
+        _drain_crashing(
+            sdf.groupBy("event_type", "word").applyInPandasWithState(
+                _bitmap_update,
+                outputStructType="event_type string, word long, nbits long",
+                stateStructType="bits long",
+                outputMode="update",
+                timeoutConf=GroupStateTimeout.NoTimeout,
+            ),
+            "update",
+            lambda df, _bid: df.write.mode("append").parquet(sink),
+            ckpt,
+            crash_on,
+        )
 
     def collapse(sink):
         return {
@@ -3315,8 +3285,9 @@ def test_stream_topk_crash_resume(spark, tmp_path):
     from pyspark.sql.streaming.state import GroupStateTimeout
 
     from iceberg_rest_catalog_spark.streaming.queries import (
+        REPLAY_SPLITS,
         _count_update,
-        _state_parallelism,
+        _replay,
     )
 
     ev = (
@@ -3324,39 +3295,24 @@ def test_stream_topk_crash_resume(spark, tmp_path):
         .filter("user_id IS NOT NULL AND event_type IS NOT NULL")
         .select("event_type", "user_id")
     )
-    src = str(tmp_path / "src")
-    ev.repartition(4).write.parquet(src)
+    sdf = _replay(
+        ev.repartition(REPLAY_SPLITS), F.spark_partition_id(), str(tmp_path / "src")
+    )
 
     def run(ckpt, sink, crash_on):
-        def fb(df, bid):
-            df.write.mode("append").parquet(sink)
-            if crash_on is not None and bid >= crash_on:
-                raise RuntimeError("injected crash")
-
-        with _state_parallelism(spark):
-            q = (
-                spark.readStream.schema(ev.schema)
-                .option("maxFilesPerTrigger", 1)
-                .parquet(src)
-                .groupBy("event_type", "user_id")
-                .applyInPandasWithState(
-                    _count_update,
-                    outputStructType="event_type string, user_id long, n long",
-                    stateStructType="n long",
-                    outputMode="update",
-                    timeoutConf=GroupStateTimeout.NoTimeout,
-                )
-                .writeStream.foreachBatch(fb)
-                .option("checkpointLocation", ckpt)
-                .outputMode("update")
-                .trigger(availableNow=True)
-                .start()
-            )
-            try:
-                q.awaitTermination()
-                assert crash_on is None
-            except Exception:
-                assert crash_on is not None
+        _drain_crashing(
+            sdf.groupBy("event_type", "user_id").applyInPandasWithState(
+                _count_update,
+                outputStructType="event_type string, user_id long, n long",
+                stateStructType="n long",
+                outputMode="update",
+                timeoutConf=GroupStateTimeout.NoTimeout,
+            ),
+            "update",
+            lambda df, _bid: df.write.mode("append").parquet(sink),
+            ckpt,
+            crash_on,
+        )
 
     ckpt, sink = str(tmp_path / "ck"), str(tmp_path / "s")
     run(ckpt, sink, crash_on=1)
@@ -3484,40 +3440,23 @@ def test_stream_late_audit_crash_resume(spark, qs, tmp_path):
     uninterrupted run's."""
     from pyspark.sql import functions as F
 
-    from iceberg_rest_catalog_spark.streaming.queries import (
-        _late_audit_source,
-        _late_audit_stream,
-        _state_parallelism,
-    )
+    from iceberg_rest_catalog_spark.streaming.queries import _late_audit_stream
 
-    src = str(tmp_path / "src")
     ckpt = str(tmp_path / "ckpt")
     sink = str(tmp_path / "sink")
-    ev = _late_audit_source(spark, SF01, src)
+    _, agg = _late_audit_stream(spark, SF01, str(tmp_path / "src"))
 
     def run(crash_on):
-        def fb(df, bid):
-            df.select(
+        _drain_crashing(
+            agg,
+            "append",
+            lambda df, _bid: df.select(
                 F.col("window.start").cast("string").alias("window_start"),
                 "n_streamed",
-            ).write.mode("append").parquet(sink)
-            if crash_on is not None and bid >= crash_on:
-                raise RuntimeError("injected crash between micro-batches")
-
-        with _state_parallelism(spark):
-            q = (
-                _late_audit_stream(spark, src, ev.schema)
-                .writeStream.foreachBatch(fb)
-                .option("checkpointLocation", ckpt)
-                .outputMode("append")
-                .trigger(availableNow=True)
-                .start()
-            )
-            try:
-                q.awaitTermination()
-                assert crash_on is None, "armed run must crash"
-            except Exception:
-                assert crash_on is not None, "only the armed run may fail"
+            ).write.mode("append").parquet(sink),
+            ckpt,
+            crash_on,
+        )
 
     run(crash_on=2)  # batches 0-1 committed, 2 written-then-crashed
     run(crash_on=None)  # resume from the same checkpoint
@@ -3621,14 +3560,12 @@ def test_stream_topk_bounded_crash_resume(spark, qs, tmp_path):
     (idempotent by construction), so the final rollup equals both the
     uninterrupted bounded run and the exact per-key-state oracle."""
     import os
-    import shutil
 
     from pyspark.sql import functions as F
 
     from iceberg_rest_catalog_spark.operators.common import t as _t
-    from iceberg_rest_catalog_spark.streaming.queries import _state_parallelism
+    from iceberg_rest_catalog_spark.streaming.queries import REPLAY_SPLITS, _replay
 
-    src = str(tmp_path / "src")
     ckpt = str(tmp_path / "ckpt")
     sink = str(tmp_path / "sink")
     ev = (
@@ -3636,32 +3573,17 @@ def test_stream_topk_bounded_crash_resume(spark, qs, tmp_path):
         .filter(F.col("user_id").isNotNull() & F.col("event_type").isNotNull())
         .select("event_type", "user_id")
     )
-    ev.repartition(4).write.mode("overwrite").parquet(src)
+    sdf = _replay(
+        ev.repartition(REPLAY_SPLITS), F.spark_partition_id(), str(tmp_path / "src")
+    )
+
+    def write(df, bid):
+        df.groupBy("event_type", "user_id").agg(
+            F.count("*").alias("n")
+        ).write.mode("overwrite").parquet(os.path.join(sink, f"batch={bid}"))
 
     def run(crash_on):
-        def fb(df, bid):
-            df.groupBy("event_type", "user_id").agg(
-                F.count("*").alias("n")
-            ).write.mode("overwrite").parquet(os.path.join(sink, f"batch={bid}"))
-            if crash_on is not None and bid >= crash_on:
-                raise RuntimeError("injected crash after the batch write")
-
-        with _state_parallelism(spark):
-            q = (
-                spark.readStream.schema(ev.schema)
-                .option("maxFilesPerTrigger", 1)
-                .parquet(src)
-                .writeStream.foreachBatch(fb)
-                .option("checkpointLocation", ckpt)
-                .outputMode("append")
-                .trigger(availableNow=True)
-                .start()
-            )
-            try:
-                q.awaitTermination()
-                assert crash_on is None, "armed run must crash"
-            except Exception:
-                assert crash_on is not None, "only the armed run may fail"
+        _drain_crashing(sdf, "append", write, ckpt, crash_on)
 
     run(crash_on=1)  # batch 0 committed; batch 1 written then crashed
     run(crash_on=None)  # resume: batch 1 replays, overwrite dedups
@@ -3829,38 +3751,16 @@ def test_stream_drift_psi_crash_resume(spark, qs, tmp_path):
         _psi_reference,
         _psi_source,
         _psi_writer,
-        _state_parallelism,
     )
 
-    src = str(tmp_path / "src")
     ckpt = str(tmp_path / "ckpt")
     sink = str(tmp_path / "sink")
-    expected = _psi_source(spark, SF, src)
+    sdf, expected = _psi_source(spark, SF, str(tmp_path / "src"))
     ref, rtot = _psi_reference(spark, SF)
-    inner = _psi_writer(spark, sink, ref, rtot)
+    write = _psi_writer(spark, sink, ref, rtot)
 
     def run(crash_on):
-        def fb(df, bid):
-            inner(df, bid)
-            if crash_on is not None and bid >= crash_on:
-                raise RuntimeError("injected crash after the batch write")
-
-        with _state_parallelism(spark):
-            q = (
-                spark.readStream.schema("bin int")
-                .option("maxFilesPerTrigger", 1)
-                .parquet(src)
-                .writeStream.foreachBatch(fb)
-                .option("checkpointLocation", ckpt)
-                .outputMode("append")
-                .trigger(availableNow=True)
-                .start()
-            )
-            try:
-                q.awaitTermination()
-                assert crash_on is None, "armed run must crash"
-            except Exception:
-                assert crash_on is not None, "only the armed run may fail"
+        _drain_crashing(sdf, "append", write, ckpt, crash_on)
 
     run(crash_on=1)  # batch 0 committed; batch 1 written then crashed
     run(crash_on=None)  # resume: batch 1 replays, overwrite dedups

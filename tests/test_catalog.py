@@ -800,3 +800,30 @@ class TestCreateRaceAndSchemes:
             cat = Catalog(wh)
             assert isinstance(cat.fio, S3FileIO)
             assert cat.warehouse == "s3://b/wh"
+
+
+def test_schema_from_spark_maps_every_primitive_and_refuses_the_rest():
+    """Spark int (and the narrower tinyint/smallint) map to Iceberg int,
+    not string; a Spark type with no Iceberg primitive raises instead of
+    silently becoming a string column."""
+    from pyspark.sql import types as T
+
+    st = T.StructType([
+        T.StructField("i", T.IntegerType()),
+        T.StructField("s", T.ShortType()),
+        T.StructField("b", T.ByteType()),
+        T.StructField("l", T.LongType(), nullable=False),
+        T.StructField("d", T.DecimalType(12, 2)),
+        T.StructField("ts", T.TimestampType()),
+        T.StructField("tn", T.TimestampNTZType()),
+    ])
+    sch = Schema.from_spark(st)
+    assert [(f.name, f.type, f.required) for f in sch.fields] == [
+        ("i", "int", False), ("s", "int", False), ("b", "int", False),
+        ("l", "long", True), ("d", "decimal(12,2)", False),
+        ("ts", "timestamptz", False), ("tn", "timestamp", False),
+    ]
+    assert Schema.from_spark(Schema(0, FIELDS).to_spark()).fields == FIELDS
+    for bad in (T.ArrayType(T.LongType()), T.MapType(T.StringType(), T.LongType())):
+        with pytest.raises(ValueError, match="no Iceberg type"):
+            Schema.from_spark(T.StructType([T.StructField("x", bad)]))

@@ -371,42 +371,38 @@ def test_streaming_resume_from_checkpoint_exactly_once(spark, catalog, tmp_path)
     ONLY files that arrived after the first run — completed micro-batches
     (each one an append-snapshot commit) are never replayed, so snapshot
     count and row count stay exactly-once across the restart. Runs against
-    both metastore backends."""
+    both metastore backends.  The source is the production replay
+    source; its second build adds a third batch file beside the first
+    two."""
+    from pyspark.sql import functions as F
+
+    from iceberg_rest_catalog_spark.streaming.queries import _drain, _replay
+
     src, ckpt = str(tmp_path / "src"), str(tmp_path / "ckpt")
     catalog.create_namespace(("sdb",))
     catalog.create_table(("sdb", "ingest"), SCHEMA)
 
-    def write_file(ids):
-        spark.createDataFrame(
-            [(i, f"r{i}") for i in ids], "id long, name string"
-        ).coalesce(1).write.mode("append").parquet(src)
-
-    def run():
-        sdf = (
-            spark.readStream.schema("id long, name string")
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src)
+    def replay(ids, first_batch):
+        # one batch file per 5 ids, numbered from first_batch on
+        rows = spark.createDataFrame([(i, f"r{i}") for i in ids], "id long, name string")
+        return _replay(
+            rows.repartition(len(ids) // 5), F.spark_partition_id() + first_batch, src
         )
-        q = (
-            sdf.writeStream.foreachBatch(
-                lambda b, _id: catalog.load_table(("sdb", "ingest")).append(b)
-            )
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
 
-    write_file(range(0, 5))
-    write_file(range(5, 10))
-    run()
+    def run(sdf):
+        _drain(
+            sdf,
+            each=lambda b, _id: catalog.load_table(("sdb", "ingest")).append(b),
+            checkpoint=ckpt,
+        )
+
+    run(replay(range(0, 10), 0))
     t1 = catalog.load_table(("sdb", "ingest"))
     n_snaps_1 = len(t1.metadata["snapshots"])
     assert n_snaps_1 == 2  # one snapshot per micro-batch
     assert t1.df(spark).count() == 10
 
-    write_file(range(10, 15))
-    run()
+    run(replay(range(10, 15), 2))
     t2 = catalog.load_table(("sdb", "ingest"))
     assert sorted(r.id for r in t2.df(spark).collect()) == list(range(15))
     assert len(t2.metadata["snapshots"]) == n_snaps_1 + 1  # only the new file

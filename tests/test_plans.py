@@ -690,6 +690,41 @@ def test_one_schema_inference_site():
     assert not sites, sites
 
 
+def test_one_streaming_harness():
+    """streaming/queries.py builds every replay source in ``_replay``, the
+    fixture sources in ``_fixture_stream``, the scratch sink tables in
+    ``_sink_table`` and runs every availableNow query in ``_drain``.  A
+    ``maxFilesPerTrigger`` option, ``.trigger(``, ``awaitTermination``,
+    ``os.utime``, ``os.symlink`` or ``NestedField(`` anywhere else in the
+    module is a second copy of one of them and fails here."""
+    import ast
+    from pathlib import Path
+
+    import iceberg_rest_catalog_spark
+
+    path = Path(iceberg_rest_catalog_spark.__file__).parent / "streaming" / "queries.py"
+    helpers = {"_replay", "_fixture_stream", "_sink_table", "_drain"}
+    calls = {"trigger", "awaitTermination", "utime", "symlink", "NestedField"}
+    sites = []
+
+    def visit(node, fn):
+        for child in ast.iter_child_nodes(node):
+            if isinstance(child, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                visit(child, child.name if fn == "<module>" else fn)
+                continue
+            if isinstance(child, ast.Call) and fn not in helpers:
+                name = getattr(child.func, "attr", getattr(child.func, "id", None))
+                if name in calls or any(
+                    isinstance(a, ast.Constant) and a.value == "maxFilesPerTrigger"
+                    for a in child.args
+                ):
+                    sites.append(f"{child.lineno} {name} in {fn}")
+            visit(child, fn)
+
+    visit(ast.parse(path.read_text()), "<module>")
+    assert not sites, sites
+
+
 def test_warm_pass_compiles_nothing(spark):
     """The generated-code cache holds a pass's working set: a second pass
     over the perfbench llm ops and the drift controls compiles no class.
